@@ -329,20 +329,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the generated-class cache defaults to 100 entries; ~130 queries ×
-      // several codegen units each evict EVERYTHING between passes, so
-      // every pass re-runs Janino on every query (measured: q23 1.6→6.8 s,
-      // q91 1.6→6.6 s as the query count crossed the cache size — compile
-      // time, not execution). Static conf: must be set before the session.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
 
     // Materialize through the noop sink, NOT count(): under count() the
     // optimizer prunes every output column and can eliminate whole joins
@@ -362,8 +349,14 @@ object Bench {
       java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
     val loadBefore = load1()
 
-    SparkEntry.queries.foreach { case (_, fn) =>
-      try run(fn(spark, warmDir)) catch { case _: Throwable => () }
+    // first failure cause per query, for target/bench.json; the stdout
+    // line keeps reporting a failure only as -1
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def recordError(name: String, e: Throwable): Unit =
+      if (!errors.contains(name)) errors(name) = Profile.describe(e)
+
+    SparkEntry.queries.foreach { case (name, fn) =>
+      try run(fn(spark, warmDir)) catch { case e: Throwable => recordError(name, e) }
     }
 
     // MEDIAN-of-3 per query: three straight driver rounds ran under load
@@ -377,7 +370,8 @@ object Bench {
     def timeOne(name: String,
                 fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
-      val ok = try { run(fn(spark, sfDir)); true } catch { case _: Throwable => false }
+      val ok = try { run(fn(spark, sfDir)); true }
+        catch { case e: Throwable => recordError(name, e); false }
       if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
     }
     // CPU-time split across the timed passes from /proc/stat (Linux; -1
@@ -541,8 +535,12 @@ object Bench {
         .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
         .mkString("{", ",", "}")
     }
+    val errorsJson = errors
+      .map { case (k, v) => "\"" + k.takeWhile(_ != '_') + "\":" + Profile.jsonString(v) }
+      .mkString("{", ",", "}")
     val fileLine = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","agg":"seg_canary_norm_median3_remeasure",""" +
-      s""""queries":${qsJson(fmt)},"passes":$passesJson,"memo_builds":$memoBuildsJson,$meta}"""
+      s""""queries":${qsJson(fmt)},"passes":$passesJson,"memo_builds":$memoBuildsJson,""" +
+      s""""errors":$errorsJson,$meta}"""
     try {
       val dir = java.nio.file.Paths.get("target")
       java.nio.file.Files.createDirectories(dir)

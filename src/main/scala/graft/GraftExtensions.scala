@@ -11,8 +11,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * expressions to SQL (`SELECT graft_stem(word) …`), so `spark.sql` users
   * get the same codegen'd operators as the DataFrame API.
   *
-  * Enable with:
-  *   SparkSession.builder().config("spark.sql.extensions", "graft.GraftExtensions")
+  * Enable with the static session conf
+  * `spark.sql.extensions=graft.GraftExtensions`, set before the session is
+  * built.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -1,13 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Dev utility: write `.explain("formatted")` output for the named queries
-  * (or every query) to `<outDir>/<query>_<suffix>.txt` — the plan evidence
-  * files the optimization rounds commit under plans/rNN/.
-  *
-  * Usage: runMain graft.PlanDump <outDir> <suffix> [q1,q2,...]
-  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32).
+/** Plan evidence hooks for checkpointed subtrees. The per-query plan files
+  * under plans/rNN/ come from `graft.Profile --plans`.
   */
 object PlanDump {
 
@@ -38,39 +32,4 @@ object PlanDump {
             .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       } catch { case _: Throwable => () } // evidence must never fail the job
     }
-
-  def main(args: Array[String]): Unit = {
-    val outDir = args(0)
-    val suffix = args(1)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (only.forall(_(name))) {
-        val short = name.takeWhile(_ != '_')
-        try {
-          val df = fn(spark, sfDir)
-          val plan = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(outDir, s"${short}_$suffix.txt"),
-            plan.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          println(s"[plandump] $name ok")
-        } catch { case e: Throwable =>
-          println(s"[plandump] $name ERR ${e.getClass.getSimpleName}: ${e.getMessage}")
-        }
-      }
-    }
-    spark.stop()
-  }
 }

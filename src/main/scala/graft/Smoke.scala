@@ -1,19 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Mimics the driver's smoke check: SparkEntry.entry(spark) must return >0
-  * rows on sf0.001 under a plain session (no graft-side session configs).
+  * rows on sf0.001 under a plain local session (no graft extensions and no
+  * state left by other queries).
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     val df = SparkEntry.entry(spark)
     val n = df.count()
     df.show(5, truncate = false)

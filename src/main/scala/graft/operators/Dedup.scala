@@ -180,11 +180,11 @@ object Dedup {
     * A~B, B~C collapses into ONE keep-one group even when A~C was never
     * emitted as a pair.
     *
-    * Algorithm: graphs whose MEASURED edge count is tiny (≤1M rows) are
-    * solved exactly by one single-task union-find pass — see the gate in the
-    * body; everything larger runs iterative min-label propagation — TWO
-    * neighbor hops plus one
-    * pointer jump (label(n) ← label(label(n))) per round, so convergence is
+    * Algorithm: graphs whose MEASURED edge count is tiny (≤ `tinyEdgeLimit`,
+    * default 1M rows) are solved exactly by one single-task union-find pass
+    * — see the gate in the body; everything larger runs iterative min-label
+    * propagation — TWO neighbor hops plus one pointer jump
+    * (label(n) ← label(label(n))) per round, so convergence is
     * O(log diameter) rounds, not O(diameter) — near-dup graphs are mostly
     * tiny cliques plus the occasional long chain, and the jump step is what
     * keeps the chain case from serializing the whole job. Each round is
@@ -216,7 +216,8 @@ object Dedup {
     * nodes with no pairs are absent (handle via `dedupGroups`' left join).
     */
   def connectedComponents(pairs: DataFrame, idACol: String = "id_a",
-                          idBCol: String = "id_b", maxIter: Int = 50): DataFrame = {
+                          idBCol: String = "id_b", maxIter: Int = 50,
+                          tinyEdgeLimit: Long = 1000000L): DataFrame = {
     // both orientations via ONE explode, not a self-union: the pairs plan
     // (often an expensive candidate join) is evaluated once, not twice,
     // when the persist below first materializes
@@ -252,8 +253,8 @@ object Dedup {
     // counts (q123 ran 81 jobs on 336 edge rows, and the 8-core driver
     // bench beat the 32-core one across the whole CC family). When the
     // MEASURED edge count — a cheap cached scan; the count below is the
-    // loop's first action and materializes the cache — is at most ~1M rows
-    // (≲ tens of MB), the whole iterative loop is the wrong algorithm: a
+    // loop's first action and materializes the cache — is at most
+    // `tinyEdgeLimit` rows (default 1M, ≲ tens of MB), the whole iterative loop is the wrong algorithm: a
     // graph that small is solved EXACTLY by one single-task union-find
     // pass (one job), where even single-task ROUNDS still paid one
     // checkpoint-materialize + checksum-collect job and its driver
@@ -262,15 +263,10 @@ object Dedup {
     // threshold NOTHING changes (no second cache, no re-shuffle, no
     // closure in the hot path — the deployment-scale shape is exactly the
     // r21 code), so this is the guide-§2 "derive partitioning from input
-    // size" rule, not a local-mode constant. Variants kept for CcProbe
-    // A/Bs: "a" = session-default rounds everywhere, "b" = the r22
-    // single-partition round mode (rejected variants of WHICH are
-    // documented in OPTIMIZATION_r22.md #8), default = union-find solve.
-    val variant = sys.env.getOrElse("GRAFT_CC_VARIANT",
-      sys.props.getOrElse("graft.cc.variant", "c"))
+    // size" rule, not a local-mode constant (the rejected round modes are
+    // measured in OPTIMIZATION_r22.md #8).
     val confN = pairs.sparkSession.sessionState.conf.numShufflePartitions
-    val tinyGraph = variant != "a" && confN > 1 && edges.count() <= 1000000L
-    if (tinyGraph && variant != "b") {
+    if (confN > 1 && edges.count() <= tinyEdgeLimit) {
       // zero allowed rounds cannot converge under any algorithm — keep the
       // maxIter contract (partial labels must never be returned silently)
       if (maxIter < 1)
@@ -320,15 +316,11 @@ object Dedup {
     var checksum = checksumOf(labels)
     var converged = false
     var iter = 0
-    val roundEdges =
-      if (tinyGraph)
-        edges.repartition(1, col("dst")).persist(StorageLevel.MEMORY_AND_DISK)
-      else edges
     // one neighbor hop: min label over neighbors (both orientations are in
     // `edges` and every node is a src, so the groupBy covers every node and
     // the self term is subsumed — see the monotonicity note above)
     def hop(lbls: DataFrame): DataFrame =
-      roundEdges.join(lbls.select(col("node").as("dst"), col("lbl")), "dst")
+      edges.join(lbls.select(col("node").as("dst"), col("lbl")), "dst")
         .groupBy("src").agg(min(col("lbl")).as("lbl"))
         .select(col("src").as("node"), col("lbl"))
     // label-of-label (pointer jump); labels are always existing node ids,
@@ -352,7 +344,6 @@ object Dedup {
       labels = next
       iter += 1
     }
-    if (!(roundEdges eq edges)) roundEdges.unpersist()
     edges.unpersist()
     if (!converged)
       // with pointer jumping, maxIter=50 covers diameters beyond any real

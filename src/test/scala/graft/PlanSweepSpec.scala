@@ -8,15 +8,16 @@ package graft
   *      so any query planning one fails unless it is on the explicit
   *      allowlist of DOCUMENTED bounded uses.
   *   2. Shuffle budget: each query's STATIC initial-plan exchange count is
-  *      pinned as an upper bound (captured via
-  *      `SPARK_GRAFT_PLAN_ONLY=1 runMain graft.PlanAudit`). A refactor that
+  *      pinned as an upper bound (re-captured with
+  *      `runMain graft.Profile --plan-only <sfDir>`, whose `exchanges`
+  *      field is the same [[Profile.exchangeCount]]). A refactor that
   *      silently adds a shuffle — an un-broadcast dim, a lost partitioning,
   *      a stray repartition — fails here instead of shipping a regression
   *      the bench may not attribute. Counts are pre-AQE and deterministic;
   *      improvements (fewer shuffles) pass and the bound should then be
   *      tightened.
   */
-class PlanSweepSpec extends SparkSpec {
+object PlanSweepSpec {
 
   /** Plans that intentionally contain a bounded nested-loop side:
     * q34 — cosinePairs is a documented quadratic helper on a bounded subset;
@@ -201,7 +202,7 @@ class PlanSweepSpec extends SparkSpec {
   private val eagerHeavy = Set("q50_ml_train_eval")
 
   /** Static initial-plan exchange counts (upper bounds). */
-  private val shuffleBudget = Map(
+  val shuffleBudget: Map[String, Int] = Map(
     "q01_pricing_summary" -> 2, "q02_scan_project_filter" -> 1,
     "q03_join_broadcast" -> 2, "q04_join_sortmerge" -> 2,
     "q05_join_semi_anti" -> 3, "q06_agg_rollup" -> 2,
@@ -825,9 +826,12 @@ class PlanSweepSpec extends SparkSpec {
     // half-steps' normalization (two 1-row max aggregates broadcast
     // back) + the two top-25 takes + the presentation sort
     "q219_hits" -> 5)
+}
+
+class PlanSweepSpec extends SparkSpec {
+  import PlanSweepSpec._
 
   test("no unbounded nested-loop joins; every query within its shuffle budget") {
-    val exchange = "Exchange (hashpartitioning|rangepartitioning|SinglePartition)".r
     val problems = SparkEntry.queries.flatMap { case (name, fn) =>
       if (eagerHeavy(name)) Seq.empty[String]
       else {
@@ -847,7 +851,7 @@ class PlanSweepSpec extends SparkSpec {
             (plan.contains("CartesianProduct") || plan.contains("BroadcastNestedLoopJoin")))
             Some(s"$name: unbounded nested-loop join")
           else None
-        val shuffles = exchange.findAllIn(plan).length
+        val shuffles = Profile.exchangeCount(plan)
         val budget = shuffleBudget.get(name)
         val over = budget match {
           case Some(b) if shuffles > b => Some(s"$name: $shuffles shuffles > budget $b")

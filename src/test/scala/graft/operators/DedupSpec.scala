@@ -129,18 +129,15 @@ class DedupSpec extends SparkSpec {
   }
 
   test("connected components: tiny-graph round mode matches the default shape") {
-    // r22: graphs ≤ 1M edges re-bucket the edge cache to one partition so
-    // rounds run single-task; the labeling must be identical to the
-    // session-default fan-out (partitioning never changes min-label math)
+    // graphs within tinyEdgeLimit are solved by one single-task union-find;
+    // the labeling must be identical to the iterative label rounds that
+    // every larger graph runs (limit 0 forces those on this graph)
     val chain = (10L until 19L).map(i => (i, i + 1))
     val pairs = (Seq((1L, 2L), (2L, 3L), (7L, 6L)) ++ chain).toDF("id_a", "id_b")
-    def labelsWith(variant: String): Map[Long, Long] = {
-      System.setProperty("graft.cc.variant", variant)
-      try Dedup.connectedComponents(pairs).collect()
+    def labelsWith(tinyEdgeLimit: Long): Map[Long, Long] =
+      Dedup.connectedComponents(pairs, tinyEdgeLimit = tinyEdgeLimit).collect()
         .map(r => r.getAs[Long]("node") -> r.getAs[Long]("canonical_id")).toMap
-      finally System.clearProperty("graft.cc.variant")
-    }
-    assert(labelsWith("c") == labelsWith("a"))
+    assert(labelsWith(1000000L) == labelsWith(0L))
   }
 
   test("connected components raise instead of returning partial labels at maxIter") {
