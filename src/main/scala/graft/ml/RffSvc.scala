@@ -1,9 +1,13 @@
 package graft.ml
 
+import org.apache.spark.ml.attribute.{AttributeGroup, NominalAttribute}
 import org.apache.spark.ml.classification.{LinearSVC, LinearSVCModel}
 import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.ml.linalg.{SQLDataTypes, Vector}
+import org.apache.spark.ml.param.{Param, ParamMap}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Kernel (RBF) SVM via Random Fourier Features — closes the last semantic
   * deviation of the ML band (SURVEY.md §2.10 M3): the reference trains
@@ -53,8 +57,10 @@ object RffSvc {
   /** A fitted RFF + LinearSVC pair scoring on the ORIGINAL feature column —
     * drop-in next to Trainer's linear models. */
   final case class RffSvcModel(rff: RffMap, svc: LinearSVCModel) {
-    def transform(df: DataFrame, inputCol: String = "features"): DataFrame =
-      svc.transform(rff.transform(df, inputCol)).drop("rff_features")
+    def transform(df: DataFrame, inputCol: String = "features"): DataFrame = {
+      val t = new RffSvcTransformer(this)
+      t.transform(df, t.featuresCol -> inputCol)
+    }
 
     /** Registry round-trip: the classifier via MLlib persistence, the map as
       * its four defining scalars. */
@@ -68,31 +74,60 @@ object RffSvc {
     }
   }
 
-  /** Thin MLlib-Transformer adapter so the registry's typed loader
-    * ([[Trainer.loadModel]]) can hand back the kernel model through the
-    * same `Transformer` interface as the four linear-tier models.
-    * MLWritable so [[Trainer.trainAndEvaluate]]'s uniform persistence loop
-    * can save it like the linear models (`write.save(path)` lays down the
-    * same rff/ + svc/ directory [[load]] expects). */
+  /** MLlib-Model adapter: the registry's typed loader ([[Trainer.loadModel]])
+    * hands the kernel model back through the same `Transformer` interface,
+    * with the same column params, as the four linear-tier models (an empty
+    * output column is not computed). z(x) goes straight into
+    * LinearSVCModel's own `predictRaw`/`predict`, so no feature-map column
+    * is projected. MLWritable so [[Trainer.trainAndEvaluate]]'s persistence
+    * loop saves it like the linear models (the rff/ + svc/ layout [[load]]
+    * reads). */
   final class RffSvcTransformer(val model: RffSvcModel,
                                 override val uid: String = "graft_rff_svc")
       extends org.apache.spark.ml.Model[RffSvcTransformer]
       with org.apache.spark.ml.util.MLWritable {
+    final val featuresCol = new Param[String](this, "featuresCol", "features column name")
+    final val rawPredictionCol = new Param[String](this, "rawPredictionCol",
+      "margin column name (empty: not computed)")
+    final val predictionCol = new Param[String](this, "predictionCol",
+      "prediction column name (empty: not computed)")
+    setDefault(featuresCol -> "features", rawPredictionCol -> "rawPrediction",
+      predictionCol -> "prediction")
+
     override def write: org.apache.spark.ml.util.MLWriter =
       new org.apache.spark.ml.util.MLWriter {
         override protected def saveImpl(path: String): Unit = model.save(path)
       }
-    override def transform(ds: org.apache.spark.sql.Dataset[_]): DataFrame =
-      model.transform(ds.toDF())
-    override def transformSchema(schema: org.apache.spark.sql.types.StructType)
-        : org.apache.spark.sql.types.StructType = {
-      val withRff = schema.add(org.apache.spark.sql.types.StructField(
-        "rff_features", org.apache.spark.ml.linalg.SQLDataTypes.VectorType, nullable = false))
-      org.apache.spark.sql.types.StructType(
-        model.svc.transformSchema(withRff).filterNot(_.name == "rff_features"))
+    override def transform(ds: Dataset[_]): DataFrame = {
+      val out = transformSchema(ds.schema)
+      val svc = model.svc
+      val threshold = svc.getThreshold
+      val z = array_to_vector(model.rff.transformArray(vector_to_array(col($(featuresCol)))))
+      val raw = $(rawPredictionCol)
+      val pred = $(predictionCol)
+      val withRaw =
+        if (raw.isEmpty) ds.toDF()
+        else ds.withColumn(raw,
+          udf((v: Vector) => svc.predictRaw(v)).apply(z).as(raw, out(raw).metadata))
+      // with the margin present, predict from it, as MLlib's raw2prediction does
+      if (pred.isEmpty) withRaw
+      else withRaw.withColumn(pred,
+        (if (raw.isEmpty) udf((v: Vector) => svc.predict(v)).apply(z)
+         else udf((r: Vector) => if (r(1) > threshold) 1.0 else 0.0).apply(col(raw)))
+          .as(pred, out(pred).metadata))
     }
-    override def copy(extra: org.apache.spark.ml.param.ParamMap): RffSvcTransformer =
-      new RffSvcTransformer(model, uid)
+    /** Appends MLlib's binary-classifier output fields, metadata included. */
+    override def transformSchema(schema: StructType): StructType = {
+      require(schema($(featuresCol)).dataType == SQLDataTypes.VectorType,
+        s"RffSvcTransformer: column '${$(featuresCol)}' must hold vectors")
+      val raw = Some($(rawPredictionCol)).filter(_.nonEmpty)
+        .map(new AttributeGroup(_, 2).toStructField())
+      val pred = Some($(predictionCol)).filter(_.nonEmpty)
+        .map(NominalAttribute.defaultAttr.withName(_).withNumValues(2).toStructField())
+      StructType(schema.fields ++ raw ++ pred)
+    }
+    override def copy(extra: ParamMap): RffSvcTransformer =
+      copyValues(new RffSvcTransformer(model, uid), extra).setParent(parent)
   }
 
   def load(path: String): RffSvcModel = {

@@ -59,7 +59,9 @@ object SentimentPipeline {
     val featurizer = Features.fit(trainDf, "tweet")
     val trainF = featurizer.transform(trainDf, "tweet").cache()
     val validF = featurizer.transform(validDf, "tweet")
-    val (models, runs) = Trainer.trainAndEvaluate(trainF, validF, runId, version, modelDir)
+    val (models, runs) =
+      try Trainer.trainAndEvaluate(trainF, validF, runId, version, modelDir)
+      finally trainF.unpersist()
     modelDir.foreach { d =>
       Trainer.writeRegistry(spark, d, models.keys.toSeq)
       featurizer.save(s"$d/_featurizer")
@@ -80,12 +82,14 @@ object SentimentPipeline {
     Trained(TextFeaturizer.load(s"$modelDir/_featurizer"), models, runs, version)
   }
 
-  /** §3.2: score a batch of raw texts with every model in one pass. */
+  /** §3.2: score a batch of raw texts with every model in one pass. The
+    * result is `tweet` followed by one double `pred_<model>` column per
+    * model, in model-name order; only predictions are computed. */
   def scoreBatch(texts: DataFrame, textCol: String, trained: Trained): DataFrame = {
     val featurized = trained.featurizer.transform(
       texts.withColumnRenamed(textCol, "tweet"), "tweet")
-    Trainer.scoreAll(featurized, trained.models)
-      .drop("features")
+    val scored = Trainer.scoreAll(featurized, trained.models)
+    scored.select("tweet", scored.columns.filter(_.startsWith("pred_")).toSeq: _*)
   }
 
   /** §3.2 live loop as ONE composed entry point (the reference's

@@ -1,6 +1,7 @@
 package graft.ml
 
 import org.apache.spark.ml.classification._
+import org.apache.spark.ml.param.ParamMap
 import org.apache.spark.ml.util.MLWritable
 import org.apache.spark.ml.Transformer
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -71,7 +72,7 @@ object Trainer {
         name -> scala.concurrent.Future {
           val m = est.fit(train)
           modelDir.foreach(d => m.asInstanceOf[MLWritable].write.overwrite().save(s"$d/$name"))
-          val row = confusion(m.transform(valid)).collect().head
+          val row = confusion(predictOnly(m, "prediction").transform(valid)).collect().head
           ((m: Transformer), row)
         }(ec)
       }
@@ -143,12 +144,22 @@ object Trainer {
       .coalesce(1).write.mode("overwrite").parquet(s"$modelDir/_registry")
   }
 
+  /** `m` computing its prediction only, into `predictionCol`: a copy whose
+    * `rawPredictionCol` and `probabilityCol` are empty, MLlib's switch for
+    * skipping an output (the [[RffSvc]] tier takes the same params). `m`
+    * itself is not changed. Validation and serving both score through this. */
+  def predictOnly(m: Transformer, predictionCol: String): Transformer = {
+    val extra = ParamMap(m.getParam("predictionCol") -> predictionCol)
+    Seq("rawPredictionCol", "probabilityCol").filter(m.hasParam)
+      .foreach(p => extra.put(m.getParam(p), ""))
+    m.copy(extra)
+  }
+
   /** Multi-model fan-out scoring (M7, src/main.py:150-158): one pass, one
-    * added column per model — not the reference's per-row loop. */
+    * added `pred_<name>` column per model in name order — not the
+    * reference's per-row loop. */
   def scoreAll(df: DataFrame, fitted: Map[String, Transformer]): DataFrame =
     fitted.toSeq.sortBy(_._1).foldLeft(df) { case (acc, (name, m)) =>
-      m.transform(acc)
-        .withColumnRenamed("prediction", s"pred_$name")
-        .drop("rawPrediction", "probability")
+      predictOnly(m, s"pred_$name").transform(acc)
     }
 }

@@ -4,6 +4,7 @@ import graft.SparkSpec
 import java.nio.file.Files
 import org.apache.spark.ml.classification.LinearSVC
 import org.apache.spark.ml.linalg.{Vector, Vectors}
+import org.apache.spark.ml.param.ParamMap
 import scala.util.Random
 
 /** The kernel-SVM capability gap, closed: the reference's default `SVC()` is
@@ -66,5 +67,43 @@ class RffSvcSpec extends SparkSpec {
       .select("prediction").collect().map(_.getDouble(0)).toSeq
     assert(viaRegistry == direct, "registry dispatch returns the same kernel model")
     assert(asTransformer.transformSchema(valid.schema).fieldNames.contains("prediction"))
+  }
+
+  test("copy(extra) honours the column params and leaves the model unchanged") {
+    import spark.implicits._
+    val train = xorData(200, seed = 5).toDF("label", "features")
+    val valid = xorData(50, seed = 6).toDF("label", "features")
+    val t = new RffSvc.RffSvcTransformer(
+      RffSvc.fit(train, gamma = Some(1.0), numComponents = 32, seed = 15))
+    def doubles(df: org.apache.spark.sql.DataFrame, c: String) =
+      df.select(c).collect().map(_.getDouble(0)).toSeq
+    def margins(df: org.apache.spark.sql.DataFrame, c: String) =
+      df.select(c).collect().map(_.getAs[Vector](0).toArray.toSeq).toSeq
+
+    val full = t.transform(valid)
+    assert(full.columns.toSeq == Seq("label", "features", "rawPrediction", "prediction"))
+    // the reference: MLlib's own transform over a materialised feature map
+    val mllib = t.model.svc.transform(t.model.rff.transform(valid)).drop("rff_features")
+    assert(full.schema == mllib.schema, "same fields, nullability and ML attributes")
+    assert(full.collect().toSeq == mllib.collect().toSeq)
+
+    val predOnly = t.copy(ParamMap(t.rawPredictionCol -> "", t.predictionCol -> "p"))
+    assert(predOnly.uid == t.uid)
+    val p = predOnly.transform(valid)
+    assert(p.columns.toSeq == Seq("label", "features", "p"))
+    assert(predOnly.transformSchema(valid.schema).fieldNames.toSeq == p.columns.toSeq)
+    assert(doubles(p, "p") == doubles(full, "prediction"),
+      "predict() on z(x) agrees with the prediction read off the margin")
+
+    // transform(ds, paramMap) goes through copy, so the params take effect
+    val rawOnly = t.transform(valid, ParamMap(t.rawPredictionCol -> "m", t.predictionCol -> ""))
+    assert(rawOnly.columns.toSeq == Seq("label", "features", "m"))
+    assert(margins(rawOnly, "m") == margins(full, "rawPrediction"))
+    val moved = t.transform(valid.withColumnRenamed("features", "x"), t.featuresCol -> "x")
+    assert(doubles(moved, "prediction") == doubles(full, "prediction"))
+
+    assert(t.getOrDefault(t.featuresCol) == "features")
+    assert(t.getOrDefault(t.rawPredictionCol) == "rawPrediction")
+    assert(t.getOrDefault(t.predictionCol) == "prediction")
   }
 }

@@ -3,6 +3,9 @@ package graft.ml
 import graft.SparkSpec
 import java.nio.charset.Charset
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.catalyst.expressions.NamedExpression
+import org.apache.spark.sql.functions.{col, when}
+import org.apache.spark.sql.types.{DoubleType, StringType}
 import scala.util.Random
 
 /** End-to-end test of the reference pipeline shape (SURVEY.md §3.1-3.2) on a
@@ -48,6 +51,17 @@ class SentimentPipelineSpec extends SparkSpec {
     val lrAcc = runs.find(r => r.getAs[String]("model_name") == "logistic_regression"
       && r.getAs[String]("metric") == "accuracy").get.getAs[Double]("value")
     assert(lrAcc > 0.8, s"logistic_regression accuracy $lrAcc")
+    // confusion cells (tn, fp, fn, tp) and accuracy on this corpus, as the
+    // full-output transform scores them: predict-only evaluation must
+    // reproduce every cell
+    def metric(m: String, k: String) = runs.find(r => r.getAs[String]("model_name") == m
+      && r.getAs[String]("metric") == k).get.getAs[Double]("value")
+    val cells = models.map(m => m ->
+      Seq("tn", "fp", "fn", "tp", "accuracy", "data_size").map(metric(m, _))).toMap
+    val perfect = Seq(40.0, 0.0, 0.0, 39.0, 1.0, 328.0)
+    assert(cells == Map("gaussian_nb" -> perfect, "linear_svc" -> perfect,
+      "logistic_regression" -> perfect, "rff_svc" -> perfect,
+      "random_forest" -> Seq(40.0, 0.0, 32.0, 7.0, 0.594937, 328.0)), s"runs table: $cells")
     // M6: models + registry persisted
     assert(Files.exists(Paths.get(s"$modelDir/logistic_regression")))
     assert(Files.exists(Paths.get(s"$modelDir/_registry")))
@@ -178,14 +192,49 @@ class SentimentPipelineSpec extends SparkSpec {
     val batch = Seq("I love this awesome day", "I hate this terrible thing")
       .toDF("text")
     val scored = SentimentPipeline.scoreBatch(batch, "text", trained)
-    val predCols = scored.columns.filter(_.startsWith("pred_")).sorted
-    assert(predCols.toSeq == Seq("pred_gaussian_nb", "pred_linear_svc",
-      "pred_logistic_regression", "pred_random_forest", "pred_rff_svc"))
+    // output schema: tweet, then one double prediction per model, by name
+    assert(scored.schema.map(f => f.name -> f.dataType) == ("tweet" -> StringType) +:
+      Seq("gaussian_nb", "linear_svc", "logistic_regression", "random_forest", "rff_svc")
+        .map(m => s"pred_$m" -> DoubleType))
+    // plan shape: only predictions are computed, so no raw-score, probability
+    // or RFF feature-map column appears anywhere in the analysed plan
+    val names = scored.queryExecution.analyzed.collect { case node =>
+      node.output.map(_.name) ++
+        node.expressions.flatMap(_.collect { case n: NamedExpression => n.name })
+    }.flatten.toSet
+    assert(names.contains("features"), "the walk sees intermediate columns")
+    assert(names.intersect(Set("rawPrediction", "probability", "rff_features")).isEmpty,
+      s"plan names: $names")
     val rows = scored.collect()
     assert(rows.length == 2)
     // lr learned the signal: positive text → 1.0, negative → 0.0
     val lr = rows.map(r => r.getAs[String]("tweet") -> r.getAs[Double]("pred_logistic_regression")).toMap
     assert(lr("I love this awesome day") == 1.0)
     assert(lr("I hate this terrible thing") == 0.0)
+  }
+
+  test("predict-only scoring: each pred_<model> equals the unmodified model's prediction") {
+    val csv = makeCsv(300)
+    val (sampled, version) = SentimentPipeline.readAndFetchData(spark, csv, total = 200)
+    val labeled = sampled.withColumn("label", when(col("sentiment") === 4, 1.0).otherwise(0.0))
+    val batch = sampled.select(col("tweet").as("text"))
+    val featurizers = Seq(
+      "tfidf" -> Features.fit(labeled, "tweet"),
+      "word2vec" -> Features.fitWord2Vec(labeled, "tweet", vectorSize = 16))
+    for ((kind, featurizer) <- featurizers) {
+      val featurized = featurizer.transform(labeled, "tweet").cache()
+      val (models, runs) = Trainer.trainAndEvaluate(featurized, featurized, "parity", version)
+      featurized.unpersist()
+      val scored = SentimentPipeline.scoreBatch(batch, "text",
+        SentimentPipeline.Trained(featurizer, models, runs, version)).collect()
+      assert(scored.length == 200)
+      val batchF = featurizer.transform(batch.withColumnRenamed("text", "tweet"), "tweet")
+      for ((name, m) <- models) {
+        val expected = m.transform(batchF).select("tweet", "prediction").collect()
+          .map(r => r.getString(0) -> r.getDouble(1)).toMap
+        val got = scored.map(r => r.getAs[String]("tweet") -> r.getAs[Double](s"pred_$name")).toMap
+        assert(got == expected, s"$kind / $name")
+      }
+    }
   }
 }
