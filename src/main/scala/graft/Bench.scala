@@ -526,8 +526,8 @@ object Bench {
     // Cold/warm memo accounting (VERDICT r21 item 6): per-query medians for
     // memo consumers are WARM serving costs; this field records what each
     // session-scoped fit-once memo's build cost once at the timed dir (the
-    // last build recorded per label — warmup-dir builds precede the timed
-    // passes), so the headline stays reconcilable with a cold deployment.
+    // last build recorded per label(params) — warmup-dir builds precede the
+    // timed passes), so the headline stays reconcilable with a cold deployment.
     // File-only: the stdout driver-contract line is unchanged.
     val memoBuildsJson = {
       import scala.jdk.CollectionConverters._

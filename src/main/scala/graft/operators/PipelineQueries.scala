@@ -1,10 +1,10 @@
 package graft.operators
 
-import graft.QuerySpec
+import graft.{QuerySpec, SessionMemo}
 import graft.functions.{Exprs, VectorFns}
 import graft.functions.Exprs._
 import graft.sources.Tables
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -31,6 +31,11 @@ object PipelineQueries {
        |        i -> concat_ws(' ', ts[i], ts[i+1], ts[i+2])))
        | ELSE [] END""".stripMargin.replace("\n", "")
 
+  /** A money column as exact integer cents — the Spark side of the
+    * oracle's `CAST(CAST(c AS DECIMAL(18,2)) * 100 AS BIGINT)`. */
+  private def cents(c: Column): Column =
+    (c.cast(org.apache.spark.sql.types.DecimalType(18, 2)) * 100).cast("long")
+
   val q30DedupExact: QuerySpec = QuerySpec.oracle(
     "q30_dedup_exact",
     """SELECT min(doc_id) AS doc_id, count(*) AS n_dups, text
@@ -51,12 +56,9 @@ object PipelineQueries {
     * groupBy + pair aggregate per evaluation; the pair relation is tiny
     * (audit-region-bounded), so the checkpoint holds the small output of
     * the one expensive stage. */
-  private val ngramPairs200Cache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]()
-  private def ngramPairs200Cached(spark: org.apache.spark.sql.SparkSession, dir: String)
-      : org.apache.spark.sql.DataFrame =
-    graft.SessionMemo.cached(ngramPairs200Cache, (spark, dir), "ngramPairs200")(_._1) { _ =>
+  private val ngramPairs200Memo = SessionMemo[DataFrame]("ngramPairs200")
+  private def ngramPairs200Cached(spark: SparkSession, dir: String): DataFrame =
+    ngramPairs200Memo(spark, dir) {
       Dedup.ngramJaccardPairs(
           Tables.documents(spark, dir).filter(col("doc_id") < 200),
           "doc_id", "text", n = 3, minJaccard = 0.0, maxDocFreq = 1000)
@@ -1208,8 +1210,7 @@ object PipelineQueries {
     * production shape; this overload is the shape. Within each group the
     * representative is the highest-quality member (longest text, doc_id
     * tiebreak). Columns: doc_id, group_id, n_chars, keep. */
-  def dedupKeepFlagsFrom(groups: org.apache.spark.sql.DataFrame,
-                         docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  def dedupKeepFlagsFrom(groups: DataFrame, docs: DataFrame): DataFrame = {
     val w = Window.partitionBy("group_id").orderBy(col("n_chars").desc, col("doc_id"))
     groups.join(docs.select("doc_id", "n_chars"), Seq("doc_id"))
       .select(col("doc_id"), col("canonical_id").as("group_id"), col("n_chars"))
@@ -1219,8 +1220,7 @@ object PipelineQueries {
   /** Spark side of [[DedupGroupsCte]] + keep flag, shared by q59/q73: within
     * each CC group the representative is the highest-quality member (longest
     * text, doc_id tiebreak). Columns: doc_id, group_id, n_chars, keep. */
-  private def dedupKeepFlags(spark: org.apache.spark.sql.SparkSession,
-                             dir: String): org.apache.spark.sql.DataFrame = {
+  private def dedupKeepFlags(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).filter(col("doc_id") < 200)
     // the memoized audit-region pair set, thresholded — the filter the
     // operator itself would have applied last, on identical jaccard values
@@ -1853,8 +1853,7 @@ object PipelineQueries {
 
   /** The int8-quantized corpus (vec_id, qv) — shared input of the integer
     * ANN/MMR/k-means audits. */
-  private def quantizedVecs(spark: org.apache.spark.sql.SparkSession, dir: String)
-      : org.apache.spark.sql.DataFrame =
+  private def quantizedVecs(spark: SparkSession, dir: String): DataFrame =
     Tables.embeddings(spark, dir)
       .withColumn("scale", VectorFns.maxAbs(col("embedding")))
       .select(col("vec_id"),
@@ -1866,13 +1865,9 @@ object PipelineQueries {
     * int8 corpus ONCE instead of once per query build — the Bucketing
     * layout-memo economics. Keyed by session too: test suites open fresh
     * sessions whose checkpointed RDDs die with them. */
-  private val quantCkCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]()
-  private def quantizedVecsCk(spark: org.apache.spark.sql.SparkSession, dir: String)
-      : org.apache.spark.sql.DataFrame =
-    graft.SessionMemo.cached(quantCkCache, (spark, dir), "quantizedVecs")(_._1)(
-      _ => quantizedVecs(spark, dir).localCheckpoint(eager = false))
+  private val quantizedVecsMemo = SessionMemo[DataFrame]("quantizedVecs")
+  private def quantizedVecsCk(spark: SparkSession, dir: String): DataFrame =
+    quantizedVecsMemo(spark, dir)(quantizedVecs(spark, dir).localCheckpoint(eager = false))
 
   /** Memoized (nation, day) daily shipped-revenue series per (session,
     * dir) — the shared input of the whole series-diagnostics band. Seven
@@ -1890,14 +1885,9 @@ object PipelineQueries {
     * rows at ANY corpus size), so the checkpoint materializes a
     * dictionary-sized relation while the corpus-sized scan+join runs
     * once per session instead of once per consumer. */
-  private val dailyRevCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]()
-  private def dailyRevenueCached(spark: org.apache.spark.sql.SparkSession, dir: String)
-      : org.apache.spark.sql.DataFrame =
-    graft.SessionMemo.cached(dailyRevCache, (spark, dir), "dailyRevenue")(_._1) { _ =>
-      import org.apache.spark.sql.types.DecimalType
-      def cents(c: Column): Column = (c.cast(DecimalType(18, 2)) * 100).cast("long")
+  private val dailyRevenueMemo = SessionMemo[DataFrame]("dailyRevenue")
+  private def dailyRevenueCached(spark: SparkSession, dir: String): DataFrame =
+    dailyRevenueMemo(spark, dir) {
       Tables.lineitem(spark, dir)
         .join(broadcast(Tables.supplier(spark, dir)
             .select(col("s_suppkey"), col("s_nationkey"))),
@@ -1912,8 +1902,7 @@ object PipelineQueries {
 
   /** The (nk, day, x) slice of [[dailyRevenueCached]] every
     * single-measure series consumer reads. */
-  private def dailyRevenue(spark: org.apache.spark.sql.SparkSession, dir: String)
-      : org.apache.spark.sql.DataFrame =
+  private def dailyRevenue(spark: SparkSession, dir: String): DataFrame =
     dailyRevenueCached(spark, dir).select(col("nk"), col("day"), col("x"))
 
   /** Memoized exact integer top-5 ground truth per (session, dir) — the
@@ -1924,12 +1913,9 @@ object PipelineQueries {
     * truth); one checkpointed evaluation serves them all — the
     * lloydCentroidsCached economics (VERDICT r17 item 5), applied to the
     * ground-truth half. */
-  private val top5Cache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]()
-  private def exactTop5Cached(spark: org.apache.spark.sql.SparkSession, dir: String)
-      : org.apache.spark.sql.DataFrame =
-    graft.SessionMemo.cached(top5Cache, (spark, dir), "revTop5")(_._1) { _ =>
+  private val exactTop5Memo = SessionMemo[DataFrame]("revTop5")
+  private def exactTop5Cached(spark: SparkSession, dir: String): DataFrame =
+    exactTop5Memo(spark, dir) {
       val quant = quantizedVecsCk(spark, dir)
       val qs = quant.filter(col("vec_id") % 25 === 0)
         .select(col("vec_id").as("query_id"), col("qv").as("qv_q"))
@@ -1949,22 +1935,18 @@ object PipelineQueries {
     * the production split (fit once, reuse) that q43 documents for the
     * float IVF. `slice` is -1 for the full vector, else the PQ subspace
     * ordinal. */
-  private val centCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String, Int, Int, Int, Int),
-      Seq[(Long, Array[Long])]]()
-  private def lloydCentroidsCached(spark: org.apache.spark.sql.SparkSession, dir: String,
+  private val lloydCentroidsMemo = SessionMemo[Seq[(Long, Array[Long])]]("lloydCentroids")
+  private def lloydCentroidsCached(spark: SparkSession, dir: String,
                                    slice: Int, k: Int, dims: Int, rounds: Int)
       : Seq[(Long, Array[Long])] =
-    graft.SessionMemo.cached(centCache, (spark, dir, slice, k, dims, rounds),
-        "lloydCentroids")(_._1)(_ => {
+    lloydCentroidsMemo(spark, dir, slice, k, dims, rounds) {
       val quant = quantizedVecsCk(spark, dir)
       val in =
         if (slice < 0) quant
         else quant.select(col("vec_id"), org.apache.spark.sql.functions
           .slice(col("qv"), slice * dims + 1, dims).as("qv"))
       lloydCentroids(in, k, dims, rounds)
-    })
+    }
 
   /** In-row integer argmin over the centroid set: d² = x·x − 2x·c + c·c
     * (exact in integers) inside a struct (dist, cid) with the same
@@ -1983,7 +1965,7 @@ object PipelineQueries {
     * in-row argmin + one (cid, dim) aggregate whose k×dims result
     * re-enters the next round's plan as literals. Returns the final
     * centroids. Shared by q170 and q171. */
-  private def lloydCentroids(quant: org.apache.spark.sql.DataFrame,
+  private def lloydCentroids(quant: DataFrame,
                              k: Int, dims: Int, rounds: Int): Seq[(Long, Array[Long])] = {
     var cents: Seq[(Long, Array[Long])] = quant.filter(col("vec_id") < k)
       .select(col("vec_id"), col("qv")).collect()
@@ -2640,12 +2622,9 @@ object PipelineQueries {
     * stream), so the checkpoint materializes the small output of the one
     * expensive stage — the chunkIndexCached economics. q157's span stage
     * keeps its own build (different input: the gated survivor set). */
-  private val spanPairsCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]()
-  private def spanPairsCached(spark: org.apache.spark.sql.SparkSession, dir: String)
-      : org.apache.spark.sql.DataFrame =
-    graft.SessionMemo.cached(spanPairsCache, (spark, dir), "spanPairs")(_._1) { _ =>
+  private val spanPairsMemo = SessionMemo[DataFrame]("spanPairs")
+  private def spanPairsCached(spark: SparkSession, dir: String): DataFrame =
+    spanPairsMemo(spark, dir) {
       graft.PlanDump.cut(
         Dedup.spanPairs(Tables.documents(spark, dir), "doc_id", "text",
           k = SpanK, minSpan = SpanMin, maxOcc = SpanMaxOcc),
@@ -3276,14 +3255,10 @@ object PipelineQueries {
     * tfc ⋈ dft ⋈ dl chain produced — plus the 1-row corpus stats
     * (n_docs, sum_dl). The serving-side retrieval index q174 reads; the
     * chunk-level twin is [[chunkIndexCached]]. */
-  private[operators] final case class Bm25Index(
-      postings: org.apache.spark.sql.DataFrame, stats: org.apache.spark.sql.DataFrame)
-  private val bm25Cache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), Bm25Index]()
-  private def bm25IndexCached(spark: org.apache.spark.sql.SparkSession, dir: String)
-      : Bm25Index =
-    graft.SessionMemo.cached(bm25Cache, (spark, dir), "bm25Index")(_._1) { _ =>
+  private[operators] final case class Bm25Index(postings: DataFrame, stats: DataFrame)
+  private val bm25IndexMemo = SessionMemo[Bm25Index]("bm25Index")
+  private def bm25IndexCached(spark: SparkSession, dir: String): Bm25Index =
+    bm25IndexMemo(spark, dir) {
       val toks = Tables.documents(spark, dir).select(col("doc_id"), lowToksCol.as("ts"))
       val dl = toks.select(col("doc_id"), size(col("ts")).cast("long").as("dl"))
       val st = dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
@@ -3419,7 +3394,7 @@ object PipelineQueries {
          |ORDER BY avg_bits DESC, doc_id LIMIT 100""".stripMargin
     ) { (spark, dir) =>
       // bigram stream via slice+arrays_zip — q57's native-codegen idiom
-      def bigrams(df: org.apache.spark.sql.DataFrame) = {
+      def bigrams(df: DataFrame) = {
         val n1 = greatest(size(col("ts")) - 1, lit(0))
         df.select(col("doc_id"), lowToksCol.as("ts"))
           .select(col("doc_id"), explode(arrays_zip(
@@ -3744,11 +3719,10 @@ object PipelineQueries {
          |ORDER BY e.scope""".stripMargin
     ) { (spark, dir) =>
       import graft.functions.BottomKRows
-      import org.apache.spark.sql.types.DecimalType
       val base = Tables.lineitem(spark, dir).select(
         col("l_returnflag").as("scope"),
         md5((col("l_orderkey") * 8 + col("l_linenumber")).cast("string")).as("rk"),
-        (col("l_extendedprice").cast(DecimalType(18, 2)) * 100).cast("long").as("v"))
+        cents(col("l_extendedprice")).as("v"))
       // the production path: ONE bounded-heap aggregate — exact count +
       // the k-smallest-by-hash sample, map-side combined. rollup(scope)
       // supplies the '(all)' group via Expand BELOW which the md5 rank
@@ -3773,7 +3747,7 @@ object PipelineQueries {
       // full parallelism (measured: the audit half 1.7 → ~0.6 s at sf0.1)
       val valsOnly = Tables.lineitem(spark, dir).select(
         col("l_returnflag").as("scope"),
-        (col("l_extendedprice").cast(DecimalType(18, 2)) * 100).cast("long").as("v"))
+        cents(col("l_extendedprice")).as("v"))
       val rows2 = valsOnly.unionByName(
         valsOnly.select(lit("(all)").as("scope"), col("v")))
       val vrank = StripedWindow.runningSum(
@@ -3817,9 +3791,7 @@ object PipelineQueries {
     * corpus×corpus product, and production swaps any ranker for
     * q174/q166's lists unchanged since RRF only consumes
     * (query, cand, rank). */
-  private val rrfFeatCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]()
+  private val rrfFeatMemo = SessionMemo[DataFrame]("rrfFeat")
 
   val q185HybridRrf: QuerySpec = {
     val (shortlist, kPick) = (10, 5)
@@ -3884,7 +3856,7 @@ object PipelineQueries {
       // ~2M md5 hashes per build, referenced twice per evaluation (corpus
       // side + the %50 query side re-ran the whole subtree); memoized per
       // (session, dir) like the other serving-side indexes (r21)
-      val feat = graft.SessionMemo.cached(rrfFeatCache, (spark, dir), "rrfFeat")(_._1)(_ =>
+      val feat = rrfFeatMemo(spark, dir)(
         Tables.documents(spark, dir)
           .withColumn("ts", lowToksCol)
           .select(col("doc_id"), col("n_chars"), hashedGrams(bigrams).as("bgs"),
@@ -3907,7 +3879,7 @@ object PipelineQueries {
       // pairs exchange canonicalizes identically and AQE reuses it at
       // runtime (an in-row collect-sort-slice alternative measured 3×
       // SLOWER — 500k×3 structs through un-combined collect_list buffers)
-      def ranked(order: Seq[Column]): org.apache.spark.sql.DataFrame =
+      def ranked(order: Seq[Column]): DataFrame =
         pairs.withColumn("rnk", row_number().over(
             Window.partitionBy("query_id").orderBy(order: _*)))
           .filter(col("rnk") <= shortlist)
@@ -4311,8 +4283,6 @@ object PipelineQueries {
       |    AS trending
       |FROM v JOIN nation ON n_nationkey = nk ORDER BY nation""".stripMargin
   ) { (spark, dir) =>
-    import org.apache.spark.sql.types.DecimalType
-    def cents(c: Column): Column = (c.cast(DecimalType(18, 2)) * 100).cast("long")
     val rev = Tables.lineitem(spark, dir)
       .join(broadcast(Tables.supplier(spark, dir)
           .select(col("s_suppkey"), col("s_nationkey"))),
@@ -4518,8 +4488,7 @@ object PipelineQueries {
       "q197_skew_audit",
       sqlAudits.mkString("", "\nUNION ALL\n", "\nORDER BY key_col")
     ) { (spark, dir) =>
-      def one(df: org.apache.spark.sql.DataFrame, key: String, label: String)
-          : org.apache.spark.sql.DataFrame = {
+      def one(df: DataFrame, key: String, label: String): DataFrame = {
         val c = df.groupBy(col(key).as("k")).agg(count(lit(1)).as("cnt"))
         val h = c.groupBy(col("cnt").as("v")).agg(count(lit(1)).as("m"))
         // histogram-sized window: rows = DISTINCT count values, bounded
@@ -4619,7 +4588,6 @@ object PipelineQueries {
          |UNION ALL ${ipSql("sl", "so", "xo", "nl", "no", "lineitem.l_orderkey x orders.o_orderkey")}
          |ORDER BY join_key, width""".stripMargin
     ) { (spark, dir) =>
-      import org.apache.spark.sql.DataFrame
       def sketchOf(df: DataFrame, key: String): DataFrame = {
         // ONE md5 per row; the d hash rows and both widths fan out with
         // Kirsch-Mitzenmacher arithmetic only (h1 + j·h2 mod w, h2 odd).
@@ -4743,8 +4711,6 @@ object PipelineQueries {
          |ORDER BY col, digit""".stripMargin
     ) { (spark, dir) =>
       import spark.implicits._
-      import org.apache.spark.sql.types.DecimalType
-      def cents(c: Column): Column = (c.cast(DecimalType(18, 2)) * 100).cast("long")
       val amounts = Tables.lineitem(spark, dir)
         .select(lit("lineitem.l_extendedprice").as("col"),
           cents(col("l_extendedprice")).as("cents"))
@@ -5315,7 +5281,6 @@ object PipelineQueries {
          |FROM pt JOIN rk USING (nk) JOIN nation ON n_nationkey = nk
          |GROUP BY 1, 2, 3 ORDER BY nation""".stripMargin
     ) { (spark, dir) =>
-      import org.apache.spark.sql.types.DecimalType
       // ONE md5 per row; the B per-replicate uniforms derive from its two
       // 60-bit halves via the Kirsch-Mitzenmacher double-hash family
       // u_r = (h1 + r·h2) mod 10⁹ — the standard construction for many
@@ -5329,7 +5294,7 @@ object PipelineQueries {
             .select(col("c_custkey"), col("c_nationkey"))),
           col("o_custkey") === col("c_custkey"))
         .select(col("c_nationkey").as("nk"), half(1).as("h1"), half(16).as("h2"),
-          (col("o_totalprice").cast(DecimalType(18, 2)) * 100).cast("long").as("x"))
+          cents(col("o_totalprice")).as("x"))
       // ascending CDF thresholds folded into the CASE ladder the oracle
       // spells out — first matching rung wins in both engines; u is a
       // named column so the ladder tests ONE value, not 7 pmod chains
@@ -5564,7 +5529,7 @@ object PipelineQueries {
     * w = k + 1 − rank. Returns (p_lang, g, w). The profile relation is
     * LANGUAGE-DICTIONARY sized (|langs| × k rows) no matter the corpus —
     * the property that lets scoring broadcast it. */
-  private[graft] def langIdProfiles(train: org.apache.spark.sql.DataFrame, k: Int): org.apache.spark.sql.DataFrame =
+  private[graft] def langIdProfiles(train: DataFrame, k: Int): DataFrame =
     train.select(col("lang"), explode(charTrigrams(col("text"))).as("g"))
       .groupBy("lang", "g").agg(count(lit(1)).as("c"))
       .withColumn("rk", row_number().over(
@@ -5580,7 +5545,7 @@ object PipelineQueries {
     * heat death of a 2⁶³-char document). Returns
     * (doc_id, lang_true, lang_pred). Docs sharing no gram with any
     * profile drop out (inner join) — identically in both engines. */
-  private[graft] def langIdPredict(docs: org.apache.spark.sql.DataFrame, profiles: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+  private[graft] def langIdPredict(docs: DataFrame, profiles: DataFrame): DataFrame =
     docs.select(col("doc_id"), col("lang").as("lang_true"),
         explode(charTrigrams(col("text"))).as("g"))
       .groupBy("doc_id", "lang_true", "g").agg(count(lit(1)).as("c"))
@@ -5610,9 +5575,7 @@ object PipelineQueries {
     * bounded); the profile table is |langs|·k rows and broadcasts;
     * scoring is one linear gram scan + a doc-keyed argmax window — no
     * corpus-sized shuffle beyond the per-doc gram aggregate. */
-  private val langProfCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]()
+  private val langProfMemo = SessionMemo[DataFrame]("langProf")
 
   val q208LangId: QuerySpec = {
     val k = 64
@@ -5649,7 +5612,7 @@ object PipelineQueries {
       // the trained rank-profile table is the FIT — |langs|·k rows behind
       // a corpus-sized training scan; memoized per (session, dir) like
       // every other fit-once/serve-many model state (r21)
-      val prof = graft.SessionMemo.cached(langProfCache, (spark, dir), "langProf")(_._1)(_ =>
+      val prof = langProfMemo(spark, dir)(
         langIdProfiles(docs.filter(pmod(col("doc_id"), lit(5)) =!= 0), k)
           .localCheckpoint(eager = false))
       val pred = langIdPredict(docs.filter(pmod(col("doc_id"), lit(5)) === 0), prof)
@@ -6037,7 +6000,7 @@ object PipelineQueries {
     * half (per-dim truncating div — q170's update rule), the squared
     * centroid shift, the average within-half scatter (inertia per point),
     * and drift = shift²·10⁶ div scatter with the 0.25 flag. */
-  def embeddingDrift(q: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  def embeddingDrift(q: DataFrame): DataFrame = {
     val dimrows = q.select(col("label"), col("half"),
         posexplode(col("qv")).as(Seq("pos", "val")))
     // ONE (label, half, pos) aggregate carries the sufficient statistics
@@ -6261,12 +6224,9 @@ object PipelineQueries {
     * index q216's BM25 arm reads four ways (corpus stats, tf, df, dl).
     * A deployed RAG system materializes exactly this relation once per
     * corpus version; the memo is that contract in session form. */
-  private val chunkCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]()
-  private def chunkIndexCached(spark: org.apache.spark.sql.SparkSession, dir: String)
-      : org.apache.spark.sql.DataFrame =
-    graft.SessionMemo.cached(chunkCache, (spark, dir), "chunkIndex")(_._1) { _ =>
+  private val chunkIndexMemo = SessionMemo[DataFrame]("chunkIndex")
+  private def chunkIndexCached(spark: SparkSession, dir: String): DataFrame =
+    chunkIndexMemo(spark, dir) {
       val (width, stride) = (128, 96)
       Tables.documents(spark, dir)
         .select(col("doc_id"), lowToksCol.as("ts"))
@@ -6285,12 +6245,9 @@ object PipelineQueries {
     * per distinct (doc, chunk, token) with (tf, df, dl), exactly the
     * multiset q216's per-evaluation ctf ⋈ cdf ⋈ dl chain produced, plus
     * the 1-row (n_chunks, sum_dl). */
-  private val chunkBm25Cache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), Bm25Index]()
-  private def chunkBm25IndexCached(spark: org.apache.spark.sql.SparkSession, dir: String)
-      : Bm25Index =
-    graft.SessionMemo.cached(chunkBm25Cache, (spark, dir), "chunkBm25Index")(_._1) { _ =>
+  private val chunkBm25IndexMemo = SessionMemo[Bm25Index]("chunkBm25Index")
+  private def chunkBm25IndexCached(spark: SparkSession, dir: String): Bm25Index =
+    chunkBm25IndexMemo(spark, dir) {
       val cdl = chunkIndexCached(spark, dir)
       val cst = cdl.agg(count(lit(1)).as("n_chunks"), sum(col("dl")).as("sum_dl"))
       val cpair = cdl.select(col("doc_id"), col("chunk_idx"), explode(col("chunk")).as("token"))

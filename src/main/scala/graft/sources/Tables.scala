@@ -22,8 +22,8 @@ object Tables {
     * the catalog/metastore analog for the driver test tables, and at scale
     * exactly what a real deployment gets from its table catalog. Assumes a
     * path's schema is stable for the JVM's lifetime (true for the immutable
-    * testdata; a path rewritten with a new schema needs `schemaCache
-    * .remove(path)` or a fresh JVM). */
+    * testdata). Nothing evicts an entry: a path rewritten with a new schema
+    * needs a fresh JVM. */
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
