@@ -38,7 +38,7 @@ object BloomAudit {
       }
       val nTrain = timed("count train")(tr.count())
       // The EXACT filter q51 builds: sized from the footer-metadata
-      // docs-count × 256 overestimate (PipelineQueries.q51ContaminationBloom),
+      // docs-count × 256 overestimate (DedupQueries.q51ContaminationBloom),
       // not from the distinct-shingle count — so the FP/shuffle-cut numbers
       // printed here are measurements of the shipped configuration.
       // (Inserting distinct vs raw shingles yields an identical filter;

@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
   * eviction.
   *
   * Each memoised build (Graph.tradePairs / coSupplyEdges,
-  * PipelineQueries.quantizedVecsCk / lloydCentroidsCached, …) is one
+  * VectorQueries.quantizedVecsCk / lloydCentroidsCached, …) is one
   * instance keyed by (SparkSession, dir, params), so each session
   * materializes its expensive shared state once per dir and parameter set.
   * A bare ConcurrentHashMap, however, never forgets: entries for STOPPED

@@ -2,14 +2,16 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * Queries are assembled from per-module registries; each module covers one
-  * band of SURVEY.md §2's operator inventory.
+  * band of the operator inventory (README "Query modules").
   */
 object SparkEntry {
 
-  /** Every verifiable operator surface, in SURVEY §2 order. */
+  /** Every verifiable operator surface. The order is insertion order, not
+    * a survey order: it is pinned so bench lines and cross-round diffs stay
+    * comparable, so a new query goes at the end of its module's `all`. */
   def specs: Seq[QuerySpec] =
     operators.Relational.all ++ operators.TextQueries.all ++
       operators.PipelineQueries.all ++ ml.MlQueries.all ++

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     // optional 3rd arg (dev only; the driver passes two): comma-separated
-    // query names to dump — single-query iteration without a 75-query pass
+    // query names to dump — single-query iteration without a full pass
     val Array(sfDir, outDir) = args.take(2)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None

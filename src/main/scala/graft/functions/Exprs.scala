@@ -26,6 +26,21 @@ object Exprs {
   def davg(c: Column, scale: Int = 2): Column =
     dsum(c, scale) / count(lit(1))
 
+  /** A money column as exact integer cents — the Spark side of the
+    * oracle's `CAST(CAST(c AS DECIMAL(18,2)) * 100 AS BIGINT)`. */
+  def cents(c: Column): Column =
+    (c.cast(DecimalType(18, 2)) * 100).cast("long")
+
+  /** The cross-engine 60-bit content hash: the first 15 hex digits of
+    * `md5(c)` read as a non-negative long. Bit-identical to its DuckDB
+    * mirror [[hash60Sql]]. */
+  def hash60(c: Column): Column =
+    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
+
+  /** DuckDB mirror of [[hash60]] over the SQL string expression `x`. */
+  def hash60Sql(x: String): String =
+    s"('0x' || substring(md5($x), 1, 15))::BIGINT"
+
   /** DuckDB `row_number()`/`year()`/... return BIGINT where Spark returns INT;
     * align Spark output to long so the schema compare passes. */
   def asLong(c: Column): Column = c.cast(LongType)

@@ -91,7 +91,7 @@ object IntCentroidDists {
     val k = cids.length
     val out = new Array[Any](k)
     val degenerate =
-      qv == null || qv.numElements() != dims || hasNullElement(qv, dims)
+      qv == null || qv.numElements() != dims || ArrayChecks.hasNullElement(qv, dims)
     if (degenerate) {
       var c = 0
       while (c < k) {
@@ -129,15 +129,6 @@ object IntCentroidDists {
       }
     }
     new GenericArrayData(out)
-  }
-
-  private def hasNullElement(a: ArrayData, n: Int): Boolean = {
-    var i = 0
-    while (i < n) {
-      if (a.isNullAt(i)) return true
-      i += 1
-    }
-    false
   }
 
   /** Sorted (dist, cid) array for `vec` against the centroid set. */

@@ -84,7 +84,7 @@ object IntSignBandKeys {
   def keys(qv: ArrayData, planes: Array[Long], dims: Int,
            numBands: Int, bitsPerBand: Int): ArrayData = {
     val out = new Array[Long](numBands)
-    if (qv != null && qv.numElements() == dims && !hasNullElement(qv, dims)) {
+    if (qv != null && qv.numElements() == dims && !ArrayChecks.hasNullElement(qv, dims)) {
       var b = 0
       while (b < numBands) {
         var key = 0L
@@ -105,15 +105,6 @@ object IntSignBandKeys {
       }
     }
     new GenericArrayData(out)
-  }
-
-  private def hasNullElement(a: ArrayData, n: Int): Boolean = {
-    var i = 0
-    while (i < n) {
-      if (a.isNullAt(i)) return true
-      i += 1
-    }
-    false
   }
 
   def bandKeys(qv: Column, planes: Array[Long], dims: Int,

@@ -84,7 +84,7 @@ object SignBandKeys {
   def keys(emb: ArrayData, planes: Array[Float], dims: Int,
            numBands: Int, bitsPerBand: Int): ArrayData = {
     val out = new Array[Long](numBands)
-    if (emb != null && emb.numElements() == dims && !hasNullElement(emb, dims)) {
+    if (emb != null && emb.numElements() == dims && !ArrayChecks.hasNullElement(emb, dims)) {
       var b = 0
       while (b < numBands) {
         var key = 0L
@@ -105,15 +105,6 @@ object SignBandKeys {
       }
     }
     new GenericArrayData(out)
-  }
-
-  private def hasNullElement(a: ArrayData, n: Int): Boolean = {
-    var i = 0
-    while (i < n) {
-      if (a.isNullAt(i)) return true
-      i += 1
-    }
-    false
   }
 
   def bandKeys(emb: Column, planes: Array[Float], dims: Int,

@@ -83,9 +83,9 @@ object TextFns {
 
   /** Deterministic token→id encoding shared with DuckDB (F1 substitute):
     * first 15 hex digits of md5, as a bigint, mod `vocabSize`.
-    * DuckDB mirror: `CAST(concat('0x', substring(md5(t),1,15)) AS BIGINT) % vocab`. */
+    * DuckDB mirror: `hash60Sql(t) % vocab`. */
   def tokenId(t: Column, vocabSize: Int): Column =
-    conv(substring(md5(t), 1, 15), 16, 10).cast("long") % vocabSize
+    Exprs.hash60(t) % vocabSize
 
   /** Kernel form of `transform(tokens, t => tokenId(t, vocabSize))` — one
     * md5 loop per row instead of interpreted per-element lambdas

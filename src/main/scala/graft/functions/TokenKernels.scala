@@ -25,7 +25,7 @@ private[functions] object TokenKernelChecks {
     }
 }
 
-/** `transform(ts, t -> conv(substring(md5(t),1,15),16,10) % vocab)` as one
+/** `transform(ts, t -> hash60(t) % vocab)` ([[Exprs.hash60]]) as one
   * kernel call: the bounded token→id encoding (TextFns.tokenId) for every
   * token of a document in a single md5-per-token loop. */
 case class TokenIdsExpr(child: Expression, vocabSize: Int) extends UnaryExpression {

@@ -32,12 +32,6 @@ object VectorFns {
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (l2Norm(a) * l2Norm(b))
 
-  /** Squared L2 distance (KNN's metric, reference src/main.py:106-109). */
-  def l2Sq(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => (x.cast("double") - y.cast("double")) * (x.cast("double") - y.cast("double"))),
-      lit(0.0), (acc, v) => acc + v)
-
   /** Largest |aᵢ| as double — the symmetric-quantization scale. max is
     * exact and order-free, so it's engine-portable unlike a sum fold. */
   def maxAbs(a: Column): Column =
@@ -81,5 +75,18 @@ object VectorFns {
 
     def dequantMaxErr(a: String, q: String, scale: String): String =
       s"list_max(list_transform(list_zip($a, $q), p -> abs(CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE) * $scale / 127.0)))"
+
+    /** Exact BIGINT fold for integer (int8-quantized) lists: no float
+      * rounding, so any summation order gives the Spark kernels' value. */
+    private def intFold(listExpr: String): String =
+      s"list_reduce(list_prepend(0, $listExpr), (acc, v) -> acc + v)"
+
+    /** Integer inner product of two integer lists. */
+    def intDot(a: String, b: String): String =
+      intFold(s"list_transform(list_zip($a, $b), p -> p[1]*p[2])")
+
+    /** Integer squared-L2 distance of two integer lists. */
+    def intDist2(a: String, b: String): String =
+      intFold(s"list_transform(list_zip($a, $b), p -> (p[1]-p[2])*(p[1]-p[2]))")
   }
 }

@@ -1,6 +1,7 @@
 package graft.ml
 
 import graft.QuerySpec
+import graft.functions.Exprs.{hash60, hash60Sql}
 import graft.operators.Sampling
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
@@ -38,15 +39,14 @@ object MlQueries {
     * the CV loop (the MLlib fits stay rows-only per SURVEY §5). */
   val q156CvFolds: QuerySpec = QuerySpec.oracle(
     "q156_cv_folds",
-    """SELECT ('0x' || substring(md5(CAST(vec_id AS VARCHAR)), 1, 15))::BIGINT % 5 AS fold,
+    s"""SELECT ${hash60Sql("CAST(vec_id AS VARCHAR)")} % 5 AS fold,
       |  label, count(*) AS n
       |FROM embeddings GROUP BY 1, 2
       |ORDER BY fold, label""".stripMargin
   ) { (spark, dir) =>
     Tables.embeddings(spark, dir)
       .withColumn("fold",
-        conv(substring(md5(col("vec_id").cast("string")), 1, 15), 16, 10)
-          .cast("long") % 5)
+        hash60(col("vec_id").cast("string")) % 5)
       .groupBy("fold", "label").agg(count(lit(1)).as("n"))
       .orderBy("fold", "label")
   }

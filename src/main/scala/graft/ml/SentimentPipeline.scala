@@ -1,5 +1,6 @@
 package graft.ml
 
+import graft.functions.Exprs.hash60
 import graft.operators.Sampling
 import graft.sources.Tables
 import org.apache.spark.ml.Transformer
@@ -34,8 +35,7 @@ object SentimentPipeline {
       .filter(col("sentiment").isin(0, 4))
     val sampled = Sampling.balancedSample(raw, "sentiment", total / 2, seed)
     val version = sampled
-      .select(conv(substring(md5(concat_ws("|", col("sentiment"), col("tweet"))), 1, 15), 16, 10)
-        .cast("long").as("h"))
+      .select(hash60(concat_ws("|", col("sentiment"), col("tweet"))).as("h"))
       .agg(expr("bit_xor(h)"))
       .collect().head.getLong(0).toHexString
     versionedDir.foreach(d => Tables.writeVersionedCsv(sampled, d, version))

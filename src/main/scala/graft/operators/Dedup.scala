@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.TextFns
+import graft.functions.Exprs
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -85,14 +85,14 @@ object Dedup {
       .select("id_a", "id_b", "inter", "jaccard")
   }
 
-  /** Portable 60-bit token/shingle hash: first 15 hex digits of md5, seeded —
-    * identical in DuckDB (`CAST(concat('0x', substring(md5(seed||s),1,15)) AS BIGINT)`),
-    * so MinHash signatures are cross-engine reproducible. */
+  /** Portable 60-bit token/shingle hash: [[Exprs.hash60]] of `seed:s`,
+    * identical in DuckDB ([[seededHashSql]]), so MinHash signatures are
+    * cross-engine reproducible. */
   def seededHash(s: Column, seed: Int): Column =
-    conv(substring(md5(concat(lit(seed.toString), lit(":"), s)), 1, 15), 16, 10).cast("long")
+    Exprs.hash60(concat(lit(seed.toString), lit(":"), s))
 
   def seededHashSql(s: String, seed: Int): String =
-    s"CAST(concat('0x', substring(md5(concat('$seed', ':', $s)), 1, 15)) AS BIGINT)"
+    Exprs.hash60Sql(s"concat('$seed', ':', $s)")
 
   /** MinHash signature: array of `numHashes` minima of seeded hashes over the
     * doc's shingle set. Empty shingle set → all Long.MaxValue. The codegen'd

@@ -1027,9 +1027,9 @@ object EventQueries {
     * (event_type, user-hash) projection. */
   val q117SketchReport: QuerySpec = QuerySpec.oracle(
     "q117_sketch_report",
-    """WITH ev AS (SELECT event_type, event_id, user_id, value FROM events),
+    s"""WITH ev AS (SELECT event_type, event_id, user_id, value FROM events),
       |du AS (SELECT DISTINCT event_type,
-      |         ('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT AS h
+      |         ${hash60Sql("CAST(user_id AS VARCHAR)")} AS h
       |       FROM ev),
       |dr AS (SELECT event_type, h,
       |         row_number() OVER (PARTITION BY event_type ORDER BY h) AS rn FROM du),
@@ -1066,8 +1066,7 @@ object EventQueries {
     // KMV distinct: q161's sketch per event type over 60-bit user hashes;
     // binary order of the zero-padded hex key == numeric order of h
     val du = ev.select(col("event_type"),
-        conv(substring(md5(col("user_id").cast("string")), 1, 15), 16, 10)
-          .cast("long").as("h"))
+        hash60(col("user_id").cast("string")).as("h"))
       .distinct()
     val dk = du.groupBy("event_type")
       .agg(count(lit(1)).as("n_exact"),
@@ -1242,7 +1241,7 @@ object EventQueries {
   val q183StreamSketchState: QuerySpec = {
     val (d, w, k) = (4, 64, 64)
     val cellRows = (0 until d).map(j =>
-      s"SELECT $j AS j, ('0x' || substring(md5('$j:' || t), 1, 15))::BIGINT % $w AS bucket FROM keys")
+      s"SELECT $j AS j, ${hash60Sql(s"'$j:' || t")} % $w AS bucket FROM keys")
       .mkString("\n       |  UNION ALL ")
     QuerySpec.oracle(
       "q183_stream_sketch_state",
@@ -1250,11 +1249,11 @@ object EventQueries {
          |  SELECT event_type || ':' || CAST(user_id AS VARCHAR) AS t FROM events),
          |cells AS ($cellRows),
          |cms AS (SELECT j, bucket, count(*) AS c FROM cells GROUP BY 1, 2),
-         |hs AS (SELECT DISTINCT ('0x' || substring(md5(t), 1, 15))::BIGINT AS h
+         |hs AS (SELECT DISTINCT ${hash60Sql("t")} AS h
          |       FROM keys),
          |kmv AS (SELECT h, row_number() OVER (ORDER BY h) AS rn FROM hs),
          |qv AS (SELECT DISTINCT
-         |    ('0x' || substring(md5(CAST(event_id AS VARCHAR)), 1, 15))::BIGINT AS h,
+         |    ${hash60Sql("CAST(event_id AS VARCHAR)")} AS h,
          |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS v
          |  FROM events),
          |qnt AS (SELECT h, v, row_number() OVER (ORDER BY h, v) AS rn FROM qv)

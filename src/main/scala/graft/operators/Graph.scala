@@ -554,7 +554,7 @@ object Graph {
   /** Memoized distinct customer↔supplier trade PAIRS per (session, dir) —
     * the expensive dedup-to-dictionary step q136 and q162 both build from
     * lineitem⋈orders. The fit-once/serve-many economics the ANN audits
-    * use (PipelineQueries.quantizedVecsCk): each session materializes the
+    * use (VectorQueries.quantizedVecsCk): each session materializes the
     * relationship dictionary once behind a checkpoint; the per-query
     * orientation explode stays cheap and derives from the cached rows. */
   private val tradePairsMemo = SessionMemo[DataFrame]("tradePairs")

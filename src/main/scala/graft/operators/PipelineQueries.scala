@@ -1,6792 +1,19 @@
 package graft.operators
 
-import graft.{QuerySpec, SessionMemo}
-import graft.functions.{Exprs, VectorFns}
-import graft.functions.Exprs._
-import graft.sources.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import graft.QuerySpec
 
-/** QuerySpecs for the LLM-data-pipeline band (dedup, similarity search, KNN)
-  * — the operators live in Dedup / Similarity / Knn; this module binds them
-  * to the driver tables and renders the DuckDB mirrors.
+/** Index of the LLM-data-pipeline band, whose queries live in one band
+  * module each by subject: [[DedupQueries]], [[VectorQueries]],
+  * [[SketchQueries]], [[SeriesQueries]], [[CorpusQueries]] and
+  * [[ServingQueries]].
   *
-  * The synthetic corpus has no true near-dups (max pairwise Jaccard ≈ 0.03,
-  * max cosine ≈ 0.46 — measured), so the oracle queries use top-N-pairs /
-  * top-k form, which is non-empty and deterministic at any threshold;
-  * threshold semantics are exercised in DedupSpec/SimilaritySpec with
-  * planted duplicates.
+  * `all` keeps the band's 95 specs in their original order: that order is
+  * part of [[graft.SparkEntry.specs]], which pins the bench line and the
+  * cross-round diffs. No band module refers back to this object.
   */
 object PipelineQueries {
-
-  /** DuckDB mirror of Dedup.lowToks. */
-  private val LowToksSql =
-    raw"""list_filter(str_split_regex(lower(text), '\W+'), t -> t <> '')"""
-
-  /** DuckDB mirror of Dedup.shingles(text, 3). */
-  private val ShinglesSql =
-    s"""CASE WHEN len(ts) >= 3
-       | THEN list_distinct(list_transform(generate_series(1, len(ts) - 2),
-       |        i -> concat_ws(' ', ts[i], ts[i+1], ts[i+2])))
-       | ELSE [] END""".stripMargin.replace("\n", "")
-
-  /** A money column as exact integer cents — the Spark side of the
-    * oracle's `CAST(CAST(c AS DECIMAL(18,2)) * 100 AS BIGINT)`. */
-  private def cents(c: Column): Column =
-    (c.cast(org.apache.spark.sql.types.DecimalType(18, 2)) * 100).cast("long")
-
-  val q30DedupExact: QuerySpec = QuerySpec.oracle(
-    "q30_dedup_exact",
-    """SELECT min(doc_id) AS doc_id, count(*) AS n_dups, text
-      |FROM documents GROUP BY text ORDER BY doc_id""".stripMargin
-  ) { (spark, dir) =>
-    Dedup.exact(Tables.documents(spark, dir), "doc_id", Seq("text"))
-      .select("doc_id", "n_dups", "text")
-      .orderBy("doc_id")
-  }
-
-  /** Memoized shingle-pair relation over the bounded doc_id < 200 audit
-    * region per (session, dir) — [[Dedup.ngramJaccardPairs]] at
-    * minJaccard 0 (every shingle-sharing pair with its exact jaccard),
-    * shared by FIVE consumers (r21): q31 (top pairs), q35 (CC groups),
-    * q59/q73 (keep flags / apply, via the ≥ [[DedupMinJaccard]] filter —
-    * exactly the filter the operator itself would have applied last) and
-    * q165 (savings). Each previously re-ran the shingle explode + gram
-    * groupBy + pair aggregate per evaluation; the pair relation is tiny
-    * (audit-region-bounded), so the checkpoint holds the small output of
-    * the one expensive stage. */
-  private val ngramPairs200Memo = SessionMemo[DataFrame]("ngramPairs200")
-  private def ngramPairs200Cached(spark: SparkSession, dir: String): DataFrame =
-    ngramPairs200Memo(spark, dir) {
-      Dedup.ngramJaccardPairs(
-          Tables.documents(spark, dir).filter(col("doc_id") < 200),
-          "doc_id", "text", n = 3, minJaccard = 0.0, maxDocFreq = 1000)
-        .localCheckpoint(eager = false)
-    }
-
-  val q31NgramJaccard: QuerySpec = QuerySpec.oracle(
-    "q31_dedup_ngram_pairs",
-    s"""WITH toks AS (
-       |  SELECT doc_id, $LowToksSql AS ts FROM documents WHERE doc_id < 200),
-       |shl AS (SELECT doc_id, $ShinglesSql AS shs FROM toks),
-       |sh0 AS (SELECT doc_id AS doc, unnest(shs) AS sh FROM shl),
-       |rare AS (SELECT sh FROM sh0 GROUP BY sh HAVING count(*) <= 1000),
-       |sh AS (SELECT doc, sh0.sh FROM sh0 JOIN rare USING (sh)),
-       |sizes AS (SELECT doc, count(*) AS n_sh FROM sh GROUP BY doc),
-       |inter AS (
-       |  SELECT a.doc AS id_a, b.doc AS id_b, count(*) AS inter
-       |  FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc < b.doc GROUP BY 1, 2)
-       |SELECT id_a, id_b, inter,
-       |  inter / (sa.n_sh + sb.n_sh - inter) AS jaccard
-       |FROM inter
-       |JOIN sizes sa ON sa.doc = id_a
-       |JOIN sizes sb ON sb.doc = id_b
-       |ORDER BY jaccard DESC, id_a, id_b LIMIT 20""".stripMargin
-  ) { (spark, dir) =>
-    ngramPairs200Cached(spark, dir)
-      .orderBy(col("jaccard").desc, col("id_a"), col("id_b"))
-      .limit(20)
-  }
-
-  private val NumHashes = 16
-  private val NumBands = 4
-
-  val q32MinHash: QuerySpec = QuerySpec.oracle(
-    "q32_dedup_minhash_sig", {
-      val hashExprs = (0 until NumHashes).map { i =>
-        s"coalesce(list_min(list_transform(shs, s -> ${Dedup.seededHashSql("s", i)})), 9223372036854775807)"
-      }
-      val bandExprs = (0 until NumBands).map { b =>
-        val lo = b * (NumHashes / NumBands) + 1
-        val hi = lo + NumHashes / NumBands - 1
-        s"md5(array_to_string(sig[$lo:$hi], ',')) AS band$b"
-      }
-      s"""WITH toks AS (
-         |  SELECT doc_id, $LowToksSql AS ts FROM documents WHERE doc_id < 200),
-         |shl AS (SELECT doc_id, $ShinglesSql AS shs FROM toks),
-         |sigs AS (SELECT doc_id, ${hashExprs.mkString("[", ",\n  ", "]")} AS sig FROM shl)
-         |SELECT doc_id, array_to_string(sig, ',') AS sig_csv,
-         |  ${bandExprs.mkString(",\n  ")}
-         |FROM sigs ORDER BY doc_id""".stripMargin
-    }
-  ) { (spark, dir) =>
-    val rowsPerBand = NumHashes / NumBands
-    val sig = Dedup.minHashSignature(col("text"), 3, NumHashes)
-    val csv = (c: Column) => concat_ws(",", transform(c, x => x.cast("string")))
-    Tables.documents(spark, dir).filter(col("doc_id") < 200)
-      .withColumn("sig", sig)
-      .select(Seq(col("doc_id"), csv(col("sig")).as("sig_csv")) ++
-        (0 until NumBands).map { b =>
-          md5(csv(slice(col("sig"), b * rowsPerBand + 1, rowsPerBand))).as(s"band$b")
-        }: _*)
-      .orderBy("doc_id")
-  }
-
-  val q33SimHash: QuerySpec = QuerySpec.oracle(
-    "q33_dedup_simhash", {
-      val bitExprs = (0 until 16).map { b =>
-        s"CASE WHEN 2 * len(list_filter(hs, h -> ((h >> $b) & 1) = 1)) > len(hs) THEN CAST(${1L << b} AS BIGINT) ELSE 0 END"
-      }
-      s"""WITH toks AS (SELECT doc_id, $LowToksSql AS ts FROM documents),
-         |hashed AS (SELECT doc_id, list_transform(ts, t -> ${Dedup.seededHashSql("t", 0)}) AS hs FROM toks)
-         |SELECT doc_id, ${bitExprs.mkString(" + ")} AS simhash
-         |FROM hashed ORDER BY doc_id""".stripMargin
-    }
-  ) { (spark, dir) =>
-    Tables.documents(spark, dir)
-      .select(col("doc_id"), Dedup.simHash(col("text"), 16).as("simhash"))
-      .orderBy("doc_id")
-  }
-
-  val q34CosinePairs: QuerySpec = QuerySpec.oracle(
-    "q34_embedding_pairs",
-    s"""WITH v AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 200)
-       |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       |  ${VectorFns.Sql.cosine("a.embedding", "b.embedding")} AS sim
-       |FROM v a JOIN v b ON a.vec_id < b.vec_id
-       |ORDER BY sim DESC, id_a, id_b LIMIT 20""".stripMargin
-  ) { (spark, dir) =>
-    Similarity.cosinePairs(
-      Tables.embeddings(spark, dir).filter(col("vec_id") < 200), minCosine = -1.0)
-      .orderBy(col("sim").desc, col("id_a"), col("id_b"))
-      .limit(20)
-  }
-
-  /** Near-dup GROUP resolution: the q31 shingle-pair graph closed
-    * transitively (connected components, min-id canonical) — verified
-    * against a DuckDB recursive-CTE closure over the identical pair set.
-    * All shingle-sharing pairs (jaccard > 0) are edges so the tiny test
-    * corpus yields non-trivial components. */
-  val q35DedupGroups: QuerySpec = QuerySpec.oracle(
-    "q35_dedup_groups",
-    s"""WITH RECURSIVE toks AS (
-       |  SELECT doc_id, $LowToksSql AS ts FROM documents WHERE doc_id < 200),
-       |shl AS (SELECT doc_id, $ShinglesSql AS shs FROM toks),
-       |sh0 AS (SELECT doc_id AS doc, unnest(shs) AS sh FROM shl),
-       |rare AS (SELECT sh FROM sh0 GROUP BY sh HAVING count(*) <= 1000),
-       |sh AS (SELECT doc, sh0.sh FROM sh0 JOIN rare USING (sh)),
-       |pairs AS (
-       |  SELECT a.doc AS id_a, b.doc AS id_b
-       |  FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc < b.doc GROUP BY 1, 2),
-       |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-       |          UNION ALL SELECT id_b, id_a FROM pairs),
-       |reach(node, lbl) AS (
-       |  SELECT doc_id, doc_id FROM toks
-       |  UNION
-       |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node),
-       |cc AS (SELECT node AS doc_id, min(lbl) AS canonical_id FROM reach GROUP BY node)
-       |SELECT doc_id, canonical_id,
-       |  count(*) OVER (PARTITION BY canonical_id) AS n_in_group
-       |FROM cc ORDER BY doc_id""".stripMargin
-  ) { (spark, dir) =>
-    val docs = Tables.documents(spark, dir).filter(col("doc_id") < 200)
-    val pairs = ngramPairs200Cached(spark, dir)
-    val groups = Dedup.dedupGroups(docs.select("doc_id"), "doc_id", pairs)
-    groups
-      .withColumn("n_in_group", count(lit(1)).over(Window.partitionBy("canonical_id")))
-      .select("doc_id", "canonical_id", "n_in_group")
-      .orderBy("doc_id")
-  }
-
-  /** Semantic (embedding-space) dedup resolution — q35's pipeline with the
-    * edge set swapped from shingle Jaccard to exact cosine similarity:
-    * pairs at cos ≥ 0.3 over the bounded subset (the documented quadratic;
-    * at scale sign-LSH candidates feed the SAME resolution tail), closed
-    * transitively by [[Dedup.connectedComponents]], min-id canonical,
-    * keep = canonical member. Verified against a DuckDB recursive-CTE
-    * closure over the identical edge set — the cosine values are
-    * bit-matched cross-engine (q34), so both engines derive the same
-    * edges, components, and keep-list. */
-  val q123SemanticDedup: QuerySpec = QuerySpec.oracle(
-    "q123_semantic_dedup",
-    s"""WITH RECURSIVE v AS (
-       |  SELECT vec_id, embedding FROM embeddings WHERE vec_id < 200),
-       |pairs AS (
-       |  SELECT a.vec_id AS id_a, b.vec_id AS id_b
-       |  FROM v a JOIN v b ON a.vec_id < b.vec_id
-       |  WHERE ${VectorFns.Sql.cosine("a.embedding", "b.embedding")} >= 0.3),
-       |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-       |          UNION ALL SELECT id_b, id_a FROM pairs),
-       |reach(node, lbl) AS (
-       |  SELECT vec_id, vec_id FROM v
-       |  UNION
-       |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node),
-       |cc AS (SELECT node AS vec_id, min(lbl) AS canonical_id FROM reach GROUP BY node)
-       |SELECT vec_id, canonical_id,
-       |  count(*) OVER (PARTITION BY canonical_id) AS n_in_group,
-       |  vec_id = canonical_id AS keep
-       |FROM cc ORDER BY vec_id""".stripMargin
-  ) { (spark, dir) =>
-    val emb = Tables.embeddings(spark, dir).filter(col("vec_id") < 200)
-    val edges = Similarity.cosinePairs(emb, minCosine = 0.3).select("id_a", "id_b")
-    val groups = Dedup.dedupGroups(emb.select("vec_id"), "vec_id", edges)
-    groups
-      .withColumn("n_in_group", count(lit(1)).over(Window.partitionBy("canonical_id")))
-      .select(col("vec_id"), col("canonical_id"), col("n_in_group"),
-        (col("vec_id") === col("canonical_id")).as("keep"))
-      .orderBy("vec_id")
-  }
-
-  /** Full-corpus semantic dedup, the PRODUCTION path q123 documents —
-    * promoted from comment to declared query (VERDICT r19 item 5): q41's
-    * banded sign-LSH generates candidates over ALL embeddings (16 bands ×
-    * 4 bits, pinned like q41 so the declared output is scale-stable;
-    * production derives bits from |corpus| via the occupancy heuristic),
-    * each candidate is cosine-VERIFIED at the same ≥ 0.3 threshold as
-    * q123's exact audit region, and the surviving pairs feed the SAME
-    * [[Dedup.connectedComponents]] resolution tail — keep-list out, one
-    * row per vector, q123's exact schema. Float LSH planes keep it
-    * rows-only (SURVEY §5's float-seed exclusion); honesty comes from the
-    * spec: within the vec_id < 200 region the LSH candidate set is pinned
-    * to a recall floor against q123's exact quadratic, and — because the
-    * verify step applies the identical cosine expression — to PERFECT
-    * precision (every banded pair the region yields is a true ≥ 0.3
-    * pair). Shape at 100 TB: candidates per band are bucket-local (never
-    * all-pairs), verification shrinks rows to (id, id) before any
-    * shuffle, CC is the delta-friendly pointer-jumping loop. */
-  val q218SemanticDedupFull: QuerySpec =
-    QuerySpec.rowsOnly("q218_semantic_dedup_full") { (spark, dir) =>
-      val emb = Tables.embeddings(spark, dir)
-      val cand = Similarity.signLshNearDupPairs(emb, minCosine = 0.3,
-        numBands = 16, bitsPerBand = 4)
-      val groups = Dedup.dedupGroups(emb.select("vec_id"), "vec_id",
-        cand.select("id_a", "id_b"))
-      groups
-        .withColumn("n_in_group", count(lit(1)).over(Window.partitionBy("canonical_id")))
-        .select(col("vec_id"), col("canonical_id"), col("n_in_group"),
-          (col("vec_id") === col("canonical_id")).as("keep"))
-        .orderBy("vec_id")
-    }
-
-  /** Calibration audit (reliability table + ECE) — the inference-toolkit
-    * step between scoring and THRESHOLDING: a pipeline that filters on a
-    * cheap quality score needs to know whether score 0.8 actually means
-    * "80% of these pass the expensive gate" before it picks a cutoff
-    * (the FineWeb-Edu-style classifier-threshold workflow; Guo et al.
-    * 2017's ECE, here in exact integers). Confidence = the one-pass
-    * distinct-token ratio (micro units); outcome = the q213 Gopher gate
-    * (neither repetitive nor top-heavy). Decile bins by confidence; per
-    * bin the mean confidence, observed pass rate, and |gap|, all by
-    * truncating div; ECE = Σ n_b·gap_b div N rides every row. The
-    * corpus reads as badly UNDER-confident (low scores still pass) —
-    * exactly the audit finding that justifies threshold tuning. Shape:
-    * one embarrassingly parallel scan + a 10-row bin aggregate; the
-    * 1-row ECE broadcast is q27's scalar idiom. */
-  val q220CalibrationEce: QuerySpec = QuerySpec.oracle(
-    "q220_calibration_ece",
-    s"""WITH toks AS (SELECT doc_id, $LowToksSql AS ts FROM documents),
-       |g AS (SELECT doc_id, ts, list_sort(ts) AS tss, len(ts) AS n,
-       |    CASE WHEN len(ts) >= 3 THEN list_transform(generate_series(1, len(ts) - 2),
-       |      i -> concat_ws(' ', ts[i], ts[i+1], ts[i+2])) ELSE [] END AS g3
-       |  FROM toks),
-       |m AS (SELECT doc_id, n,
-       |    CAST(len(list_distinct(ts)) AS BIGINT) AS nd,
-       |    len(g3) AS t3, len(list_distinct(g3)) AS d3,
-       |    CASE WHEN n <= 1 THEN n ELSE
-       |      list_reduce(list_prepend([1, 1], list_transform(generate_series(2, n),
-       |        i -> [i, 0])),
-       |        (acc, e) -> CASE WHEN tss[e[1]] = tss[e[1] - 1]
-       |          THEN [acc[1] + 1, greatest(acc[2], acc[1] + 1)]
-       |          ELSE [1, acc[2]] END)[2] END AS topc
-       |  FROM g),
-       |sc AS (SELECT doc_id,
-       |    CAST(nd * 1000000 // greatest(n, 1) AS BIGINT) AS conf_micro,
-       |    (NOT (CASE WHEN t3 = 0 THEN false ELSE (t3 - d3) * 1000000 // t3 > 180000 END)
-       |     AND NOT (CASE WHEN n = 0 THEN false ELSE topc * 1000000 // n > 200000 END))
-       |      AS pass
-       |  FROM m),
-       |b AS (SELECT least(conf_micro // 100000, 9) AS bin, conf_micro, pass FROM sc),
-       |agg AS (SELECT bin, CAST(count(*) AS BIGINT) AS n_docs,
-       |    CAST(sum(conf_micro) // count(*) AS BIGINT) AS mean_conf_micro,
-       |    CAST(count(*) FILTER (pass) * 1000000 // count(*) AS BIGINT) AS obs_rate_micro
-       |  FROM b GROUP BY bin),
-       |tot AS (SELECT
-       |    CAST(sum(n_docs * abs(mean_conf_micro - obs_rate_micro)) // sum(n_docs)
-       |      AS BIGINT) AS ece
-       |  FROM agg)
-       |SELECT bin, n_docs, mean_conf_micro, obs_rate_micro,
-       |  CAST(abs(mean_conf_micro - obs_rate_micro) AS BIGINT) AS gap_micro,
-       |  tot.ece AS ece_micro
-       |FROM agg, tot ORDER BY bin""".stripMargin
-  ) { (spark, dir) =>
-    // the q213 in-row machinery, r21 kernel form: distinct 3-grams and the
-    // top-token count (≡ max sorted-run length) via the native kernels —
-    // values bit-identical, no gram strings or sort materialized
-    val sc = Tables.documents(spark, dir)
-      .withColumn("ts", lowToksCol)
-      .withColumn("n", size(col("ts")).cast("long"))
-      .withColumn("nd", size(array_distinct(col("ts"))).cast("long"))
-      .withColumn("t3", greatest(col("n") - 2, lit(0L)))
-      .withColumn("d3", graft.functions.DistinctGramCountExpr
-        .distinctGramCount(col("ts"), 3).cast("long"))
-      .withColumn("topc", graft.functions.TopTokenCountExpr
-        .topTokenCount(col("ts")).cast("long"))
-      .select(
-        expr("nd * 1000000 div greatest(n, 1)").as("conf_micro"),
-        (!when(col("t3") === 0, lit(false))
-            .otherwise(expr("(t3 - d3) * 1000000 div t3 > 180000")) &&
-         !when(col("n") === 0, lit(false))
-            .otherwise(expr("topc * 1000000 div n > 200000"))).as("pass"))
-    val agg = sc
-      .withColumn("bin", least(expr("conf_micro div 100000"), lit(9L)))
-      .groupBy("bin")
-      .agg(count(lit(1)).cast("long").as("n_docs"),
-        expr("sum(conf_micro) div count(1)").cast("long").as("mean_conf_micro"),
-        expr("count(CASE WHEN pass THEN 1 END) * 1000000 div count(1)")
-          .cast("long").as("obs_rate_micro"))
-    val tot = agg.agg(
-      expr("sum(n_docs * abs(mean_conf_micro - obs_rate_micro)) div sum(n_docs)")
-        .cast("long").as("ece"))
-    agg.crossJoin(broadcast(tot))
-      .select(col("bin"), col("n_docs"), col("mean_conf_micro"), col("obs_rate_micro"),
-        abs(col("mean_conf_micro") - col("obs_rate_micro")).cast("long").as("gap_micro"),
-        col("ece").as("ece_micro"))
-      .orderBy("bin")
-  }
-
-  /** Sequence packing: chunk each language's doc stream (doc_id order) into
-    * fixed 512-token training-example budgets — the concatenate-then-chunk
-    * preprocessing that assembles LM training sequences. pack_id =
-    * floor(tokens-before-this-doc / budget). The prefix-sum runs STRIPED
-    * ([[StripedWindow]]): 16 range stripes over doc_id (equal-width cuts
-    * from one broadcast min/max aggregate), per-(lang, stripe) windows, broadcast
-    * stripe offsets — value-identical to the plain per-lang window
-    * (StripedWindowSpec pins it) but parallelism is |langs| × 16, so a
-    * 33 TB language never serializes through one task. */
-  val q36SequencePack: QuerySpec = QuerySpec.oracle(
-    "q36_sequence_pack",
-    raw"""WITH t AS (
-       |  SELECT doc_id, lang,
-       |    CAST(len(list_filter(str_split_regex(text, '\s+'), x -> x <> '')) AS BIGINT) AS n_tok
-       |  FROM documents),
-       |c AS (
-       |  SELECT doc_id, lang, n_tok,
-       |    coalesce(sum(n_tok) OVER (PARTITION BY lang ORDER BY doc_id
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before
-       |  FROM t)
-       |SELECT doc_id, lang, n_tok, CAST(floor(cum_before / 512.0) AS BIGINT) AS pack_id
-       |FROM c ORDER BY doc_id""".stripMargin
-  ) { (spark, dir) =>
-    val nTok = asLong(size(filter(split(col("text"), "\\s+"), x => x =!= "")))
-    val t = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("lang"), nTok.as("n_tok"))
-    StripedWindow.runningSum(
-        StripedWindow.withRangeStripe(t, "doc_id", 16),
-        Seq("lang"), Seq(col("doc_id")), col("n_tok"), "cum_before",
-        includeCurrent = false)
-      .select(col("doc_id"), col("lang"), col("n_tok"),
-        floor(col("cum_before") / 512.0).as("pack_id"))
-      .orderBy("doc_id")
-  }
-
-  val q40KnnTopK: QuerySpec = QuerySpec.oracle(
-    "q40_knn_bruteforce",
-    s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id % 25 = 0),
-       |c AS (SELECT vec_id AS neighbor_id, embedding AS ce FROM embeddings),
-       |s AS (SELECT query_id, neighbor_id, ${VectorFns.Sql.cosine("qe", "ce")} AS sim
-       |      FROM q, c WHERE query_id <> neighbor_id),
-       |r AS (SELECT query_id, neighbor_id, sim,
-       |      row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rk FROM s)
-       |SELECT query_id, neighbor_id, CAST(rk AS BIGINT) AS rk, sim
-       |FROM r WHERE rk <= 5 ORDER BY query_id, rk""".stripMargin
-  ) { (spark, dir) =>
-    val emb = Tables.embeddings(spark, dir)
-    Similarity.bruteForceTopK(
-      emb.filter(col("vec_id") % 25 === 0), emb, k = 5)
-      .select(col("query_id"), col("neighbor_id"), col("rank").as("rk"), col("sim"))
-      .orderBy("query_id", "rk")
-  }
-
-  val q41AnnLsh: QuerySpec = QuerySpec.rowsOnly("q41_ann_lsh") { (spark, dir) =>
-    // deterministic banded sign-LSH (seeded planes): candidates only within
-    // matching (band, bucket); threshold low enough that the random corpus's
-    // similarity tail yields a non-empty, reproducible pair set. Parameters
-    // pinned (not the size-derived defaults) so the declared query stays
-    // lazy and its output is identical across scale factors.
-    Similarity.signLshNearDupPairs(Tables.embeddings(spark, dir), minCosine = 0.2,
-        numBands = 4, bitsPerBand = 8)
-      .orderBy("id_a", "id_b")
-  }
-
-  val q42KnnClassify: QuerySpec = QuerySpec.oracle(
-    "q42_knn_classify",
-    s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qe, label AS true_label
-       |           FROM embeddings WHERE vec_id % 25 = 0),
-       |t AS (SELECT vec_id AS neighbor_id, embedding AS ce, label FROM embeddings WHERE vec_id % 25 <> 0),
-       |s AS (SELECT query_id, neighbor_id, label, ${VectorFns.Sql.cosine("qe", "ce")} AS sim FROM q, t),
-       |r AS (SELECT query_id, label,
-       |      row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rk FROM s),
-       |v AS (SELECT query_id, label, count(*) AS n_votes FROM r WHERE rk <= 5 GROUP BY 1, 2),
-       |p AS (SELECT query_id, label, n_votes,
-       |      row_number() OVER (PARTITION BY query_id ORDER BY n_votes DESC, label) AS vr FROM v)
-       |SELECT p.query_id, q.true_label, p.label AS pred_label, p.n_votes
-       |FROM p JOIN q ON p.query_id = q.query_id
-       |WHERE vr = 1 ORDER BY p.query_id""".stripMargin
-  ) { (spark, dir) =>
-    val emb = Tables.embeddings(spark, dir)
-    val queries = emb.filter(col("vec_id") % 25 === 0)
-    val train = emb.filter(col("vec_id") % 25 =!= 0)
-    Knn.classify(queries, train, k = 5)
-      .join(queries.select(col("vec_id").as("query_id"), col("label").as("true_label")), "query_id")
-      .select("query_id", "true_label", "pred_label", "n_votes")
-      .orderBy("query_id")
-  }
-
-  /** Benchmark-contamination detection: for each held-out doc (source
-    * 'src0'), the fraction of its distinct 3-gram shingles appearing
-    * ANYWHERE in the training split — the train/eval overlap audit run
-    * before training on scraped data. The train shingle set is key-joined
-    * (one shuffle on the shingle), never collected or broadcast: it scales
-    * with the corpus. */
-  val q38Contamination: QuerySpec = QuerySpec.oracle(
-    "q38_contamination",
-    s"""WITH toks AS (SELECT doc_id, source, $LowToksSql AS ts FROM documents),
-       |shl AS (SELECT doc_id, source, $ShinglesSql AS shs FROM toks),
-       |ev AS (SELECT doc_id, unnest(shs) AS sh FROM shl WHERE source = 'src0'),
-       |tr AS (SELECT DISTINCT unnest(shs) AS sh FROM shl WHERE source <> 'src0')
-       |SELECT ev.doc_id, count(*) AS n_sh, count(tr.sh) AS n_hit,
-       |  CAST(count(tr.sh) AS DOUBLE) / count(*) AS contamination
-       |FROM ev LEFT JOIN tr ON ev.sh = tr.sh
-       |GROUP BY ev.doc_id ORDER BY doc_id""".stripMargin
-  ) { (spark, dir) =>
-    val docs = Tables.documents(spark, dir)
-    val sh = Dedup.shingles(col("text"), 3)
-    val ev = docs.filter(col("source") === "src0")
-      .select(col("doc_id"), explode(sh).as("sh"))
-    val tr = docs.filter(col("source") =!= "src0")
-      .select(explode(sh).as("sh")).distinct()
-      .withColumn("hit", lit(1))
-    ev.join(tr, Seq("sh"), "left")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_sh"), count(col("hit")).as("n_hit"))
-      .withColumn("contamination", col("n_hit").cast("double") / col("n_sh"))
-      .orderBy("doc_id")
-  }
-
-  /** Symmetric int8 quantization of the embedding column — the 4×
-    * memory-compression pass an ANN index runs before storing 10⁹ vectors.
-    * Exact floor arithmetic (no rounding ties), engine-verified including
-    * the worst-element reconstruction error. */
-  val q44QuantizeInt8: QuerySpec = QuerySpec.oracle(
-    "q44_embedding_quantize",
-    s"""WITH v AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 500),
-       |s AS (SELECT vec_id, embedding, ${VectorFns.Sql.maxAbs("embedding")} AS scale FROM v),
-       |q AS (SELECT vec_id, embedding, scale,
-       |      ${VectorFns.Sql.quantizeInt8("embedding", "scale")} AS qv FROM s)
-       |SELECT vec_id, CAST(len(qv) AS BIGINT) AS n_dims, scale,
-       |  array_to_string(qv, ',') AS q_csv,
-       |  ${VectorFns.Sql.dequantMaxErr("embedding", "qv", "scale")} AS max_err
-       |FROM q ORDER BY vec_id""".stripMargin
-  ) { (spark, dir) =>
-    Tables.embeddings(spark, dir).filter(col("vec_id") < 500)
-      .withColumn("scale", VectorFns.maxAbs(col("embedding")))
-      .withColumn("qv", VectorFns.quantizeInt8(col("embedding"), col("scale")))
-      .select(col("vec_id"), asLong(size(col("qv"))).as("n_dims"), col("scale"),
-        concat_ws(",", transform(col("qv"), x => x.cast("string"))).as("q_csv"),
-        VectorFns.dequantMaxErr(col("embedding"), col("qv"), col("scale")).as("max_err"))
-      .orderBy("vec_id")
-  }
-
-  /** IVF coarse-quantizer ANN (k-means cells, probe nearest 4 of 16) —
-    * seed-deterministic but k-means isn't SQL-expressible → rows-only;
-    * recall vs brute force is asserted in SimilaritySpec. */
-  val q43AnnIvf: QuerySpec = QuerySpec.rowsOnly("q43_ann_ivf") { (spark, dir) =>
-    val emb = Tables.embeddings(spark, dir)
-    Similarity.ivfTopK(emb.filter(col("vec_id") % 25 === 0), emb, k = 5)
-      .orderBy("query_id", "rank")
-  }
-
-  /** Product-quantization/ADC ANN with exact re-rank (Jégou et al. 2011's
-    * ADC+R) — the memory-compression scale path alongside IVF's read
-    * reduction: the corpus is SCANNED as 8 6-bit PQ codes per vector via
-    * per-query lookup tables (~42× narrower than the float column), and
-    * raw floats are read only for each query's 50-candidate shortlist.
-    * k-means codebooks → rows-only; recall vs brute force is asserted in
-    * SimilaritySpec and reported by q78's `pq_8x64_r50` row. */
-  val q127AnnPq: QuerySpec = QuerySpec.rowsOnly("q127_ann_pq") { (spark, dir) =>
-    val emb = Tables.embeddings(spark, dir)
-    Similarity.pqTopK(emb.filter(col("vec_id") % 25 === 0), emb, k = 5,
-        m = 8, ksub = 64, refine = 50)
-      .orderBy("query_id", "rank")
-  }
-
-  /** The composed production ANN (FAISS's IVFADC shape): q43's coarse
-    * cells prune READS to ~nProbe/nLists of the corpus, q127's PQ codes
-    * compress what the probed cells scan, and the exact re-rank bounds
-    * quantization loss to shortlist membership. Reuses BOTH cached
-    * indexes — the composition adds serving plan, not index state. */
-  val q128AnnIvfPq: QuerySpec = QuerySpec.rowsOnly("q128_ann_ivfpq") { (spark, dir) =>
-    val emb = Tables.embeddings(spark, dir)
-    Similarity.ivfPqTopK(emb.filter(col("vec_id") % 25 === 0), emb, k = 5,
-        nLists = 16, nProbe = 4, m = 8, ksub = 64, refine = 50)
-      .orderBy("query_id", "rank")
-  }
-
-  /** ANN approximation quality as a first-class declared output: one row per
-    * approximate method with its recall against the exact baseline and the
-    * fraction of the search space it actually scored — the two numbers that
-    * decide whether an ANN configuration is shippable at 100 TB. Before
-    * this, q41/q43's recall lived only in specs; this makes it
-    * driver-visible every round.
-    *
-    *   - `lsh_<bands>x<bits>`: banded sign-LSH against the exact cosine
-    *     pair set at q41's threshold (0.2), on q34's bounded subset (the
-    *     exact baseline is the documented bounded quadratic — at production
-    *     scale one measures recall on exactly this kind of sampled slice,
-    *     never the full corpus). Found pairs are verified, hence a subset
-    *     of the exact set: recall = |found| / |exact|. Candidate fraction =
-    *     distinct bucket-colliding pairs / C(n,2). THREE configurations
-    *     trace the recall/cost frontier, and the frontier is the finding:
-    *     the test corpus has no near-dup tail (max pair cosine ≈ 0.45), so
-    *     at 0.2 — far below the cos ≳ 0.9 regime banding solves for
-    *     (autoNumBands' documented clamp) — high recall is only reachable
-    *     by degenerating toward a full scan (28×4 buys ~0.9 recall at ~0.8
-    *     candidate mass; q41's 4×8 pays ~2% of pairs and finds ~5%).
-    *   - `ivf_top5`: q43's IVF (k-means fitted ONCE via ivfAssignments and
-    *     reused for both the top-k and the candidate mass) against q40's
-    *     brute-force top-5. Candidate fraction = probed (query, corpus-in-
-    *     probed-cell) pairs / |Q|·(|C|−1) — the ~nProbe/nLists read savings
-    *     IVF exists for.
-    *
-    * Rows-only by necessity (k-means/seeded-plane semantics are not
-    * SQL-expressible) but fully deterministic: seeded planes, seeded
-    * k-means, ratios of exact counts — the hash is stable across runs. */
-  val q78AnnRecall: QuerySpec = QuerySpec.rowsOnly("q78_ann_recall") { (spark, dir) =>
-    val emb = Tables.embeddings(spark, dir)
-
-    // banded sign-LSH vs the exact pair set (q41's threshold, q34's bound)
-    val sub = emb.filter(col("vec_id") < 200)
-    val minCos = 0.2
-    val lshTruth = Similarity.cosinePairs(sub, minCos)
-    def lshRow(numBands: Int, bitsPerBand: Int) = {
-      // partitions = 1: the audit slice is id-bounded (≤200 rows at ANY
-      // scale factor, by the vec_id < 200 predicate), so the exploding-join
-      // parallelism the operator's explicit-N repartition exists for (q218's
-      // full corpus) buys nothing here — three configs each paid a 32-way
-      // shuffle of a few-KB relation (q78's r21 regression, VERDICT item 3)
-      val found = Similarity.signLshNearDupPairs(sub, minCos,
-        numBands = numBands, bitsPerBand = bitsPerBand, partitions = 1)
-      val ba = Similarity.bandAssignments(sub, dims = 64, numBands = numBands,
-        bitsPerBand = bitsPerBand, seed = 42)
-      val cand = ba.select(col("band"), col("key"), col("vec_id").as("id_a"))
-        .join(ba.select(col("band"), col("key"), col("vec_id").as("id_b")), Seq("band", "key"))
-        .filter(col("id_a") < col("id_b"))
-        .select("id_a", "id_b").distinct()
-      // numerator and denominator from ONE pass over the truth subtree
-      // (found ⊆ truth, so a left join marks exactly the found pairs)
-      val hits = lshTruth.join(
-          broadcast(found.select(col("id_a"), col("id_b"), lit(1).as("__f"))),
-          Seq("id_a", "id_b"), "left")
-        .agg(count(lit(1)).as("n_truth"), count(col("__f")).as("n_found"))
-      hits
-        .crossJoin(broadcast(cand.agg(count(lit(1)).as("n_cand"))))
-        .crossJoin(broadcast(sub.agg(count(lit(1)).as("n_vecs"))))
-        .select(lit(s"lsh_${numBands}x$bitsPerBand").as("method"),
-          (col("n_found").cast("double") / col("n_truth")).as("recall"),
-          (col("n_cand").cast("double") / (col("n_vecs") * (col("n_vecs") - 1) / 2))
-            .as("candidate_fraction"))
-    }
-    // q41's declared config, a mid frontier point, and the recall-solved
-    // end (bands ≈ ln .05 / ln(1−p^bits) at cos 0.2) — cheap buckets first
-    val lshRows = Seq(lshRow(4, 8), lshRow(16, 6), lshRow(28, 4))
-      .reduce(_.unionByName(_))
-
-    // IVF top-5 vs brute force (q40/q43's queries, corpus, and k). The
-    // 1-in-25 slice grows with the corpus, and the brute-force truth is
-    // O(|Q|·|corpus|) — so |Q| is additionally CAPPED to a seeded
-    // deterministic sample (hash-ordered, id tie-broken), keeping the
-    // report O(cap × corpus) at any scale. Both test SFs sit under the
-    // cap (20 and 80 queries), so values there are unchanged.
-    val recallQueryCap = 100
-    val queries = emb.filter(col("vec_id") % 25 === 0)
-      .orderBy(hash(col("vec_id"), lit(42)), col("vec_id"))
-      .limit(recallQueryCap)
-    val truth = Similarity.bruteForceTopK(queries, emb, k = 5)
-      .select("query_id", "neighbor_id")
-    val (cc, qc) = Similarity.ivfAssignments(queries, emb, nLists = 16, nProbe = 4, seed = 42)
-    val found = Similarity.ivfTopKFrom(cc, qc, k = 5).select("query_id", "neighbor_id")
-    val cand = cc.join(broadcast(qc.select("query_id", "cell")), "cell")
-      .filter(col("query_id") =!= col("neighbor_id"))
-    // the brute-force truth subtree is the expensive half (|Q| × |corpus|
-    // fused-cosine pairs) — count total and matched in ONE pass over it via
-    // a broadcast left join against the k·|Q|-row IVF result
-    // PQ/ADC+refine top-5 vs the same brute-force truth (q127's config).
-    // PQ's candidate_fraction counts RAW-FLOAT reads — the analog of IVF's
-    // read fraction: the code scan touches every row but at code width;
-    // full-width embeddings are read only for the refine-50 shortlist, so
-    // the fraction is refine/(|C|−1) per query.
-    val pqRefine = 50
-    val pqFound = Similarity.pqTopK(queries, emb, k = 5,
-        m = 8, ksub = 64, refine = pqRefine)
-      .select("query_id", "neighbor_id")
-    // BOTH methods' hit counts from ONE pass over the truth subtree — the
-    // brute-force baseline is the expensive half (|Q| × |corpus| fused-
-    // cosine pairs), and a per-method hits join would re-evaluate it per
-    // method (measured: the 2nd reference doubled q78's bench time). Two
-    // broadcast left joins against the tiny found sets, one aggregate.
-    val hits = truth
-      .join(broadcast(found.withColumn("__ivf", lit(1))),
-        Seq("query_id", "neighbor_id"), "left")
-      .join(broadcast(pqFound.withColumn("__pq", lit(1))),
-        Seq("query_id", "neighbor_id"), "left")
-      .agg(count(lit(1)).as("n_truth"),
-        count(col("__ivf")).as("n_ivf"), count(col("__pq")).as("n_pq"))
-      .crossJoin(broadcast(cand.agg(count(lit(1)).as("n_cand"))))
-      .crossJoin(broadcast(queries.agg(count(lit(1)).as("n_q"))))
-      .crossJoin(broadcast(emb.agg(count(lit(1)).as("n_c"))))
-    // both rows EXPLODE out of the one aggregate row — a per-method select
-    // + union would put two copies of the truth subtree in the plan, and
-    // custom-expression subtrees defeat exchange reuse (q116's lesson)
-    val bothRows = hits.select(explode(array(
-        struct(lit("ivf_top5").as("method"),
-          (col("n_ivf").cast("double") / col("n_truth")).as("recall"),
-          (col("n_cand").cast("double") / (col("n_q") * (col("n_c") - 1)))
-            .as("candidate_fraction")),
-        struct(lit("pq_8x64_r50").as("method"),
-          (col("n_pq").cast("double") / col("n_truth")).as("recall"),
-          (lit(pqRefine).cast("double") / (col("n_c") - 1))
-            .as("candidate_fraction")))).as("r"))
-      .select(col("r.method").as("method"), col("r.recall").as("recall"),
-        col("r.candidate_fraction").as("candidate_fraction"))
-
-    lshRows.unionByName(bothRows).orderBy("method")
-  }
-
-  /** Keyword-search document ranking: a BM25-shaped score with the log-idf
-    * replaced by the raw odds ratio (N − df + ½)/(df + ½) — a monotone
-    * per-term transform that keeps EVERY arithmetic step inside exactly-
-    * rounded IEEE +,×,/ so Spark and DuckDB produce bit-identical scores
-    * (ln() is libm-dependent and cannot be hash-matched across engines).
-    * tf saturation and length normalization are standard BM25 (k1=1.2,
-    * b=0.75). Shape at scale: one scan computes per-doc tf/dl, one 1-row
-    * global aggregate rides in via broadcast — no per-term join, no
-    * vocabulary shuffle; the only data movement is the top-k sort. */
-  val q45KeywordRank: QuerySpec = {
-    val terms = Seq("spark", "shuffle", "partition")
-    QuerySpec.oracle(
-      "q45_keyword_rank", {
-        val dfCols = terms.map(t =>
-          s"count(*) FILTER (WHERE list_contains(ts, '$t')) AS df_$t").mkString(",\n       |        ")
-        val tfCols = terms.map(t =>
-          s"CAST(len(list_filter(ts, x -> x = '$t')) AS DOUBLE) AS tf_$t").mkString(",\n       |        ")
-        val scoreTerms = terms.map(t =>
-          s"(n_docs - df_$t + 0.5)/(df_$t + 0.5) * (tf_$t * 2.2 / (tf_$t + 1.2 * (0.25 + 0.75 * (dl / (sum_dl / n_docs)))))")
-          .mkString("\n       |   + ")
-        s"""WITH toks AS (SELECT doc_id, $LowToksSql AS ts FROM documents),
-           |d AS (SELECT doc_id, ts, CAST(len(ts) AS BIGINT) AS dl FROM toks),
-           |g AS (SELECT count(*) AS n_docs,
-           |        CAST(sum(CAST(dl AS DECIMAL(18,2))) AS DOUBLE) AS sum_dl,
-           |        $dfCols
-           |      FROM d),
-           |s AS (SELECT doc_id, dl,
-           |        $tfCols,
-           |        n_docs, sum_dl, ${terms.map(t => s"df_$t").mkString(", ")}
-           |      FROM d, g),
-           |sc AS (SELECT doc_id, dl AS n_tokens,
-           |   $scoreTerms AS score
-           | FROM s)
-           |SELECT doc_id, n_tokens, score FROM sc
-           |WHERE score > 0 ORDER BY score DESC, doc_id LIMIT 20""".stripMargin
-      }
-    ) { (spark, dir) =>
-      val ts = filter(split(lower(col("text")), "\\W+"), t => t =!= "")
-      val d = Tables.documents(spark, dir)
-        .select(col("doc_id"), ts.as("ts"))
-        .withColumn("dl", asLong(size(col("ts"))))
-      val aggCols = count(lit(1)).as("n_docs") +:
-        Exprs.dsum(col("dl")).as("sum_dl") +:
-        terms.map(t => sum(when(array_contains(col("ts"), t), 1L).otherwise(0L)).as(s"df_$t"))
-      val g = d.agg(aggCols.head, aggCols.tail: _*)
-      def score(t: String): Column =
-        (col("n_docs") - col(s"df_$t") + lit(0.5)) / (col(s"df_$t") + lit(0.5)) *
-          (col(s"tf_$t") * lit(2.2) / (col(s"tf_$t") +
-            lit(1.2) * (lit(0.25) + lit(0.75) * (col("dl") / (col("sum_dl") / col("n_docs"))))))
-      d.crossJoin(broadcast(g))
-        .select((Seq(col("doc_id"), col("dl"), col("n_docs"), col("sum_dl")) ++
-          terms.map(t => col(s"df_$t")) ++
-          terms.map(t => size(filter(col("ts"), x => x === t)).cast("double").as(s"tf_$t"))): _*)
-        .select(col("doc_id"), col("dl").as("n_tokens"),
-          terms.map(score).reduce(_ + _).as("score"))
-        .filter(col("score") > 0)
-        .orderBy(col("score").desc, col("doc_id"))
-        .limit(20)
-    }
-  }
-
-  /** q38's contamination check with a Bloom prefilter on the scan side —
-    * the 100 TB shape: a 6-probe codegen'd bloom test (built distributively
-    * over the train shingles, shipped once per executor) drops definite
-    * misses BEFORE the shuffle, and the exact join over the survivors
-    * removes the false positives, so the answer — and the oracle — is
-    * IDENTICAL to the unfiltered q38. At real scale the shuffle shrinks to
-    * the contaminated fraction; the filter itself is bounded at 8 MB
-    * (pickMBits cap), far under broadcast size. */
-  val q51ContaminationBloom: QuerySpec = QuerySpec.oracle(
-    "q51_contamination_bloom",
-    s"""WITH toks AS (SELECT doc_id, source, $LowToksSql AS ts FROM documents),
-       |shl AS (SELECT doc_id, source, $ShinglesSql AS shs FROM toks),
-       |ev AS (SELECT doc_id, unnest(shs) AS sh FROM shl WHERE source = 'src0'),
-       |tr AS (SELECT DISTINCT unnest(shs) AS sh FROM shl WHERE source <> 'src0')
-       |SELECT ev.doc_id, count(*) AS n_sh, count(tr.sh) AS n_hit,
-       |  CAST(count(tr.sh) AS DOUBLE) / count(*) AS contamination
-       |FROM ev LEFT JOIN tr ON ev.sh = tr.sh
-       |GROUP BY ev.doc_id ORDER BY doc_id""".stripMargin
-  ) { (spark, dir) =>
-    import graft.functions.BloomFilterOps
-    val docs = Tables.documents(spark, dir)
-    val sh = Dedup.shingles(col("text"), 3)
-    val ev = docs.filter(col("source") === "src0")
-      .select(col("doc_id"), explode(sh).as("sh"))
-    // Raw (NON-distinct) train shingles feed the bloom: inserts are
-    // idempotent, so deduplicating first would only add a full shuffle of
-    // the train side before the build — the one cost this operator exists
-    // to avoid. The build is fully LAZY (BloomBuildAggregate): the bitset
-    // is a 1-row array<long> aggregate inside this query's own DAG, riding
-    // a broadcast cross join to the probe side — so constructing this
-    // DataFrame runs ZERO Spark jobs (Q51ConstructionSpec pins it) and at
-    // execution the build is ONE scan whose shuffle carries one fixed-size
-    // buffer per partition, never the data. Sizing comes from an
-    // OVERESTIMATE (TOTAL table row count × a generous shingles-per-doc
-    // bound) read from the parquet FOOTERS — driver-side metadata IO, not a
-    // count() job (at scale a sizing count is itself a full corpus pass).
-    // The footer count covers ALL sources (⊇ the train subset — a wider
-    // overestimate), and oversizing a bloom only widens it toward the 8 MB
-    // cap — it can never affect correctness (no false negatives either way;
-    // the exact verify join below removes false positives and deduplicates
-    // lazily exactly as q38).
-    val trDocs = docs.filter(col("source") =!= "src0")
-    val trRaw = trDocs.select(explode(sh).as("sh"))
-    val nDocs = Tables.parquetRowCount(spark, s"$dir/documents.parquet")
-    val mBits = BloomFilterOps.pickMBits(nDocs * 256)
-    val bloom = trRaw.agg(BloomFilterOps.bloomAgg(col("sh"), mBits).as("__bloom"))
-    val tr = trRaw.distinct()
-    val nsh = ev.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-    val nhit = ev.crossJoin(broadcast(bloom))
-      .filter(BloomFilterOps.mightContainIn(col("__bloom"), mBits, 6, col("sh")))
-      .select("doc_id", "sh")
-      .join(tr, Seq("sh"))
-      .groupBy("doc_id").agg(count(lit(1)).as("n_hit"))
-    val out = nsh.join(nhit, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_sh"), coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-        (coalesce(col("n_hit"), lit(0L)).cast("double") / col("n_sh")).as("contamination"))
-      .orderBy("doc_id")
-    out
-  }
-
-  /** DECONTAMINATION — q51's production-direction twin: flag/drop TRAIN
-    * documents that contain eval-benchmark shingles, instead of profiling
-    * eval docs against the train corpus. The direction matters at 100 TB:
-    * here the bloom is built over the EVAL shingle set, whose size is
-    * bounded by the benchmark suite (not the corpus), so the filter stays
-    * comfortably under the broadcast cap at ANY corpus scale — whereas a
-    * corpus-sized bloom (q51's direction) eventually outgrows its 8 MB cap
-    * and has to fall back to the exact join. The 100 TB train side rides
-    * the scan at full parallelism; only probable-hit shingles shuffle into
-    * the exact verify join, which removes bloom false positives — so keep
-    * flags are exact, and a clean corpus shuffles almost nothing. */
-  val q75Decontaminate: QuerySpec = QuerySpec.oracle(
-    "q75_decontaminate",
-    s"""WITH toks AS (SELECT doc_id, source, $LowToksSql AS ts FROM documents),
-       |shl AS (SELECT doc_id, source, $ShinglesSql AS shs FROM toks),
-       |tr AS (SELECT doc_id, unnest(shs) AS sh FROM shl WHERE source <> 'src0'),
-       |evs AS (SELECT DISTINCT unnest(shs) AS sh FROM shl WHERE source = 'src0'),
-       |h AS (SELECT doc_id, count(*) AS n_hit FROM tr JOIN evs USING (sh) GROUP BY doc_id)
-       |SELECT t.doc_id, CAST(coalesce(h.n_hit, 0) AS BIGINT) AS n_eval_sh,
-       |  h.n_hit IS NULL AS keep
-       |FROM (SELECT doc_id FROM shl WHERE source <> 'src0') t
-       |LEFT JOIN h USING (doc_id) ORDER BY doc_id""".stripMargin
-  ) { (spark, dir) =>
-    import graft.functions.BloomFilterOps
-    val docs = Tables.documents(spark, dir)
-    val sh = Dedup.shingles(col("text"), 3)
-    val tr = docs.filter(col("source") =!= "src0")
-      .select(col("doc_id"), explode(sh).as("sh"))
-    val evRaw = docs.filter(col("source") === "src0").select(explode(sh).as("sh"))
-    // Sized from the footer row count (⊇ the eval subset — wider
-    // overestimate, metadata-only) exactly as q51; raw inserts, lazy build.
-    val nDocs = Tables.parquetRowCount(spark, s"$dir/documents.parquet")
-    val mBits = BloomFilterOps.pickMBits(nDocs * 256)
-    val bloom = evRaw.agg(BloomFilterOps.bloomAgg(col("sh"), mBits).as("__bloom"))
-    val hits = tr.crossJoin(broadcast(bloom))
-      .filter(BloomFilterOps.mightContainIn(col("__bloom"), mBits, 6, col("sh")))
-      .join(evRaw.distinct(), Seq("sh"))
-      .groupBy("doc_id").agg(count(lit(1)).as("n_hit"))
-    docs.filter(col("source") =!= "src0").select("doc_id")
-      .join(hits, Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("n_hit"), lit(0L)).as("n_eval_sh"),
-        col("n_hit").isNull.as("keep"))
-      .orderBy("doc_id")
-  }
-
-  /** Per-label embedding centroids, the building block behind IVF cell
-    * refresh / class prototypes / drift monitoring. Components are floor-
-    * quantized to millionths FIRST, so the per-dimension aggregation is an
-    * exact integer sum — order-independent, hash-matchable, and immune to
-    * double summation order (documented: the centroid is of the quantized
-    * vectors, error ≤ 1e-6 per component). Shape at scale: posexplode to
-    * (label, dim) rides map-side partial aggregation, so the shuffle is
-    * bounded by partitions × labels × dims, never rows × dims. */
-  val q49LabelCentroids: QuerySpec = QuerySpec.oracle(
-    "q49_label_centroids",
-    """WITH x AS (
-      |  SELECT label, unnest(list_transform(generate_series(1, len(embedding)),
-      |      i -> {'dim': i - 1, 'q': CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000000) AS BIGINT)})) AS u
-      |  FROM embeddings)
-      |SELECT label, CAST(u.dim AS BIGINT) AS dim, count(*) AS n_vecs,
-      |  CAST(sum(u.q) AS BIGINT) AS sum_q,
-      |  CAST(CAST(sum(u.q) AS BIGINT) AS DOUBLE) / count(*) / 1000000.0 AS centroid
-      |FROM x GROUP BY label, u.dim ORDER BY label, dim""".stripMargin
-  ) { (spark, dir) =>
-    Tables.embeddings(spark, dir)
-      .select(col("label"), posexplode(col("embedding")).as(Seq("dim", "x")))
-      .select(col("label"), asLong(col("dim")).as("dim"),
-        floor(col("x").cast("double") * 1000000).cast("long").as("q"))
-      .groupBy("label", "dim")
-      .agg(count(lit(1)).as("n_vecs"), sum(col("q")).as("sum_q"))
-      .select(col("label"), col("dim"), col("n_vecs"), col("sum_q"),
-        (col("sum_q").cast("double") / col("n_vecs") / lit(1000000.0)).as("centroid"))
-      .orderBy("label", "dim")
-  }
-
-  /** Spark side of [[LowToksSql]] (Dedup's case-insensitive tokenizer). */
-  private def lowToksCol: Column =
-    filter(split(lower(col("text")), "\\W+"), t => t =!= "")
-
-  /** Document chunking — the preprocessing step between cleaning and
-    * sequence packing: each document's token stream split into overlapping
-    * fixed-width windows (width 128, stride 96 → 32-token overlap, the
-    * standard long-document treatment so no span is ever cut without
-    * context). One row per (doc, chunk); empty docs yield no chunks.
-    * Shape at scale: a pure per-row explode — the fan-out is bounded by
-    * ceil(len/stride) per doc, no shuffle except the presentation sort;
-    * embarrassingly parallel over the corpus. */
-  val q84DocChunks: QuerySpec = QuerySpec.oracle(
-    "q84_doc_chunks",
-    s"""WITH toks AS (SELECT doc_id, $LowToksSql AS ts FROM documents),
-       |starts AS (SELECT doc_id, ts,
-       |    unnest(generate_series(1, greatest(len(ts), 1), 96)) AS s
-       |  FROM toks),
-       |c AS (SELECT doc_id, CAST((s - 1) // 96 AS BIGINT) AS chunk_idx,
-       |    ts[s:s+127] AS chunk
-       |  FROM starts)
-       |SELECT doc_id, chunk_idx,
-       |  array_to_string(chunk, ' ') AS chunk_text,
-       |  CAST(len(chunk) AS BIGINT) AS n_tokens
-       |FROM c WHERE len(chunk) > 0
-       |ORDER BY doc_id, chunk_idx""".stripMargin
-  ) { (spark, dir) =>
-    val (width, stride) = (128, 96)
-    Tables.documents(spark, dir)
-      .select(col("doc_id"), lowToksCol.as("ts"))
-      .select(col("doc_id"), col("ts"),
-        explode(sequence(lit(1), greatest(size(col("ts")), lit(1)), lit(stride))).as("s"))
-      .select(col("doc_id"),
-        ((col("s") - 1).cast("long") / stride).cast("long").as("chunk_idx"),
-        slice(col("ts"), col("s"), lit(width)).as("chunk"))
-      .filter(size(col("chunk")) > 0)
-      .select(col("doc_id"), col("chunk_idx"),
-        concat_ws(" ", col("chunk")).as("chunk_text"),
-        size(col("chunk")).cast("long").as("n_tokens"))
-      .orderBy("doc_id", "chunk_idx")
-  }
-
-  /** Training-data mixture construction: each source contributes documents
-    * until a fixed per-source token budget is hit, in a DETERMINISTIC
-    * pseudo-random order (md5 of doc_id — layout-independent, so the same
-    * mixture comes out of any partitioning/cluster size) — the standard
-    * mixture-weights pass (Pile-style source balancing). The prefix-sum is
-    * STRIPED ([[StripedWindow]]): the order key is md5 hex, so its first
-    * character is a free 16-way monotone range stripe (no statistics pass);
-    * the window runs per (source, stripe) and broadcast stripe offsets
-    * reconcile — value-identical to the plain per-source window
-    * (StripedWindowSpec pins it), and a single giant source no longer
-    * serializes its own window at 100 TB. */
-  val q52DataMixture: QuerySpec = QuerySpec.oracle(
-    "q52_data_mixture",
-    s"""WITH t AS (SELECT doc_id, source,
-       |  CAST(len($LowToksSql) AS BIGINT) AS n_toks FROM documents),
-       |c AS (SELECT *, CAST(sum(n_toks) OVER (PARTITION BY source
-       |    ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
-       |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens FROM t)
-       |SELECT doc_id, source, n_toks, cum_tokens FROM c
-       |WHERE cum_tokens <= 600 ORDER BY source, cum_tokens""".stripMargin
-  ) { (spark, dir) =>
-    val t = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("source"), size(lowToksCol).cast("long").as("n_toks"))
-      .withColumn("__h", md5(col("doc_id").cast("string")))
-      .withColumn(StripedWindow.StripeCol, StripedWindow.hexStripe(col("__h")))
-    StripedWindow.runningSum(t, Seq("source"), Seq(col("__h"), col("doc_id")),
-        col("n_toks"), "cum_tokens", includeCurrent = true)
-      .filter(col("cum_tokens") <= 600)
-      .select(col("doc_id"), col("source"), col("n_toks"), col("cum_tokens"))
-      .orderBy("source", "cum_tokens")
-  }
-
-  /** Heavy hitters at scale: a Misra-Gries sketch pass (bounded k-entry
-    * state per partition — the vocabulary never shuffles) produces a
-    * candidate set that provably contains every token with count > n/(k+1);
-    * an exact recount restricted to the broadcast candidates then yields
-    * exact top-20 counts. Oracle-identical to a plain exact top-20 whenever
-    * no true top-20 token falls below the n/(k+1) bound — here trivially:
-    * the corpus vocabulary (31) is under k=64, so the sketch holds every
-    * token with its exact count. The adversarial superset guarantee is
-    * spec-covered (FrequentItemsSpec). */
-  val q53HeavyHitters: QuerySpec = QuerySpec.oracle(
-    "q53_heavy_hitters",
-    s"""WITH toks AS (SELECT unnest($LowToksSql) AS token FROM documents)
-       |SELECT token, count(*) AS n FROM toks GROUP BY token
-       |ORDER BY n DESC, token LIMIT 20""".stripMargin
-  ) { (spark, dir) =>
-    import graft.functions.FrequentItemsSketch
-    val toks = Tables.documents(spark, dir).select(explode(lowToksCol).as("token"))
-    // 1-row candidate array → lazy scalar-subquery idiom (same as q27/q45)
-    val cands = toks.agg(FrequentItemsSketch.frequentItems(col("token"), 64).as("cands"))
-      .select(transform(col("cands"), s => s.getField("item")).as("cand_items"))
-    toks.crossJoin(broadcast(cands))
-      .filter(array_contains(col("cand_items"), col("token")))
-      .groupBy("token").agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("token"))
-      .limit(20)
-  }
-
-  /** Curriculum ordering: docs bucketed into difficulty quartiles by token
-    * count (exact interpolated quartiles, broadcast as 1-row cut-points —
-    * NOT ntile, whose single-partition global sort dies at scale), then
-    * interleaved round-robin across buckets so every training window sees
-    * the full difficulty mix. The rank-within-bucket is STRIPED
-    * ([[StripedWindow]]): ONE broadcast percentile aggregate yields the
-    * 16-iles of n_toks, whose elements 4/8/12 are exactly the quartile
-    * bucket cuts and whose full set gives ~4 monotone range stripes inside
-    * each bucket — rank = running count per (bucket, stripe) + broadcast
-    * stripe offsets, value-identical to row_number() per bucket
-    * (StripedWindowSpec pins it), so the 4-value bucket column never bounds
-    * parallelism. */
-  val q55Curriculum: QuerySpec = QuerySpec.oracle(
-    "q55_curriculum",
-    s"""WITH t AS (SELECT doc_id, CAST(len($LowToksSql) AS BIGINT) AS n_toks FROM documents),
-       |q AS (SELECT quantile_cont(n_toks, 0.25) AS q1, quantile_cont(n_toks, 0.5) AS q2,
-       |    quantile_cont(n_toks, 0.75) AS q3 FROM t),
-       |b AS (SELECT doc_id, n_toks,
-       |    CAST(1 + CAST(n_toks > q1 AS INT) + CAST(n_toks > q2 AS INT)
-       |      + CAST(n_toks > q3 AS INT) AS BIGINT) AS bucket
-       |  FROM t CROSS JOIN q),
-       |r AS (SELECT *, row_number() OVER (PARTITION BY bucket ORDER BY n_toks, doc_id) AS rn FROM b)
-       |SELECT doc_id, n_toks, bucket, rn, (rn - 1) * 4 + bucket AS pos
-       |FROM r ORDER BY pos""".stripMargin
-  ) { (spark, dir) =>
-    val t = Tables.documents(spark, dir)
-      .select(col("doc_id"), size(lowToksCol).cast("long").as("n_toks"))
-    // 16-ile cut points: cuts(3)/(7)/(11) ARE percentile .25/.5/.75 — the
-    // bucket values match the old scalar-percentile form exactly.
-    // Exact percentile (not approx) is REQUIRED here: the quartile bucket is
-    // part of the declared output and must match DuckDB's quantile_cont
-    // bit-for-bit. Unlike a unique key, this stays 100 TB-safe: percentile's
-    // in-memory value→count map is bounded by the DISTINCT cardinality of
-    // n_toks — token counts, capped by max document length — not by corpus
-    // row count. (Contrast StripedWindow.withRangeStripe, which stripes on
-    // arbitrary — possibly unique — order keys and therefore uses
-    // approx_percentile.)
-    val fracs = (1 until 16).map(i => i.toDouble / 16)
-    val cuts = t.agg(
-      expr(s"percentile(n_toks, array(${fracs.mkString(", ")}))").as("__cuts"))
-    val bucket = (lit(1) +
-      (col("n_toks") > col("__cuts")(3)).cast("int") +
-      (col("n_toks") > col("__cuts")(7)).cast("int") +
-      (col("n_toks") > col("__cuts")(11)).cast("int")).cast("long")
-    val stripe = (0 until 15)
-      .map(i => (col("n_toks") > col("__cuts")(i)).cast("int"))
-      .reduce(_ + _)
-    val b = t.crossJoin(broadcast(cuts))
-      .select(col("doc_id"), col("n_toks"), bucket.as("bucket"),
-        stripe.as(StripedWindow.StripeCol))
-    StripedWindow.runningSum(b, Seq("bucket"), Seq(col("n_toks"), col("doc_id")),
-        lit(1L), "rn", includeCurrent = true)
-      .select(col("doc_id"), col("n_toks"), col("bucket"), col("rn"),
-        ((col("rn") - 1) * 4 + col("bucket")).as("pos"))
-      .orderBy("pos")
-  }
-
-  /** Temperature-flattened mixture resampling (the XLM-R style p^α rule,
-    * α = 1/2): each source keeps documents at rate
-    * `min(1, 1/2 · sqrt(maxTokens / srcTokens))`, anchored at the largest
-    * source — so over-represented sources are down-sampled hardest and a
-    * source 4× smaller than the largest survives intact. The keep decision
-    * is a DETERMINISTIC md5 coin per doc_id (layout-independent, same
-    * sample from any partitioning), and every arithmetic step — max,
-    * long→double casts, divide, sqrt, multiply, compare — is an exactly
-    * rounded IEEE op, so Spark and DuckDB draw the IDENTICAL sample
-    * (transcendental functions like pow/log would not survive that bar;
-    * α = 1/2 is chosen because sqrt does). Shape at scale: per-source token
-    * totals are a tiny aggregate (one shuffle of partial sums), rates ride
-    * back on a broadcast join, the coin is a scan-side filter — the corpus
-    * itself never shuffles. */
-  val q56MixtureResample: QuerySpec = QuerySpec.oracle(
-    "q56_mixture_resample",
-    s"""WITH t AS (SELECT doc_id, source,
-       |    CAST(len($LowToksSql) AS BIGINT) AS n_toks FROM documents),
-       |s AS (SELECT source, CAST(sum(n_toks) AS BIGINT) AS src_toks FROM t GROUP BY source),
-       |mx AS (SELECT max(src_toks) AS max_toks FROM s),
-       |r AS (SELECT source, src_toks,
-       |    least(1.0, 0.5 * sqrt(CAST(max_toks AS DOUBLE) / CAST(src_toks AS DOUBLE))) AS keep_rate
-       |  FROM s CROSS JOIN mx)
-       |SELECT doc_id, t.source, n_toks, keep_rate
-       |FROM t JOIN r ON t.source = r.source
-       |WHERE CAST(CAST(concat('0x', substring(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)
-       |    AS DOUBLE) / 1152921504606846976.0 < keep_rate
-       |ORDER BY doc_id""".stripMargin
-  ) { (spark, dir) =>
-    val t = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("source"), size(lowToksCol).cast("long").as("n_toks"))
-    val s = t.groupBy("source").agg(sum(col("n_toks")).as("src_toks"))
-    val mx = s.agg(max(col("src_toks")).as("max_toks"))
-    val r = s.crossJoin(broadcast(mx))
-      .select(col("source"), col("src_toks"),
-        least(lit(1.0), lit(0.5) *
-          sqrt(col("max_toks").cast("double") / col("src_toks").cast("double")))
-          .as("keep_rate"))
-    // 2^60 is exactly representable; the md5 coin is the same 60-bit hash
-    // fraction both engines compute bit-for-bit (see TextFns.tokenId).
-    val coin = conv(substring(md5(col("doc_id").cast("string")), 1, 15), 16, 10)
-      .cast("long").cast("double") / lit(1152921504606846976.0)
-    t.join(broadcast(r.drop("src_toks")), Seq("source"))
-      .filter(coin < col("keep_rate"))
-      .select(col("doc_id"), col("source"), col("n_toks"), col("keep_rate"))
-      .orderBy("doc_id")
-  }
-
-  /** Bigram language-model table: adjacent-token pair counts with the
-    * conditional probability P(b | a) = c(a,b) / Σ_b' c(a,b') — the
-    * building block behind LM-perplexity quality filters and synthetic-text
-    * detectors. Probabilities divide two exact integer counts (one exactly
-    * rounded double divide — cross-engine identical). Shape at scale:
-    * bigram counting is a map-side-combined aggregation keyed by the pair;
-    * the prefix totals are vocabulary-sized and broadcast back, so the only
-    * data-proportional shuffle carries (pair, partial count) rows. */
-  val q57BigramLm: QuerySpec = QuerySpec.oracle(
-    "q57_bigram_lm",
-    s"""WITH toks AS (SELECT $LowToksSql AS ts FROM documents),
-       |bg AS (SELECT unnest(CASE WHEN len(ts) >= 2
-       |    THEN list_transform(generate_series(1, len(ts) - 1),
-       |      i -> concat_ws(' ', ts[i], ts[i+1]))
-       |    ELSE [] END) AS bg FROM toks),
-       |p AS (SELECT str_split(bg, ' ')[1] AS a, str_split(bg, ' ')[2] AS b,
-       |    count(*) AS n_ab FROM bg GROUP BY 1, 2),
-       |pre AS (SELECT a, CAST(sum(n_ab) AS BIGINT) AS n_a FROM p GROUP BY a)
-       |SELECT p.a, p.b, n_ab, n_a,
-       |  CAST(n_ab AS DOUBLE) / CAST(n_a AS DOUBLE) AS p_cond
-       |FROM p JOIN pre USING (a)
-       |ORDER BY n_ab DESC, a, b LIMIT 30""".stripMargin
-  ) { (spark, dir) =>
-    // Pairs via slice+arrays_zip, NOT TextFns.bigrams+split: the bigram
-    // lambda is an interpreted HOF and the string round-trip costs two
-    // regex splits per exploded row — measured 9.5 s vs 0.6 s at sf0.1.
-    // slice/arrays_zip/explode are all native codegen'd operators. The
-    // (ts[i], ts[i+1]) pairs are value-identical to the oracle's
-    // concat-then-split rendering (tokens are \W+-split, never contain
-    // spaces).
-    val n1 = greatest(size(col("ts")) - 1, lit(0))
-    val bg = Tables.documents(spark, dir)
-      .select(lowToksCol.as("ts"))
-      .select(explode(arrays_zip(
-        slice(col("ts"), lit(1), n1).as("a"),
-        slice(col("ts"), lit(2), n1).as("b"))).as("z"))
-      .select(col("z.a"), col("z.b"))
-    val p = bg.groupBy("a", "b").agg(count(lit(1)).as("n_ab"))
-    val pre = p.groupBy("a").agg(sum(col("n_ab")).as("n_a"))
-    p.join(broadcast(pre), Seq("a"))
-      .select(col("a"), col("b"), col("n_ab"), col("n_a"),
-        (col("n_ab").cast("double") / col("n_a").cast("double")).as("p_cond"))
-      .orderBy(col("n_ab").desc, col("a"), col("b"))
-      .limit(30)
-  }
-
-  /** Per-document bigram-LM surprisal (the perplexity-filter quality
-    * signal): score each document by the average information content of its
-    * bigrams under the corpus's own bigram model (q57's table). The
-    * per-bigram surprisal −log2 P(b|a) is QUANTIZED to whole bits and
-    * computed exactly on integers — floor(log2(n_a / n_ab)) is the binary
-    * length of the integer quotient, so every step (integer divide, bin(),
-    * length, sum, one final double divide) is cross-engine bit-identical,
-    * where a libm log/ln could never hash-match (same bar as q45's idf and
-    * q56's α=1/2). High average bits = improbable token transitions =
-    * gibberish/outlier candidate. Shape at scale: the LM build is a
-    * map-side-combined pair-keyed aggregation; scoring re-joins the
-    * doc-bigram stream to the LM on the pair key — both shuffles carry
-    * (pair, count)-shaped rows, the corpus text never moves twice, and the
-    * vocabulary-sized prefix table rides in via broadcast. */
-  val q58LmSurprisal: QuerySpec = QuerySpec.oracle(
-    "q58_lm_surprisal",
-    s"""WITH toks AS (SELECT doc_id, $LowToksSql AS ts FROM documents),
-       |bg AS (SELECT doc_id, unnest(CASE WHEN len(ts) >= 2
-       |    THEN list_transform(generate_series(1, len(ts) - 1),
-       |      i -> concat_ws(' ', ts[i], ts[i+1]))
-       |    ELSE [] END) AS bgs FROM toks),
-       |pr AS (SELECT doc_id, str_split(bgs, ' ')[1] AS a,
-       |    str_split(bgs, ' ')[2] AS b FROM bg),
-       |lm AS (SELECT a, b, count(*) AS n_ab FROM pr GROUP BY 1, 2),
-       |pre AS (SELECT a, CAST(sum(n_ab) AS BIGINT) AS n_a FROM lm GROUP BY a),
-       |sc AS (SELECT doc_id, length(bin(n_a // n_ab)) - 1 AS bits
-       |  FROM pr JOIN lm USING (a, b) JOIN pre USING (a))
-       |SELECT doc_id, count(*) AS n_bigrams, CAST(sum(bits) AS BIGINT) AS sum_bits,
-       |  CAST(sum(bits) AS DOUBLE) / count(*) AS avg_bits
-       |FROM sc GROUP BY doc_id
-       |ORDER BY avg_bits DESC, doc_id LIMIT 20""".stripMargin
-  ) { (spark, dir) =>
-    // bigram pairs via slice+arrays_zip — same native-codegen rationale as
-    // q57 (the HOF/string-round-trip form measured 15× slower)
-    val n1 = greatest(size(col("ts")) - 1, lit(0))
-    val pr = Tables.documents(spark, dir)
-      .select(col("doc_id"), lowToksCol.as("ts"))
-      .select(col("doc_id"), explode(arrays_zip(
-        slice(col("ts"), lit(1), n1).as("a"),
-        slice(col("ts"), lit(2), n1).as("b"))).as("z"))
-      .select(col("doc_id"), col("z.a"), col("z.b"))
-    val lm = pr.groupBy("a", "b").agg(count(lit(1)).as("n_ab"))
-    val pre = lm.groupBy("a").agg(sum(col("n_ab")).as("n_a"))
-    pr.join(lm, Seq("a", "b"))
-      .join(broadcast(pre), Seq("a"))
-      .withColumn("bits", (length(bin(expr("n_a DIV n_ab"))) - 1).cast("long"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_bigrams"), sum(col("bits")).as("sum_bits"))
-      .select(col("doc_id"), col("n_bigrams"), col("sum_bits"),
-        (col("sum_bits").cast("double") / col("n_bigrams").cast("double")).as("avg_bits"))
-      .orderBy(col("avg_bits").desc, col("doc_id"))
-      .limit(20)
-  }
-
-  /** Pair threshold for the q59/q73 DECISION/APPLY queries. Unlike q35
-    * (which keeps every shingle-sharing pair so the tiny corpus yields
-    * non-trivial components to exercise the closure), the decision pass uses
-    * a discriminative cut — at 0.0 any shared rare shingle links two docs
-    * and 200 test docs collapse into ~2 components, so the apply join runs
-    * against a degenerate 2-row keep-list. 0.5 keeps the output shaped like
-    * production dedup: most docs survive, only real near-dups merge. */
-  private val DedupMinJaccard = 0.5
-
-  /** DuckDB CTE prefix shared by the dedup decision/incremental queries:
-    * doc-bounded shingle pair graph (Jaccard ≥ [[DedupMinJaccard]],
-    * mirroring Dedup.ngramJaccardPairs' rare-filtered distinct-shingle
-    * sets). Ends at CTE `pairs(id_a, id_b)` with id_a < id_b. */
-  private def dedupPairsCte(bound: Int): String =
-    s"""toks AS (
-       |  SELECT doc_id, $LowToksSql AS ts FROM documents WHERE doc_id < $bound),
-       |shl AS (SELECT doc_id, $ShinglesSql AS shs FROM toks),
-       |sh0 AS (SELECT doc_id AS doc, unnest(shs) AS sh FROM shl),
-       |rare AS (SELECT sh FROM sh0 GROUP BY sh HAVING count(*) <= 1000),
-       |sh AS (SELECT doc, sh0.sh FROM sh0 JOIN rare USING (sh)),
-       |sizes AS (SELECT doc, count(*) AS n_sh FROM sh GROUP BY doc),
-       |itx AS (
-       |  SELECT a.doc AS id_a, b.doc AS id_b, count(*) AS inter
-       |  FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc < b.doc GROUP BY 1, 2),
-       |pairs AS (
-       |  SELECT id_a, id_b FROM itx
-       |  JOIN sizes sa ON sa.doc = itx.id_a
-       |  JOIN sizes sb ON sb.doc = itx.id_b
-       |  WHERE CAST(itx.inter AS DOUBLE) / (sa.n_sh + sb.n_sh - itx.inter)
-       |        >= $DedupMinJaccard)""".stripMargin
-
-  /** Shared DuckDB CTE chain for the dedup decision pass (q59/q73): the
-    * pair graph → recursive-closure connected components → docs joined with
-    * their group label. Ends at CTE `j(doc_id, group_id, n_chars)`. */
-  private val DedupGroupsCte =
-    s"""WITH RECURSIVE ${dedupPairsCte(200)},
-       |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-       |          UNION ALL SELECT id_b, id_a FROM pairs),
-       |reach(node, lbl) AS (
-       |  SELECT doc_id, doc_id FROM toks
-       |  UNION
-       |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node),
-       |cc AS (SELECT node AS doc_id, min(lbl) AS group_id FROM reach GROUP BY node),
-       |j AS (SELECT d.doc_id, cc.group_id, d.n_chars
-       |  FROM documents d JOIN cc USING (doc_id) WHERE d.doc_id < 200)""".stripMargin
-
-  /** The PRODUCTION pattern for the dedup decision: resolve keep flags from
-    * PRECOMPUTED group labels (`Dedup.dedupGroups` output — doc_id,
-    * canonical_id), so ONE connected-components run feeds every consumer
-    * (decision, apply, audit). The standalone declared queries q35/q59/q73
-    * each re-derive the labels because a declared query must be
-    * self-contained — that triple cost is a bench artifact, not the
-    * production shape; this overload is the shape. Within each group the
-    * representative is the highest-quality member (longest text, doc_id
-    * tiebreak). Columns: doc_id, group_id, n_chars, keep. */
-  def dedupKeepFlagsFrom(groups: DataFrame, docs: DataFrame): DataFrame = {
-    val w = Window.partitionBy("group_id").orderBy(col("n_chars").desc, col("doc_id"))
-    groups.join(docs.select("doc_id", "n_chars"), Seq("doc_id"))
-      .select(col("doc_id"), col("canonical_id").as("group_id"), col("n_chars"))
-      .withColumn("keep", row_number().over(w) === 1)
-  }
-
-  /** Spark side of [[DedupGroupsCte]] + keep flag, shared by q59/q73: within
-    * each CC group the representative is the highest-quality member (longest
-    * text, doc_id tiebreak). Columns: doc_id, group_id, n_chars, keep. */
-  private def dedupKeepFlags(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir).filter(col("doc_id") < 200)
-    // the memoized audit-region pair set, thresholded — the filter the
-    // operator itself would have applied last, on identical jaccard values
-    val pairs = ngramPairs200Cached(spark, dir)
-      .filter(col("jaccard") >= DedupMinJaccard)
-    dedupKeepFlagsFrom(Dedup.dedupGroups(docs.select("doc_id"), "doc_id", pairs), docs)
-  }
-
-  /** The DECISION step of near-dup dedup: q35's connected components resolved
-    * into a keep/drop decision — within each group the representative is the
-    * highest-quality member (longest text, doc_id tiebreak), NOT blindly the
-    * min-id label, matching how production dedup keeps the best copy rather
-    * than the first-seen one. Verified against the identical DuckDB
-    * recursive-CTE closure plus a window argmax. Shape at scale: inherits
-    * CC's properties (edges shuffle once, labels iterate), then one
-    * group-keyed window — the decision pass adds a single hash shuffle. */
-  val q59DedupKeeplist: QuerySpec = QuerySpec.oracle(
-    "q59_dedup_keeplist",
-    s"""$DedupGroupsCte
-       |SELECT doc_id, group_id, n_chars,
-       |  row_number() OVER (PARTITION BY group_id ORDER BY n_chars DESC, doc_id) = 1 AS keep
-       |FROM j ORDER BY doc_id""".stripMargin
-  ) { (spark, dir) =>
-    dedupKeepFlags(spark, dir).orderBy("doc_id")
-  }
-
-  /** The APPLY step — the operator a user actually runs on a corpus: q59's
-    * keep flags filtered and joined back to the full document columns,
-    * emitting the deduped corpus itself (one representative per near-dup
-    * group, all document fields intact, plus its group label for lineage).
-    * Shape at scale: the keep-list (doc_id, group_id — ids only, a fraction
-    * of the corpus width) joins the documents table on its primary key; one
-    * hash shuffle of ids against the corpus scan, no extra pass over text. */
-  val q73DedupApply: QuerySpec = QuerySpec.oracle(
-    "q73_dedup_apply",
-    s"""$DedupGroupsCte,
-       |k AS (SELECT doc_id, group_id,
-       |    row_number() OVER (PARTITION BY group_id ORDER BY n_chars DESC, doc_id) = 1 AS keep
-       |  FROM j)
-       |SELECT k.doc_id, k.group_id, d.text, d.lang, d.source, d.n_chars
-       |FROM k JOIN documents d USING (doc_id)
-       |WHERE keep ORDER BY doc_id""".stripMargin
-  ) { (spark, dir) =>
-    val docs = Tables.documents(spark, dir)
-    dedupKeepFlags(spark, dir)
-      .filter(col("keep"))
-      .select("doc_id", "group_id")
-      .join(docs, Seq("doc_id"))
-      .select("doc_id", "group_id", "text", "lang", "source", "n_chars")
-      .orderBy("doc_id")
-  }
-
-  /** INCREMENTAL dedup — the production shape for a growing corpus: a new
-    * batch (the delta, doc_id in [150, 300)) is deduped against the EXISTING
-    * corpus (doc_id < 150) and then within itself, WITHOUT re-clustering the
-    * corpus. Three-way verdict per delta doc:
-    *
-    *   - `dup_of_corpus`: shares a Jaccard ≥ [[DedupMinJaccard]] pair with
-    *     any existing doc — the existing copy wins unconditionally (the
-    *     corpus is already deduped and already served downstream; stability
-    *     of the served set beats the marginally-longer new copy);
-    *   - survivors run the q59 machinery among THEMSELVES (CC over
-    *     survivor-survivor pairs, best-quality representative per group):
-    *     `kept` or `dup_in_delta`.
-    *
-    * Shape at scale: one shingle-keyed pair join over corpus+delta (rarity
-    * from the union, i.e. the maintained index's document frequencies), but
-    * CC iterates over the DELTA-ONLY subgraph — the nightly batch, not the
-    * accumulated 100 TB corpus, which is the entire point of incremental
-    * dedup. Corpus-side shingles rejoin once; corpus labels never move. */
-  val q80DedupIncremental: QuerySpec = QuerySpec.oracle(
-    "q80_dedup_incremental",
-    s"""WITH RECURSIVE ${dedupPairsCte(300)},
-       |cdup AS (SELECT DISTINCT id_b AS doc_id FROM pairs
-       |         WHERE id_a < 150 AND id_b >= 150),
-       |ss AS (SELECT id_a, id_b FROM pairs
-       |       WHERE id_a >= 150
-       |         AND id_a NOT IN (SELECT doc_id FROM cdup)
-       |         AND id_b NOT IN (SELECT doc_id FROM cdup)),
-       |edges AS (SELECT id_a AS src, id_b AS dst FROM ss
-       |          UNION ALL SELECT id_b, id_a FROM ss),
-       |surv AS (SELECT doc_id FROM toks
-       |         WHERE doc_id >= 150 AND doc_id NOT IN (SELECT doc_id FROM cdup)),
-       |reach(node, lbl) AS (
-       |  SELECT doc_id, doc_id FROM surv
-       |  UNION
-       |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node),
-       |cc AS (SELECT node AS doc_id, min(lbl) AS group_id FROM reach GROUP BY node),
-       |j AS (SELECT d.doc_id, cc.group_id, d.n_chars
-       |      FROM documents d JOIN cc USING (doc_id)),
-       |k AS (SELECT doc_id, group_id,
-       |    row_number() OVER (PARTITION BY group_id ORDER BY n_chars DESC, doc_id) = 1 AS keep
-       |  FROM j)
-       |SELECT t.doc_id, k.group_id,
-       |  CASE WHEN cdup.doc_id IS NOT NULL THEN 'dup_of_corpus'
-       |       WHEN k.keep THEN 'kept' ELSE 'dup_in_delta' END AS reason,
-       |  coalesce(k.keep, false) AS keep
-       |FROM toks t
-       |LEFT JOIN cdup ON t.doc_id = cdup.doc_id
-       |LEFT JOIN k ON t.doc_id = k.doc_id
-       |WHERE t.doc_id >= 150
-       |ORDER BY t.doc_id""".stripMargin
-  ) { (spark, dir) =>
-    val docs = Tables.documents(spark, dir).filter(col("doc_id") < 300)
-    Dedup.incrementalDedup(
-        corpus = docs.filter(col("doc_id") < 150),
-        delta = docs.filter(col("doc_id") >= 150),
-        idCol = "doc_id", textCol = "text", qualityCol = "n_chars",
-        n = 3, minJaccard = DedupMinJaccard, maxDocFreq = 1000)
-      .orderBy("doc_id")
-  }
-
-  /** MinHash-LSH candidate PAIRS ([[Dedup.minHashPairs]]) as a declared
-    * oracle query — the fourth dedup family's pair generation made
-    * driver-visible (q31 covers shingle-join pairs, q32 the signatures,
-    * q33 simhash; this closes the matrix). Banding is the scale story:
-    * docs sharing any 4-hash band key join on the key — bucket join,
-    * never all-pairs — and only the surfaced candidates pay the exact
-    * Jaccard verification. On the doc_id < 200 slice the corpus's 3 true
-    * near-dup pairs (Jaccard ≥ 0.9, bimodal against ~0.03 junk) all
-    * band-collide deterministically, so the declared output at the shared
-    * [[DedupMinJaccard]] threshold is exactly the true-dup pair set. The
-    * DuckDB mirror replays the identical banding (the md5-seeded hashes
-    * are cross-engine, proven by q32) and the exact-Jaccard verification
-    * from first principles. */
-  val q88MinHashPairs: QuerySpec = QuerySpec.oracle(
-    "q88_dedup_minhash_pairs", {
-      val hashExprs = (0 until NumHashes).map { i =>
-        s"coalesce(list_min(list_transform(shs, s -> ${Dedup.seededHashSql("s", i)})), 9223372036854775807)"
-      }
-      val rpb = NumHashes / NumBands
-      val bandSelects = (0 until NumBands).map { b =>
-        val (lo, hi) = (b * rpb + 1, b * rpb + rpb)
-        s"SELECT doc_id AS doc, $b AS band, md5(array_to_string(sig[$lo:$hi], ',')) AS bkey FROM sigs"
-      }
-      s"""WITH toks AS (
-         |  SELECT doc_id, $LowToksSql AS ts FROM documents WHERE doc_id < 200),
-         |shl AS (SELECT doc_id, $ShinglesSql AS shs FROM toks),
-         |ne AS (SELECT doc_id, shs FROM shl WHERE len(shs) > 0),
-         |sigs AS (SELECT doc_id, ${hashExprs.mkString("[", ",\n  ", "]")} AS sig FROM ne),
-         |bands AS (${bandSelects.mkString("\n  UNION ALL ")}),
-         |cand AS (SELECT DISTINCT a.doc AS id_a, b.doc AS id_b
-         |  FROM bands a JOIN bands b
-         |    ON a.band = b.band AND a.bkey = b.bkey AND a.doc < b.doc),
-         |sized AS (
-         |  SELECT id_a, id_b, len(list_intersect(sa.shs, sb.shs)) AS inter,
-         |    len(sa.shs) AS n_a, len(sb.shs) AS n_b
-         |  FROM cand
-         |  JOIN shl sa ON sa.doc_id = id_a
-         |  JOIN shl sb ON sb.doc_id = id_b)
-         |SELECT id_a, id_b, inter / (n_a + n_b - inter) AS jaccard
-         |FROM sized WHERE inter / (n_a + n_b - inter) >= $DedupMinJaccard
-         |ORDER BY id_a, id_b""".stripMargin
-    }
-  ) { (spark, dir) =>
-    Dedup.minHashPairs(
-        Tables.documents(spark, dir).filter(col("doc_id") < 200),
-        "doc_id", "text", n = 3, numHashes = NumHashes, numBands = NumBands,
-        minJaccard = DedupMinJaccard)
-      .orderBy("id_a", "id_b")
-  }
-
-  /** LSH-dedup quality audit — q78's declared-recall discipline applied to
-    * the MinHash band (and, unlike the float ANN report, fully
-    * ORACLE-checked: both sides are deterministic integer/string
-    * machinery): ground truth is the exact all-pairs shingle Jaccard on
-    * the q31 slice, candidates are q88's banded collisions, and the
-    * report counts, per Jaccard threshold, how many true pairs the
-    * banding surfaced — the measured S-curve (recall ~0 in the chance-
-    * collision regime, 1.0 above the design threshold) that justifies
-    * running banded LSH instead of the
-    * quadratic at 100 TB, where only the banding is feasible and this
-    * report is the evidence it loses almost nothing above the design
-    * threshold. n_candidates rides along so precision-at-verify is
-    * derivable from the same rows. */
-  val q164LshDedupRecall: QuerySpec = QuerySpec.oracle(
-    "q164_lsh_dedup_recall", {
-      val hashExprs = (0 until NumHashes).map { i =>
-        s"coalesce(list_min(list_transform(shs, s -> ${Dedup.seededHashSql("s", i)})), 9223372036854775807)"
-      }
-      val rpb = NumHashes / NumBands
-      val bandSelects = (0 until NumBands).map { b =>
-        val (lo, hi) = (b * rpb + 1, b * rpb + rpb)
-        s"SELECT doc_id AS doc, $b AS band, md5(array_to_string(sig[$lo:$hi], ',')) AS bkey FROM sigs"
-      }
-      s"""WITH toks AS (
-         |  SELECT doc_id, $LowToksSql AS ts FROM documents WHERE doc_id < 200),
-         |shl AS (SELECT doc_id, $ShinglesSql AS shs FROM toks),
-         |sh0 AS (SELECT doc_id AS doc, unnest(shs) AS sh FROM shl),
-         |rare AS (SELECT sh FROM sh0 GROUP BY sh HAVING count(*) <= 1000),
-         |sh AS (SELECT doc, sh0.sh FROM sh0 JOIN rare USING (sh)),
-         |sizes AS (SELECT doc, count(*) AS n_sh FROM sh GROUP BY doc),
-         |exact AS (
-         |  SELECT a.doc AS id_a, b.doc AS id_b,
-         |    count(*) / (sa.n_sh + sb.n_sh - count(*)) AS jaccard
-         |  FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc < b.doc
-         |  JOIN sizes sa ON sa.doc = a.doc
-         |  JOIN sizes sb ON sb.doc = b.doc
-         |  GROUP BY 1, 2, sa.n_sh, sb.n_sh),
-         |ne AS (SELECT doc_id, shs FROM shl WHERE len(shs) > 0),
-         |sigs AS (SELECT doc_id, ${hashExprs.mkString("[", ",\n  ", "]")} AS sig FROM ne),
-         |bands AS (${bandSelects.mkString("\n  UNION ALL ")}),
-         |cand AS (SELECT DISTINCT a.doc AS id_a, b.doc AS id_b
-         |  FROM bands a JOIN bands b
-         |    ON a.band = b.band AND a.bkey = b.bkey AND a.doc < b.doc),
-         |nc AS (SELECT count(*) AS n_candidates FROM cand),
-         |j AS (SELECT e.jaccard, c.id_a IS NOT NULL AS caught
-         |      FROM exact e LEFT JOIN cand c ON c.id_a = e.id_a AND c.id_b = e.id_b),
-         |grid AS (SELECT unnest([0.02, 0.05, 0.1, 0.3, 0.5, 0.9]) AS threshold)
-         |SELECT g.threshold,
-         |  count(*) FILTER (WHERE j.jaccard >= g.threshold) AS n_true,
-         |  count(*) FILTER (WHERE j.jaccard >= g.threshold AND j.caught) AS n_caught,
-         |  any_value(nc.n_candidates) AS n_candidates
-         |FROM grid g CROSS JOIN nc LEFT JOIN j ON true
-         |GROUP BY g.threshold
-         |ORDER BY g.threshold""".stripMargin
-    }
-  ) { (spark, dir) =>
-    val slice = Tables.documents(spark, dir).filter(col("doc_id") < 200)
-    val exact = Dedup.ngramJaccardPairs(slice, "doc_id", "text",
-        n = 3, minJaccard = 0.0, maxDocFreq = 1000)
-      .select("id_a", "id_b", "jaccard")
-    val cand = Dedup.minHashCandidatePairs(slice, "doc_id", "text",
-        n = 3, numHashes = NumHashes, numBands = NumBands)
-      .withColumn("is_cand", lit(1))
-    val nc = cand.agg(count(lit(1)).as("n_candidates"))
-    val joined = exact.join(cand, Seq("id_a", "id_b"), "left")
-    // grid-side outer join (mirroring the oracle's grid CROSS JOIN ... LEFT
-    // JOIN): every threshold row survives with zero counts even when the
-    // exact pair set is EMPTY — an exploded per-pair grid would return 0
-    // rows there while the oracle returns |grid|
-    val grid = exact.sparkSession.range(1)
-      .select(explode(typedlit(Seq(0.02, 0.05, 0.1, 0.3, 0.5, 0.9))).as("threshold"))
-    grid.join(joined, lit(true), "left")
-      .groupBy("threshold")
-      .agg(count(when(col("jaccard") >= col("threshold"), 1)).as("n_true"),
-        count(when(col("jaccard") >= col("threshold") && col("is_cand").isNotNull, 1))
-          .as("n_caught"))
-      .crossJoin(broadcast(nc))
-      .orderBy("threshold")
-  }
-
-  /** Dedup-savings report — the cluster-size histogram every dedup run
-    * publishes before anyone approves dropping data: per NEAR-dup cluster
-    * size (q35's CC resolution over the Jaccard ≥ [[DedupMinJaccard]]
-    * pair graph — this fixture has no byte-identical dups, so exact-text
-    * clusters would be a degenerate all-size-1 histogram), how many
-    * clusters, documents and tokens they hold, and how much is REDUNDANT
-    * (everything but the canonical member). The histogram's tail is also
-    * the data-quality smoke alarm: a fat cluster at size N ≫ 2 is
-    * boilerplate or a crawler loop, not organic duplication. Shape: the
-    * bounded q31-slice pair graph + CC + one token scan, re-keyed by the
-    * BOUNDED cluster-size dictionary. */
-  val q165DedupSavings: QuerySpec = QuerySpec.oracle(
-    "q165_dedup_savings",
-    s"""WITH RECURSIVE toks AS (
-       |  SELECT doc_id, $LowToksSql AS ts FROM documents WHERE doc_id < 200),
-       |shl AS (SELECT doc_id, $ShinglesSql AS shs FROM toks),
-       |sh0 AS (SELECT doc_id AS doc, unnest(shs) AS sh FROM shl),
-       |rare AS (SELECT sh FROM sh0 GROUP BY sh HAVING count(*) <= 1000),
-       |sh AS (SELECT doc, sh0.sh FROM sh0 JOIN rare USING (sh)),
-       |sizes AS (SELECT doc, count(*) AS n_sh FROM sh GROUP BY doc),
-       |jp AS (
-       |  SELECT a.doc AS id_a, b.doc AS id_b,
-       |    count(*) / (sa.n_sh + sb.n_sh - count(*)) AS j
-       |  FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc < b.doc
-       |  JOIN sizes sa ON sa.doc = a.doc
-       |  JOIN sizes sb ON sb.doc = b.doc
-       |  GROUP BY 1, 2, sa.n_sh, sb.n_sh),
-       |pairs AS (SELECT id_a, id_b FROM jp WHERE j >= $DedupMinJaccard),
-       |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-       |          UNION ALL SELECT id_b, id_a FROM pairs),
-       |reach(node, lbl) AS (
-       |  SELECT doc_id, doc_id FROM toks
-       |  UNION
-       |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node),
-       |cc AS (SELECT node AS doc_id, min(lbl) AS canonical_id FROM reach GROUP BY node),
-       |dt AS (SELECT doc_id, CAST(len(ts) AS BIGINT) AS toks FROM toks),
-       |cl AS (
-       |  SELECT cc.canonical_id, count(*) AS sz,
-       |    CAST(sum(dt.toks) AS BIGINT) AS toks,
-       |    CAST(sum(CASE WHEN cc.doc_id = cc.canonical_id THEN dt.toks ELSE 0 END) AS BIGINT) AS kept
-       |  FROM cc JOIN dt USING (doc_id) GROUP BY 1)
-       |SELECT CAST(sz AS BIGINT) AS cluster_size,
-       |  count(*) AS n_clusters,
-       |  CAST(sz * count(*) AS BIGINT) AS n_docs,
-       |  CAST(sum(toks) AS BIGINT) AS n_tokens,
-       |  CAST((sz - 1) * count(*) AS BIGINT) AS n_redundant_docs,
-       |  CAST(sum(toks - kept) AS BIGINT) AS n_redundant_tokens
-       |FROM cl GROUP BY sz ORDER BY cluster_size""".stripMargin
-  ) { (spark, dir) =>
-    val docs = Tables.documents(spark, dir).filter(col("doc_id") < 200)
-    val pairs = ngramPairs200Cached(spark, dir)
-      .filter(col("jaccard") >= DedupMinJaccard)
-      .select("id_a", "id_b")
-    val groups = Dedup.dedupGroups(docs.select("doc_id"), "doc_id", pairs)
-    val dt = docs.select(col("doc_id"), size(lowToksCol).cast("long").as("toks"))
-    val cl = groups.join(dt, "doc_id")
-      .groupBy("canonical_id")
-      .agg(count(lit(1)).as("sz"),
-        sum(col("toks")).cast("long").as("toks"),
-        sum(when(col("doc_id") === col("canonical_id"), col("toks")).otherwise(0L))
-          .cast("long").as("kept"))
-    cl.groupBy("sz")
-      .agg(count(lit(1)).as("n_clusters"),
-        (col("sz") * count(lit(1))).cast("long").as("n_docs"),
-        sum(col("toks")).cast("long").as("n_tokens"),
-        ((col("sz") - 1) * count(lit(1))).cast("long").as("n_redundant_docs"),
-        sum(col("toks") - col("kept")).cast("long").as("n_redundant_tokens"))
-      .select(col("sz").cast("long").as("cluster_size"), col("n_clusters"),
-        col("n_docs"), col("n_tokens"), col("n_redundant_docs"), col("n_redundant_tokens"))
-      .orderBy("cluster_size")
-  }
-
-  /** Integer hyperplanes for [[q166AnnRecallExact]], a pure function of the
-    * seed — generated once and embedded as LITERALS in both the Spark plan
-    * and the DuckDB mirror, the q136 generated-oracle discipline applied
-    * to LSH planes (sign-LSH semantics stop being "not SQL-expressible"
-    * the moment the planes are literals and the arithmetic is integer). */
-  private def intPlanes(numBands: Int, bitsPerBand: Int, dims: Int,
-                        seed: Long): Array[Array[Array[Long]]] = {
-    val rnd = new java.util.Random(seed)
-    Array.fill(numBands, bitsPerBand, dims)((rnd.nextInt(2001) - 1000).toLong)
-  }
-
-  /** ANN recall, fully ORACLE-CHECKED (VERDICT r16 item 3 — the q164 way,
-    * for the VECTOR band): q78's float recall report stays rows-only
-    * because float cosine doesn't mirror, so this query re-grounds the
-    * claim in INTEGER arithmetic end to end. Ground truth is the exact
-    * top-5 by integer dot product of the q44 int8-quantized embeddings
-    * (floor quantization is engine-exact; int dot is order-free);
-    * candidates are banded sign-LSH collisions where the hyperplanes are
-    * seeded INTEGER literals shared by both engines, so every bucket key,
-    * candidate pair, and catch count is bit-identical. Two configurations
-    * trace the recall/cost frontier per query (n_caught of the exact
-    * top-5 found in the candidate set, plus the candidate count the
-    * banding paid). The corpus never pairs with itself — candidates come
-    * from bucket joins, the exact side from the bounded broadcast-query
-    * scan (q40's shape, |Q| = the 1-in-25 slice). */
-  val q166AnnRecallExact: QuerySpec = {
-    val dims = 64
-    val configs = Seq(("lsh_4x4", 4, 4, 42L), ("lsh_8x8", 8, 8, 43L))
-      .map { case (name, b, r, seed) => (name, intPlanes(b, r, dims, seed)) }
-    def sqlIntDot(vecExpr: String, lits: Array[Long]): String =
-      s"list_reduce(list_prepend(0, list_transform(list_zip($vecExpr, " +
-        s"[${lits.mkString(",")}]), p -> p[1]*p[2])), (acc, v) -> acc + v)"
-    val bandCtes = configs.map { case (name, planes) =>
-      val selects = planes.zipWithIndex.map { case (band, b) =>
-        val key = band.zipWithIndex.map { case (p, j) =>
-          s"(CASE WHEN ${sqlIntDot("qv", p)} >= 0 THEN ${1L << j} ELSE 0 END)"
-        }.mkString(" + ")
-        s"SELECT vec_id, $b AS band, $key AS key FROM q"
-      }
-      s"b_$name AS (${selects.mkString("\n  UNION ALL ")})"
-    }
-    val perConfig = configs.map { case (name, _) =>
-      s"""c_$name AS (SELECT DISTINCT qb.vec_id AS query_id, cb.vec_id AS neighbor_id
-         |  FROM b_$name qb JOIN b_$name cb
-         |    ON qb.band = cb.band AND qb.key = cb.key AND cb.vec_id <> qb.vec_id
-         |  WHERE qb.vec_id % 25 = 0),
-         |n_$name AS (SELECT query_id, count(*) AS n_candidates FROM c_$name GROUP BY 1),
-         |r_$name AS (
-         |  SELECT '$name' AS config, t.query_id, count(*) AS n_exact,
-         |    count(c.query_id) AS n_caught
-         |  FROM top5 t LEFT JOIN c_$name c
-         |    ON c.query_id = t.query_id AND c.neighbor_id = t.neighbor_id
-         |  GROUP BY t.query_id),
-         |o_$name AS (SELECT r.config, r.query_id, r.n_exact, r.n_caught,
-         |    coalesce(n.n_candidates, 0) AS n_candidates
-         |  FROM r_$name r LEFT JOIN n_$name n USING (query_id))""".stripMargin
-    }
-    val sql =
-      s"""WITH v AS (SELECT vec_id, embedding FROM embeddings),
-         |s AS (SELECT vec_id, embedding, ${VectorFns.Sql.maxAbs("embedding")} AS scale FROM v),
-         |q AS (SELECT vec_id, ${VectorFns.Sql.quantizeInt8("embedding", "scale")} AS qv FROM s),
-         |sim AS (
-         |  SELECT qs.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |    list_reduce(list_prepend(0, list_transform(list_zip(qs.qv, c.qv),
-         |      p -> p[1]*p[2])), (acc, v) -> acc + v) AS sim
-         |  FROM q qs JOIN q c ON c.vec_id <> qs.vec_id
-         |  WHERE qs.vec_id % 25 = 0),
-         |top5 AS (SELECT query_id, neighbor_id FROM (
-         |  SELECT query_id, neighbor_id,
-         |    row_number() OVER (PARTITION BY query_id
-         |                       ORDER BY sim DESC, neighbor_id) AS rn FROM sim)
-         |  WHERE rn <= 5),
-         |${bandCtes.mkString(",\n")},
-         |${perConfig.mkString(",\n")}
-         |SELECT config, query_id, CAST(n_exact AS BIGINT) AS n_exact,
-         |  CAST(n_caught AS BIGINT) AS n_caught,
-         |  CAST(n_candidates AS BIGINT) AS n_candidates,
-         |  CAST(n_caught AS DOUBLE) / CAST(n_exact AS DOUBLE) AS recall
-         |FROM (${configs.map(c => s"SELECT * FROM o_${c._1}").mkString(" UNION ALL ")})
-         |ORDER BY config, query_id""".stripMargin
-    QuerySpec.oracle("q166_ann_recall_exact", sql) { (spark, dir) =>
-      // codegen'd kernel, not aggregate(zip_with(...)): the sim scan and
-      // the plane signs together are ~20M element-ops per pass at sf0.1,
-      // interpreted-lambda cost territory (integer adds are order-free, so
-      // the kernel is bit-equal to the HOF form and the DuckDB fold)
-      val quant = quantizedVecsCk(spark, dir)
-      // exact top-5 by integer dot: the memoized ground truth (shared
-      // with q171/q202 — one evaluation per session)
-      val top5 = exactTop5Cached(spark, dir)
-      // banded candidates, ALL configs in one relation: every (config,
-      // band, key) triple computes from one projection of the quantized
-      // corpus and ONE bucket join serves every config, keyed on the
-      // config tag — half the stages of the per-config branches. All of a
-      // config's band keys come from ONE IntSignBandKeys kernel call (r21):
-      // the per-plane `when(dot >= 0, …)` stack inlined 80 64-long array
-      // literals that Catalyst re-analyzed on both sides of the bucket
-      // self-join every evaluation — driver plan time, not executor work;
-      // the kernel carries the planes as one plan reference object and its
-      // fused integer loop is bit-equal (order-free adds, same ≥ 0 sign).
-      val bandArrays = configs.map { case (name, planes) =>
-        transform(
-          graft.functions.IntSignBandKeys.bandKeys(col("qv"),
-            planes.flatten.flatten, dims, planes.length, planes.head.length),
-          (k, i) => struct(lit(name).as("config"), i.as("band"), k.as("key")))
-      }
-      val bands = quant
-        .select(col("vec_id"), explode(concat(bandArrays: _*)).as("bk"))
-        .select(col("vec_id"), col("bk.config").as("config"),
-          col("bk.band").as("band"), col("bk.key").as("key"))
-      val candAll = bands.filter(col("vec_id") % 25 === 0)
-        .withColumnRenamed("vec_id", "query_id")
-        .join(bands.withColumnRenamed("vec_id", "neighbor_id"),
-          Seq("config", "band", "key"))
-        .filter(col("neighbor_id") =!= col("query_id"))
-        .select("config", "query_id", "neighbor_id")
-        .distinct()
-      val nc = candAll.groupBy("config", "query_id").agg(count(lit(1)).as("n_candidates"))
-      // ONE evaluation of the expensive exact-top5 subtree, fanned across
-      // the config dimension by a broadcast 2-row cross join (the lazy
-      // alternative duplicated the |Q|·|C| scan + window per config)
-      val cfgDim = spark.range(1)
-        .select(explode(typedlit(configs.map(_._1))).as("config"))
-      top5.crossJoin(broadcast(cfgDim))
-        .join(candAll.withColumn("hit", lit(1)),
-          Seq("config", "query_id", "neighbor_id"), "left")
-        .groupBy("config", "query_id")
-        .agg(count(lit(1)).as("n_exact"), count(col("hit")).as("n_caught"))
-        .join(nc, Seq("config", "query_id"), "left")
-        .select(col("config"), col("query_id"), col("n_exact"), col("n_caught"),
-          coalesce(col("n_candidates"), lit(0L)).as("n_candidates"))
-        .withColumn("recall",
-          col("n_caught").cast("double") / col("n_exact").cast("double"))
-        .orderBy("config", "query_id")
-    }
-  }
-
-  /** Exact-integer MMR re-rank, fully ORACLE-CHECKED — the diversity
-    * band's q166: the float greedy (q147's `MmrExpression`) has no SQL
-    * mirror, so this twin re-grounds the SAME greedy recurrence in
-    * integers (relevance and the redundancy penalty are both quantized-int
-    * dot products; objective = λ·rel − (100−λ)·maxSimToPicked with λ as a
-    * percent) and UNROLLS the five greedy picks as generated steps — the
-    * q136 one-definition-shared-by-both-engines discipline applied to a
-    * greedy selection loop. Every pick, tie-break (objective desc, id
-    * asc; pick 1 by raw relevance like the kernel's round 0), and
-    * objective value is bit-identical cross-engine. Shortlist = top-10 by
-    * integer dot per query (the bounded broadcast-query scan); all step
-    * relations are |Q|·k′-sized, cut once behind checkpoints for the ~8
-    * plan references the unrolled steps make. */
-  val q169MmrExact: QuerySpec = {
-    val (lam, kPick, short) = (70, 5, 10)
-    def dotSql(a: String, b: String): String =
-      s"list_reduce(list_prepend(0, list_transform(list_zip($a, $b), " +
-        "p -> p[1]*p[2])), (acc, v) -> acc + v)"
-    val stepCtes = (2 to kPick).map { t =>
-      s"""m$t AS (
-         |  SELECT c.query_id, c.cand_id, c.rel, max(ps.s) AS maxsim
-         |  FROM cands c
-         |  LEFT JOIN pk${t - 1} x ON x.query_id = c.query_id AND x.cand_id = c.cand_id
-         |  JOIN psim ps ON ps.query_id = c.query_id AND ps.id_a = c.cand_id
-         |  JOIN pk${t - 1} p ON p.query_id = ps.query_id AND p.cand_id = ps.id_b
-         |  WHERE x.cand_id IS NULL
-         |  GROUP BY 1, 2, 3),
-         |p$t AS (
-         |  SELECT query_id, cand_id, rel, obj FROM (
-         |    SELECT query_id, cand_id, rel, $lam * rel - ${100 - lam} * maxsim AS obj,
-         |      row_number() OVER (PARTITION BY query_id
-         |                         ORDER BY $lam * rel - ${100 - lam} * maxsim DESC, cand_id) AS rn
-         |    FROM m$t) WHERE rn = 1),
-         |pk$t AS (SELECT * FROM pk${t - 1} UNION ALL SELECT query_id, cand_id FROM p$t)""".stripMargin
-    }
-    val unionAll = (1 to kPick)
-      .map(t => s"SELECT query_id, $t AS pick_order, cand_id, rel, obj FROM p$t")
-      .mkString(" UNION ALL ")
-    val sql =
-      s"""WITH v AS (SELECT vec_id, embedding FROM embeddings),
-         |s AS (SELECT vec_id, embedding, ${VectorFns.Sql.maxAbs("embedding")} AS scale FROM v),
-         |q AS (SELECT vec_id, ${VectorFns.Sql.quantizeInt8("embedding", "scale")} AS qv FROM s),
-         |sim AS (
-         |  SELECT qs.vec_id AS query_id, c.vec_id AS cand_id, c.qv,
-         |    ${dotSql("qs.qv", "c.qv")} AS rel
-         |  FROM q qs JOIN q c ON c.vec_id <> qs.vec_id
-         |  WHERE qs.vec_id % 25 = 0),
-         |cands AS (SELECT query_id, cand_id, qv, rel FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |                               ORDER BY rel DESC, cand_id) AS rn FROM sim)
-         |  WHERE rn <= $short),
-         |psim AS (
-         |  SELECT a.query_id, a.cand_id AS id_a, b.cand_id AS id_b,
-         |    ${dotSql("a.qv", "b.qv")} AS s
-         |  FROM cands a JOIN cands b
-         |    ON a.query_id = b.query_id AND a.cand_id <> b.cand_id),
-         |p1 AS (SELECT query_id, cand_id, rel, rel AS obj FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |                               ORDER BY rel DESC, cand_id) AS rn FROM cands)
-         |  WHERE rn = 1),
-         |pk1 AS (SELECT query_id, cand_id FROM p1),
-         |${stepCtes.mkString(",\n")}
-         |SELECT query_id, pick_order, cand_id, CAST(rel AS BIGINT) AS rel,
-         |  CAST(obj AS BIGINT) AS obj
-         |FROM ($unionAll)
-         |ORDER BY query_id, pick_order""".stripMargin
-    QuerySpec.oracle("q169_mmr_exact", sql) { (spark, dir) =>
-      // Spark side runs the greedy IN-ROW via the codegen'd
-      // [[graft.functions.IntMmrExpression]] kernel over the collected
-      // shortlist — q147's production serving shape (zero extra shuffles
-      // past the shortlist build), while the oracle proves the SAME
-      // recurrence through its unrolled relational steps. A first
-      // implementation unrolled the steps relationally in Spark too:
-      // correct, but 5 step-jobs of pure orchestration (~3.6 s at sf0.1)
-      // for what is per-row arithmetic over k′ = 10 candidates.
-      val quant = Tables.embeddings(spark, dir)
-        .withColumn("scale", VectorFns.maxAbs(col("embedding")))
-        .select(col("vec_id"),
-          VectorFns.quantizeInt8(col("embedding"), col("scale")).as("qv"))
-      val qs = quant.filter(col("vec_id") % 25 === 0)
-        .select(col("vec_id").as("query_id"), col("qv").as("qv_q"))
-      val wRel = Window.partitionBy("query_id").orderBy(col("rel").desc, col("cand_id"))
-      val shortlist = quant.join(broadcast(qs), col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id").as("cand_id"), col("qv"),
-          graft.functions.LongDotExpr.dot(col("qv_q"), col("qv")).as("rel"))
-        .withColumn("rn", row_number().over(wRel)).filter(col("rn") <= short)
-      shortlist.groupBy("query_id")
-        .agg(collect_list(struct(col("cand_id").as("id"), col("rel"), col("qv"))).as("cs"))
-        .select(col("query_id"), posexplode(
-          graft.functions.IntMmrExpression.intMmr(col("cs"), kPick, lam)))
-        .select(col("query_id"), (col("pos") + 1).cast("int").as("pick_order"),
-          col("col.id").as("cand_id"), col("col.rel").as("rel"), col("col.obj").as("obj"))
-        .orderBy("query_id", "pick_order")
-    }
-  }
-
-  /** SemDeDup — cluster-then-dedup semantic deduplication (Abbas et al.
-    * 2023; the D4/SemDeDup pipeline op), the CLUSTERED alternative to
-    * q218's LSH candidates and this band's only fully ORACLE-CHECKED
-    * semantic dedup: q170's integer k-means partitions the corpus, pair
-    * comparison happens ONLY within a cluster (the published method's
-    * scale contract — candidate pairs are cluster-local, never corpus-
-    * quadratic), near-duplicates resolve by connected components, and
-    * each group keeps its MOST PROTOTYPICAL member (min distance to the
-    * cluster centroid — SemDeDup's keep-the-representative rule, vs the
-    * min-id convention of the exact bands). Exactness end to end: the
-    * centroids are q170's integer literals, the duplicate predicate
-    * avoids the cosine's sqrt entirely — dot ≥ 0 AND 100·dot² ≥ 9·|a|²|b|²
-    * ⟺ cos ≥ 0.3 in pure int64 — and the CC recursion mirrors as q123's
-    * recursive CTE, so groups, keeps, and sizes all hash-match. Shape at
-    * 100 TB: one in-row assignment over centroid literals, one
-    * cluster-keyed self-join whose pair mass is Σ|cluster|² (bounded by
-    * the quantizer's balance, the SemDeDup argument), pointer-jumping CC
-    * on the near-dup subgraph. */
-  val q222SemDedupClusters: QuerySpec = {
-    val (k, dims, rounds) = (8, 64, 3)
-    def dotSql(a: String, b: String): String =
-      s"list_reduce(list_prepend(0, list_transform(list_zip($a, $b), " +
-        "p -> p[1]*p[2])), (acc, v) -> acc + v)"
-    val sql =
-      s"""${kmeansSqlCtes(k, dims, rounds).replaceFirst("^WITH ", "WITH RECURSIVE ")},
-         |nv AS MATERIALIZED (
-         |  SELECT a.vec_id, a.cid, a.dist, q.qv, ${dotSql("q.qv", "q.qv")} AS n2
-         |  FROM af a JOIN q ON q.vec_id = a.vec_id),
-         |pairs AS MATERIALIZED (SELECT id_a, id_b FROM (
-         |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         |    ${dotSql("a.qv", "b.qv")} AS d, a.n2 AS na, b.n2 AS nb
-         |  FROM nv a JOIN nv b ON a.cid = b.cid AND a.vec_id < b.vec_id)
-         |  WHERE d >= 0 AND 100 * d * d >= 9 * na * nb),
-         |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-         |          UNION ALL SELECT id_b, id_a FROM pairs),
-         |reach(node, lbl) AS (
-         |  SELECT vec_id, vec_id FROM nv
-         |  UNION
-         |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node),
-         |cc AS (SELECT node AS vec_id, min(lbl) AS group_id FROM reach GROUP BY node)
-         |SELECT n.vec_id, CAST(n.cid AS BIGINT) AS cluster, cc.group_id,
-         |  count(*) OVER (PARTITION BY cc.group_id) AS n_in_group,
-         |  row_number() OVER (PARTITION BY cc.group_id
-         |                     ORDER BY n.dist, n.vec_id) = 1 AS keep
-         |FROM nv n JOIN cc ON cc.vec_id = n.vec_id
-         |ORDER BY n.vec_id""".stripMargin
-    QuerySpec.oracle("q222_semdedup_clusters", sql) { (spark, dir) =>
-      val quant = quantizedVecsCk(spark, dir)
-      val cents = lloydCentroidsCached(spark, dir, -1, k, dims, rounds)
-      val intDot = graft.functions.LongDotExpr.dot _
-      // assignment + norms once; the relation feeds the self-join twice
-      // and the final report — cut it (the q207 skinny-relation rule)
-      val nv = quant.withColumn("m", intAssign(cents))
-        .select(col("vec_id"), col("qv"), col("m.cid").as("cid"),
-          col("m.dist").as("dist"), intDot(col("qv"), col("qv")).as("n2"))
-        .localCheckpoint(eager = false)
-      val a = nv.select(col("cid"), col("vec_id").as("id_a"),
-        col("qv").as("qv_a"), col("n2").as("na"))
-      val b = nv.select(col("cid"), col("vec_id").as("id_b"),
-        col("qv").as("qv_b"), col("n2").as("nb"))
-      val pairs = a.join(b, Seq("cid")).filter(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b"),
-          intDot(col("qv_a"), col("qv_b")).as("d"), col("na"), col("nb"))
-        .filter(col("d") >= 0 && expr("100 * d * d >= 9 * na * nb"))
-        .select("id_a", "id_b")
-      val groups = Dedup.dedupGroups(
-        nv.select("vec_id", "cid", "dist"), "vec_id", pairs)
-      groups
-        .withColumn("n_in_group",
-          count(lit(1)).over(Window.partitionBy("canonical_id")))
-        .withColumn("keep", row_number().over(
-          Window.partitionBy("canonical_id").orderBy("dist", "vec_id")) === 1)
-        .select(col("vec_id"), col("cid").cast("long").as("cluster"),
-          col("canonical_id").as("group_id"), col("n_in_group"), col("keep"))
-        .orderBy("vec_id")
-    }
-  }
-
-  /** Squared-L2 between two integer lists, DuckDB rendering (shared by the
-    * q170/q171 oracles). */
-  private def d2Sql(a: String, b: String): String =
-    s"list_reduce(list_prepend(0, list_transform(list_zip($a, $b), " +
-      "p -> (p[1]-p[2])*(p[1]-p[2]))), (acc, v) -> acc + v)"
-
-  /** The int8-quantized corpus (vec_id, qv) — shared input of the integer
-    * ANN/MMR/k-means audits. */
-  private def quantizedVecs(spark: SparkSession, dir: String): DataFrame =
-    Tables.embeddings(spark, dir)
-      .withColumn("scale", VectorFns.maxAbs(col("embedding")))
-      .select(col("vec_id"),
-        VectorFns.quantizeInt8(col("embedding"), col("scale")).as("qv"))
-
-  /** One checkpointed quantized-corpus relation per (session, dir), shared
-    * by the q170/q171/q172 builds (VERDICT r17 item 5): the three audits
-    * are pure functions of (spark, dir), so each session materializes the
-    * int8 corpus ONCE instead of once per query build — the Bucketing
-    * layout-memo economics. Keyed by session too: test suites open fresh
-    * sessions whose checkpointed RDDs die with them. */
-  private val quantizedVecsMemo = SessionMemo[DataFrame]("quantizedVecs")
-  private def quantizedVecsCk(spark: SparkSession, dir: String): DataFrame =
-    quantizedVecsMemo(spark, dir)(quantizedVecs(spark, dir).localCheckpoint(eager = false))
-
-  /** Memoized (nation, day) daily shipped-revenue series per (session,
-    * dir) — the shared input of the whole series-diagnostics band. Seven
-    * queries (q177 EWMA, q184 Holt, q186 Holt-Winters, q189 CUSUM, q203
-    * Spearman, q210 ACF, q215 PACF) each rebuilt the identical
-    * lineitem⋈supplier daily aggregate from scratch, paying the same
-    * ~1 s scan+join+agg per build and per bench pass (VERDICT r19 item
-    * 2); one checkpointed evaluation serves them all — the
-    * exactTop5Cached fit-once/serve-many economics applied to the series
-    * base. Carries BOTH measures the band uses: `x` = Σ extended-price
-    * cents × (100 − discount cents) (every consumer) and `y` = Σ
-    * quantity cents (q203's rank pair), so the Spearman superset rides
-    * the same relation via a column select. Scale shape: the aggregate
-    * output is |nations| × |ship days| — calendar-bounded (≈25 × 2.5k
-    * rows at ANY corpus size), so the checkpoint materializes a
-    * dictionary-sized relation while the corpus-sized scan+join runs
-    * once per session instead of once per consumer. */
-  private val dailyRevenueMemo = SessionMemo[DataFrame]("dailyRevenue")
-  private def dailyRevenueCached(spark: SparkSession, dir: String): DataFrame =
-    dailyRevenueMemo(spark, dir) {
-      Tables.lineitem(spark, dir)
-        .join(broadcast(Tables.supplier(spark, dir)
-            .select(col("s_suppkey"), col("s_nationkey"))),
-          col("l_suppkey") === col("s_suppkey"))
-        .select(col("s_nationkey").as("nk"), to_date(col("l_shipdate")).as("day"),
-          (cents(col("l_extendedprice")) * (lit(100L) - cents(col("l_discount")))).as("r"),
-          cents(col("l_quantity")).as("q"))
-        .groupBy("nk", "day")
-        .agg(sum(col("r")).cast("long").as("x"), sum(col("q")).cast("long").as("y"))
-        .localCheckpoint(eager = false)
-    }
-
-  /** The (nk, day, x) slice of [[dailyRevenueCached]] every
-    * single-measure series consumer reads. */
-  private def dailyRevenue(spark: SparkSession, dir: String): DataFrame =
-    dailyRevenueCached(spark, dir).select(col("nk"), col("day"), col("x"))
-
-  /** Memoized exact integer top-5 ground truth per (session, dir) — the
-    * (query → 5 nearest by int8 inner product, ties by neighbor id)
-    * relation every verified-ANN audit compares against. q166, q171 and
-    * q202 each rebuilt the identical |Q|·|C| sim scan + rank window per
-    * build (3 queries × 3 bench passes = 9 evaluations of the same
-    * truth); one checkpointed evaluation serves them all — the
-    * lloydCentroidsCached economics (VERDICT r17 item 5), applied to the
-    * ground-truth half. */
-  private val exactTop5Memo = SessionMemo[DataFrame]("revTop5")
-  private def exactTop5Cached(spark: SparkSession, dir: String): DataFrame =
-    exactTop5Memo(spark, dir) {
-      val quant = quantizedVecsCk(spark, dir)
-      val qs = quant.filter(col("vec_id") % 25 === 0)
-        .select(col("vec_id").as("query_id"), col("qv").as("qv_q"))
-      quant.join(broadcast(qs), col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          graft.functions.LongDotExpr.dot(col("qv_q"), col("qv")).as("sim"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id"))))
-        .filter(col("rn") <= 5).select("query_id", "neighbor_id")
-        .localCheckpoint(eager = false)
-    }
-
-  /** Memoized [[lloydCentroids]] per (session, dir, slice, k, dims,
-    * rounds): the q170 coarse centroids ARE q171's routing index, and
-    * q172's four subspace codebooks are re-read on every bench pass —
-    * training once per session and serving from the cached literals is
-    * the production split (fit once, reuse) that q43 documents for the
-    * float IVF. `slice` is -1 for the full vector, else the PQ subspace
-    * ordinal. */
-  private val lloydCentroidsMemo = SessionMemo[Seq[(Long, Array[Long])]]("lloydCentroids")
-  private def lloydCentroidsCached(spark: SparkSession, dir: String,
-                                   slice: Int, k: Int, dims: Int, rounds: Int)
-      : Seq[(Long, Array[Long])] =
-    lloydCentroidsMemo(spark, dir, slice, k, dims, rounds) {
-      val quant = quantizedVecsCk(spark, dir)
-      val in =
-        if (slice < 0) quant
-        else quant.select(col("vec_id"), org.apache.spark.sql.functions
-          .slice(col("qv"), slice * dims + 1, dims).as("qv"))
-      lloydCentroids(in, k, dims, rounds)
-    }
-
-  /** In-row integer argmin over the centroid set: d² = x·x − 2x·c + c·c
-    * (exact in integers) inside a struct (dist, cid) with the same
-    * (dist, cid) tie-break as the oracle's row_number. Shared by q170's
-    * assignment and q171's cell routing. One [[graft.functions.IntCentroidDists]]
-    * kernel call (r21): the per-centroid `array_min(array(struct ...))`
-    * literal stack inlined k 64-long centroid arrays that Catalyst
-    * re-analyzed per evaluation — the q166/q207 plan-time economics;
-    * element 1 of the kernel's (dist, cid)-sorted output IS array_min's
-    * pick, degenerate-input contract included (see the kernel scaladoc). */
-  private def intAssign(cents: Seq[(Long, Array[Long])], vec: Column = col("qv")): Column =
-    element_at(
-      graft.functions.IntCentroidDists.sortedDists(vec, cents, cents.head._2.length), 1)
-
-  /** The eager Lloyd loop (q141's iterative contract): per round one
-    * in-row argmin + one (cid, dim) aggregate whose k×dims result
-    * re-enters the next round's plan as literals. Returns the final
-    * centroids. Shared by q170 and q171. */
-  private def lloydCentroids(quant: DataFrame,
-                             k: Int, dims: Int, rounds: Int): Seq[(Long, Array[Long])] = {
-    var cents: Seq[(Long, Array[Long])] = quant.filter(col("vec_id") < k)
-      .select(col("vec_id"), col("qv")).collect()
-      .map(r => r.getLong(0) -> r.getAs[Seq[Long]]("qv").toArray).sortBy(_._1).toSeq
-    // q172's ADC lookup indexes codebook literals POSITIONALLY
-    // (element_at(centArr, code+1)), which is only sound when the seed
-    // cids are exactly 0..k-1; a fixture with a vec_id gap below k would
-    // silently misroute every lookup (ADVICE r17) — fail loudly instead
-    require(cents.map(_._1) == (0L until k.toLong),
-      s"lloydCentroids: seed vec_ids must be exactly 0..${k - 1}, got ${cents.map(_._1)}")
-    for (_ <- 1 to rounds) {
-      val sums = quant.select(col("qv"), intAssign(cents).getField("cid").as("cid"))
-        .select(col("cid"), posexplode(col("qv")).as(Seq("pos", "v")))
-        .groupBy("cid", "pos").agg(sum(col("v")).as("sm"), count(lit(1)).as("cnt"))
-        .collect()
-        .map(r => (r.getAs[Long]("cid"), r.getAs[Int]("pos"), r.getAs[Long]("sm"),
-          r.getAs[Long]("cnt")))
-        .groupBy(_._1)
-      cents = cents.map { case (cid, old) =>
-        cid -> (sums.get(cid) match {
-          case Some(rows) =>
-            val byPos = rows.map(t => t._2 -> (t._3, t._4)).toMap
-            Array.tabulate(dims)(p => byPos(p)._1 / byPos(p)._2)
-          case None => old // empty cluster keeps its centroid, both engines
-        })
-      }
-    }
-    cents
-  }
-
-  /** The k-means CTE chain (quantize → seeds → `rounds` Lloyd rounds),
-    * generated for the q170/q171 oracles from the same parameters the
-    * Scala loop runs with — one definition of a round, two derivations. */
-  private def kmeansSqlCtes(k: Int, dims: Int, rounds: Int): String = {
-    val roundCtes = (1 to rounds).map { r =>
-      s"""a$r AS (
-         |  SELECT vec_id, qv, cid FROM (
-         |    SELECT v.vec_id, v.qv, c.cid,
-         |      row_number() OVER (PARTITION BY v.vec_id
-         |                         ORDER BY ${d2Sql("v.qv", "c.dims")}, c.cid) AS rn
-         |    FROM q v CROSS JOIN c${r - 1} c) WHERE rn = 1),
-         |s$r AS (
-         |  SELECT a.cid, g.i, CAST(sum(a.qv[g.i]) AS BIGINT) AS sm, count(*) AS cnt
-         |  FROM a$r a CROSS JOIN generate_series(1, $dims) g(i)
-         |  GROUP BY a.cid, g.i),
-         |c$r AS MATERIALIZED (
-         |  SELECT p.cid,
-         |    list(CASE WHEN s.cnt IS NULL THEN p.dims[s2.i] ELSE s.sm // s.cnt END
-         |         ORDER BY s2.i) AS dims
-         |  FROM c${r - 1} p
-         |  CROSS JOIN generate_series(1, $dims) s2(i)
-         |  LEFT JOIN s$r s ON s.cid = p.cid AND s.i = s2.i
-         |  GROUP BY p.cid)""".stripMargin
-    }
-    s"""WITH v AS (SELECT vec_id, embedding FROM embeddings),
-       |s AS (SELECT vec_id, embedding, ${VectorFns.Sql.maxAbs("embedding")} AS scale FROM v),
-       |q AS MATERIALIZED (SELECT vec_id, ${VectorFns.Sql.quantizeInt8("embedding", "scale")} AS qv FROM s),
-       |c0 AS MATERIALIZED (SELECT vec_id AS cid, qv AS dims FROM q WHERE vec_id < $k),
-       |${roundCtes.mkString(",\n")},
-       |af AS (
-       |  SELECT vec_id, cid, dist FROM (
-       |    SELECT v.vec_id, c.cid, ${d2Sql("v.qv", "c.dims")} AS dist,
-       |      row_number() OVER (PARTITION BY v.vec_id
-       |                         ORDER BY ${d2Sql("v.qv", "c.dims")}, c.cid) AS rn
-       |    FROM q v CROSS JOIN c$rounds c) WHERE rn = 1)""".stripMargin
-  }
-
-  /** Exact-integer k-means, fully ORACLE-CHECKED — the last "not
-    * SQL-expressible" pillar of the ANN band dissolved the q166/q169 way:
-    * Lloyd's algorithm over the int8-quantized embeddings with INTEGER
-    * distances (Σ(x−c)², exact), INTEGER centroid updates (per-dim
-    * integral division of sums — Scala's `/` truncates toward zero exactly
-    * like DuckDB's `//` and Spark's `div`, negatives included; floorDiv
-    * would diverge on negative sums), deterministic seeds (the k smallest
-    * vec_ids) and a (dist, cid) tie-break — so three full Lloyd rounds,
-    * the final assignment, cluster sizes, per-cluster inertia, AND the
-    * centroid coordinates themselves are bit-identical cross-engine. This
-    * is the IVF coarse quantizer (q43) re-grounded as a verifiable
-    * computation: the float k-means keeps serving production, this twin
-    * proves the machinery.
-    *
-    * Build is EAGER and inherently iterative (q141's BPE contract, the
-    * [[lloydCentroids]] loop): each round's per-dim sums collect to the
-    * driver as k×dims bounded state and re-enter the next round's plan as
-    * literals; per-round corpus work is one in-row argmin plus one
-    * map-side-combined (cid, dim) aggregate — nothing all-pairs, nothing
-    * driver-sized beyond k×dims. */
-  val q170KmeansExact: QuerySpec = {
-    val (k, dims, rounds) = (8, 64, 3)
-    val sql =
-      s"""${kmeansSqlCtes(k, dims, rounds)}
-         |SELECT c.cid, CAST(coalesce(m.n, 0) AS BIGINT) AS n_members,
-         |  CAST(coalesce(m.inertia, 0) AS BIGINT) AS inertia,
-         |  array_to_string(c.dims, ',') AS centroid
-         |FROM c$rounds c
-         |LEFT JOIN (SELECT cid, count(*) AS n, sum(dist) AS inertia
-         |           FROM af GROUP BY 1) m ON m.cid = c.cid
-         |ORDER BY c.cid""".stripMargin
-    QuerySpec.oracle("q170_kmeans_exact", sql) { (spark, dir) =>
-      import spark.implicits._
-      val quant = quantizedVecsCk(spark, dir)
-      val cents = lloydCentroidsCached(spark, dir, -1, k, dims, rounds)
-      val af = quant.withColumn("m", intAssign(cents))
-        .groupBy(col("m.cid").as("cid"))
-        .agg(count(lit(1)).as("n_members"), sum(col("m.dist")).cast("long").as("inertia"))
-      val centDf = cents.map { case (cid, cdims) => (cid, cdims.mkString(",")) }
-        .toDF("cid", "centroid")
-      broadcast(centDf).join(af, Seq("cid"), "left")
-        .select(col("cid"), coalesce(col("n_members"), lit(0L)).as("n_members"),
-          coalesce(col("inertia"), lit(0L)).as("inertia"), col("centroid"))
-        .orderBy("cid")
-    }
-  }
-
-  /** Integer IVF serving audit, fully ORACLE-CHECKED — q43's probed-cell
-    * search composed from the verified pieces: [[q170KmeansExact]]'s
-    * integer centroids route the corpus into cells, each query probes its
-    * 2 nearest cells, and recall of [[q166AnnRecallExact]]'s exact
-    * integer top-5 inside the probed candidates is reported per query with
-    * the candidate count the probing paid — the read-reduction/recall
-    * trade IVF exists for, with every cell id, candidate pair, and catch
-    * count bit-identical cross-engine. Same eager-iterative build as q170
-    * (the Lloyd rounds); the serving plan itself is one in-row cell
-    * routing + the bounded probe join. */
-  val q171IvfRecallExact: QuerySpec = {
-    val (k, dims, rounds, nProbe) = (8, 64, 3, 2)
-    val sql =
-      s"""${kmeansSqlCtes(k, dims, rounds)},
-         |qq AS (SELECT vec_id AS query_id, qv FROM q WHERE vec_id % 25 = 0),
-         |probes AS (
-         |  SELECT query_id, cid FROM (
-         |    SELECT t.query_id, c.cid,
-         |      row_number() OVER (PARTITION BY t.query_id
-         |                         ORDER BY ${d2Sql("t.qv", "c.dims")}, c.cid) AS rn
-         |    FROM qq t CROSS JOIN c$rounds c) WHERE rn <= $nProbe),
-         |cand AS (
-         |  SELECT p.query_id, a.vec_id AS neighbor_id
-         |  FROM probes p JOIN af a ON a.cid = p.cid
-         |  WHERE a.vec_id <> p.query_id),
-         |sim AS (
-         |  SELECT qs.query_id, c.vec_id AS neighbor_id,
-         |    list_reduce(list_prepend(0, list_transform(list_zip(qs.qv, c.qv),
-         |      p -> p[1]*p[2])), (acc, v) -> acc + v) AS sim
-         |  FROM qq qs JOIN q c ON c.vec_id <> qs.query_id),
-         |top5 AS (SELECT query_id, neighbor_id FROM (
-         |  SELECT query_id, neighbor_id,
-         |    row_number() OVER (PARTITION BY query_id
-         |                       ORDER BY sim DESC, neighbor_id) AS rn FROM sim)
-         |  WHERE rn <= 5),
-         |nc AS (SELECT query_id, count(*) AS n_candidates FROM cand GROUP BY 1)
-         |SELECT t.query_id, count(*) AS n_exact,
-         |  count(c.query_id) AS n_caught,
-         |  CAST(coalesce(any_value(nc.n_candidates), 0) AS BIGINT) AS n_candidates,
-         |  CAST(count(c.query_id) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS recall
-         |FROM top5 t
-         |LEFT JOIN cand c ON c.query_id = t.query_id AND c.neighbor_id = t.neighbor_id
-         |LEFT JOIN nc ON nc.query_id = t.query_id
-         |GROUP BY t.query_id
-         |ORDER BY t.query_id""".stripMargin
-    QuerySpec.oracle("q171_ivf_recall_exact", sql) { (spark, dir) =>
-      val quant = quantizedVecsCk(spark, dir)
-      // the routing index IS q170's centroid set — served from the memo,
-      // not re-derived (VERDICT r17 item 5)
-      val cents = lloydCentroidsCached(spark, dir, -1, k, dims, rounds)
-      // corpus → cells: the same in-row argmin as q170's assignment
-      val cells = quant.select(col("vec_id"), intAssign(cents).getField("cid").as("cid"))
-      // query → nProbe nearest cells: the kernel's (dist, cid)-sorted
-      // array sliced in-row (== the oracle's (dist, cid) row_number;
-      // k is a literal-sized array, no shuffle) — the intAssign kernel
-      // rationale, one reference object instead of k centroid literals
-      val probeArr = slice(
-        graft.functions.IntCentroidDists.sortedDists(col("qv"), cents, dims), 1, nProbe)
-      val qq = quant.filter(col("vec_id") % 25 === 0)
-      val probes = qq.select(col("vec_id").as("query_id"),
-          explode(probeArr).as("p"))
-        .select(col("query_id"), col("p.cid").as("cid"))
-      val cand = probes.join(cells.withColumnRenamed("vec_id", "neighbor_id"), "cid")
-        .filter(col("neighbor_id") =!= col("query_id"))
-        .select("query_id", "neighbor_id")
-      val nc = cand.groupBy("query_id").agg(count(lit(1)).as("n_candidates"))
-      val top5 = exactTop5Cached(spark, dir)
-      top5.join(cand.withColumn("hit", lit(1)), Seq("query_id", "neighbor_id"), "left")
-        .groupBy("query_id")
-        .agg(count(lit(1)).as("n_exact"), count(col("hit")).as("n_caught"))
-        .join(nc, Seq("query_id"), "left")
-        .select(col("query_id"), col("n_exact"), col("n_caught"),
-          coalesce(col("n_candidates"), lit(0L)).as("n_candidates"),
-          (col("n_caught").cast("double") / col("n_exact").cast("double")).as("recall"))
-        .orderBy("query_id")
-    }
-  }
-
-  /** Integer PQ/ADC audit, fully ORACLE-CHECKED — the last member of the
-    * verified-ANN family (LSH q166, MMR q169, k-means q170, IVF q171):
-    * product quantization with INTEGER codebooks. Each of the m=4
-    * subspaces trains its own 16-code codebook with [[lloydCentroids]]'
-    * exact integer Lloyd rounds over the SLICED quantized vectors, the
-    * corpus is encoded to 4 codes/vector (32× narrower than the int8
-    * column), and each query scans the codes via an additive-distance
-    * lookup table (ADC: Σ per-subspace d² to the coded centroid) — the
-    * Jégou et al. 2011 shape, every codebook entry, code, and ADC value
-    * exact integers, bit-identical cross-engine. Reports BOTH tiers per
-    * query: raw ADC top-5 recall (what compression alone retains) and
-    * recall of the exact top-5 inside the 50-candidate shortlist (what
-    * q127's exact re-rank recovers — the shortlist bound). On this
-    * cluster-free random fixture the gap is the finding: ADC@5 ~0.11,
-    * shortlist-50 ~0.54 at sf0.01 — compression needs the re-rank.
-    * Eager-iterative build (4 Lloyd chains, q141's contract). */
-  val q172PqRecallExact: QuerySpec = {
-    val (m, subDims, k, rounds, refine) = (4, 16, 16, 2, 50)
-    def subOf(c: String, p: Int): String = s"$c[${p * subDims + 1}:${p * subDims + subDims}]"
-    val chains = (0 until m).flatMap { p =>
-      val c0 = s"c${p}_0 AS MATERIALIZED (SELECT vec_id AS cid, ${subOf("qv", p)} AS dims " +
-        s"FROM q WHERE vec_id < $k)"
-      val rcs = (1 to rounds).map { r =>
-        s"""a${p}_$r AS (
-           |  SELECT vec_id, qv, cid FROM (
-           |    SELECT v.vec_id, v.qv, c.cid,
-           |      row_number() OVER (PARTITION BY v.vec_id
-           |                         ORDER BY ${d2Sql(subOf("v.qv", p), "c.dims")}, c.cid) AS rn
-           |    FROM q v CROSS JOIN c${p}_${r - 1} c) WHERE rn = 1),
-           |s${p}_$r AS (
-           |  SELECT a.cid, g.i, CAST(sum(${subOf("a.qv", p)}[g.i]) AS BIGINT) AS sm, count(*) AS cnt
-           |  FROM a${p}_$r a CROSS JOIN generate_series(1, $subDims) g(i)
-           |  GROUP BY a.cid, g.i),
-           |c${p}_$r AS MATERIALIZED (
-           |  SELECT pp.cid,
-           |    list(CASE WHEN s.cnt IS NULL THEN pp.dims[s2.i] ELSE s.sm // s.cnt END
-           |         ORDER BY s2.i) AS dims
-           |  FROM c${p}_${r - 1} pp
-           |  CROSS JOIN generate_series(1, $subDims) s2(i)
-           |  LEFT JOIN s${p}_$r s ON s.cid = pp.cid AND s.i = s2.i
-           |  GROUP BY pp.cid)""".stripMargin
-      }
-      val tail =
-        s"""af$p AS MATERIALIZED (
-           |  SELECT vec_id, cid AS code FROM (
-           |    SELECT v.vec_id, c.cid,
-           |      row_number() OVER (PARTITION BY v.vec_id
-           |                         ORDER BY ${d2Sql(subOf("v.qv", p), "c.dims")}, c.cid) AS rn
-           |    FROM q v CROSS JOIN c${p}_$rounds c) WHERE rn = 1),
-           |lut$p AS (SELECT t.query_id, c.cid AS code, ${d2Sql(subOf("t.qv", p), "c.dims")} AS d
-           |  FROM qq t CROSS JOIN c${p}_$rounds c)""".stripMargin
-      (c0 +: rcs) :+ tail
-    }
-    val codeJoins = (1 until m).map(p => s"JOIN af$p x$p ON x$p.vec_id = x0.vec_id").mkString("\n  ")
-    val lutJoins = (0 until m)
-      .map(p => s"JOIN lut$p l$p ON l$p.query_id = q2.query_id AND l$p.code = x$p.code")
-      .mkString("\n  ")
-    val adcSum = (0 until m).map(p => s"l$p.d").mkString(" + ")
-    val sql =
-      s"""WITH v AS (SELECT vec_id, embedding FROM embeddings),
-         |s AS (SELECT vec_id, embedding, ${VectorFns.Sql.maxAbs("embedding")} AS scale FROM v),
-         |q AS MATERIALIZED (SELECT vec_id, ${VectorFns.Sql.quantizeInt8("embedding", "scale")} AS qv FROM s),
-         |qq AS MATERIALIZED (SELECT vec_id AS query_id, qv FROM q WHERE vec_id % 25 = 0),
-         |${chains.mkString(",\n")},
-         |adc AS (
-         |  SELECT q2.query_id, x0.vec_id AS neighbor_id, $adcSum AS adc
-         |  FROM af0 x0
-         |  $codeJoins
-         |  CROSS JOIN qq q2
-         |  $lutJoins
-         |  WHERE x0.vec_id <> q2.query_id),
-         |ar AS (SELECT query_id, neighbor_id, rn FROM (
-         |  SELECT query_id, neighbor_id,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY adc, neighbor_id) AS rn
-         |  FROM adc) WHERE rn <= $refine),
-         |ex AS (
-         |  SELECT q2.query_id, c.vec_id AS neighbor_id, ${d2Sql("q2.qv", "c.qv")} AS d
-         |  FROM qq q2 JOIN q c ON c.vec_id <> q2.query_id),
-         |et5 AS (SELECT query_id, neighbor_id FROM (
-         |  SELECT query_id, neighbor_id,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY d, neighbor_id) AS rn
-         |  FROM ex) WHERE rn <= 5)
-         |SELECT e.query_id, count(*) AS n_exact,
-         |  CAST(count(CASE WHEN a.rn <= 5 THEN 1 END) AS BIGINT) AS n_caught_adc5,
-         |  CAST(count(a.rn) AS BIGINT) AS n_caught_r$refine,
-         |  CAST(count(CASE WHEN a.rn <= 5 THEN 1 END) AS DOUBLE)
-         |    / CAST(count(*) AS DOUBLE) AS recall_adc5,
-         |  CAST(count(a.rn) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS recall_r$refine
-         |FROM et5 e
-         |LEFT JOIN ar a ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
-         |GROUP BY e.query_id ORDER BY e.query_id""".stripMargin
-    QuerySpec.oracle("q172_pq_recall_exact", sql) { (spark, dir) =>
-      val intDot = graft.functions.LongDotExpr.dot _
-      val quant = quantizedVecsCk(spark, dir)
-      val subCents = (0 until m).map { p =>
-        lloydCentroidsCached(spark, dir, p, k, subDims, rounds)
-      }
-      // encode: one projection carrying all m codes (in-row argmins over
-      // the sliced vector against each subspace's codebook literals),
-      // CUT behind a lazy checkpoint: PQ codes are a stored artifact —
-      // encoded once per corpus row — and without the cut CollapseProject
-      // folds the 4×16-struct argmin into the per-(query,code) ADC scan,
-      // re-evaluating the whole encoding |Q| times per row as one
-      // codegen-hostile mega-expression (measured 41 s → 1.4 s at sf0.1)
-      val codes = quant.select(col("vec_id") +: col("qv").as("qv") +: (0 until m).map { p =>
-        intAssign(subCents(p), slice(col("qv"), p * subDims + 1, subDims))
-          .getField("cid").as(s"code$p")
-      }: _*).drop("qv").localCheckpoint(eager = false)
-      val qq = quant.filter(col("vec_id") % 25 === 0)
-        .select(col("vec_id").as("query_id"), col("qv").as("qv_q"))
-      // ADC: per-subspace LUT distance via codebook literals (codebooks
-      // are cid-ordered 0..k-1, so element_at(·, code+1) IS the lookup)
-      val adcCol = (0 until m).map { p =>
-        val qsub = slice(col("qv_q"), p * subDims + 1, subDims)
-        val centArr = typedlit(subCents(p).map(_._2.toSeq))
-        val ccArr = typedlit(subCents(p).map { case (_, cd) => cd.map(x => x * x).sum })
-        val idx = col(s"code$p").cast("int") + 1
-        intDot(qsub, qsub) - lit(2L) * intDot(qsub, element_at(centArr, idx)) +
-          element_at(ccArr, idx)
-      }.reduce(_ + _)
-      val shortlist = codes.join(broadcast(qq), col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id").as("neighbor_id"), adcCol.as("adc"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("query_id").orderBy(col("adc"), col("neighbor_id"))))
-        .filter(col("rn") <= refine)
-        .select("query_id", "neighbor_id", "rn")
-      val et5 = quant.join(broadcast(qq), col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          (intDot(col("qv_q"), col("qv_q")) - lit(2L) * intDot(col("qv_q"), col("qv"))
-            + intDot(col("qv"), col("qv"))).as("d"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("query_id").orderBy(col("d"), col("neighbor_id"))))
-        .filter(col("rn") <= 5).select("query_id", "neighbor_id")
-      et5.join(shortlist, Seq("query_id", "neighbor_id"), "left")
-        .groupBy("query_id")
-        .agg(count(lit(1)).as("n_exact"),
-          count(when(col("rn") <= 5, 1)).as("n_caught_adc5"),
-          count(col("rn")).as(s"n_caught_r$refine"))
-        .select(col("query_id"), col("n_exact"), col("n_caught_adc5"),
-          col(s"n_caught_r$refine"),
-          (col("n_caught_adc5").cast("double") / col("n_exact").cast("double"))
-            .as("recall_adc5"),
-          (col(s"n_caught_r$refine").cast("double") / col("n_exact").cast("double"))
-            .as(s"recall_r$refine"))
-        .orderBy("query_id")
-    }
-  }
-
-  /** Collocation mining (the phrase-detection pass that runs before
-    * tokenizer training — "hot dog" should become one token if its parts
-    * co-occur far above chance): bigram lift = P(a,b) / (P(a·)·P(·b)),
-    * computed entirely from the bigram table as n_ab·N / (n_a·*n_·b) so
-    * every input is an exact integer count. The standard PMI is
-    * log2(lift); the log is MONOTONE, so ranking by lift ranks by PMI
-    * while keeping every arithmetic step exactly-rounded IEEE (two exact
-    * integer-valued double products, then one division) — the same
-    * no-libm bar as q45's idf and q58's quantized surprisal, which is
-    * what lets the scores hash-match DuckDB's. Shape at scale: one
-    * map-side-combined pair aggregation (the only corpus-sized shuffle);
-    * prefix/suffix marginals and the 1-row grand total are vocabulary-
-    * and unit-sized, riding back in via broadcast + the lazy 1-row
-    * cross-join idiom (q27/q45). min-count 5 kills the long noise tail
-    * before ranking. */
-  val q94Collocations: QuerySpec = QuerySpec.oracle(
-    "q94_collocations",
-    s"""WITH toks AS (SELECT $LowToksSql AS ts FROM documents),
-       |bg AS (SELECT unnest(CASE WHEN len(ts) >= 2
-       |    THEN list_transform(generate_series(1, len(ts) - 1),
-       |      i -> concat_ws(' ', ts[i], ts[i+1]))
-       |    ELSE [] END) AS bg FROM toks),
-       |p AS (SELECT str_split(bg, ' ')[1] AS a, str_split(bg, ' ')[2] AS b,
-       |    count(*) AS n_ab FROM bg GROUP BY 1, 2),
-       |pre AS (SELECT a, CAST(sum(n_ab) AS BIGINT) AS n_a FROM p GROUP BY 1),
-       |suf AS (SELECT b, CAST(sum(n_ab) AS BIGINT) AS n_b FROM p GROUP BY 1),
-       |tot AS (SELECT CAST(sum(n_ab) AS BIGINT) AS n_bg FROM p)
-       |SELECT p.a, p.b, n_ab, n_a, n_b,
-       |  (CAST(n_ab AS DOUBLE) * CAST(n_bg AS DOUBLE))
-       |    / (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE)) AS lift
-       |FROM p JOIN pre USING (a) JOIN suf USING (b) CROSS JOIN tot
-       |WHERE n_ab >= 5
-       |ORDER BY lift DESC, a, b LIMIT 30""".stripMargin
-  ) { (spark, dir) =>
-    // Same codegen'd slice+arrays_zip pair stream as q57 (the HOF/regex
-    // alternative measured 9.5 s vs 0.6 s at sf0.1).
-    val n1 = greatest(size(col("ts")) - 1, lit(0))
-    val bg = Tables.documents(spark, dir)
-      .select(lowToksCol.as("ts"))
-      .select(explode(arrays_zip(
-        slice(col("ts"), lit(1), n1).as("a"),
-        slice(col("ts"), lit(2), n1).as("b"))).as("z"))
-      .select(col("z.a"), col("z.b"))
-    val p = bg.groupBy("a", "b").agg(count(lit(1)).as("n_ab"))
-    val pre = p.groupBy("a").agg(sum(col("n_ab")).as("n_a"))
-    val suf = p.groupBy("b").agg(sum(col("n_ab")).as("n_b"))
-    val tot = p.agg(sum(col("n_ab")).as("n_bg"))
-    p.filter(col("n_ab") >= 5)
-      .join(broadcast(pre), Seq("a"))
-      .join(broadcast(suf), Seq("b"))
-      .crossJoin(broadcast(tot))
-      .select(col("a"), col("b"), col("n_ab"), col("n_a"), col("n_b"),
-        ((col("n_ab").cast("double") * col("n_bg").cast("double"))
-          / (col("n_a").cast("double") * col("n_b").cast("double"))).as("lift"))
-      .orderBy(col("lift").desc, col("a"), col("b"))
-      .limit(30)
-  }
-
-  /** Inverted-index construction (the retrieval-side artifact q45 ranks
-    * against): per token, document frequency plus the first 20 postings in
-    * doc order. The posting-list truncation is where the 100 TB design
-    * lives: a collect-then-slice materializes a stopword's corpus-sized
-    * posting array in one aggregation buffer before slicing — the exact
-    * failure mode [[graft.functions.BottomKRows]] exists to avoid. The
-    * bounded heap keeps ≤20 (key, row) candidates per token per input
-    * partition, map-side combines, and ships fixed-size buffers, so
-    * per-token state is O(k) no matter how skewed the token — the same
-    * machinery as q12's exact-n sampler, re-targeted at postings. The
-    * order key is the zero-padded decimal doc_id (byte order = numeric
-    * order for non-negative ids, per the BottomKRows contract). df ≥ 10
-    * keeps the declared report off the hapax tail; df itself is exact and
-    * uncapped. */
-  val q100InvertedIndex: QuerySpec = QuerySpec.oracle(
-    "q100_inverted_index",
-    s"""WITH toks AS (SELECT doc_id, $LowToksSql AS ts FROM documents),
-       |tok AS (SELECT DISTINCT doc_id, unnest(ts) AS token FROM toks)
-       |SELECT token, count(*) AS df,
-       |  array_to_string((list(doc_id ORDER BY doc_id))[1:20], ',') AS postings_csv
-       |FROM tok GROUP BY token
-       |HAVING count(*) >= 10
-       |ORDER BY token""".stripMargin
-  ) { (spark, dir) =>
-    val pairs = Tables.documents(spark, dir)
-      .select(col("doc_id"), explode(lowToksCol).as("token"))
-      .distinct()
-    pairs.groupBy("token")
-      .agg(count(lit(1)).as("df"),
-        graft.functions.BottomKRows.bottomK(
-          lpad(col("doc_id").cast("string"), 10, "0"),
-          struct(col("doc_id")), 20).as("__post"))
-      .filter(col("df") >= 10)
-      .select(col("token"), col("df"),
-        array_join(
-          transform(col("__post"), x => x.getField("doc_id").cast("string")),
-          ",").as("postings_csv"))
-      .orderBy("token")
-  }
-
-  /** Vector-hygiene gate: [[graft.operators.Quality.predicateReport]]
-    * re-targeted at the embedding column — the validation pass that runs
-    * before ANN indexing, where one ragged or NaN vector poisons a whole
-    * index build (cosine against NaN is NaN, which every comparison
-    * silently drops). Same planted-violation discipline as q105 (the
-    * driver vectors are pristine): 0-9 truncated to 8 dims, 10-19 zeroed,
-    * 20-29 NaN-injected — both engines derive the identical corrupted
-    * view. The NaN rule uses `isnan`, NOT x <> x: Spark SQL defines
-    * NaN = NaN as TRUE (its documented total ordering), so the idiomatic
-    * IEEE self-inequality probe is exactly the predicate that silently
-    * never fires there. All three rules fuse into one conditional-count
-    * scan. */
-  val q106VectorHygiene: QuerySpec = QuerySpec.oracle(
-    "q106_vector_hygiene",
-    s"""WITH corrupted AS (
-       |  SELECT vec_id,
-       |    CASE WHEN vec_id < 10 THEN embedding[1:8]
-       |         WHEN vec_id BETWEEN 10 AND 19
-       |           THEN list_transform(embedding, x -> CAST(0.0 AS FLOAT))
-       |         WHEN vec_id BETWEEN 20 AND 29
-       |           THEN list_concat(list_concat(embedding[1:1], ['NaN'::FLOAT]), embedding[3:64])
-       |         ELSE embedding END AS embedding
-       |  FROM embeddings)
-       |SELECT 'dim_mismatch' AS rule,
-       |  count(*) FILTER (WHERE len(embedding) <> 64) AS n_violations FROM corrupted
-       |UNION ALL SELECT 'nan_vector',
-       |  count(*) FILTER (WHERE len(list_filter(embedding, x -> isnan(x))) > 0)
-       |  FROM corrupted
-       |UNION ALL SELECT 'zero_vector',
-       |  count(*) FILTER (WHERE ${VectorFns.Sql.normSq("embedding")} = 0.0)
-       |  FROM corrupted
-       |ORDER BY rule""".stripMargin
-  ) { (spark, dir) =>
-    val corrupted = Tables.embeddings(spark, dir).withColumn("embedding",
-      when(col("vec_id") < 10, slice(col("embedding"), 1, 8))
-        .when(col("vec_id").between(10, 19),
-          transform(col("embedding"), _ => lit(0.0f)))
-        .when(col("vec_id").between(20, 29),
-          concat(slice(col("embedding"), 1, 1), array(lit(Float.NaN)),
-            slice(col("embedding"), 3, 62)))
-        .otherwise(col("embedding")))
-    Quality.predicateReport(corrupted, Seq(
-        "dim_mismatch" -> (size(col("embedding")) =!= 64),
-        "nan_vector" -> exists(col("embedding"), x => isnan(x)),
-        "zero_vector" -> (VectorFns.normSq(col("embedding")) === 0.0)))
-      .orderBy("rule")
-  }
-
-  /** Per-document keyword extraction: each document's top-3 terms by
-    * tf·idf, with q45's odds-ratio idf ((N−df+½)/(df+½) — monotone in the
-    * textbook log-idf but every step exactly-rounded IEEE, so scores
-    * hash-match). Shape at scale: tf is the (doc, token)-keyed count, df
-    * the token-keyed count over distinct pairs; they meet in an ordinary
-    * token-keyed equi join with NO broadcast hint — the vocabulary is
-    * corpus-sized and must never be forced resident (q27's rule; AQE may
-    * still choose broadcast at small scale, which is its call, not a plan
-    * contract). The top-3 pick is a per-doc rank window (doc-cardinality
-    * parallelism) assembled in-row exactly like q98's paths. */
-  val q115KeywordExtract: QuerySpec = QuerySpec.oracle(
-    "q115_keyword_extract",
-    s"""WITH toks AS (SELECT doc_id, $LowToksSql AS ts FROM documents),
-       |pair AS (SELECT doc_id, unnest(ts) AS token FROM toks),
-       |tf AS (SELECT doc_id, token, count(*) AS tf FROM pair GROUP BY 1, 2),
-       |df AS (SELECT token, count(*) AS df
-       |       FROM (SELECT DISTINCT doc_id, token FROM pair) GROUP BY 1),
-       |nd AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM toks),
-       |sc AS (SELECT doc_id, token,
-       |    CAST(tf AS DOUBLE) * ((CAST(n_docs AS DOUBLE) - CAST(df AS DOUBLE) + 0.5)
-       |      / (CAST(df AS DOUBLE) + 0.5)) AS score
-       |  FROM tf JOIN df USING (token) CROSS JOIN nd),
-       |rk AS (SELECT doc_id, token, score,
-       |    row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, token) AS rn
-       |  FROM sc)
-       |SELECT doc_id, string_agg(token, ',' ORDER BY rn) AS keywords,
-       |  max(score) AS top_score
-       |FROM rk WHERE rn <= 3 GROUP BY doc_id
-       |ORDER BY doc_id""".stripMargin
-  ) { (spark, dir) =>
-    val pair = Tables.documents(spark, dir)
-      .select(col("doc_id"), explode(lowToksCol).as("token"))
-    val tf = pair.groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-    val df = pair.distinct().groupBy("token").agg(count(lit(1)).as("df"))
-    val nd = Tables.documents(spark, dir).agg(count(lit(1)).as("n_docs"))
-    val sc = tf.join(df, Seq("token")).crossJoin(broadcast(nd))
-      .select(col("doc_id"), col("token"),
-        (col("tf").cast("double") *
-          ((col("n_docs").cast("double") - col("df").cast("double") + lit(0.5))
-            / (col("df").cast("double") + lit(0.5)))).as("score"))
-    val rn = Window.partitionBy("doc_id").orderBy(col("score").desc, col("token"))
-    sc.withColumn("rn", row_number().over(rn))
-      .filter(col("rn") <= 3)
-      .groupBy("doc_id")
-      .agg(array_join(
-          transform(array_sort(collect_list(struct(col("rn"), col("token")))),
-            x => x.getField("token")), ",").as("keywords"),
-        max(col("score")).as("top_score"))
-      .orderBy("doc_id")
-  }
-
-  /** Source-overlap matrix — pairwise shingle Jaccard between SOURCES
-    * (not documents): the corpus-composition audit run before fixing a
-    * data mixture, where two crawls of the same site masquerading as
-    * independent sources would double-weight their content. Set sizes
-    * and intersections are exact integer counts over distinct
-    * (source, shingle) pairs, all derived from ONE corpus pass: a single
-    * groupBy on the shingle key (collect_set is the distinct) emits each
-    * shingle's source pairs AND memberships, with per-shingle fan-out
-    * bounded by |sources|² — q31's shingle-keyed discipline lifted from
-    * doc pairs to source pairs, never an all-pairs product over content
-    * and never a second scan. The |sources|²-bounded aggregate packs into
-    * one map+array row so the totals lookup is an element_at, not a join
-    * branch re-running corpus lineage (the source dimension is tiny by
-    * definition). */
-  val q116SourceOverlap: QuerySpec = QuerySpec.oracle(
-    "q116_source_overlap",
-    s"""WITH toks AS (SELECT doc_id, source, $LowToksSql AS ts FROM documents),
-       |shl AS (SELECT source, $ShinglesSql AS shs FROM toks),
-       |sh AS (SELECT DISTINCT source, unnest(shs) AS sh FROM shl),
-       |tot AS (SELECT source, count(*) AS n FROM sh GROUP BY 1),
-       |pair AS (SELECT a.source AS src_a, b.source AS src_b, count(*) AS n_ab
-       |  FROM sh a JOIN sh b ON a.sh = b.sh AND a.source < b.source
-       |  GROUP BY 1, 2)
-       |SELECT src_a, src_b, n_ab, ta.n AS n_a, tb.n AS n_b,
-       |  CAST(n_ab AS DOUBLE) / CAST(ta.n + tb.n - n_ab AS DOUBLE) AS jaccard
-       |FROM pair
-       |JOIN tot ta ON ta.source = src_a
-       |JOIN tot tb ON tb.source = src_b
-       |ORDER BY src_a, src_b""".stripMargin
-  ) { (spark, dir) =>
-    // ONE corpus pass, one linear chain: the earlier self-join formulation
-    // referenced the scan→shingle→distinct subtree FOUR times (the pair
-    // join's two sides + the totals under each broadcast branch) and Spark
-    // re-executed all four — four corpus scans at 100 TB. Instead, group
-    // once on the shingle key (collect_set is the distinct) and emit each
-    // shingle's ordered source PAIRS and per-source MEMBERSHIPS from that
-    // one pass, aggregated together keyed (src_a, src_b) with src_b NULL
-    // marking a membership row. That aggregate is |sources|(²)-bounded —
-    // tiny — so rather than splitting it into totals/pairs branches (every
-    // re-reference re-runs the corpus lineage; a checkpoint would run jobs
-    // at construction), ONE single-row aggregate packs the totals into a
-    // map and the pairs into an array, and the final projection explodes
-    // the pairs and looks totals up via element_at. Nothing downstream of
-    // the shingle groupBy ever touches the corpus again.
-    val srcs = array_sort(collect_set(col("source")))
-    val grp = Tables.documents(spark, dir)
-      .filter(col("source").isNotNull)
-      .select(col("source"), explode(Dedup.shingles(col("text"), 3)).as("sh"))
-      .groupBy("sh").agg(srcs.as("srcs"))
-    val pairsArr = flatten(transform(col("srcs"), (a, i) =>
-      transform(slice(col("srcs"), i + lit(2), size(col("srcs"))), b =>
-        struct(a.as("src_a"), b.as("src_b")))))
-    val singlesArr = transform(col("srcs"), a =>
-      struct(a.as("src_a"), lit(null).cast("string").as("src_b")))
-    val counts = grp
-      .select(explode(concat(singlesArr, pairsArr)).as("e"))
-      .groupBy(col("e.src_a").as("src_a"), col("e.src_b").as("src_b"))
-      .agg(count(lit(1)).as("n"))
-    val packed = counts.agg(
-      map_from_entries(collect_list(
-        when(col("src_b").isNull, struct(col("src_a"), col("n"))))).as("tot"),
-      collect_list(when(col("src_b").isNotNull,
-        struct(col("src_a"), col("src_b"), col("n")))).as("pairs"))
-    packed
-      .select(col("tot"), explode(col("pairs")).as("p"))
-      .select(col("p.src_a").as("src_a"), col("p.src_b").as("src_b"),
-        col("p.n").as("n_ab"),
-        element_at(col("tot"), col("p.src_a")).as("n_a"),
-        element_at(col("tot"), col("p.src_b")).as("n_b"))
-      .withColumn("jaccard", col("n_ab").cast("double")
-        / (col("n_a") + col("n_b") - col("n_ab")).cast("double"))
-      .orderBy("src_a", "src_b")
-  }
-
-  /** DuckDB mirror of [[Dedup.spanPairs]]'s span CTE chain (k=3,
-    * maxOcc=200, minSpan=15): positional trigrams → stop-gram cutoff →
-    * cross-doc position-aligned matches → gaps-and-islands on the
-    * diagonal. Shared by q125 (report), q126 (scrub) and — via the
-    * parameterized source relation — the q157 capstone's sub-document
-    * dedup stage. Returns the CTE list WITHOUT a leading WITH so callers
-    * can splice it into an existing chain. */
-  private[operators] def spanCtes(k: Int, maxOcc: Int, minSpan: Int,
-                                  from: String = "documents"): String = {
-    val gramCols = (0 until k).map(j => s"ts[i+$j]").mkString(", ")
-    s"""toks AS MATERIALIZED (SELECT doc_id, $LowToksSql AS ts FROM $from),
-       |g AS (SELECT doc_id AS doc, unnest(generate_series(1, len(ts)-${k - 1})) AS pos,
-       |  unnest(list_transform(generate_series(1, len(ts)-${k - 1}),
-       |    i -> concat_ws(' ', $gramCols))) AS gram FROM toks),
-       |rare AS (SELECT gram FROM g GROUP BY gram HAVING count(*) <= $maxOcc),
-       |gr AS (SELECT doc, pos, g.gram FROM g JOIN rare USING (gram)),
-       |m AS (SELECT a.doc AS id_a, a.pos AS pa, b.doc AS id_b, b.pos AS pb
-       |  FROM gr a JOIN gr b ON a.gram = b.gram AND a.doc < b.doc),
-       |isl AS (SELECT id_a, id_b, pa, pb, pa - pb AS diag,
-       |  pa - row_number() OVER (PARTITION BY id_a, id_b, pa - pb ORDER BY pa) AS grp FROM m),
-       |spans AS (SELECT id_a, id_b, min(pa) AS start_a, min(pb) AS start_b,
-       |    count(*) + ${k - 1} AS span_toks
-       |  FROM isl GROUP BY id_a, id_b, diag, grp
-       |  HAVING count(*) + ${k - 1} >= $minSpan)""".stripMargin
-  }
-
-  // k=5: over this corpus's 31-word vocabulary, TRIGRAMS collide by
-  // chance (14k cross-doc match rows at sf0.01) while 5-grams collide
-  // essentially only inside genuinely duplicated text (1.2k rows, the
-  // IDENTICAL 24 spans ≥ 15 — measured both ways); real corpora have the
-  // same property at lower k. minSpan 15 ≥ 2k−1 so a reported span always
-  // contains at least two overlapping grams of genuine run.
-  private[operators] val SpanK = 5
-  private[operators] val SpanMaxOcc = 200
-  private[operators] val SpanMin = 15
-
-  /** Memoized full-corpus maximal-span relation per (session, dir) — the
-    * [[Dedup.spanPairs]] output at the shared (SpanK, SpanMin, SpanMaxOcc)
-    * config, shared by q125 (report) and q126 (scrub) (r21): both queries
-    * previously re-ran the whole positional-gram machinery (the corpus
-    * explode + BottomKRows gram groupBy + islands window) per evaluation.
-    * The span relation is spans-per-corpus sized (tiny next to the gram
-    * stream), so the checkpoint materializes the small output of the one
-    * expensive stage — the chunkIndexCached economics. q157's span stage
-    * keeps its own build (different input: the gated survivor set). */
-  private val spanPairsMemo = SessionMemo[DataFrame]("spanPairs")
-  private def spanPairsCached(spark: SparkSession, dir: String): DataFrame =
-    spanPairsMemo(spark, dir) {
-      graft.PlanDump.cut(
-        Dedup.spanPairs(Tables.documents(spark, dir), "doc_id", "text",
-          k = SpanK, minSpan = SpanMin, maxOcc = SpanMaxOcc),
-        "spanPairs")
-    }
-
-  /** Exact duplicated-substring spans (Lee et al. 2021) — see
-    * [[Dedup.spanPairs]]. The corpus plants real shared prefixes (93-token
-    * spans measured at sf0.01), so the report is non-trivially non-empty;
-    * (id_a, id_b, start_a, start_b) is unique per maximal span, so the
-    * order-by is total and the LIMIT deterministic. */
-  val q125SpanPairs: QuerySpec = QuerySpec.oracle(
-    "q125_span_pairs",
-    "WITH " + spanCtes(SpanK, SpanMaxOcc, SpanMin) +
-      "\nSELECT id_a, id_b, start_a, start_b, span_toks FROM spans " +
-      "ORDER BY span_toks DESC, id_a, id_b, start_a, start_b LIMIT 100"
-  ) { (spark, dir) =>
-    spanPairsCached(spark, dir)
-      .orderBy(col("span_toks").desc, col("id_a"), col("id_b"),
-        col("start_a"), col("start_b"))
-      .limit(100)
-  }
-
-  /** Span-dedup APPLY — duplicated token ranges cut from the higher-id
-    * copy, per-doc interval union, cleaned text fingerprinted (md5 keeps
-    * the compared rows narrow; the full text round-trips through the
-    * identical concat both sides). See [[Dedup.spanScrub]]. */
-  val q126SpanScrub: QuerySpec = QuerySpec.oracle(
-    "q126_span_scrub",
-    "WITH " + spanCtes(SpanK, SpanMaxOcc, SpanMin) +
-      s""",
-         |iv AS (SELECT id_b AS doc, start_b AS s, start_b + span_toks - 1 AS e FROM spans),
-         |mx AS (SELECT doc, s, e, max(e) OVER (PARTITION BY doc ORDER BY s, e
-         |  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pe FROM iv),
-         |isl2 AS (SELECT doc, s, e, sum(CASE WHEN pe IS NULL OR s > pe + 1 THEN 1 ELSE 0 END)
-         |  OVER (PARTITION BY doc ORDER BY s, e ROWS UNBOUNDED PRECEDING) AS grp FROM mx),
-         |mrg AS (SELECT doc, min(s) AS s, max(e) AS e FROM isl2 GROUP BY doc, grp),
-         |ivl AS (SELECT doc, list(struct_pack(s := s, e := e) ORDER BY s, e) AS ivs,
-         |  sum(e - s + 1) AS n_removed FROM mrg GROUP BY doc)
-         |SELECT d.doc_id, len(ts) AS n_toks,
-         |  CAST(coalesce(n_removed, 0) AS BIGINT) AS n_removed,
-         |  md5(coalesce(array_to_string(CASE WHEN ivs IS NULL THEN ts
-         |    ELSE list_transform(list_filter(generate_series(1, len(ts)),
-         |      p -> len(list_filter(ivs, iv -> p >= iv.s AND p <= iv.e)) = 0),
-         |      p -> ts[p]) END, ' '), '')) AS clean_md5
-         |FROM (SELECT doc_id, ts FROM toks) d LEFT JOIN ivl ON ivl.doc = d.doc_id
-         |ORDER BY doc_id""".stripMargin
-  ) { (spark, dir) =>
-    Dedup.spanScrubFrom(Tables.documents(spark, dir), "doc_id", "text",
-        spanPairsCached(spark, dir))
-      .select(col("doc_id"), col("n_toks"), col("n_removed"),
-        md5(col("clean_text")).as("clean_md5"))
-      .orderBy("doc_id")
-  }
-
-  /** Per-source token-distribution divergence from the corpus-wide
-    * distribution — the composition-drift audit run before mixture fixing
-    * (a source whose unigram distribution walked away from the corpus is
-    * the first sign of a crawler change or contamination). Distance is
-    * total variation, ½ Σ_t |P_src(t) − P_corpus(t)|, chosen over KL
-    * because every step stays in EXACT integer arithmetic: the numerator
-    * is Σ|c_s·T_c − c_c·T_s| plus the absent-token mass T_s·(T_c − Σ_present
-    * c_c), all decimal sums of integer products (order-independent,
-    * hash-matchable; KL's log is libm-dependent). One division at the end.
-    *
-    * Shape at scale: the (source, token) counts aggregate once, regroup by
-    * token carrying the per-source list (fan-out bounded by |sources| —
-    * q116's discipline), and the per-source totals ride in as a broadcast
-    * 1-row-per-source table computed WITHOUT the token explode (sum of
-    * per-doc token counts — a plain column scan). The vocabulary shuffles
-    * once and never collects anywhere. */
-  val q129SourceDivergence: QuerySpec = QuerySpec.oracle(
-    "q129_source_divergence",
-    s"""WITH toks AS (SELECT source, $LowToksSql AS ts FROM documents),
-       |tot AS (SELECT source, CAST(sum(len(ts)) AS BIGINT) AS t_s FROM toks GROUP BY 1),
-       |g AS (SELECT CAST(sum(t_s) AS BIGINT) AS t_c FROM tot),
-       |st AS (SELECT source, unnest(ts) AS t FROM toks),
-       |sc AS (SELECT source, t, count(*) AS c_s FROM st GROUP BY 1, 2),
-       |ct AS (SELECT t, CAST(sum(c_s) AS BIGINT) AS c_c FROM sc GROUP BY 1),
-       |e AS (SELECT sc.source, sc.c_s, ct.c_c FROM sc JOIN ct USING (t)),
-       |agg AS (SELECT e.source,
-       |    sum(abs(CAST(e.c_s AS DECIMAL(38,0)) * g.t_c
-       |          - CAST(e.c_c AS DECIMAL(38,0)) * tot.t_s)) AS sum_abs,
-       |    CAST(sum(e.c_c) AS DECIMAL(38,0)) AS present_cc,
-       |    any_value(tot.t_s) AS t_s, any_value(g.t_c) AS t_c
-       |  FROM e JOIN tot ON tot.source = e.source CROSS JOIN g
-       |  GROUP BY e.source)
-       |SELECT source, t_s AS n_tokens,
-       |  0.5 * CAST(sum_abs + CAST(t_s AS DECIMAL(38,0)) * (t_c - present_cc) AS DOUBLE)
-       |      / CAST(CAST(t_s AS DECIMAL(38,0)) * t_c AS DOUBLE) AS tv_distance
-       |FROM agg ORDER BY source""".stripMargin
-  ) { (spark, dir) =>
-    val dec = (c: Column) => c.cast("decimal(38,0)")
-    val docs = Tables.documents(spark, dir)
-    // totals WITHOUT the token explode: one narrow column scan
-    val tot = docs.groupBy("source")
-      .agg(sum(size(lowToksCol)).cast("long").as("t_s"))
-    val g = tot.agg(sum(col("t_s")).cast("long").as("t_c"))
-    val sc = docs.select(col("source"), explode(lowToksCol).as("t"))
-      .groupBy("source", "t").agg(count(lit(1)).as("c_s"))
-    val e = sc.groupBy("t")
-      .agg(sum(col("c_s")).cast("long").as("c_c"),
-        collect_list(struct(col("source"), col("c_s"))).as("ss"))
-      .select(col("c_c"), explode(col("ss")).as("x"))
-      .select(col("x.source").as("source"), col("x.c_s").as("c_s"), col("c_c"))
-    e.join(broadcast(tot), "source").crossJoin(broadcast(g))
-      .groupBy("source")
-      .agg(sum(abs(dec(col("c_s")) * col("t_c") - dec(col("c_c")) * col("t_s"))).as("sum_abs"),
-        dec(sum(col("c_c"))).as("present_cc"),
-        first(col("t_s")).as("t_s"), first(col("t_c")).as("t_c"))
-      .select(col("source"), col("t_s").as("n_tokens"),
-        (lit(0.5) * (col("sum_abs") + dec(col("t_s")) * (col("t_c") - col("present_cc")))
-          .cast("double")
-          / (dec(col("t_s")) * col("t_c")).cast("double")).as("tv_distance"))
-      .orderBy("source")
-  }
-
-  /** Weights that FRONT-LOAD the fixture embeddings for q135: the synthetic
-    * vectors are isotropic (information rotationally uniform — prefix
-    * truncation of the RAW dims measured recall 0.07 at 8 of 64, a fixture
-    * artifact, not an MRL property), so the report derives a
-    * matryoshka-structured variant deterministically: dim i scaled by
-    * 0.85^i, the exponential energy decay an MRL-trained embedding
-    * exhibits. Computed ONCE here and embedded as the SAME literal array
-    * in both engines (q149's shared-literal discipline), with each product
-    * rounded to float32 in both — bit-identical derivation, so the report
-    * stays fully oracle-checked. */
-  private val MrlWeights: Seq[Double] = (1 to 64).map(i => math.pow(0.85, i))
-
-  /** Matryoshka-truncation retrieval quality: top-5-by-cosine recall when
-    * the embedding is cut to its prefix dims (8/16/32 of 64) vs the
-    * full-width baseline — the measurement behind the "store a prefix,
-    * search cheaper" MRL deployment decision, and the exact-arithmetic
-    * counterpart of q78's seeded-index recall rows (every cosine here is
-    * the fused expression both engines compute bit-identically, so this
-    * report is fully oracle-checked, incl. the dims=64 ≡ 1.0 sanity row).
-    * Runs over the [[MrlWeights]]-derived front-loaded embedding so the
-    * recall gradient demonstrates the capability on a fixture whose raw
-    * dims carry no front-loaded structure.
-    *
-    * One pass computes ALL four similarities per (query, corpus) pair and
-    * ranks them with per-query windows, so truth membership and each
-    * truncation's membership live on the SAME row — recall is then one
-    * conditional count over the truth rows, no per-config join, and the
-    * pair table is built once. |Q| is the q40/q78 1-in-25 slice (cap at
-    * scale per q78's argument); windows partition on query_id. */
-  val q135MatryoshkaRecall: QuerySpec = QuerySpec.oracle(
-    "q135_matryoshka_recall", {
-      def cosK(k: Int) =
-        if (k == 64) VectorFns.Sql.cosine("q.embedding", "c.embedding")
-        else VectorFns.Sql.cosine(s"q.embedding[1:$k]", s"c.embedding[1:$k]")
-      val wSql = MrlWeights.mkString("[", ", ", "]")
-      s"""WITH em AS MATERIALIZED (
-         |  SELECT vec_id, list_transform(generate_series(1, 64),
-         |    i -> CAST(embedding[i] * ($wSql)[i] AS REAL)) AS embedding
-         |  FROM embeddings),
-         |qs AS (SELECT vec_id, embedding FROM em WHERE vec_id % 25 = 0),
-         |s AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |    ${cosK(64)} AS s64, ${cosK(32)} AS s32,
-         |    ${cosK(16)} AS s16, ${cosK(8)} AS s8
-         |  FROM qs q JOIN em c ON c.vec_id <> q.vec_id),
-         |r AS (SELECT query_id,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY s64 DESC, neighbor_id) AS r64,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY s32 DESC, neighbor_id) AS r32,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY s16 DESC, neighbor_id) AS r16,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY s8 DESC, neighbor_id) AS r8
-         |  FROM s),
-         |cnt AS (SELECT count(*) AS n_truth,
-         |    count(*) FILTER (WHERE r8 <= 5) AS n8,
-         |    count(*) FILTER (WHERE r16 <= 5) AS n16,
-         |    count(*) FILTER (WHERE r32 <= 5) AS n32
-         |  FROM r WHERE r64 <= 5)
-         |SELECT dims, recall FROM (
-         |  SELECT CAST(8 AS BIGINT) AS dims, CAST(n8 AS DOUBLE) / n_truth AS recall FROM cnt
-         |  UNION ALL SELECT 16, CAST(n16 AS DOUBLE) / n_truth FROM cnt
-         |  UNION ALL SELECT 32, CAST(n32 AS DOUBLE) / n_truth FROM cnt
-         |  UNION ALL SELECT 64, CAST(n_truth AS DOUBLE) / n_truth FROM cnt)
-         |ORDER BY dims""".stripMargin
-    }
-  ) { (spark, dir) =>
-    import graft.functions.CosineSimilarityExpr.cosine
-    // the same front-loading derivation as the oracle's em CTE: one shared
-    // weight literal, per-element float32 rounding in both engines
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"),
-        zip_with(col("embedding"), typedlit(MrlWeights), (a, b) => a * b)
-          .cast("array<float>").as("embedding"))
-    val qs = emb.filter(col("vec_id") % 25 === 0)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-    def cosK(k: Int) =
-      if (k == 64) cosine(col("qe"), col("ce"))
-      else cosine(slice(col("qe"), 1, k), slice(col("ce"), 1, k))
-    def rk(c: String) = row_number().over(
-      Window.partitionBy("query_id").orderBy(col(c).desc, col("neighbor_id")))
-    val cnt = emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"))
-      .crossJoin(broadcast(qs))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosK(64).as("s64"), cosK(32).as("s32"), cosK(16).as("s16"), cosK(8).as("s8"))
-      .select(col("query_id"),
-        rk("s64").as("r64"), rk("s32").as("r32"), rk("s16").as("r16"), rk("s8").as("r8"))
-      .filter(col("r64") <= 5)
-      .agg(count(lit(1)).as("n_truth"),
-        count(when(col("r8") <= 5, 1)).as("n8"),
-        count(when(col("r16") <= 5, 1)).as("n16"),
-        count(when(col("r32") <= 5, 1)).as("n32"))
-    cnt.select(explode(array(
-        struct(lit(8L).as("dims"), (col("n8").cast("double") / col("n_truth")).as("recall")),
-        struct(lit(16L).as("dims"), (col("n16").cast("double") / col("n_truth")).as("recall")),
-        struct(lit(32L).as("dims"), (col("n32").cast("double") / col("n_truth")).as("recall")),
-        struct(lit(64L).as("dims"), (col("n_truth").cast("double") / col("n_truth")).as("recall"))))
-        .as("r"))
-      .select(col("r.dims").as("dims"), col("r.recall").as("recall"))
-      .orderBy("dims")
-  }
-
-  /** N-GRAM decontamination at the published standard (GPT-3 appendix C /
-    * The Pile: 13-gram overlap) — the sub-document sibling of the
-    * exact-text decon band (q38/q51/q75): a training document is
-    * contaminated if ANY of its 13 consecutive tokens appear verbatim in
-    * the held-out eval slice, catching the quotes/paraphrase-with-copied-
-    * span leakage exact-text matching misses entirely. Output is the
-    * per-document audit (every train doc: gram positions, distinct
-    * contaminated grams, verdict) ordered by doc_id.
-    *
-    * Shape at scale: the eval gram dictionary is DISTINCT and BROADCAST
-    * (eval ≪ train — the production direction, same argument as the
-    * q51/q75 bloom), so the corpus pays one scan + an in-map semi-join;
-    * the only corpus-keyed shuffle is the per-doc hit aggregate on
-    * doc_id. Gram equality is exact string equality — hash-exact in
-    * DuckDB, no float anywhere. */
-  val q163NgramDecontaminate: QuerySpec = {
-    val k = 13
-    val gramCols = (0 until k).map(j => s"ts[i+$j]").mkString(", ")
-    QuerySpec.oracle(
-      "q163_ngram_decontaminate",
-      s"""WITH toks AS (SELECT doc_id, source, $LowToksSql AS ts FROM documents),
-         |ev AS (SELECT DISTINCT unnest(list_transform(generate_series(1, len(ts)-${k - 1}),
-         |         i -> concat_ws(' ', $gramCols))) AS g
-         |       FROM toks WHERE source = 'src0' AND len(ts) >= $k),
-         |tr AS (SELECT doc_id, greatest(len(ts) - ${k - 1}, 0) AS n_grams, ts
-         |       FROM toks WHERE source <> 'src0'),
-         |tg AS (SELECT doc_id,
-         |         unnest(list_distinct(list_transform(generate_series(1, len(ts)-${k - 1}),
-         |           i -> concat_ws(' ', $gramCols)))) AS g
-         |       FROM tr WHERE len(ts) >= $k),
-         |hit AS (SELECT doc_id, count(*) AS n_hit
-         |        FROM tg WHERE g IN (SELECT g FROM ev) GROUP BY doc_id)
-         |SELECT tr.doc_id, CAST(tr.n_grams AS BIGINT) AS n_grams,
-         |  CAST(coalesce(hit.n_hit, 0) AS BIGINT) AS n_contaminated,
-         |  coalesce(hit.n_hit, 0) > 0 AS contaminated
-         |FROM tr LEFT JOIN hit USING (doc_id)
-         |ORDER BY doc_id""".stripMargin
-    ) { (spark, dir) =>
-      val docs = Tables.documents(spark, dir)
-      val ev = docs.filter(col("source") === "src0")
-        .select(explode(Dedup.shingles(col("text"), k)).as("g"))
-        .distinct()
-      val tr = docs.filter(col("source") =!= "src0")
-        .select(col("doc_id"),
-          greatest(size(lowToksCol) - (k - 1), lit(0)).cast("long").as("n_grams"),
-          Dedup.shingles(col("text"), k).as("gs"))
-      val hits = tr.select(col("doc_id"), explode(col("gs")).as("g"))
-        .join(broadcast(ev), Seq("g"), "left_semi")
-        .groupBy("doc_id").agg(count(lit(1)).as("n_hit"))
-      tr.select("doc_id", "n_grams")
-        .join(hits, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("n_grams"),
-          coalesce(col("n_hit"), lit(0L)).as("n_contaminated"),
-          (coalesce(col("n_hit"), lit(0L)) > 0).as("contaminated"))
-        .orderBy("doc_id")
-    }
-  }
-
-  /** KMV (k-minimum-values) distinct sketch — the MERGEABLE cardinality
-    * estimator, hash-EXACT cross-engine where approx_count_distinct (q14,
-    * HLL++) can only be band-checked: hash every distinct token to a
-    * uniform 60-bit integer (the md5-prefix trick, q138's discipline),
-    * keep each source's k=64 smallest hash values, and estimate
-    * |distinct| = (k−1)·2⁶⁰ div h₍ₖ₎ (Bar-Yossef et al. 2002) — all
-    * integer arithmetic, so the ESTIMATE ITSELF (not just its error band)
-    * is oracle-verified. The sketched universe is the distinct token
-    * TRIGRAMS per source (~1.3k/source, 16k corpus-wide at sf0.01 — the
-    * unigram vocabulary is 31 words, which would never leave the exact
-    * branch). The '(all)' row demonstrates the property that
-    * makes sketches the 100 TB answer: the global sketch is the k-min of
-    * the UNION of per-source sketches — per-partition state is k values,
-    * merge is a bounded-heap fold, one corpus shuffle on the distinct
-    * (source, hash) key. Exact counts ride along for the error column the
-    * report exists to show. Spark state is [[graft.functions.BottomKRows]]
-    * (bounded heap, map-side combined) — never a per-source sort. */
-  val q161KmvSketch: QuerySpec = QuerySpec.oracle(
-    "q161_kmv_sketch",
-    s"""WITH toks AS (SELECT source, $LowToksSql AS ts FROM documents),
-       |g AS (SELECT source, unnest($ShinglesSql) AS t FROM toks),
-       |d AS (SELECT DISTINCT source, ('0x' || substring(md5(t), 1, 15))::BIGINT AS h
-       |      FROM g),
-       |r AS (SELECT source, h, row_number() OVER (PARTITION BY source ORDER BY h) AS rn
-       |      FROM d),
-       |s AS (SELECT source AS scope, count(*) AS n_exact,
-       |        max(h) FILTER (WHERE rn <= 64) AS kth
-       |      FROM r GROUP BY source),
-       |da AS (SELECT DISTINCT h FROM d),
-       |ra AS (SELECT h, row_number() OVER (ORDER BY h) AS rn FROM da),
-       |sa AS (SELECT '(all)' AS scope, count(*) AS n_exact,
-       |        max(h) FILTER (WHERE rn <= 64) AS kth
-       |      FROM ra),
-       |u AS (SELECT * FROM s UNION ALL SELECT * FROM sa)
-       |SELECT scope, CAST(n_exact AS BIGINT) AS n_exact,
-       |  CASE WHEN n_exact <= 64 THEN CAST(n_exact AS BIGINT)
-       |       ELSE CAST(63::HUGEINT * 1152921504606846976 // kth AS BIGINT) END AS est_distinct,
-       |  CAST(kth AS BIGINT) AS kth_hash
-       |FROM u ORDER BY scope""".stripMargin
-  ) { (spark, dir) =>
-    import graft.functions.BottomKRows
-    val k = 64
-    val m = 1152921504606846976L // 2^60, the hash space of a 15-hex md5 prefix
-    val d = Tables.documents(spark, dir)
-      .select(col("source"), explode(Dedup.shingles(col("text"), 3)).as("t"))
-      .select(col("source"),
-        conv(substring(md5(col("t")), 1, 15), 16, 10).cast("long").as("h"))
-      .distinct()
-    // per-source sketch: bounded-heap bottom-64 by the zero-padded hex key
-    // (binary order == numeric order for non-negative h) + the exact count
-    val perSource = d.groupBy("source")
-      .agg(count(lit(1)).as("n_exact"),
-        BottomKRows.bottomK(lpad(hex(col("h")), 16, "0"), struct(col("h")), k).as("mins"))
-    // the '(all)' sketch MERGES the per-source sketches (k-min of the
-    // union); its exact count needs one more distinct (h is source-free)
-    val allExact = d.select("h").distinct().agg(count(lit(1)).as("n_exact"))
-    val merged = perSource
-      .select(explode(col("mins")).as("mi"))
-      .select(col("mi.h").as("h")).distinct()
-      .agg(BottomKRows.bottomK(lpad(hex(col("h")), 16, "0"), struct(col("h")), k).as("mins"))
-      .crossJoin(broadcast(allExact))
-      .select(lit("(all)").as("scope"), col("n_exact"), col("mins"))
-    // (k-1)*2^60 exceeds int64, so the product runs in decimal INTERNALLY
-    // and only the (corpus-sized, small) quotient is emitted as BIGINT
-    val est = (n: Column) =>
-      when(n <= k, n).otherwise(
-        expr(s"CAST(${k - 1} AS DECIMAL(38,0)) * $m div kth").cast("long"))
-    perSource.select(col("source").as("scope"), col("n_exact"), col("mins"))
-      .unionByName(merged)
-      .withColumn("kth", element_at(col("mins"), least(lit(k), size(col("mins"))))
-        .getField("h"))
-      .select(col("scope"), col("n_exact"),
-        est(col("n_exact")).as("est_distinct"),
-        col("kth").as("kth_hash"))
-      .orderBy("scope")
-  }
-
-  /** PPS systematic sample ([[Sampling.ppsSystematic]]): 200 documents
-    * drawn with probability proportional to n_chars — token-weighted
-    * corpus thinning that preserves the token distribution where a
-    * uniform row sample would skew short. Integer arithmetic end to end
-    * (exclusive prefix sum + two integral divisions per row), so the
-    * selected id set — not just its size — is deterministic and DuckDB
-    * verifies it exactly; rows heavier than the step carry n_hits > 1
-    * so downstream weighting stays unbiased. */
-  val q143PpsSample: QuerySpec = QuerySpec.oracle(
-    "q143_pps_sample",
-    """WITH t AS (SELECT doc_id, lang, n_chars AS w FROM documents),
-      |c AS (SELECT doc_id, lang, w,
-      |  CAST(coalesce(sum(w) OVER (ORDER BY doc_id
-      |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum_before
-      |  FROM t),
-      |s AS (SELECT CAST(sum(w) AS BIGINT) AS total FROM t)
-      |SELECT doc_id, lang, w, cum_before,
-      |  ((cum_before + w) // greatest(total // 200, 1))
-      |    - (cum_before // greatest(total // 200, 1)) AS n_hits
-      |FROM c CROSS JOIN s
-      |WHERE ((cum_before + w) // greatest(total // 200, 1))
-      |    - (cum_before // greatest(total // 200, 1)) >= 1
-      |ORDER BY doc_id""".stripMargin
-  ) { (spark, dir) =>
-    Sampling.ppsSystematic(
-        Tables.documents(spark, dir)
-          .select(col("doc_id"), col("lang"), col("n_chars").as("w")),
-        "doc_id", "w", targetN = 200L)
-      .select("doc_id", "lang", "w", "cum_before", "n_hits")
-      .orderBy("doc_id")
-  }
-
-  /** MMR-diversified retrieval ([[Similarity.mmrRerank]]): every 25th
-    * vector queries the corpus, exact top-20 shortlist, greedy λ=0.7
-    * re-rank to 5 — rows-only (float greedy; no SQL mirror), with
-    * SimilaritySpec holding a plain-Scala reference implementation to
-    * the same results and pinning the diversity claim on a planted
-    * near-duplicate cluster. */
-  val q147MmrRerank: QuerySpec = QuerySpec.rowsOnly(
-    "q147_mmr_rerank"
-  ) { (spark, dir) =>
-    val emb = Tables.embeddings(spark, dir)
-    Similarity.mmrRerank(
-        emb.filter(col("vec_id") % 25 === 0), emb,
-        shortlist = 20, k = 5, lambdaPct = 70)
-      .orderBy("query_id", "rank")
-  }
-
-  /** The MMR relevance-vs-diversity λ sweep ([[Similarity.mmrLambdaSweep]])
-    * — q147's quality claim made driver-visible every round, the q78
-    * declared-report discipline: six grid points from pure-diversity
-    * (λ=0) to pure-relevance (λ=100), each reporting mean pick relevance
-    * and mean pairwise redundancy over the same query set. Rows-only
-    * (float greedy, no SQL mirror); SimilaritySpec pins the monotone
-    * tradeoff — relevance non-decreasing in λ, λ=100 redundancy ≥ λ=0's. */
-  val q160MmrLambdaSweep: QuerySpec = QuerySpec.rowsOnly(
-    "q160_mmr_lambda_sweep"
-  ) { (spark, dir) =>
-    val emb = Tables.embeddings(spark, dir)
-    Similarity.mmrLambdaSweep(
-      emb.filter(col("vec_id") % 25 === 0), emb,
-      shortlist = 20, k = 5, lambdaGrid = Seq(0, 25, 50, 70, 85, 100))
-  }
-
-  /** log2-discount weights for NDCG@5, their cumulative sums (the ideal
-    * DCG for n relevant), and 1/rank for MRR — computed ONCE in Scala and
-    * embedded as literals in BOTH the Spark plan and the DuckDB oracle
-    * (Double.toString round-trips exactly), so every float in q149 is
-    * either a shared literal or a fixed-order expression over them:
-    * that is what makes ranking-quality metrics hash-verifiable. */
-  private val NdcgW: Seq[Double] = (1 to 5).map(i => 1.0 / (math.log(i + 1.0) / math.log(2.0)))
-  private val NdcgCum: Seq[Double] = NdcgW.scanLeft(0.0)(_ + _).tail
-  private val InvRank: Seq[Double] = (1 to 5).map(i => 1.0 / i)
-
-  /** Retrieval-quality evaluation (per-query MRR / NDCG@5 / P@5): every
-    * 25th vector queries the held-out corpus, top-5 exact cosine
-    * neighbors, a neighbor is relevant iff it shares the query's label —
-    * the eval harness every retrieval/embedding pipeline runs before
-    * swapping an index or an embedding model. Metrics are emitted PER
-    * QUERY (the corpus-mean is one trivial aggregation away) so every
-    * float operation has a fixed evaluation order — see [[NdcgW]] — and
-    * the DuckDB oracle matches bit-for-bit, ranks, discounts and all.
-    * Shape: q40's broadcast-query top-k (the corpus never shuffles) + a
-    * rank pivot that is one map-side-combined aggregate. */
-  val q149RetrievalEval: QuerySpec = QuerySpec.oracle(
-    "q149_retrieval_eval", {
-      val rels = (1 to 5).map(i => s"max(CASE WHEN rk = $i THEN rel END) AS rel$i").mkString(",\n      |        ")
-      val nRel = (1 to 5).map(i => s"rel$i").mkString(" + ")
-      // '<v>'::DOUBLE, never a bare decimal literal: DuckDB parses bare
-      // decimals as DECIMAL(17,16) and the decimal→double cast loses the
-      // last bit on 7 of the 31 rel patterns (1-ulp ndcg drift, seen at
-      // sf0.1); the string→double parse is correctly rounded, so the
-      // shared Scala constants land bit-identical in both engines
-      def dl(v: Double): String = s"'$v'::DOUBLE"
-      val dcg = (1 to 5).map(i => s"rel$i * ${dl(NdcgW(i - 1))}").mkString(" + ")
-      val mrr = (1 to 5).map(i => s"WHEN rel$i = 1 THEN ${dl(InvRank(i - 1))}").mkString(" ")
-      val idcg = (1 to 5).map(i => s"WHEN $i THEN ${dl(NdcgCum(i - 1))}").mkString(" ")
-      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qe, label AS qlabel
-         |           FROM embeddings WHERE vec_id % 25 = 0),
-         |c AS (SELECT vec_id AS neighbor_id, embedding AS ce, label AS clabel
-         |      FROM embeddings WHERE vec_id % 25 <> 0),
-         |s AS (SELECT query_id, qlabel, neighbor_id,
-         |        CASE WHEN clabel = qlabel THEN 1 ELSE 0 END AS rel,
-         |        ${VectorFns.Sql.cosine("qe", "ce")} AS sim
-         |      FROM q, c),
-         |r AS (SELECT query_id, qlabel, rel,
-         |        row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rk
-         |      FROM s),
-         |p AS (SELECT query_id, qlabel,
-         |        $rels
-         |      FROM r WHERE rk <= 5 GROUP BY 1, 2)
-         |SELECT query_id, qlabel AS label,
-         |  CAST($nRel AS BIGINT) AS n_rel,
-         |  CAST($nRel AS DOUBLE) / 5 AS p_at_5,
-         |  CASE $mrr ELSE 0.0 END AS mrr,
-         |  CASE WHEN $nRel = 0 THEN 0.0
-         |       ELSE ($dcg) / (CASE ($nRel) $idcg END) END AS ndcg
-         |FROM p ORDER BY query_id""".stripMargin
-    }
-  ) { (spark, dir) =>
-    val emb = Tables.embeddings(spark, dir)
-    val queries = emb.filter(col("vec_id") % 25 === 0)
-    val corpus = emb.filter(col("vec_id") % 25 =!= 0)
-    val top = Similarity.bruteForceTopK(queries, corpus, 5)
-      .join(broadcast(queries.select(col("vec_id").as("query_id"), col("label").as("qlabel"))),
-        "query_id")
-      .join(corpus.select(col("vec_id").as("neighbor_id"), col("label").as("clabel")),
-        "neighbor_id")
-      .withColumn("rel", when(col("clabel") === col("qlabel"), 1).otherwise(0))
-    val pivoted = top.groupBy("query_id", "qlabel")
-      .agg(
-        max(when(col("rank") === 1, col("rel"))).as("rel1"),
-        (2 to 5).map(i => max(when(col("rank") === i, col("rel"))).as(s"rel$i")): _*)
-    val nRel = (1 to 5).map(i => col(s"rel$i")).reduce(_ + _)
-    val dcg = (1 to 5).map(i => col(s"rel$i") * lit(NdcgW(i - 1))).reduce(_ + _)
-    val mrrOrdered = when(col("rel1") === 1, InvRank(0))
-      .when(col("rel2") === 1, InvRank(1))
-      .when(col("rel3") === 1, InvRank(2))
-      .when(col("rel4") === 1, InvRank(3))
-      .when(col("rel5") === 1, InvRank(4))
-      .otherwise(0.0)
-    val idcgCase = (1 to 5).foldLeft(null: Column) { (acc, i) =>
-      if (acc == null) when(nRel === i, NdcgCum(i - 1))
-      else acc.when(nRel === i, NdcgCum(i - 1))
-    }
-    pivoted.select(col("query_id"), col("qlabel").as("label"),
-        nRel.cast("long").as("n_rel"),
-        (nRel.cast("double") / lit(5)).as("p_at_5"),
-        mrrOrdered.as("mrr"),
-        when(nRel === 0, 0.0).otherwise(dcg / idcgCase).as("ndcg"))
-      .orderBy("query_id")
-  }
-
-  /** Count-Min sketch frequency audit — the MERGEABLE frequency estimator
-    * (Cormode & Muthukrishnan 2005) completing the sketch family next to
-    * q161's KMV cardinality and q51's Bloom membership, and like them
-    * hash-EXACT cross-engine: d=4 seeded md5-prefix hash rows (the
-    * q138/q161 hex→int discipline) at three widths w ∈ {64, 512, 4096},
-    * so every cell count, every estimate min_j cms[j][h_j(x)], and every
-    * overestimate is an exact integer and the report is the CMS SIZING
-    * CURVE — the ε=e/w error bound collapsing as the sketch widens
-    * (measured at sf0.01: mean overestimate 315 → 14 → 0 on the top-20
-    * keys), q164's recall-S-curve discipline applied to frequency
-    * sketching. The stream is the token BIGRAMS (the ~1k-key universe
-    * where the fixture actually exercises collisions; unigrams' 31-word
-    * vocabulary saturates every width), audited against the exact top-20.
-    * CMS's one-sided guarantee (est ≥ exact, always) is a
-    * PipelineQueriesSpec invariant. Shape at 100 TB: each sketch build is
-    * ONE map-side-combined aggregate on the (w, row, bucket) key whose
-    * global state is Σ d·w cells regardless of corpus size —
-    * per-partition sketches merge by cell-wise addition, exactly how a
-    * 1000-executor cluster folds partial sketches — and the probe side
-    * joins 20·d·|w| key-cells against the broadcast sketch. The exact
-    * top-20 ground truth rides the same bigram-keyed aggregate as q57's
-    * LM counts (slice+arrays_zip, never a per-token HOF). */
-  val q173CmsSketch: QuerySpec = {
-    val (d, widths, topN) = (4, Seq(64, 512, 4096), 20)
-    def bSql(t: String, j: Int, w: Int): String =
-      s"('0x' || substring(md5('$j:' || $t), 1, 15))::BIGINT % $w"
-    val cellRows = (for { w <- widths; j <- 0 until d }
-      yield s"SELECT $w AS w, $j AS j, ${bSql("t", j, w)} AS bucket FROM occ")
-      .mkString("\n       |  UNION ALL ")
-    val keyRows = (for { w <- widths; j <- 0 until d }
-      yield s"SELECT t, n_exact, $w AS w, $j AS j, ${bSql("t", j, w)} AS bucket FROM top")
-      .mkString("\n       |  UNION ALL ")
-    QuerySpec.oracle(
-      "q173_cms_sketch",
-      s"""WITH toks AS (SELECT doc_id, $LowToksSql AS ts FROM documents),
-         |occ AS (SELECT unnest(CASE WHEN len(ts) >= 2
-         |    THEN list_transform(generate_series(1, len(ts) - 1),
-         |      i -> concat_ws(' ', ts[i], ts[i+1]))
-         |    ELSE [] END) AS t FROM toks),
-         |cells AS ($cellRows),
-         |sk AS (SELECT w, j, bucket, count(*) AS c FROM cells GROUP BY 1, 2, 3),
-         |ex AS (SELECT t, count(*) AS n_exact FROM occ GROUP BY t),
-         |top AS (SELECT t, n_exact FROM ex ORDER BY n_exact DESC, t LIMIT $topN),
-         |kb AS ($keyRows),
-         |est AS (SELECT w, t, any_value(n_exact) AS n_exact, min(c) AS est
-         |  FROM kb JOIN sk USING (w, j, bucket) GROUP BY w, t)
-         |SELECT CAST(w AS BIGINT) AS width, t AS bigram,
-         |  CAST(n_exact AS BIGINT) AS n_exact,
-         |  CAST(est AS BIGINT) AS est_cms,
-         |  CAST(est - n_exact AS BIGINT) AS overestimate
-         |FROM est ORDER BY width, n_exact DESC, bigram""".stripMargin
-    ) { (spark, dir) =>
-      def bucket(j: Int, w: Int, t: Column): Column =
-        pmod(conv(substring(md5(concat(lit(s"$j:"), t)), 1, 15), 16, 10).cast("long"),
-          lit(w.toLong))
-      def cellsOf(t: Column): Column =
-        explode(array((for { w <- widths; j <- 0 until d } yield
-          struct(lit(w.toLong).as("w"), lit(j).as("j"), bucket(j, w, t).as("bucket"))): _*))
-      // bigram stream via slice+arrays_zip — q57's native-codegen idiom
-      val n1 = greatest(size(col("ts")) - 1, lit(0))
-      val occ = Tables.documents(spark, dir)
-        .select(lowToksCol.as("ts"))
-        .select(explode(arrays_zip(
-          slice(col("ts"), lit(1), n1).as("a"),
-          slice(col("ts"), lit(2), n1).as("b"))).as("z"))
-        .select(concat_ws(" ", col("z.a"), col("z.b")).as("t"))
-      // hash the KEY DICTIONARY, not the stream (r21, guide §2.3
-      // aggregate-before-you-hash): the bucket is a function of the
-      // bigram alone, so the ~500k-occurrence stream aggregates to its
-      // ~1k-bigram dictionary FIRST (one map-side-combined aggregate —
-      // the same relation the exact side already needed) and the d md5s
-      // run once per DISTINCT bigram instead of once per occurrence
-      // (4k hashes vs 2M; cell counts are the identical Σ cnt(t) per
-      // bucket). The two-stage explode (hash rows, then widths) stays:
-      // the single-stage form recomputed the width-independent md5 per
-      // width. Cut behind one lazy checkpoint: the sketch build AND the
-      // exact top-N read it.
-      val keyCnt = occ.groupBy("t").agg(count(lit(1)).as("cnt"))
-        .localCheckpoint(eager = false)
-      val hashOf = (j: Int, t: Column) =>
-        conv(substring(md5(concat(lit(s"$j:"), t)), 1, 15), 16, 10).cast("long")
-      val sketch = keyCnt.select(col("cnt"), explode(array((0 until d).map(j =>
-          struct(lit(j).as("j"), hashOf(j, col("t")).as("h"))): _*)).as("jh"))
-        .select(col("cnt"), col("jh.j").as("j"), col("jh.h").as("h"))
-        .select(col("cnt"), col("j"), explode(array(widths.map(w =>
-          struct(lit(w.toLong).as("w"), pmod(col("h"), lit(w.toLong)).as("bucket"))): _*)).as("wb"))
-        .select(col("cnt"), col("wb.w").as("w"), col("j"), col("wb.bucket").as("bucket"))
-        .groupBy("w", "j", "bucket").agg(sum(col("cnt")).as("c"))
-      val top = keyCnt.select(col("t"), col("cnt").as("n_exact"))
-        .orderBy(col("n_exact").desc, col("t")).limit(topN)
-      top.select(col("t"), col("n_exact"), cellsOf(col("t")).as("cell"))
-        .select(col("t"), col("n_exact"), col("cell.w").as("w"), col("cell.j").as("j"),
-          col("cell.bucket").as("bucket"))
-        .join(sketch.hint("broadcast"), Seq("w", "j", "bucket"))
-        .groupBy("w", "t")
-        .agg(first(col("n_exact")).as("n_exact"), min(col("c")).as("est"))
-        .select(col("w").as("width"), col("t").as("bigram"), col("n_exact"),
-          col("est").as("est_cms"), (col("est") - col("n_exact")).as("overestimate"))
-        .orderBy(col("width"), col("n_exact").desc, col("bigram"))
-    }
-  }
-
-  /** BM25 top-k retrieval (Robertson-Spärck Jones, k1=1.2 b=0.75) — the
-    * lexical ranking function every RAG/retrieval pipeline runs next to
-    * the vector path (q40/q149), hash-verified end to end: the idf term
-    * uses q115's odds-ratio surrogate ((N−df+0.5)/(df+0.5), monotone in
-    * the textbook log-idf, every step exactly-rounded IEEE — the no-libm
-    * bar), the tf saturation (tf·(k1+1))/(tf + k1·(0.25 + 0.75·dl/avgdl))
-    * is a fixed-order expression over shared literals, and the per-doc
-    * score sums its ≤4 term scores in SORTED-TERM pivot order (q149's
-    * rank-pivot discipline) so float addition order is identical in both
-    * engines. Queries: every 50th document's 4 alphabetically-first
-    * distinct tokens. Shape at 100 TB: term-at-a-time — the broadcast
-    * query-term dictionary semi-prunes the corpus-sized (doc,token) tf
-    * relation on the token key, df joins token-keyed with NO broadcast
-    * hint (the vocabulary must never be forced resident, q27's rule),
-    * doc length joins doc-keyed, and the only windows partition on
-    * query_id. tf/df/dl are independent pushed-down scans of the same
-    * parquet (each a one-pass map-side-combined aggregate); nothing ever
-    * crosses a doc×query product. */
-  /** Memoized doc-level BM25 index per (session, dir): the prejoined
-    * posting list (doc_id, token, tf, df, dl) — one row per distinct
-    * (doc, token), exactly the multiset the per-evaluation
-    * tfc ⋈ dft ⋈ dl chain produced — plus the 1-row corpus stats
-    * (n_docs, sum_dl). The serving-side retrieval index q174 reads; the
-    * chunk-level twin is [[chunkIndexCached]]. */
-  private[operators] final case class Bm25Index(postings: DataFrame, stats: DataFrame)
-  private val bm25IndexMemo = SessionMemo[Bm25Index]("bm25Index")
-  private def bm25IndexCached(spark: SparkSession, dir: String): Bm25Index =
-    bm25IndexMemo(spark, dir) {
-      val toks = Tables.documents(spark, dir).select(col("doc_id"), lowToksCol.as("ts"))
-      val dl = toks.select(col("doc_id"), size(col("ts")).cast("long").as("dl"))
-      val st = dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-      val pair = toks.select(col("doc_id"), explode(col("ts")).as("token"))
-      val tfc = pair.groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-      val dft = pair.distinct().groupBy("token").agg(count(lit(1)).as("df"))
-      Bm25Index(
-        tfc.join(dft, "token").join(dl, "doc_id").localCheckpoint(eager = false),
-        st.localCheckpoint(eager = false))
-    }
-
-  val q174Bm25TopK: QuerySpec = {
-    val nQTerms = 4
-    val sSql =
-      """((CAST(n_docs AS DOUBLE) - CAST(df AS DOUBLE) + 0.5) / (CAST(df AS DOUBLE) + 0.5))
-        | * ((CAST(tf AS DOUBLE) * 2.2) / (CAST(tf AS DOUBLE)
-        |      + 1.2 * (0.25 + 0.75 * CAST(dl AS DOUBLE)
-        |               / (CAST(sum_dl AS DOUBLE) / CAST(n_docs AS DOUBLE)))))"""
-        .stripMargin.replace("\n", "")
-    val pivSql = (1 to nQTerms)
-      .map(i => s"max(CASE WHEN ti = $i THEN s END) AS s$i").mkString(",\n       |    ")
-    val totSql = (1 to nQTerms).map(i => s"coalesce(s$i, 0.0)").mkString(" + ")
-    QuerySpec.oracle(
-      "q174_bm25_topk",
-      s"""WITH toks AS (SELECT doc_id, $LowToksSql AS ts FROM documents),
-         |dl AS (SELECT doc_id, CAST(len(ts) AS BIGINT) AS dl FROM toks),
-         |st AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-         |         CAST(sum(dl) AS BIGINT) AS sum_dl FROM dl),
-         |pair AS (SELECT doc_id, unnest(ts) AS token FROM toks),
-         |tfc AS (SELECT doc_id, token, count(*) AS tf FROM pair GROUP BY 1, 2),
-         |dft AS (SELECT token, count(*) AS df
-         |  FROM (SELECT DISTINCT doc_id, token FROM pair) GROUP BY 1),
-         |qt AS (SELECT doc_id AS query_id,
-         |    unnest(list_sort(list_distinct(ts))[1:$nQTerms]) AS token
-         |  FROM toks WHERE doc_id % 50 = 0),
-         |qti AS (SELECT query_id, token,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY token) AS ti FROM qt),
-         |sc AS (SELECT q.query_id, t.doc_id, q.ti, $sSql AS s
-         |  FROM qti q
-         |  JOIN tfc t ON t.token = q.token
-         |  JOIN dft ON dft.token = q.token
-         |  JOIN dl ON dl.doc_id = t.doc_id
-         |  CROSS JOIN st),
-         |piv AS (SELECT query_id, doc_id,
-         |    $pivSql
-         |  FROM sc GROUP BY 1, 2),
-         |r AS (SELECT query_id, doc_id, $totSql AS score,
-         |    row_number() OVER (PARTITION BY query_id
-         |                       ORDER BY $totSql DESC, doc_id) AS rank
-         |  FROM piv)
-         |SELECT query_id, rank, doc_id, score
-         |FROM r WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-    ) { (spark, dir) =>
-      val toks = Tables.documents(spark, dir).select(col("doc_id"), lowToksCol.as("ts"))
-      // the memoized doc-level BM25 postings (tf ⋈ df ⋈ dl) + corpus stats
-      // — the retrieval index a deployed system materializes once per
-      // corpus version (the chunkIndexCached contract, r21): each
-      // evaluation previously re-ran the token explode + three aggregates
-      val Bm25Index(postings, st) = bm25IndexCached(spark, dir)
-      val qt = toks.filter(col("doc_id") % 50 === 0)
-        .select(col("doc_id").as("query_id"),
-          explode(slice(array_sort(array_distinct(col("ts"))), 1, nQTerms)).as("token"))
-        .withColumn("ti",
-          row_number().over(Window.partitionBy("query_id").orderBy("token")))
-      val idf = (col("n_docs").cast("double") - col("df").cast("double") + lit(0.5)) /
-        (col("df").cast("double") + lit(0.5))
-      val avgdl = col("sum_dl").cast("double") / col("n_docs").cast("double")
-      val tfn = (col("tf").cast("double") * lit(2.2)) /
-        (col("tf").cast("double") +
-          lit(1.2) * (lit(0.25) + lit(0.75) * col("dl").cast("double") / avgdl))
-      val sc = broadcast(qt).join(postings, "token")
-        .crossJoin(broadcast(st))
-        .select(col("query_id"), col("doc_id"), col("ti"), (idf * tfn).as("s"))
-      val piv = sc.groupBy("query_id", "doc_id")
-        .agg(max(when(col("ti") === 1, col("s"))).as("s1"),
-          (2 to nQTerms).map(i => max(when(col("ti") === i, col("s"))).as(s"s$i")): _*)
-      val total = (1 to nQTerms).map(i => coalesce(col(s"s$i"), lit(0.0))).reduce(_ + _)
-      piv.select(col("query_id"), col("doc_id"), total.as("score"))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy("query_id").orderBy(col("score").desc, col("doc_id"))))
-        .filter(col("rank") <= 5)
-        // DuckDB row_number returns BIGINT — match it
-        .select(col("query_id"), col("rank").cast("long").as("rank"),
-          col("doc_id"), col("score"))
-        .orderBy("query_id", "rank")
-    }
-  }
-
-  /** DSIR-style importance weighting (Xie et al. 2023, "Data Selection
-    * via Importance Resampling"): score every raw document by its
-    * log-likelihood ratio under a TARGET-domain n-gram LM vs the RAW-pool
-    * LM, then keep the top-scoring subset — the data-selection pass that
-    * upgrades a random crawl sample toward a quality domain. Target =
-    * src0 (q163's held-out convention), LMs = add-one-smoothed bigram
-    * models, and the per-bigram log ratio is QUANTIZED TO WHOLE BITS the
-    * q58 way: log2(p_t/p_b) ≈ bits(num div den) − bits(den div num) with
-    * num = (n_t+1)·(D_r+V), den = (n_r+1)·(D_t+V) — exactly one side
-    * nonzero (both zero when the ratio is 1), every step integer, so doc
-    * scores AND the selected top-100 hash-match where a libm log never
-    * could. Products stay under int64 while n·D < 2⁶³ (fine at every
-    * driver SF; a 100 TB corpus would shard the LM key space or hash
-    * counts down first — same bound q58 documents). Shape at scale: two
-    * pushed-down corpus passes build the token-pair-keyed LMs
-    * (map-side-combined), the raw bigram stream re-joins the merged LM on
-    * the pair key, the three totals ride ONE broadcast 1-row aggregate
-    * (q27's scalar idiom), and selection is a rank-orderBy-limit, never a
-    * global window. */
-  val q176DsirWeights: QuerySpec = {
-    def bitsSql(x: String): String = s"(length(bin($x)) - 1)"
-    val numSql = "((lm.n_t + 1) * (st.d_r + st.v))"
-    val denSql = "((lm.n_r + 1) * (st.d_t + st.v))"
-    QuerySpec.oracle(
-      "q176_dsir_weights",
-      s"""WITH toks AS (SELECT doc_id, source, $LowToksSql AS ts FROM documents),
-         |bg AS (SELECT doc_id, source, unnest(CASE WHEN len(ts) >= 2
-         |    THEN list_transform(generate_series(1, len(ts) - 1),
-         |      i -> concat_ws(' ', ts[i], ts[i+1]))
-         |    ELSE [] END) AS t FROM toks),
-         |lmt AS (SELECT t, count(*) AS n_t FROM bg WHERE source = 'src0' GROUP BY t),
-         |lmr AS (SELECT t, count(*) AS n_r FROM bg WHERE source <> 'src0' GROUP BY t),
-         |lm AS (SELECT coalesce(lmt.t, lmr.t) AS t, coalesce(n_t, 0) AS n_t,
-         |    coalesce(n_r, 0) AS n_r
-         |  FROM lmt FULL OUTER JOIN lmr ON lmt.t = lmr.t),
-         |st AS (SELECT CAST(count(*) AS BIGINT) AS v,
-         |    CAST(sum(n_t) AS BIGINT) AS d_t, CAST(sum(n_r) AS BIGINT) AS d_r FROM lm),
-         |sc AS (SELECT b.doc_id,
-         |    ${bitsSql(s"$numSql // $denSql")} - ${bitsSql(s"$denSql // $numSql")} AS w
-         |  FROM bg b JOIN lm ON lm.t = b.t CROSS JOIN st
-         |  WHERE b.source <> 'src0')
-         |SELECT doc_id, count(*) AS n_bigrams, CAST(sum(w) AS BIGINT) AS sum_bits,
-         |  CAST(sum(w) AS DOUBLE) / count(*) AS avg_bits
-         |FROM sc GROUP BY doc_id
-         |ORDER BY avg_bits DESC, doc_id LIMIT 100""".stripMargin
-    ) { (spark, dir) =>
-      // bigram stream via slice+arrays_zip — q57's native-codegen idiom
-      def bigrams(df: DataFrame) = {
-        val n1 = greatest(size(col("ts")) - 1, lit(0))
-        df.select(col("doc_id"), lowToksCol.as("ts"))
-          .select(col("doc_id"), explode(arrays_zip(
-            slice(col("ts"), lit(1), n1).as("a"),
-            slice(col("ts"), lit(2), n1).as("b"))).as("z"))
-          .select(col("doc_id"), concat_ws(" ", col("z.a"), col("z.b")).as("t"))
-      }
-      val docs = Tables.documents(spark, dir)
-      val tgt = bigrams(docs.filter(col("source") === "src0"))
-      val raw = bigrams(docs.filter(col("source") =!= "src0"))
-      val lmt = tgt.groupBy("t").agg(count(lit(1)).as("n_t"))
-      val lmr = raw.groupBy("t").agg(count(lit(1)).as("n_r"))
-      val lm = lmt.join(lmr, Seq("t"), "full_outer")
-        .select(col("t"), coalesce(col("n_t"), lit(0L)).as("n_t"),
-          coalesce(col("n_r"), lit(0L)).as("n_r"))
-      val st = lm.agg(count(lit(1)).as("v"),
-        sum(col("n_t")).as("d_t"), sum(col("n_r")).as("d_r"))
-      def bits(c: Column): Column = (length(bin(c)) - 1).cast("long")
-      raw.join(lm, "t").crossJoin(broadcast(st))
-        .withColumn("num", (col("n_t") + 1) * (col("d_r") + col("v")))
-        .withColumn("den", (col("n_r") + 1) * (col("d_t") + col("v")))
-        .select(col("doc_id"),
-          (bits(expr("num DIV den")) - bits(expr("den DIV num"))).as("w"))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_bigrams"), sum(col("w")).as("sum_bits"))
-        .select(col("doc_id"), col("n_bigrams"), col("sum_bits"),
-          (col("sum_bits").cast("double") / col("n_bigrams").cast("double"))
-            .as("avg_bits"))
-        .orderBy(col("avg_bits").desc, col("doc_id"))
-        .limit(100)
-    }
-  }
-
-  /** EWMA trend smoothing in EXACT integer micro-units — the sequential
-    * recurrence the series band was missing (q102 windows average, q122
-    * z-scores; neither carries running state): s₁ = x₁,
-    * sₜ = (xₜ + 3·sₜ₋₁) div 4 (α = 1/4), per nation over the daily
-    * shipped-revenue series, reporting the final smoothed level and the
-    * largest single-day deviation |xₜ − sₜ₋₁| (the spike an EWMA-based
-    * alert would page on). Revenue is exact integer micro-cents
-    * (decimal(18,2) casts shared with dsum's contract, then
-    * price_cents · (100 − disc_pct)), and the recurrence divides by 4 via
-    * shiftright on non-negative values ≡ DuckDB's `// 4` — every smoothed
-    * value bit-identical cross-engine, where float EWMA never reproduces.
-    * An inherently sequential fold CANNOT be a window function; it runs
-    * IN-ROW over the date-ordered collected series (Spark `aggregate`
-    * HOF with (s, max-dev) struct state ↔ DuckDB `list_reduce` with a
-    * 2-list state — d2Sql's proven pattern). Shape at scale: the series
-    * key is the nation DICTIONARY and the array is CALENDAR-bounded
-    * (~2.4k days), so the collect is bounded state per key — the same
-    * argument as q109's densification scaffold; the corpus contributes
-    * one map-side-combined (nation, day) aggregate and never collects. */
-  val q177EwmaTrend: QuerySpec = QuerySpec.oracle(
-    "q177_ewma_trend",
-    """WITH rev AS (
-      |  SELECT s_nationkey AS nk, CAST(l_shipdate AS DATE) AS day,
-      |    CAST(sum(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
-      |      * (100 - CAST(CAST(l_discount AS DECIMAL(18,2)) * 100 AS BIGINT))) AS BIGINT) AS x
-      |  FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-      |  GROUP BY 1, 2),
-      |ser AS (SELECT nk, count(*) AS n_days, max(day) AS last_day,
-      |    list_prepend([CAST(-1 AS BIGINT), CAST(0 AS BIGINT)],
-      |      list_transform(list(x ORDER BY day), v -> [v, CAST(0 AS BIGINT)])) AS vs
-      |  FROM rev GROUP BY nk),
-      |ew AS (SELECT nk, n_days, last_day,
-      |    list_reduce(vs, (acc, e) -> [
-      |      CASE WHEN acc[1] = -1 THEN e[1] ELSE (e[1] + 3 * acc[1]) // 4 END,
-      |      greatest(acc[2], CASE WHEN acc[1] = -1 THEN CAST(0 AS BIGINT)
-      |                            ELSE abs(e[1] - acc[1]) END)]) AS st
-      |  FROM ser)
-      |SELECT n.n_name AS nation, CAST(e.n_days AS BIGINT) AS n_days, e.last_day,
-      |  CAST(e.st[1] AS BIGINT) AS ewma_micro, CAST(e.st[2] AS BIGINT) AS max_dev_micro
-      |FROM ew e JOIN nation n ON n.n_nationkey = e.nk
-      |ORDER BY nation""".stripMargin
-  ) { (spark, dir) =>
-    val rev = dailyRevenue(spark, dir)
-    val ser = rev.groupBy("nk")
-      .agg(count(lit(1)).as("n_days"), max(col("day")).as("last_day"),
-        array_sort(collect_list(struct(col("day"), col("x")))).as("vs"))
-    // the recurrence: non-negative throughout, so div 4 ≡ shiftright 2
-    val folded = aggregate(
-      transform(col("vs"), v => v.getField("x")),
-      struct(lit(-1L).as("s"), lit(0L).as("mx")),
-      (acc, x) => struct(
-        when(acc.getField("s") === -1L, x)
-          .otherwise(shiftright(x + lit(3L) * acc.getField("s"), 2)).as("s"),
-        greatest(acc.getField("mx"),
-          when(acc.getField("s") === -1L, lit(0L))
-            .otherwise(abs(x - acc.getField("s")))).as("mx")))
-    ser.select(col("nk"), col("n_days"), col("last_day"), folded.as("st"))
-      .join(broadcast(Tables.nation(spark, dir)
-          .select(col("n_nationkey"), col("n_name"))),
-        col("nk") === col("n_nationkey"))
-      .select(col("n_name").as("nation"), col("n_days"), col("last_day"),
-        col("st.s").as("ewma_micro"), col("st.mx").as("max_dev_micro"))
-      .orderBy("nation")
-  }
-
-  /** Holt linear trend (double exponential smoothing) in EXACT integer
-    * micro-units — the forecasting primitive the trend band still lacked
-    * (q155 Theil-Sen and q159 OLS fit one global line; q177's EWMA tracks
-    * level but no slope): the LEVEL+TREND double recurrence
-    * lₜ = α·xₜ + (1−α)(lₜ₋₁+bₜ₋₁), bₜ = β(lₜ−lₜ₋₁) + (1−β)bₜ₋₁ at
-    * α = β = 1/4 over each nation's daily shipped-revenue series,
-    * reporting the final level, the final trend (the per-day drift an
-    * alert thresholds on), and the 7-day-ahead forecast l + 7b. All
-    * arithmetic is integer: revenue in exact micro-cents (q177's
-    * contract) and both divisions-by-4 via the shared-truncation identity
-    * c − (c mod 4) is exactly divisible, so shiftright ≡ DuckDB's `//`
-    * even on NEGATIVE trend carries (Scala %, Spark %, DuckDB % all take
-    * the dividend's sign) — every (level, trend) pair bit-identical
-    * cross-engine, where float Holt never reproduces. Same in-row fold
-    * shape as q177: Spark `aggregate` HOF with a (flag, level, trend)
-    * struct state ↔ DuckDB `list_reduce` with a homogeneous 3-list state;
-    * the per-key state is the calendar-bounded day array, the corpus
-    * contributes one map-side-combined (nation, day) aggregate. */
-  val q184HoltTrend: QuerySpec = {
-    // DuckDB rendering of the exactly-divisible truncating quarter:
-    // (c - c % 4) // 4 — factored here so the recurrence reads once
-    def q4(c: String): String = s"(($c) - (($c) % 4)) // 4"
-    val lNew = q4("e[1] + 3*(acc[2] + acc[3])")
-    val bNew = q4(s"($lNew) - acc[2] + 3*acc[3]")
-    QuerySpec.oracle(
-      "q184_holt_trend",
-      s"""WITH rev AS (
-         |  SELECT s_nationkey AS nk, CAST(l_shipdate AS DATE) AS day,
-         |    CAST(sum(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
-         |      * (100 - CAST(CAST(l_discount AS DECIMAL(18,2)) * 100 AS BIGINT))) AS BIGINT) AS x
-         |  FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-         |  GROUP BY 1, 2),
-         |ser AS (SELECT nk, count(*) AS n_days, max(day) AS last_day,
-         |    list_prepend([CAST(0 AS BIGINT), CAST(0 AS BIGINT), CAST(0 AS BIGINT)],
-         |      list_transform(list(x ORDER BY day),
-         |        v -> [v, CAST(0 AS BIGINT), CAST(0 AS BIGINT)])) AS vs
-         |  FROM rev GROUP BY nk),
-         |ho AS (SELECT nk, n_days, last_day,
-         |    list_reduce(vs, (acc, e) -> CASE WHEN acc[1] = 0
-         |      THEN [CAST(1 AS BIGINT), e[1], CAST(0 AS BIGINT)]
-         |      ELSE [CAST(1 AS BIGINT), $lNew, $bNew] END) AS st
-         |  FROM ser)
-         |SELECT n.n_name AS nation, CAST(h.n_days AS BIGINT) AS n_days, h.last_day,
-         |  CAST(h.st[2] AS BIGINT) AS level_micro, CAST(h.st[3] AS BIGINT) AS trend_micro,
-         |  CAST(h.st[2] + 7 * h.st[3] AS BIGINT) AS forecast7_micro
-         |FROM ho h JOIN nation n ON n.n_nationkey = h.nk
-         |ORDER BY nation""".stripMargin
-    ) { (spark, dir) =>
-      // exactly-divisible truncating quarter: c - (c % 4) is a multiple of
-      // 4, so the arithmetic shift is exact even for negative trends
-      def q4c(c: Column): Column = shiftright(c - (c % lit(4L)), 2)
-      val rev = dailyRevenue(spark, dir)
-      val ser = rev.groupBy("nk")
-        .agg(count(lit(1)).as("n_days"), max(col("day")).as("last_day"),
-          array_sort(collect_list(struct(col("day"), col("x")))).as("vs"))
-      val folded = aggregate(
-        transform(col("vs"), v => v.getField("x")),
-        struct(lit(0L).as("f"), lit(0L).as("l"), lit(0L).as("b")),
-        (acc, x) => {
-          val (l0, b0) = (acc.getField("l"), acc.getField("b"))
-          val nl = q4c(x + lit(3L) * (l0 + b0))
-          val nb = q4c(nl - l0 + lit(3L) * b0)
-          when(acc.getField("f") === 0L,
-            struct(lit(1L).as("f"), x.as("l"), lit(0L).as("b")))
-            .otherwise(struct(lit(1L).as("f"), nl.as("l"), nb.as("b")))
-        })
-      ser.select(col("nk"), col("n_days"), col("last_day"), folded.as("st"))
-        .join(broadcast(Tables.nation(spark, dir)
-            .select(col("n_nationkey"), col("n_name"))),
-          col("nk") === col("n_nationkey"))
-        .select(col("n_name").as("nation"), col("n_days"), col("last_day"),
-          col("st.l").as("level_micro"), col("st.b").as("trend_micro"),
-          (col("st.l") + lit(7L) * col("st.b")).as("forecast7_micro"))
-        .orderBy("nation")
-    }
-  }
-
-  /** Holt-Winters ADDITIVE-SEASONAL smoothing — the third rung of the
-    * exponential family (q177 level, q184 level+trend): a day-of-week
-    * seasonal component s[0..6] joins the recurrence at α = β = γ = 1/4 —
-    * lₜ = α(xₜ − s[dow]) + (1−α)(lₜ₋₁+bₜ₋₁), bₜ as in Holt,
-    * s'[dow] = γ(xₜ − lₜ) + (1−γ)s[dow] — the weekly-rhythm forecaster
-    * (shipping volume genuinely cycles by weekday) whose deseasonalized
-    * level no longer oscillates with the week. Contract: seasonal state
-    * starts at zero and learns online (deterministic — no first-cycle
-    * initialization heuristic), weekday indexing is Sunday-0 in both
-    * engines (Spark dayofweek−1 ≡ DuckDB dayofweek). Same exact-integer
-    * discipline as q184 (the c − (c mod 4) truncating quarter, negative-
-    * safe) and the same in-row fold shape — the state is just wider:
-    * Spark `aggregate` HOF with a (flag, level, trend, s[7]) struct ↔
-    * DuckDB `list_reduce` with a homogeneous 10-list. Reports the final
-    * level/trend plus the learned seasonal SPAN (max − min of s — the
-    * weekly amplitude an alerting threshold must clear). */
-  val q186HoltWinters: QuerySpec = {
-    def q4(c: String): String = s"(($c) - (($c) % 4)) // 4"
-    val lNew = q4("e[1] - acc[3 + e[2] + 1] + 3*(acc[2] + acc[3])")
-    val bNew = q4(s"($lNew) - acc[2] + 3*acc[3]")
-    val sNew = s"CASE WHEN i = e[2] + 1 THEN ${q4(s"(e[1] - ($lNew)) + 3*acc[3+i]")} ELSE acc[3+i] END"
-    QuerySpec.oracle(
-      "q186_holt_winters",
-      s"""WITH rev AS (
-         |  SELECT s_nationkey AS nk, CAST(l_shipdate AS DATE) AS day,
-         |    CAST(sum(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
-         |      * (100 - CAST(CAST(l_discount AS DECIMAL(18,2)) * 100 AS BIGINT))) AS BIGINT) AS x
-         |  FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-         |  GROUP BY 1, 2),
-         |ser AS (SELECT nk, count(*) AS n_days, max(day) AS last_day,
-         |    list_prepend([CAST(0 AS BIGINT),0,0,0,0,0,0,0,0,0],
-         |      list_transform(list([x, CAST(dayofweek(day) AS BIGINT)] ORDER BY day),
-         |        v -> v || [CAST(0 AS BIGINT),0,0,0,0,0,0,0])) AS vs
-         |  FROM rev GROUP BY nk),
-         |hw AS (SELECT nk, n_days, last_day,
-         |    list_reduce(vs, (acc, e) -> CASE WHEN acc[1] = 0
-         |      THEN [CAST(1 AS BIGINT), e[1], CAST(0 AS BIGINT)] || acc[4:10]
-         |      ELSE [CAST(1 AS BIGINT), $lNew, $bNew]
-         |           || list_transform(generate_series(1, 7), i -> $sNew) END) AS st
-         |  FROM ser)
-         |SELECT n.n_name AS nation, CAST(h.n_days AS BIGINT) AS n_days, h.last_day,
-         |  CAST(h.st[2] AS BIGINT) AS level_micro, CAST(h.st[3] AS BIGINT) AS trend_micro,
-         |  CAST(list_reduce(h.st[4:10], (a, v) -> greatest(a, v)) -
-         |       list_reduce(h.st[4:10], (a, v) -> least(a, v)) AS BIGINT) AS seasonal_span_micro
-         |FROM hw h JOIN nation n ON n.n_nationkey = h.nk
-         |ORDER BY nation""".stripMargin
-    ) { (spark, dir) =>
-      def q4c(c: Column): Column = shiftright(c - (c % lit(4L)), 2)
-      val rev = dailyRevenue(spark, dir)
-      val ser = rev.groupBy("nk")
-        .agg(count(lit(1)).as("n_days"), max(col("day")).as("last_day"),
-          array_sort(collect_list(struct(col("day"), col("x")))).as("vs"))
-      val folded = aggregate(
-        col("vs"),
-        struct(lit(0L).as("f"), lit(0L).as("l"), lit(0L).as("b"),
-          typedlit(Seq.fill(7)(0L)).as("s")),
-        (acc, e) => {
-          val x = e.getField("x")
-          // Sunday-0 weekday, both engines (Spark dayofweek is Sunday-1)
-          val dow = dayofweek(e.getField("day")) - 1
-          val sArr = acc.getField("s")
-          val sOld = element_at(sArr, dow + 1)
-          val (l0, b0) = (acc.getField("l"), acc.getField("b"))
-          val nl = q4c(x - sOld + lit(3L) * (l0 + b0))
-          val nb = q4c(nl - l0 + lit(3L) * b0)
-          val ns = transform(sequence(lit(1), lit(7)), i =>
-            when(i === dow + 1, q4c(x - nl + lit(3L) * sOld))
-              .otherwise(element_at(sArr, i)))
-          when(acc.getField("f") === 0L,
-            struct(lit(1L).as("f"), x.as("l"), lit(0L).as("b"), sArr.as("s")))
-            .otherwise(struct(lit(1L).as("f"), nl.as("l"), nb.as("b"), ns.as("s")))
-        })
-      ser.select(col("nk"), col("n_days"), col("last_day"), folded.as("st"))
-        .join(broadcast(Tables.nation(spark, dir)
-            .select(col("n_nationkey"), col("n_name"))),
-          col("nk") === col("n_nationkey"))
-        .select(col("n_name").as("nation"), col("n_days"), col("last_day"),
-          col("st.l").as("level_micro"), col("st.b").as("trend_micro"),
-          (element_at(array_sort(col("st.s")), 7) - element_at(array_sort(col("st.s")), 1))
-            .as("seasonal_span_micro"))
-        .orderBy("nation")
-    }
-  }
-
-  /** Mergeable QUANTILE sketch — the member the sketch family still lacked
-    * (q161 KMV cardinality, q173 CMS frequency, q51 Bloom membership):
-    * percentile features at 100 TB cannot run q15's exact sort, so each
-    * scope keeps the k=256 rows with the smallest md5(row-key) rank — a
-    * deterministic uniform sample whose sorted values answer any quantile
-    * by integer rank arithmetic — and the global sketch is just the
-    * bottom-k of the UNION of per-scope sketches (bottom-k-by-hash is a
-    * semilattice merge, the same property q161's k-min exploits). Because
-    * rank keys are md5 hex (identical bytes cross-engine) and values are
-    * integer cents, the SAMPLE ITSELF and therefore every estimated
-    * quantile is bit-identical in DuckDB — the estimate, not just its
-    * error band, is oracle-verified (q12/q161's md5-order discipline).
-    * Report: per l_returnflag scope and '(all)', exact n, sample size,
-    * and estimated-vs-exact p50/p90/p99 of the price-cents distribution
-    * (measured rel. error at sf0.01: ~6%/2%/0.6% — 1/√k behavior, the
-    * error column is what the audit exists to show). Shape at scale: the
-    * sketch is ONE map-side-combined bottom-k aggregate
-    * ([[graft.functions.BottomKRows]], ≤k rows per scope per partition
-    * cross the shuffle — never a per-scope sort); the EXACT side (audit
-    * reference only, like q161's n_exact) is the one per-scope
-    * window-ranked pass a production run would drop. PipelineQueriesSpec
-    * pins the estimator's error bound against the exact percentiles. */
-  val q180QuantileSketch: QuerySpec = {
-    val k = 256
-    val pcts = Seq(50, 90, 99)
-    val estSel = pcts.map(p =>
-      s"s.sv[CAST(($p*(len(s.sv)-1))//100 + 1 AS BIGINT)] AS p${p}_est").mkString(",\n       |    ")
-    val exSel = pcts.map(p =>
-      s"max(CASE WHEN r.vr = ($p*(c.n-1))//100 + 1 THEN r.v END) AS p${p}_exact")
-      .mkString(",\n       |    ")
-    val outSel = pcts.map(p =>
-      s"CAST(e.p${p}_est AS BIGINT) AS p${p}_est, CAST(x.p${p}_exact AS BIGINT) AS p${p}_exact")
-      .mkString(",\n       |  ")
-    QuerySpec.oracle(
-      "q180_quantile_sketch",
-      s"""WITH base AS (
-         |  SELECT l_returnflag AS scope,
-         |    md5(CAST(l_orderkey * 8 + l_linenumber AS VARCHAR)) AS rk,
-         |    CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS v
-         |  FROM lineitem),
-         |rows2 AS (
-         |  SELECT scope, rk, v FROM base
-         |  UNION ALL SELECT '(all)', rk, v FROM base),
-         |cnt AS (SELECT scope, count(*) AS n FROM rows2 GROUP BY scope),
-         |rnk AS (SELECT scope, rk, v,
-         |    row_number() OVER (PARTITION BY scope ORDER BY rk) AS rn FROM rows2),
-         |samp AS (SELECT scope, list(v ORDER BY v) AS sv FROM rnk WHERE rn <= $k GROUP BY scope),
-         |vrank AS (SELECT scope, v,
-         |    row_number() OVER (PARTITION BY scope ORDER BY v) AS vr FROM rows2),
-         |est AS (
-         |  SELECT c.scope, c.n, len(s.sv) AS sample_n,
-         |    $estSel
-         |  FROM cnt c JOIN samp s ON s.scope = c.scope),
-         |ex AS (
-         |  SELECT c.scope,
-         |    $exSel
-         |  FROM cnt c JOIN vrank r ON r.scope = c.scope
-         |  GROUP BY c.scope)
-         |SELECT e.scope, CAST(e.n AS BIGINT) AS n_exact,
-         |  CAST(e.sample_n AS BIGINT) AS sample_n,
-         |  $outSel
-         |FROM est e JOIN ex x ON x.scope = e.scope
-         |ORDER BY e.scope""".stripMargin
-    ) { (spark, dir) =>
-      import graft.functions.BottomKRows
-      val base = Tables.lineitem(spark, dir).select(
-        col("l_returnflag").as("scope"),
-        md5((col("l_orderkey") * 8 + col("l_linenumber")).cast("string")).as("rk"),
-        cents(col("l_extendedprice")).as("v"))
-      // the production path: ONE bounded-heap aggregate — exact count +
-      // the k-smallest-by-hash sample, map-side combined. rollup(scope)
-      // supplies the '(all)' group via Expand BELOW which the md5 rank
-      // key is computed ONCE per input row — a scope∪'(all)' union would
-      // evaluate the hash subtree twice (2× scans, 2× md5s)
-      val samp = base.rollup("scope")
-        .agg(count(lit(1)).as("n_exact"),
-          BottomKRows.bottomK(col("rk"), struct(col("v")), k).as("mins"))
-        .select(coalesce(col("scope"), lit("(all)")).as("scope"), col("n_exact"),
-          size(col("mins")).cast("long").as("sample_n"),
-          array_sort(transform(col("mins"), m => m.getField("v"))).as("sv"))
-      val estCols = pcts.map(p =>
-        element_at(col("sv"),
-          (expr(s"($p * (sample_n - 1)) div 100") + 1).cast("int")).as(s"p${p}_est"))
-      val est = samp.select(Seq(col("scope"), col("n_exact"), col("sample_n")) ++ estCols: _*)
-      // the audit reference: exact quantiles at the same integer ranks
-      // (per-scope ranked pass — the cost the sketch exists to avoid).
-      // Hash-free — ranked by the VALUE alone (the value at a given rank
-      // is tie-order-invariant) — and STRIPED (q36's two-phase window):
-      // the plain per-scope window put the whole '(all)' copy through one
-      // task; 32 range stripes on v + broadcast stripe offsets restore
-      // full parallelism (measured: the audit half 1.7 → ~0.6 s at sf0.1)
-      val valsOnly = Tables.lineitem(spark, dir).select(
-        col("l_returnflag").as("scope"),
-        cents(col("l_extendedprice")).as("v"))
-      val rows2 = valsOnly.unionByName(
-        valsOnly.select(lit("(all)").as("scope"), col("v")))
-      val vrank = StripedWindow.runningSum(
-        StripedWindow.withRangeStripe(rows2, "v", 32),
-        Seq("scope"), Seq(col("v")), lit(1L), "vr", includeCurrent = true)
-      val cnts = valsOnly.rollup("scope").agg(count(lit(1)).as("n"))
-        .select(coalesce(col("scope"), lit("(all)")).as("scope"), col("n"))
-      val exCols = pcts.map(p =>
-        max(when(col("vr") === expr(s"($p * (n - 1)) div 100") + 1, col("v")))
-          .as(s"p${p}_exact"))
-      val exact = vrank.join(broadcast(cnts), "scope")
-        .groupBy("scope").agg(exCols.head, exCols.tail: _*)
-      est.join(exact, "scope")
-        .select(Seq(col("scope"), col("n_exact"), col("sample_n")) ++
-          pcts.flatMap(p => Seq(col(s"p${p}_est"), col(s"p${p}_exact"))): _*)
-        .orderBy("scope")
-    }
-  }
-
-  /** Reciprocal-rank fusion (Cormack et al. 2009) — the HYBRID-RETRIEVAL
-    * combiner every RAG stack runs above its retrievers (BM25 list +
-    * dense-ANN list + heuristic list → one ranking): each of three
-    * rankers over the same query set — distinct-bigram overlap, trigram
-    * Jaccard (q31's shingle machinery), and length proximity — emits its
-    * top-10, and candidates score Σ_lists 10⁶ div (60 + rank). RRF is
-    * RANK-based, so unlike score fusion it needs no calibration across
-    * heterogeneous retrievers — and it is exactly why the whole fusion is
-    * integer arithmetic end-to-end (ranks, the div-quantized reciprocals,
-    * the micro-unit sum) and hash-verifies cross-engine, float-free. The
-    * fixture shows the operator's point: multi-list consensus candidates
-    * (n_lists ≥ 2) jump the fused ranking above any single list's tail.
-    * Shape at 100 TB: the pair scan is q40's bounded broadcast-query
-    * contract (queries ≪ corpus), with per-pair overlap counted by the
-    * codegen'd [[graft.functions.SortedInterExpr]] merge walk over
-    * PRE-SORTED gram arrays — `array_intersect`'s per-row generic hash
-    * set paid 19 s at sf0.1 for what the sorted merge does in ~2 (the
-    * LongDotExpr kernel economics; union sizes come free by
-    * inclusion-exclusion from the per-doc gram counts); the three rank
-    * windows all partition on query_id (one exchange, reused); top-10
-    * lists union into a (query, cand)-keyed sum — nothing ever crosses a
-    * corpus×corpus product, and production swaps any ranker for
-    * q174/q166's lists unchanged since RRF only consumes
-    * (query, cand, rank). */
-  private val rrfFeatMemo = SessionMemo[DataFrame]("rrfFeat")
-
-  val q185HybridRrf: QuerySpec = {
-    val (shortlist, kPick) = (10, 5)
-    val BigramsSql =
-      """CASE WHEN len(ts) >= 2
-        | THEN list_distinct(list_transform(generate_series(1, len(ts) - 1),
-        |   i -> concat_ws(' ', ts[i], ts[i+1])))
-        | ELSE [] END""".stripMargin
-    QuerySpec.oracle(
-      "q185_hybrid_rrf",
-      s"""WITH toks AS (SELECT doc_id, n_chars, $LowToksSql AS ts FROM documents),
-         |feat0 AS (SELECT doc_id, n_chars, $BigramsSql AS bgs0, $ShinglesSql AS shs0 FROM toks),
-         |feat AS (SELECT doc_id, n_chars,
-         |    list_distinct(list_transform(bgs0, g -> ('0x' || substring(md5(g), 1, 15))::BIGINT)) AS bgs,
-         |    list_distinct(list_transform(shs0, g -> ('0x' || substring(md5(g), 1, 15))::BIGINT)) AS shs
-         |  FROM feat0),
-         |qs AS (SELECT doc_id AS query_id, n_chars AS q_chars, bgs AS q_bgs, shs AS q_shs
-         |       FROM feat WHERE doc_id % 50 = 0),
-         |pairs AS (
-         |  SELECT q.query_id, c.doc_id AS cand_id,
-         |    len(list_intersect(q.q_bgs, c.bgs)) AS n_shared,
-         |    CASE WHEN len(list_distinct(q.q_shs || c.shs)) = 0 THEN 0
-         |      ELSE CAST(len(list_intersect(q.q_shs, c.shs)) AS BIGINT) * 1000000
-         |           // len(list_distinct(q.q_shs || c.shs)) END AS jac_micro,
-         |    abs(q.q_chars - c.n_chars) AS len_gap
-         |  FROM qs q JOIN feat c ON c.doc_id <> q.query_id),
-         |ra AS (SELECT query_id, cand_id, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY n_shared DESC, cand_id) AS rnk FROM pairs),
-         |rb AS (SELECT query_id, cand_id, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY jac_micro DESC, cand_id) AS rnk FROM pairs),
-         |rc AS (SELECT query_id, cand_id, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY len_gap ASC, cand_id) AS rnk FROM pairs),
-         |tops AS (
-         |  SELECT query_id, cand_id, rnk FROM ra WHERE rnk <= $shortlist
-         |  UNION ALL SELECT query_id, cand_id, rnk FROM rb WHERE rnk <= $shortlist
-         |  UNION ALL SELECT query_id, cand_id, rnk FROM rc WHERE rnk <= $shortlist),
-         |fused AS (
-         |  SELECT query_id, cand_id,
-         |    CAST(sum(1000000 // (60 + rnk)) AS BIGINT) AS rrf_micro,
-         |    count(*) AS n_lists
-         |  FROM tops GROUP BY 1, 2),
-         |out AS (SELECT query_id, cand_id, rrf_micro, CAST(n_lists AS BIGINT) AS n_lists,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY rrf_micro DESC, cand_id) AS pick
-         |  FROM fused)
-         |SELECT query_id, CAST(pick AS BIGINT) AS pick, cand_id, rrf_micro, n_lists
-         |FROM out WHERE pick <= $kPick ORDER BY query_id, pick""".stripMargin
-    ) { (spark, dir) =>
-      val n1 = greatest(size(col("ts")) - 1, lit(0))
-      val bigrams = array_distinct(transform(
-        arrays_zip(slice(col("ts"), lit(1), n1).as("a"), slice(col("ts"), lit(2), n1).as("b")),
-        z => concat_ws(" ", z.getField("a"), z.getField("b"))))
-      import graft.functions.SortedInterExpr.interCount
-      // grams hashed to md5-prefix int64 ONCE per doc, then sorted — the
-      // merge-walk kernel's contract, in its long form: the 29-word vocab
-      // makes gram STRINGS share deep prefixes, so even the sorted walk
-      // was comparator-bound on UTF8 bytes (r19: 7.2 → ~4 s at sf0.1);
-      // the hash is the oracle-shared md5 encoding, so collisions (none
-      // at any tested scale) would merge identically in both engines
-      def hashedGrams(c: Column): Column = array_sort(array_distinct(
-        transform(c, g => conv(substring(md5(g), 1, 15), 16, 10).cast("long"))))
-      // the per-doc hashed gram features are the ranker's FEATURE INDEX —
-      // ~2M md5 hashes per build, referenced twice per evaluation (corpus
-      // side + the %50 query side re-ran the whole subtree); memoized per
-      // (session, dir) like the other serving-side indexes (r21)
-      val feat = rrfFeatMemo(spark, dir)(
-        Tables.documents(spark, dir)
-          .withColumn("ts", lowToksCol)
-          .select(col("doc_id"), col("n_chars"), hashedGrams(bigrams).as("bgs"),
-            hashedGrams(Dedup.shingles(col("text"), 3)).as("shs"))
-          .localCheckpoint(eager = false))
-      val qs = feat.filter(col("doc_id") % 50 === 0)
-        .select(col("doc_id").as("query_id"), col("n_chars").as("q_chars"),
-          col("bgs").as("q_bgs"), col("shs").as("q_shs"))
-      val pairs = feat.join(broadcast(qs), col("doc_id") =!= col("query_id"))
-        .select(col("query_id"), col("doc_id").as("cand_id"),
-          interCount(col("q_bgs"), col("bgs")).as("n_shared"),
-          interCount(col("q_shs"), col("shs")).as("inter"),
-          // |A ∪ B| by inclusion-exclusion — grams are distinct per doc
-          (size(col("q_shs")) + size(col("shs"))).cast("long").as("sz_sum"),
-          abs(col("q_chars") - col("n_chars")).as("len_gap"))
-        .withColumn("uni", col("sz_sum") - col("inter"))
-        .withColumn("jac_micro",
-          when(col("uni") === 0L, lit(0L)).otherwise(expr("inter * 1000000 div uni")))
-      // three per-ranker top-10 windows; all partition on query_id so the
-      // pairs exchange canonicalizes identically and AQE reuses it at
-      // runtime (an in-row collect-sort-slice alternative measured 3×
-      // SLOWER — 500k×3 structs through un-combined collect_list buffers)
-      def ranked(order: Seq[Column]): DataFrame =
-        pairs.withColumn("rnk", row_number().over(
-            Window.partitionBy("query_id").orderBy(order: _*)))
-          .filter(col("rnk") <= shortlist)
-          .select("query_id", "cand_id", "rnk")
-      val tops = ranked(Seq(col("n_shared").desc, col("cand_id")))
-        .unionByName(ranked(Seq(col("jac_micro").desc, col("cand_id"))))
-        .unionByName(ranked(Seq(col("len_gap").asc, col("cand_id"))))
-      tops.groupBy("query_id", "cand_id")
-        .agg(sum(expr("1000000 div (60 + rnk)")).cast("long").as("rrf_micro"),
-          count(lit(1)).as("n_lists"))
-        .withColumn("pick", row_number().over(
-          Window.partitionBy("query_id").orderBy(col("rrf_micro").desc, col("cand_id"))).cast("long"))
-        .filter(col("pick") <= kPick)
-        .select("query_id", "pick", "cand_id", "rrf_micro", "n_lists")
-        .orderBy("query_id", "pick")
-    }
-  }
-
-  /** χ² drift audit — the distribution-shift test beside q129's
-    * TV-distance ranking: for each source, Pearson's χ² homogeneity
-    * statistic of its document-length distribution (200-char buckets)
-    * against the corpus-wide one — the standard "did this feed drift?"
-    * gate a data pipeline runs per ingestion batch, here hash-EXACT
-    * where textbook χ² never reproduces: every term
-    * (o·N − n_s·N_b)²·10⁶ div (n_s·N_b·N) is quantized to integer micro
-    * units BEFORE summation (the numerator runs in decimal internally —
-    * it exceeds int64 at corpus scale — and only the int64 quotient
-    * emerges, the q138 wide-decimal discipline), so the statistic itself
-    * oracle-verifies. The drifted flag uses the χ²/dof > 2 rule of thumb
-    * (documented heuristic — exact critical values need an inverse-CDF
-    * no SQL engine shares bit-for-bit). Shape at scale: one corpus
-    * (source, bucket) aggregate; the bucket CDF-free global counts and
-    * the (N, m) totals ride as broadcasts over the bounded
-    * sources × buckets grid — q182's scaffold. */
-  val q187Chi2Drift: QuerySpec = QuerySpec.oracle(
-    "q187_chi2_drift",
-    """WITH b AS (SELECT source, CAST(n_chars // 200 AS BIGINT) AS bucket FROM documents),
-      |gb AS (SELECT bucket, count(*) AS nb FROM b GROUP BY bucket),
-      |tot AS (SELECT CAST(count(*) AS BIGINT) AS n,
-      |               CAST(count(DISTINCT bucket) AS BIGINT) AS m FROM b),
-      |src AS (SELECT source, count(*) AS ns FROM b GROUP BY source),
-      |sb AS (SELECT source, bucket, count(*) AS o FROM b GROUP BY 1, 2),
-      |grid AS (SELECT s.source, s.ns, g.bucket, g.nb FROM src s CROSS JOIN gb g),
-      |terms AS (
-      |  SELECT gr.source, gr.ns, t.m,
-      |    CAST(((CAST(coalesce(sb.o, 0) AS HUGEINT)*t.n - CAST(gr.ns AS HUGEINT)*gr.nb)
-      |          * (CAST(coalesce(sb.o, 0) AS HUGEINT)*t.n - CAST(gr.ns AS HUGEINT)*gr.nb) * 1000000)
-      |      // (CAST(gr.ns AS HUGEINT)*gr.nb*t.n) AS BIGINT) AS tm
-      |  FROM grid gr CROSS JOIN tot t
-      |  LEFT JOIN sb ON sb.source = gr.source AND sb.bucket = gr.bucket)
-      |SELECT source, CAST(any_value(ns) AS BIGINT) AS n_docs,
-      |  CAST(sum(tm) AS BIGINT) AS chi2_micro,
-      |  CAST(any_value(m) - 1 AS BIGINT) AS dof,
-      |  sum(tm) > 2000000 * (any_value(m) - 1) AS drifted
-      |FROM terms GROUP BY source ORDER BY source""".stripMargin
-  ) { (spark, dir) =>
-    val b = Tables.documents(spark, dir)
-      .select(col("source"), expr("n_chars div 200").as("bucket"))
-    val gb = b.groupBy("bucket").agg(count(lit(1)).as("nb"))
-    val tot = b.agg(count(lit(1)).cast("long").as("n"),
-      countDistinct(col("bucket")).cast("long").as("m"))
-    val src = b.groupBy("source").agg(count(lit(1)).as("ns"))
-    val sb = b.groupBy("source", "bucket").agg(count(lit(1)).as("o"))
-    val grid = src.crossJoin(broadcast(gb))
-    grid.join(sb, Seq("source", "bucket"), "left")
-      .crossJoin(broadcast(tot))
-      // o·N itself passes int64 at corpus scale — BOTH factors run in
-      // decimal before the multiply, not just the squared copy (ADVICE r18)
-      .withColumn("d", expr(
-        "CAST(coalesce(o, 0) AS DECIMAL(38,0)) * n - CAST(ns AS DECIMAL(38,0)) * nb"))
-      // d² · 10⁶ exceeds int64 at corpus scale — decimal internally, the
-      // int64 quotient is what leaves (PlanSweep's wide-decimal rule)
-      .withColumn("tm",
-        expr("(d * d * 1000000) div (CAST(ns AS DECIMAL(38,0)) * nb * n)").cast("long"))
-      .groupBy("source")
-      .agg(first(col("ns")).as("n_docs"),
-        sum(col("tm")).cast("long").as("chi2_micro"),
-        (first(col("m")) - 1).cast("long").as("dof"))
-      .withColumn("drifted", col("chi2_micro") > lit(2000000L) * col("dof"))
-      .orderBy("source")
-  }
-
-  /** CUSUM changepoint localization in EXACT integer arithmetic — the
-    * WHERE beside q187's whether: χ²/TV say a distribution shifted, the
-    * CUSUM argmax says when. Per nation over the q177 daily
-    * shipped-revenue series, the classic mean-shift statistic
-    * S_t = cum_t − t·mean peaks at the most likely change day; scaled by
-    * n it is D_t = n·cum_t − t·total, exact integers throughout (the
-    * products exceed int64 at corpus scale → decimal internally, only
-    * int64 quotients leave — q187's discipline). Reports the argmax day
-    * (earliest on ties), the normalized statistic
-    * max|D|·10⁶ div (n·total) ∈ [0, 10⁶], the level on each side of the
-    * break, and a >2% heuristic flag (documented, like q187's
-    * χ²/dof > 2). Shape at 100 TB: the corpus contributes one
-    * map-side-combined (nation, day) aggregate; both window passes and
-    * the argmax ride ONE nation-keyed exchange (same partition key), and
-    * the carried relation is the calendar-bounded daily series, never
-    * line items. */
-  val q189CusumChangepoint: QuerySpec = QuerySpec.oracle(
-    "q189_cusum_changepoint",
-    """WITH rev AS (
-      |  SELECT s_nationkey AS nk, CAST(l_shipdate AS DATE) AS day,
-      |    CAST(sum(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
-      |      * (100 - CAST(CAST(l_discount AS DECIMAL(18,2)) * 100 AS BIGINT))) AS BIGINT) AS x
-      |  FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-      |  GROUP BY 1, 2),
-      |w AS (
-      |  SELECT nk, day,
-      |    CAST(sum(x) OVER (PARTITION BY nk ORDER BY day
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum,
-      |    row_number() OVER (PARTITION BY nk ORDER BY day) AS t,
-      |    CAST(sum(x) OVER (PARTITION BY nk) AS BIGINT) AS total,
-      |    count(*) OVER (PARTITION BY nk) AS n
-      |  FROM rev),
-      |d AS (
-      |  SELECT nk, day, t, n, cum, total,
-      |    abs(CAST(n AS HUGEINT) * cum - CAST(t AS HUGEINT) * total) AS absd
-      |  FROM w),
-      |cp AS (SELECT *, row_number() OVER (PARTITION BY nk ORDER BY absd DESC, day) AS rk
-      |       FROM d)
-      |SELECT nn.n_name AS nation, day AS cp_day,
-      |  CAST(t AS BIGINT) AS cp_t, CAST(n AS BIGINT) AS n_days,
-      |  CAST(absd * 1000000 // (CAST(n AS HUGEINT) * total) AS BIGINT) AS stat_micro,
-      |  CAST(cum // t AS BIGINT) AS mean_before_micro,
-      |  CAST(CASE WHEN n = t THEN 0 ELSE (total - cum) // (n - t) END AS BIGINT)
-      |    AS mean_after_micro,
-      |  absd * 1000000 // (CAST(n AS HUGEINT) * total) > 20000 AS shifted
-      |FROM cp JOIN nation nn ON nn.n_nationkey = cp.nk
-      |WHERE rk = 1 ORDER BY nation""".stripMargin
-  ) { (spark, dir) =>
-    val rev = dailyRevenue(spark, dir)
-    val byDay = Window.partitionBy("nk").orderBy("day")
-    val whole = Window.partitionBy("nk")
-    val d = rev
-      .withColumn("cum", sum(col("x")).over(
-        byDay.rowsBetween(Window.unboundedPreceding, Window.currentRow)).cast("long"))
-      .withColumn("t", row_number().over(byDay))
-      .withColumn("total", sum(col("x")).over(whole).cast("long"))
-      .withColumn("n", count(lit(1)).over(whole))
-      .withColumn("absd",
-        expr("abs(CAST(n AS DECIMAL(38,0)) * cum - CAST(t AS DECIMAL(38,0)) * total)"))
-    d.withColumn("rk",
-        row_number().over(Window.partitionBy("nk").orderBy(col("absd").desc, col("day"))))
-      .filter(col("rk") === 1)
-      .join(broadcast(Tables.nation(spark, dir)
-          .select(col("n_nationkey"), col("n_name"))),
-        col("nk") === col("n_nationkey"))
-      .select(col("n_name").as("nation"), col("day").as("cp_day"),
-        col("t").cast("long").as("cp_t"), col("n").cast("long").as("n_days"),
-        expr("(absd * 1000000) div (CAST(n AS DECIMAL(38,0)) * total)")
-          .cast("long").as("stat_micro"),
-        expr("cum div t").cast("long").as("mean_before_micro"),
-        when(col("n") === col("t"), 0L)
-          .otherwise(expr("(total - cum) div (n - t)")).cast("long")
-          .as("mean_after_micro"))
-      .withColumn("shifted", col("stat_micro") > 20000L)
-      .orderBy("nation")
-  }
-
-  /** Piecewise (segmented) trend fit at the CUSUM changepoint — q217's
-    * identify→fit theme applied to the changepoint band: q189 LOCATES the
-    * shift (max |n·cum − t·total|); this FITS what the series did on each
-    * side — per nation an OLS slope over the day index before and after
-    * t*, plus their difference, the "did the trend actually change, and
-    * by how much" readout a monitoring pipeline acts on (Muggeo-style
-    * segmented regression with the breakpoint supplied by the CUSUM
-    * statistic). Exactness: sufficient statistics in exact DECIMAL and
-    * the slope QUANTIZED to integer micro units by truncating div —
-    * q159's double ratios are fine at event-value magnitudes, but this
-    * band's statistics sit above 2^53 where decimal→double and
-    * HUGEINT→double round differently; the integer quotient is
-    * magnitude-proof. Degenerate segments (n < 2 or zero x-variance)
-    * emit NULL slopes in both engines. Shape: the memoized series base + the q189
-    * windows + one (nation, segment) aggregate on the calendar-bounded
-    * relation; the 25-row changepoint dictionary broadcasts. */
-  val q221PiecewiseTrend: QuerySpec = QuerySpec.oracle(
-    "q221_piecewise_trend",
-    """WITH rev AS (
-      |  SELECT s_nationkey AS nk, CAST(l_shipdate AS DATE) AS day,
-      |    CAST(sum(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
-      |      * (100 - CAST(CAST(l_discount AS DECIMAL(18,2)) * 100 AS BIGINT))) AS BIGINT) AS x
-      |  FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-      |  GROUP BY 1, 2),
-      |w AS (
-      |  SELECT nk, day, x,
-      |    CAST(sum(x) OVER (PARTITION BY nk ORDER BY day
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum,
-      |    row_number() OVER (PARTITION BY nk ORDER BY day) AS t,
-      |    CAST(sum(x) OVER (PARTITION BY nk) AS BIGINT) AS total,
-      |    count(*) OVER (PARTITION BY nk) AS n
-      |  FROM rev),
-      |d AS (SELECT *, abs(CAST(n AS HUGEINT) * cum - CAST(t AS HUGEINT) * total) AS absd
-      |      FROM w),
-      |cp AS (SELECT nk, t AS t_star FROM (
-      |  SELECT nk, t, row_number() OVER (PARTITION BY nk ORDER BY absd DESC, day) AS rk
-      |  FROM d) WHERE rk = 1),
-      |seg AS (SELECT d.nk, cp.t_star,
-      |    CASE WHEN d.t <= cp.t_star THEN 'before' ELSE 'after' END AS s,
-      |    CAST(d.t AS BIGINT) AS xv, d.x AS yv
-      |  FROM d JOIN cp ON cp.nk = d.nk),
-      |st AS (SELECT nk, t_star, s, CAST(count(*) AS BIGINT) AS n,
-      |    CAST(sum(xv) AS HUGEINT) AS sx, CAST(sum(xv * xv) AS HUGEINT) AS sxx,
-      |    CAST(sum(CAST(yv AS HUGEINT)) AS HUGEINT) AS sy,
-      |    CAST(sum(CAST(xv AS HUGEINT) * yv) AS HUGEINT) AS sxy
-      |  FROM seg GROUP BY 1, 2, 3),
-      |f AS (SELECT nk, t_star, s, n,
-      |    n * sxy - sx * sy AS num,
-      |    n * sxx - sx * sx AS denx
-      |  FROM st),
-      |sl AS (SELECT nk, t_star, s, n,
-      |    CASE WHEN n < 2 OR denx = 0 THEN NULL
-      |      ELSE CAST(num * 1000000 // denx AS BIGINT) END AS slope
-      |  FROM f),
-      |p AS (SELECT nk, t_star,
-      |    max(CASE WHEN s = 'before' THEN n END) AS n_before,
-      |    max(CASE WHEN s = 'after' THEN n END) AS n_after,
-      |    max(CASE WHEN s = 'before' THEN slope END) AS slope_before_micro,
-      |    max(CASE WHEN s = 'after' THEN slope END) AS slope_after_micro
-      |  FROM sl GROUP BY 1, 2)
-      |SELECT nn.n_name AS nation, CAST(t_star AS BIGINT) AS cp_t,
-      |  coalesce(n_before, 0) AS n_before, coalesce(n_after, 0) AS n_after,
-      |  slope_before_micro, slope_after_micro,
-      |  slope_after_micro - slope_before_micro AS slope_shift_micro
-      |FROM p JOIN nation nn ON nn.n_nationkey = p.nk
-      |ORDER BY nation""".stripMargin
-  ) { (spark, dir) =>
-    val rev = dailyRevenue(spark, dir)
-    val byDay = Window.partitionBy("nk").orderBy("day")
-    val whole = Window.partitionBy("nk")
-    val d = rev
-      .withColumn("cum", sum(col("x")).over(
-        byDay.rowsBetween(Window.unboundedPreceding, Window.currentRow)).cast("long"))
-      .withColumn("t", row_number().over(byDay))
-      .withColumn("total", sum(col("x")).over(whole).cast("long"))
-      .withColumn("n", count(lit(1)).over(whole))
-      .withColumn("absd",
-        expr("abs(CAST(n AS DECIMAL(38,0)) * cum - CAST(t AS DECIMAL(38,0)) * total)"))
-    val cp = d.withColumn("rk",
-        row_number().over(Window.partitionBy("nk").orderBy(col("absd").desc, col("day"))))
-      .filter(col("rk") === 1).select(col("nk"), col("t").as("t_star"))
-    val st = d.join(broadcast(cp), "nk")
-      .select(col("nk"), col("t_star"),
-        when(col("t") <= col("t_star"), "before").otherwise("after").as("s"),
-        col("t").cast("long").as("xv"), col("x").as("yv"))
-      .groupBy("nk", "t_star", "s")
-      .agg(count(lit(1)).cast("long").as("n"),
-        sum(col("xv")).cast("decimal(38,0)").as("sx"),
-        sum(col("xv") * col("xv")).cast("decimal(38,0)").as("sxx"),
-        sum(col("yv").cast("decimal(38,0)")).as("sy"),
-        sum(expr("CAST(xv AS DECIMAL(38,0)) * yv")).as("sxy"))
-    // integer micro slopes, not doubles: the sufficient statistics sit
-    // above 2^53, where Spark's decimal→double and DuckDB's
-    // HUGEINT→double can round the last bit differently — the truncating
-    // div is bit-identical at any magnitude (found by a 1-row hash
-    // mismatch at sf0.01)
-    val sl = st
-      .withColumn("num", expr("n * sxy - sx * sy"))
-      .withColumn("denx", expr("n * sxx - sx * sx"))
-      .withColumn("slope", when(col("n") < 2 || col("denx") === 0,
-        lit(null).cast("long"))
-        .otherwise(expr("(num * 1000000) div denx").cast("long")))
-    sl.groupBy("nk", "t_star")
-      .agg(max(when(col("s") === "before", col("n"))).as("n_before"),
-        max(when(col("s") === "after", col("n"))).as("n_after"),
-        max(when(col("s") === "before", col("slope"))).as("slope_before_micro"),
-        max(when(col("s") === "after", col("slope"))).as("slope_after_micro"))
-      .join(broadcast(Tables.nation(spark, dir)
-          .select(col("n_nationkey"), col("n_name"))),
-        col("nk") === col("n_nationkey"))
-      .select(col("n_name").as("nation"), col("t_star").cast("long").as("cp_t"),
-        coalesce(col("n_before"), lit(0L)).as("n_before"),
-        coalesce(col("n_after"), lit(0L)).as("n_after"),
-        col("slope_before_micro"), col("slope_after_micro"),
-        (col("slope_after_micro") - col("slope_before_micro")).as("slope_shift_micro"))
-      .orderBy("nation")
-  }
-
-  /** Two-sample Kolmogorov-Smirnov drift test — the binning-FREE member
-    * of the drift family: q187's χ² needs a bucket width (and a wrong
-    * one hides shift inside a bucket); KS compares each source's raw
-    * doc-length ECDF against the rest-of-corpus ECDF at every observed
-    * value. Exact integers over the shared denominator n_s·n_r:
-    * M = max over the value grid of |cum_s·n_r − cum_r·n_s|, reported as
-    * D·10⁶ = M·10⁶ div (n_s·n_r); the α=0.10 flag squares the classic
-    * critical value c(α)√((n_s+n_r)/(n_s·n_r)) so the comparison
-    * M²·10⁶ > c²₁₀·10⁶·(n_s+n_r)·n_s·n_r is integer-exact too
-    * (c(0.10)²·10⁶ = 1498176; internal products exceed int64 at corpus
-    * scale → decimal inside, int64/boolean out — q187's discipline).
-    * Shape at 100 TB: ONE corpus (source, value) aggregate; the grid is
-    * sources × distinct-values (both bounded dictionaries), the global
-    * CDF a dictionary-sized single-partition window, the per-source CDF
-    * a source-keyed window. The corpus is never re-scanned per source. */
-  val q191KsDrift: QuerySpec = QuerySpec.oracle(
-    "q191_ks_drift",
-    """WITH pc AS (SELECT source, n_chars AS v, count(*) AS c
-      |           FROM documents GROUP BY 1, 2),
-      |srcn AS (SELECT source, CAST(sum(c) AS BIGINT) AS n_s FROM pc GROUP BY 1),
-      |tot AS (SELECT CAST(sum(c) AS BIGINT) AS n_all FROM pc),
-      |gc AS (SELECT v, CAST(sum(sum(c)) OVER (ORDER BY v) AS BIGINT) AS cum_all
-      |       FROM pc GROUP BY v),
-      |dense AS (
-      |  SELECT s.source, g.v, coalesce(pc.c, 0) AS c
-      |  FROM (SELECT DISTINCT source FROM pc) s
-      |  CROSS JOIN (SELECT v FROM gc) g
-      |  LEFT JOIN pc ON pc.source = s.source AND pc.v = g.v),
-      |cum AS (
-      |  SELECT source, v,
-      |    CAST(sum(c) OVER (PARTITION BY source ORDER BY v) AS BIGINT) AS cum_s
-      |  FROM dense),
-      |mx AS (
-      |  SELECT c.source, n_s, n_all - n_s AS n_r,
-      |    max(abs(CAST(cum_s AS HUGEINT) * (n_all - n_s)
-      |            - CAST(gc.cum_all - cum_s AS HUGEINT) * n_s)) AS m
-      |  FROM cum c JOIN gc USING (v) JOIN srcn ON srcn.source = c.source
-      |  CROSS JOIN tot GROUP BY 1, 2, 3)
-      |SELECT source, n_s AS n_src, n_r AS n_rest,
-      |  CAST(m * 1000000 // (CAST(n_s AS HUGEINT) * n_r) AS BIGINT) AS d_micro,
-      |  m * m * 1000000 > 1498176 * CAST(n_s + n_r AS HUGEINT) * n_s * n_r
-      |    AS shifted
-      |FROM mx ORDER BY source""".stripMargin
-  ) { (spark, dir) =>
-    val pc = Tables.documents(spark, dir)
-      .groupBy(col("source"), col("n_chars").as("v"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint(eager = false) // four references below
-    val srcn = pc.groupBy("source").agg(sum(col("c")).cast("long").as("n_s"))
-    val tot = pc.agg(sum(col("c")).cast("long").as("n_all"))
-    val gc = pc.groupBy("v").agg(sum(col("c")).as("gvc"))
-      // dictionary-sized (distinct lengths) single-partition cumulative
-      .withColumn("cum_all", sum(col("gvc")).over(
-        Window.orderBy("v").rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        .cast("long"))
-      .select("v", "cum_all")
-    val dense = srcn.select("source").crossJoin(broadcast(gc.select("v")))
-      .join(pc, Seq("source", "v"), "left")
-      .withColumn("c", coalesce(col("c"), lit(0L)))
-    dense
-      .withColumn("cum_s", sum(col("c")).over(
-        Window.partitionBy("source").orderBy("v")
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)).cast("long"))
-      .join(broadcast(gc), "v")
-      .join(broadcast(srcn), "source")
-      .crossJoin(broadcast(tot))
-      // cum·n products exceed int64 at corpus scale — decimal inside,
-      // only the int64 quotient and the boolean leave (q187 discipline)
-      .withColumn("ad", expr(
-        "abs(CAST(cum_s AS DECIMAL(38,0)) * (n_all - n_s) - CAST(cum_all - cum_s AS DECIMAL(38,0)) * n_s)"))
-      .groupBy("source")
-      .agg(first(col("n_s")).as("n_s"),
-        first(col("n_all") - col("n_s")).as("n_r"),
-        max(col("ad")).as("m"))
-      .select(col("source"), col("n_s").as("n_src"), col("n_r").as("n_rest"),
-        expr("(m * 1000000) div (CAST(n_s AS DECIMAL(38,0)) * n_r)")
-          .cast("long").as("d_micro"),
-        expr("m * m * 1000000 > CAST(1498176 AS DECIMAL(38,0)) * (n_s + n_r) * n_s * n_r")
-          .as("shifted"))
-      .orderBy("source")
-  }
-
-  /** Mann-Kendall trend test — the nonparametric IS-there-a-trend
-    * verdict the series band's estimators (q177 EWMA, q184 Holt, q155
-    * Theil-Sen slope) all presuppose: S = Σ_{i<j} sgn(x_j − x_i) over
-    * each nation's monthly shipped-revenue series, entirely SIGN-based,
-    * so the statistic is exact integers end-to-end with no quantization
-    * at all. Reports S, tau_a·10⁶ = S·10⁶ div C(n,2), the tie-corrected
-    * 18·Var(S) = n(n−1)(2n+5) − Σt(t−1)(2t+5), and the α=0.10 normal-
-    * approximation flag squared into integers:
-    * S²·18·10⁶ > z²₀.₀₅·10⁶·var18 (z=1.645, z²·10⁶ = 2706025; the
-    * left side exceeds int64 only past ~10³ periods — decimal inside,
-    * boolean out). Shape at 100 TB: the corpus contributes one
-    * map-side-combined (nation, month) aggregate; the pair enumeration
-    * is an equi-join on the nation key over the CALENDAR-BOUNDED series
-    * (≤ n² per key, n = months), never over line items. */
-  val q192MannKendall: QuerySpec = QuerySpec.oracle(
-    "q192_mann_kendall",
-    """WITH rev AS (
-      |  SELECT s_nationkey AS nk, date_trunc('month', CAST(l_shipdate AS DATE)) AS mo,
-      |    CAST(sum(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
-      |      * (100 - CAST(CAST(l_discount AS DECIMAL(18,2)) * 100 AS BIGINT))) AS BIGINT) AS x
-      |  FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-      |  GROUP BY 1, 2),
-      |pairs AS (
-      |  SELECT a.nk,
-      |    CASE WHEN b.x > a.x THEN 1 WHEN b.x < a.x THEN -1 ELSE 0 END AS sg
-      |  FROM rev a JOIN rev b ON a.nk = b.nk AND b.mo > a.mo),
-      |s AS (SELECT nk, CAST(sum(sg) AS BIGINT) AS s, count(*) AS n0
-      |      FROM pairs GROUP BY 1),
-      |nn AS (SELECT nk, count(*) AS n FROM rev GROUP BY 1),
-      |ties AS (
-      |  SELECT nk, CAST(sum(t*(t-1)*(2*t+5)) AS BIGINT) AS tterm
-      |  FROM (SELECT nk, x, count(*) AS t FROM rev GROUP BY 1, 2
-      |        HAVING count(*) > 1) GROUP BY 1),
-      |v AS (
-      |  SELECT s.nk, s.s, s.n0, nn.n,
-      |    nn.n*(nn.n-1)*(2*nn.n+5) - coalesce(ties.tterm, 0) AS var18
-      |  FROM s JOIN nn USING (nk) LEFT JOIN ties USING (nk))
-      |SELECT n_name AS nation, CAST(n AS BIGINT) AS n_months, s AS kendall_s,
-      |  CAST(s * 1000000 // n0 AS BIGINT) AS tau_micro,
-      |  CAST(var18 AS BIGINT) AS var18,
-      |  CAST(s AS HUGEINT) * s * 18000000 > 2706025 * CAST(var18 AS HUGEINT)
-      |    AS trending
-      |FROM v JOIN nation ON n_nationkey = nk ORDER BY nation""".stripMargin
-  ) { (spark, dir) =>
-    val rev = Tables.lineitem(spark, dir)
-      .join(broadcast(Tables.supplier(spark, dir)
-          .select(col("s_suppkey"), col("s_nationkey"))),
-        col("l_suppkey") === col("s_suppkey"))
-      .select(col("s_nationkey").as("nk"), trunc(to_date(col("l_shipdate")), "month").as("mo"),
-        (cents(col("l_extendedprice")) * (lit(100L) - cents(col("l_discount")))).as("r"))
-      .groupBy("nk", "mo").agg(sum(col("r")).cast("long").as("x"))
-      .localCheckpoint(eager = false) // three references (pairs ×2, ties)
-    val pairs = rev.select(col("nk"), col("mo").as("moa"), col("x").as("xa"))
-      .join(rev.select(col("nk"), col("mo").as("mob"), col("x").as("xb")), Seq("nk"))
-      .filter(col("mob") > col("moa"))
-      .select(col("nk"),
-        when(col("xb") > col("xa"), 1L).when(col("xb") < col("xa"), -1L)
-          .otherwise(0L).as("sg"))
-    val s = pairs.groupBy("nk")
-      .agg(sum(col("sg")).cast("long").as("s"), count(lit(1)).as("n0"))
-    val nn = rev.groupBy("nk").agg(count(lit(1)).as("n"))
-    val ties = rev.groupBy("nk", "x").agg(count(lit(1)).as("t"))
-      .filter(col("t") > 1)
-      .groupBy("nk")
-      .agg(sum(expr("t*(t-1)*(2*t+5)")).cast("long").as("tterm"))
-    s.join(nn, "nk").join(ties, Seq("nk"), "left")
-      .withColumn("var18",
-        expr("n*(n-1)*(2*n+5)") - coalesce(col("tterm"), lit(0L)))
-      .join(broadcast(Tables.nation(spark, dir)
-          .select(col("n_nationkey"), col("n_name"))),
-        col("nk") === col("n_nationkey"))
-      .select(col("n_name").as("nation"), col("n").cast("long").as("n_months"),
-        col("s").as("kendall_s"),
-        expr("s * 1000000 div n0").cast("long").as("tau_micro"),
-        col("var18").cast("long").as("var18"),
-        // S²·18·10⁶ passes int64 only past ~10³ periods — decimal inside
-        expr("CAST(s AS DECIMAL(38,0)) * s * 18000000 > CAST(2706025 AS DECIMAL(38,0)) * var18")
-          .as("trending"))
-      .orderBy("nation")
-  }
-
-  /** Simplified-silhouette clustering audit, exact integers — the
-    * did-k-fit verdict above [[q170KmeansExact]]'s inertia: inertia
-    * always falls as k grows, silhouette does not, so THIS is the number
-    * that says whether the IVF coarse quantizer's cells are real
-    * structure or arbitrary cuts. Per point the SIMPLIFIED silhouette
-    * (Hruschka et al. — centroid distances instead of O(n²) pairwise;
-    * the standard scale-out variant) on SQUARED integer distances:
-    * s·10⁶ = (b² − a²)·10⁶ div max(a², b²) where a² is the distance to
-    * the own centroid and b² the nearest other — bounded by
-    * dims·(2·127)² under int8 quantization, so the arithmetic never
-    * leaves int64 at ANY corpus size. Reports per cluster: members,
-    * mean silhouette, and the count of negative-silhouette (misplaced)
-    * points. Centroids serve from q170's session memo (fit once, audit
-    * many); the audit itself is ONE in-row pass over the corpus (the
-    * k-struct distance array per row) + one cid-keyed aggregate. */
-  val q195Silhouette: QuerySpec = {
-    val (k, dims, rounds) = (8, 64, 3)
-    val sql =
-      s"""${kmeansSqlCtes(k, dims, rounds)},
-         |alld AS (SELECT v.vec_id, c.cid, ${d2Sql("v.qv", "c.dims")} AS dist
-         |         FROM q v CROSS JOIN c$rounds c),
-         |o AS (SELECT a.vec_id, a.cid, a.dist AS a2, min(d.dist) AS b2
-         |      FROM af a JOIN alld d ON d.vec_id = a.vec_id AND d.cid <> a.cid
-         |      GROUP BY 1, 2, 3),
-         |sil AS (SELECT vec_id, cid,
-         |  CASE WHEN greatest(a2, b2) = 0 THEN 0
-         |       ELSE (b2 - a2) * 1000000 // greatest(a2, b2) END AS s
-         |  FROM o)
-         |SELECT cid, CAST(count(*) AS BIGINT) AS n_members,
-         |  CAST(CAST(sum(s) AS BIGINT) // count(*) AS BIGINT) AS mean_sil_micro,
-         |  CAST(count(*) FILTER (WHERE s < 0) AS BIGINT) AS n_misplaced
-         |FROM sil GROUP BY cid ORDER BY cid""".stripMargin
-    QuerySpec.oracle("q195_silhouette", sql) { (spark, dir) =>
-      val quant = quantizedVecsCk(spark, dir)
-      val cents = lloydCentroidsCached(spark, dir, -1, k, dims, rounds)
-      // the kernel's (dist, cid)-sorted array (the intAssign rationale):
-      // element 1 IS array_min's assignment pick, and element 2's dist IS
-      // the min over the other cells — cids are unique, so "first other
-      // element of the sorted array" ≡ "min dist among cid ≠ own"
-      val distArr = graft.functions.IntCentroidDists.sortedDists(col("qv"), cents, dims)
-      quant.withColumn("own", element_at(distArr, 1))
-        .withColumn("b2", element_at(distArr, 2).getField("dist"))
-        .select(col("own.cid").as("cid"), col("own.dist").as("a2"), col("b2"))
-        .withColumn("s", when(greatest(col("a2"), col("b2")) === 0L, 0L)
-          .otherwise(expr("(b2 - a2) * 1000000 div greatest(a2, b2)")))
-        .groupBy("cid")
-        .agg(count(lit(1)).as("n_members"),
-          expr("CAST(sum(s) AS BIGINT)").as("sum_s"),
-          count(when(col("s") < 0L, 1)).as("n_misplaced"))
-        .select(col("cid"), col("n_members"),
-          expr("sum_s div n_members").cast("long").as("mean_sil_micro"),
-          col("n_misplaced"))
-        .orderBy("cid")
-    }
-  }
-
-  /** Cohen's kappa inter-labeler agreement, exact integers — the label-QA
-    * primitive every weak-supervision / auto-labeling pipeline needs
-    * before trusting a heuristic rater: raw agreement rewards a rater
-    * that always says the majority class; kappa subtracts the agreement
-    * EXPECTED from the raters' marginals. Here the two deterministic
-    * raters are independent length heuristics (3-class char-count tercile
-    * vs 3-class whitespace-count tercile — calibrated to correlate, not
-    * coincide), and per source
-    * κ·10⁶ = (agree·n − Σ_c naᶜ·nbᶜ)·10⁶ div (n² − Σ_c naᶜ·nbᶜ)
-    * with the products in internal decimal (n² passes int64 per source
-    * at corpus scale — q187's discipline) and only the int64 quotient
-    * emitted, so the agreement statistic ITSELF hash-verifies. Any real
-    * rater pair (model vs heuristic, two model versions) plugs into the
-    * same two class columns. Shape at 100 TB: ONE map-side-combined
-    * per-source conditional-count aggregate — nine FILTER counts in a
-    * single pass, no joins, no per-class regrouping. */
-  val q196CohensKappa: QuerySpec = QuerySpec.oracle(
-    "q196_cohens_kappa",
-    """WITH l AS (
-      |  SELECT source, least(n_chars // 200, 2) AS a,
-      |    least((length(text) - length(replace(text, ' ', ''))) // 35, 2) AS b
-      |  FROM documents),
-      |agg AS (
-      |  SELECT source, count(*) AS n, count(*) FILTER (WHERE a = b) AS agree,
-      |    count(*) FILTER (WHERE a = 0) AS na0,
-      |    count(*) FILTER (WHERE a = 1) AS na1,
-      |    count(*) FILTER (WHERE a = 2) AS na2,
-      |    count(*) FILTER (WHERE b = 0) AS nb0,
-      |    count(*) FILTER (WHERE b = 1) AS nb1,
-      |    count(*) FILTER (WHERE b = 2) AS nb2
-      |  FROM l GROUP BY 1)
-      |SELECT source, CAST(n AS BIGINT) AS n_docs, CAST(agree AS BIGINT) AS n_agree,
-      |  CAST(agree * 1000000 // n AS BIGINT) AS po_micro,
-      |  CAST(CASE WHEN n*n - (na0*nb0 + na1*nb1 + na2*nb2) = 0 THEN 0
-      |    ELSE CAST(agree*n - (na0*nb0 + na1*nb1 + na2*nb2) AS HUGEINT) * 1000000
-      |         // (n*n - (na0*nb0 + na1*nb1 + na2*nb2)) END AS BIGINT) AS kappa_micro
-      |FROM agg ORDER BY source""".stripMargin
-  ) { (spark, dir) =>
-    def cls(a: Long): Column => Column = c => count(when(c === a, 1))
-    val l = Tables.documents(spark, dir)
-      .select(col("source"),
-        expr("least(n_chars div 200, 2)").as("a"),
-        expr("least((length(text) - length(replace(text, ' ', ''))) div 35, 2)")
-          .as("b"))
-    l.groupBy("source")
-      .agg(count(lit(1)).as("n"), count(when(col("a") === col("b"), 1)).as("agree"),
-        cls(0)(col("a")).as("na0"), cls(1)(col("a")).as("na1"), cls(2)(col("a")).as("na2"),
-        cls(0)(col("b")).as("nb0"), cls(1)(col("b")).as("nb1"), cls(2)(col("b")).as("nb2"))
-      .withColumn("pe_num", expr("na0*nb0 + na1*nb1 + na2*nb2"))
-      .select(col("source"), col("n").cast("long").as("n_docs"),
-        col("agree").cast("long").as("n_agree"),
-        expr("agree * 1000000 div n").cast("long").as("po_micro"),
-        // agree·n·10⁶ passes int64 at corpus scale — decimal inside,
-        // int64 quotient out (q187 discipline)
-        when(expr("n*n - pe_num") === 0L, 0L)
-          .otherwise(expr(
-            "(CAST(agree AS DECIMAL(38,0)) * n - pe_num) * 1000000 div (CAST(n AS DECIMAL(38,0)) * n - pe_num)"))
-          .cast("long").as("kappa_micro"))
-      .orderBy("source")
-  }
-
-  /** Shuffle-skew audit with exact Gini concentration — the diagnosis
-    * that decides WHEN q74/q81's salting mitigation is worth its cost:
-    * for each join/aggregation key the engine shuffles on, the key-
-    * frequency concentration (Gini over per-key counts) and the hottest
-    * key's row share, flagged hot when one key owns more than 1/32 of
-    * the relation (one reducer's fair share at 32-way parallelism — the
-    * salting trigger). Exact at ANY key cardinality WITHOUT a global
-    * rank sort: Gini's rank-weighted sum is computed from the
-    * COUNT-OF-COUNTS histogram — all keys tied at count v occupy a
-    * contiguous rank block, whose Σ(2i−K−1)·v collapses to the closed
-    * form v·(2·(s·m + m(m+1)/2) − (K+1)·m) with s the cumulative
-    * multiplicity below v — so the per-column plan is one map-side-
-    * combined key-count aggregate, a TINY (distinct count values)
-    * histogram, and one histogram-sized window. Products pass int64 at
-    * corpus scale (N·K²) — decimal inside, int64 out (q187). */
-  val q197SkewAudit: QuerySpec = {
-    val audited = Seq(
-      ("lineitem.l_suppkey", "lineitem", "l_suppkey"),
-      ("lineitem.l_partkey", "lineitem", "l_partkey"),
-      ("orders.o_custkey", "orders", "o_custkey"),
-      ("events.user_id", "events", "user_id"),
-      ("documents.source", "documents", "source"))
-    val hotMicro = 1000000L / 32
-    val sqlAudits = audited.map { case (label, table, key) =>
-      val from =
-        if (table == "events") "(SELECT CAST(ts AS TIMESTAMP) AS ts, user_id FROM events)"
-        else table
-      s"""SELECT '$label' AS key_col, n_rows, n_keys, top1_share_micro, gini_micro,
-         |  top1_share_micro > $hotMicro AS hot
-         |FROM (
-         |  WITH c AS (SELECT $key AS k, count(*) AS cnt FROM $from GROUP BY 1),
-         |  h AS (SELECT cnt AS v, count(*) AS m FROM c GROUP BY 1),
-         |  w AS (SELECT v, m,
-         |      CAST(coalesce(sum(m) OVER (ORDER BY v
-         |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS s,
-         |      CAST(sum(v*m) OVER () AS BIGINT) AS n,
-         |      CAST(sum(m) OVER () AS BIGINT) AS kk,
-         |      CAST(max(v) OVER () AS BIGINT) AS mx
-         |    FROM h)
-         |  SELECT CAST(any_value(n) AS BIGINT) AS n_rows,
-         |    CAST(any_value(kk) AS BIGINT) AS n_keys,
-         |    CAST(any_value(mx) * 1000000 // any_value(n) AS BIGINT) AS top1_share_micro,
-         |    CAST(CAST(sum(CAST(v AS HUGEINT) * (2*(s*m + m*(m+1)//2) - (kk+1)*m)) AS HUGEINT)
-         |         * 1000000 // (CAST(any_value(kk) AS HUGEINT) * any_value(n)) AS BIGINT)
-         |      AS gini_micro
-         |  FROM w)""".stripMargin
-    }
-    QuerySpec.oracle(
-      "q197_skew_audit",
-      sqlAudits.mkString("", "\nUNION ALL\n", "\nORDER BY key_col")
-    ) { (spark, dir) =>
-      def one(df: DataFrame, key: String, label: String): DataFrame = {
-        val c = df.groupBy(col(key).as("k")).agg(count(lit(1)).as("cnt"))
-        val h = c.groupBy(col("cnt").as("v")).agg(count(lit(1)).as("m"))
-        // histogram-sized window: rows = DISTINCT count values, bounded
-        // far below the key dictionary, let alone the corpus
-        val byV = Window.orderBy("v")
-        val all = Window.partitionBy()
-        h.withColumn("s", coalesce(sum(col("m")).over(
-            byV.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)).cast("long"))
-          .withColumn("n", sum(col("v") * col("m")).over(all).cast("long"))
-          .withColumn("kk", sum(col("m")).over(all).cast("long"))
-          .withColumn("mx", max(col("v")).over(all).cast("long"))
-          // rank-block closed form exceeds int64 at corpus scale (N·K²)
-          // — decimal inside, int64 quotient out (q187 discipline)
-          .agg(first(col("n")).as("n_rows"), first(col("kk")).as("n_keys"),
-            expr("first(mx) * 1000000 div first(n)").cast("long")
-              .as("top1_share_micro"),
-            expr("""(sum(CAST(v AS DECIMAL(38,0)) * (2*(s*m + m*(m+1) div 2) - (kk+1)*m))
-                    * 1000000) div (CAST(first(kk) AS DECIMAL(38,0)) * first(n))""")
-              .cast("long").as("gini_micro"))
-          .select(lit(label).as("key_col"), col("n_rows"), col("n_keys"),
-            col("top1_share_micro"), col("gini_micro"),
-            (col("top1_share_micro") > hotMicro).as("hot"))
-      }
-      one(Tables.lineitem(spark, dir), "l_suppkey", "lineitem.l_suppkey")
-        .unionByName(one(Tables.lineitem(spark, dir), "l_partkey", "lineitem.l_partkey"))
-        .unionByName(one(Tables.orders(spark, dir), "o_custkey", "orders.o_custkey"))
-        .unionByName(one(Tables.events(spark, dir), "user_id", "events.user_id"))
-        .unionByName(one(Tables.documents(spark, dir), "source", "documents.source"))
-        .orderBy("key_col")
-    }
-  }
-
-  /** Join-cardinality estimation via CMS inner product vs exact — the
-    * OPTIMIZER-statistics question underneath every join reorder: how
-    * big is A ⋈ B before running it? The AMS/CMS answer is the sketch
-    * inner product est = min_j Σ_w cmsA[j][w]·cmsB[j][w] (q173's cells,
-    * same md5 rows), always an OVERestimate with collision noise bounded
-    * by ~N_A·N_B/w — and the report carries that bound as a column, so
-    * the three audited joins show the three regimes the estimator
-    * lives in: a self-join explosion where signal ≫ noise (partkey,
-    * est within 2× at w=2048), a medium case (user_id, within 3%), and
-    * a 1:1 key where the true size sits BELOW the noise floor
-    * (orderkey, the estimate is the bound — exactly when an optimizer
-    * must not trust it). Exact sizes come from key-count dictionaries
-    * (Σ c_A·c_B). All integers; products exceed int64 at corpus scale →
-    * decimal inside (q187). Shape at 100 TB: per relation ONE
-    * map-side-combined (j, bucket) cell aggregate (fixed Σd·w state);
-    * inner products join sketch cells, never rows; exact runs on the
-    * key dictionaries. */
-  val q198JoinCardEst: QuerySpec = {
-    val (d, widths) = (4, Seq(256, 2048))
-    // ONE md5 per row, d rows derived by Kirsch-Mitzenmacher double
-    // hashing (h1 + j·h2, h2 forced odd — the q206 bootstrap's trick,
-    // published for exactly this Bloom/CMS use): the per-j md5 form cost
-    // ~5M hashes per pass (VERDICT r18's trio audit) where this costs
-    // ~1.25M plus integer arithmetic, identical estimator guarantees.
-    def sketchSql(src: String, key: String, name: String): String = {
-      val grid = (for { w <- widths; j <- 0 until d } yield s"($w, $j)").mkString(", ")
-      s"""$name AS (
-         |    SELECT w, j, (h1 + j * h2) % w AS bucket, count(*) AS c FROM (
-         |      SELECT ('0x' || substring(md5(CAST($key AS VARCHAR)), 1, 15))::BIGINT AS h1,
-         |        ('0x' || substring(md5(CAST($key AS VARCHAR)), 17, 15))::BIGINT | 1 AS h2
-         |      FROM $src) CROSS JOIN (VALUES $grid) AS g(w, j)
-         |    GROUP BY 1, 2, 3)""".stripMargin
-    }
-    def ipSql(sa: String, sb: String, ex: String, na: String, nb: String,
-              label: String): String =
-      s"""SELECT '$label' AS join_key, CAST(w AS BIGINT) AS width,
-         |    (SELECT n FROM $na) AS n_left, (SELECT n FROM $nb) AS n_right,
-         |    (SELECT x FROM $ex) AS exact, CAST(min(s) AS BIGINT) AS est_cms,
-         |    CAST(min(s) - (SELECT x FROM $ex) AS BIGINT) AS overestimate,
-         |    CAST(CAST((SELECT n FROM $na) AS HUGEINT) * (SELECT n FROM $nb) // w AS BIGINT)
-         |      AS noise_bound
-         |  FROM (SELECT w, j, sum(CAST(a.c AS HUGEINT) * b.c) AS s
-         |        FROM $sa a JOIN $sb b USING (w, j, bucket) GROUP BY 1, 2)
-         |  GROUP BY w""".stripMargin
-    QuerySpec.oracle(
-      "q198_join_card_est",
-      s"""WITH events2 AS (SELECT user_id FROM events),
-         |${sketchSql("lineitem", "l_partkey", "sp")},
-         |${sketchSql("events2", "user_id", "se")},
-         |${sketchSql("orders", "o_orderkey", "so")},
-         |${sketchSql("lineitem", "l_orderkey", "sl")},
-         |xp AS (SELECT CAST(sum(CAST(c AS HUGEINT) * c) AS BIGINT) AS x
-         |       FROM (SELECT count(*) AS c FROM lineitem GROUP BY l_partkey)),
-         |xe AS (SELECT CAST(sum(CAST(c AS HUGEINT) * c) AS BIGINT) AS x
-         |       FROM (SELECT count(*) AS c FROM events2 GROUP BY user_id)),
-         |xo AS (SELECT CAST(sum(CAST(a.c AS HUGEINT) * b.c) AS BIGINT) AS x
-         |       FROM (SELECT l_orderkey AS k, count(*) AS c FROM lineitem GROUP BY 1) a
-         |       JOIN (SELECT o_orderkey AS k, count(*) AS c FROM orders GROUP BY 1) b
-         |       USING (k)),
-         |nl AS (SELECT CAST(count(*) AS BIGINT) AS n FROM lineitem),
-         |ne AS (SELECT CAST(count(*) AS BIGINT) AS n FROM events2),
-         |no AS (SELECT CAST(count(*) AS BIGINT) AS n FROM orders)
-         |${ipSql("sp", "sp", "xp", "nl", "nl", "lineitem.l_partkey x lineitem.l_partkey")}
-         |UNION ALL ${ipSql("se", "se", "xe", "ne", "ne", "events.user_id x events.user_id")}
-         |UNION ALL ${ipSql("sl", "so", "xo", "nl", "no", "lineitem.l_orderkey x orders.o_orderkey")}
-         |ORDER BY join_key, width""".stripMargin
-    ) { (spark, dir) =>
-      def sketchOf(df: DataFrame, key: String): DataFrame = {
-        // ONE md5 per row; the d hash rows and both widths fan out with
-        // Kirsch-Mitzenmacher arithmetic only (h1 + j·h2 mod w, h2 odd).
-        // Both substrings read the same md5 subtree — codegen CSE
-        // evaluates it once. h1 + 3·h2 < 2^62: no overflow, stays nonneg.
-        // NOTE (r21): deliberately hashes the STREAM, not the key
-        // dictionary — the q173 dictionary trick measured SLOWER here
-        // (1.94 → 2.1 s): this aggregate map-side-combines into fixed
-        // Σd·w cell state (no real shuffle), while the dictionary detour
-        // adds a genuine key shuffle to save md5s that aren't the
-        // bottleneck.
-        val md = md5(col(key).cast("string"))
-        // all d·|widths| cells in ONE fused buffer aggregate (r21): the
-        // explode form materialized 8 struct rows per input row through a
-        // hash aggregate; CmsCellsAggregate does 8 array increments into
-        // fixed Σd·w state — identical cells (same Kirsch-Mitzenmacher
-        // arithmetic, per-bucket addition is order-free), measured ~1.9×
-        // on the lineitem sketch stages
-        df.select(
-            conv(substring(md, 1, 15), 16, 10).cast("long").as("h1"),
-            conv(substring(md, 17, 15), 16, 10).cast("long")
-              .bitwiseOR(lit(1L)).as("h2"))
-          .agg(graft.functions.CmsCells.cmsCells(col("h1"), col("h2"), widths, d)
-            .as("cells"))
-          .select(explode(col("cells")).as("wjbc"))
-          .select(col("wjbc.w").as("w"), col("wjbc.j").as("j"),
-            col("wjbc.bucket").as("bucket"), col("wjbc.c").as("c"))
-      }
-      def keyCounts(df: DataFrame, key: String): DataFrame =
-        df.groupBy(col(key).as("k")).agg(count(lit(1)).as("c"))
-      def audit(a: (DataFrame, String), b: (DataFrame, String), self: Boolean,
-                label: String): DataFrame = {
-        val skA = sketchOf(a._1, a._2)
-        // a self-join audit needs ONE sketch build — reusing the plan
-        // lets AQE serve both join sides from the same exchange instead
-        // of hashing the relation twice (d md5s per row are the cost)
-        val skB = if (self) skA else sketchOf(b._1, b._2)
-        // sketch-cell products pass int64 at corpus scale (counts up to
-        // N per cell) — decimal inside, int64 out (q187 discipline)
-        val est = skA.join(skB.select(col("w").as("bw"), col("j").as("bj"),
-              col("bucket").as("bb"), col("c").as("bc")),
-            col("bw") === col("w") && col("bj") === col("j") && col("bb") === col("bucket"))
-          .groupBy("w", "j")
-          .agg(expr("sum(CAST(c AS DECIMAL(38,0)) * bc)").as("s"))
-          .groupBy("w").agg(min(col("s")).as("est"))
-        val exact =
-          if (self) keyCounts(a._1, a._2)
-            .agg(expr("CAST(sum(CAST(c AS DECIMAL(38,0)) * c) AS BIGINT)").as("x"))
-          else keyCounts(a._1, a._2).join(
-              keyCounts(b._1, b._2).select(col("k"), col("c").as("c2")), "k")
-            .agg(expr("CAST(sum(CAST(c AS DECIMAL(38,0)) * c2) AS BIGINT)").as("x"))
-        val ns = a._1.agg(count(lit(1)).as("n_left"))
-          .crossJoin(b._1.agg(count(lit(1)).as("n_right")))
-        est.crossJoin(broadcast(exact)).crossJoin(broadcast(ns))
-          .select(lit(label).as("join_key"), col("w").as("width"),
-            col("n_left").cast("long").as("n_left"),
-            col("n_right").cast("long").as("n_right"), col("x").as("exact"),
-            col("est").cast("long").as("est_cms"),
-            (col("est") - col("x")).cast("long").as("overestimate"),
-            expr("(CAST(n_left AS DECIMAL(38,0)) * n_right) div width")
-              .cast("long").as("noise_bound"))
-      }
-      val li = Tables.lineitem(spark, dir)
-      val ev = Tables.events(spark, dir).select("user_id")
-      val or = Tables.orders(spark, dir)
-      audit((li, "l_partkey"), (li, "l_partkey"), self = true,
-          "lineitem.l_partkey x lineitem.l_partkey")
-        .unionByName(audit((ev, "user_id"), (ev, "user_id"), self = true,
-          "events.user_id x events.user_id"))
-        .unionByName(audit((li, "l_orderkey"), (or, "o_orderkey"), self = false,
-          "lineitem.l_orderkey x orders.o_orderkey"))
-        .orderBy("join_key", "width")
-    }
-  }
-
-  /** Benford first-digit conformance audit — the forensic data-quality
-    * gate for MONEY columns (fabricated or unit-mangled feeds break the
-    * log-uniform leading-digit law long before totals look wrong): per
-    * audited amount column, the observed first-significant-digit
-    * distribution against Benford's p_d = log10(1+1/d), with the per-
-    * digit χ² contribution — the digits that carry the deviation are
-    * the report, not just the verdict. Exactness: the nine Benford
-    * probabilities are Scala-computed micro literals embedded in BOTH
-    * engines (q149's shared-constant discipline); the first digit comes
-    * from the integer-cents STRING prefix (bigint rendering is
-    * identical everywhere, no float log10); each χ² term is
-    * (o·10⁶ − n·p)² div (n·p) with the square in internal decimal
-    * (q187). Shape at 100 TB: ONE map-side-combined (col, digit)
-    * aggregate over the fact table — the 9-row Benford grid is a
-    * literal. */
-  val q199BenfordAudit: QuerySpec = {
-    val benfordMicro: Seq[Long] = (1 to 9)
-      .map(dd => math.round(math.log10(1.0 + 1.0 / dd) * 1000000))
-    val gridSql = benfordMicro.zipWithIndex
-      .map { case (p, i) => s"(${i + 1}, $p)" }.mkString(", ")
-    def centsSql(c: String): String =
-      s"CAST(CAST($c AS DECIMAL(18,2)) * 100 AS BIGINT)"
-    QuerySpec.oracle(
-      "q199_benford_audit",
-      s"""WITH amounts AS (
-         |  SELECT 'lineitem.l_extendedprice' AS col,
-         |    ${centsSql("l_extendedprice")} AS cents FROM lineitem
-         |  UNION ALL
-         |  SELECT 'orders.o_totalprice', ${centsSql("o_totalprice")} FROM orders),
-         |o AS (
-         |  SELECT col, CAST(substring(CAST(cents AS VARCHAR), 1, 1) AS BIGINT) AS digit,
-         |    count(*) AS o
-         |  FROM amounts GROUP BY 1, 2),
-         |n AS (SELECT col, CAST(sum(o) AS BIGINT) AS n FROM o GROUP BY 1),
-         |g AS (SELECT * FROM (VALUES $gridSql) AS t(digit, p_micro))
-         |SELECT n.col AS col, CAST(g.digit AS BIGINT) AS digit,
-         |  CAST(coalesce(o.o, 0) AS BIGINT) AS n_obs,
-         |  CAST(coalesce(o.o, 0) * 1000000 // n.n AS BIGINT) AS obs_share_micro,
-         |  CAST(g.p_micro AS BIGINT) AS benford_micro,
-         |  CAST((CAST(coalesce(o.o, 0) AS HUGEINT)*1000000 - CAST(n.n AS HUGEINT)*g.p_micro)
-         |       * (CAST(coalesce(o.o, 0) AS HUGEINT)*1000000 - CAST(n.n AS HUGEINT)*g.p_micro)
-         |       // (CAST(n.n AS HUGEINT) * g.p_micro * 1000000) AS BIGINT)
-         |    AS chi2_term_micro
-         |FROM n CROSS JOIN g
-         |LEFT JOIN o ON o.col = n.col AND o.digit = g.digit
-         |ORDER BY col, digit""".stripMargin
-    ) { (spark, dir) =>
-      import spark.implicits._
-      val amounts = Tables.lineitem(spark, dir)
-        .select(lit("lineitem.l_extendedprice").as("col"),
-          cents(col("l_extendedprice")).as("cents"))
-        .unionByName(Tables.orders(spark, dir)
-          .select(lit("orders.o_totalprice").as("col"),
-            cents(col("o_totalprice")).as("cents")))
-      val o = amounts
-        .select(col("col"),
-          substring(col("cents").cast("string"), 1, 1).cast("long").as("digit"))
-        .groupBy("col", "digit").agg(count(lit(1)).as("o"))
-      val n = o.groupBy("col").agg(sum(col("o")).cast("long").as("n"))
-      val g = benfordMicro.zipWithIndex
-        .map { case (p, i) => ((i + 1).toLong, p) }.toDF("digit", "p_micro")
-      n.crossJoin(broadcast(g))
-        .join(o, Seq("col", "digit"), "left")
-        .withColumn("n_obs", coalesce(col("o"), lit(0L)))
-        // o·10⁶ and n·p each pass int64 at corpus scale — BOTH factors run
-        // in decimal before the multiply, not just the squared copy
-        // (ADVICE r18, the q187 fix)
-        .withColumn("d", expr(
-          "CAST(n_obs AS DECIMAL(38,0)) * 1000000 - CAST(n AS DECIMAL(38,0)) * p_micro"))
-        .select(col("col"), col("digit"), col("n_obs"),
-          expr("n_obs * 1000000 div n").cast("long").as("obs_share_micro"),
-          col("p_micro").as("benford_micro"),
-          expr("(d * d) div (CAST(n AS DECIMAL(38,0)) * p_micro * 1000000)")
-            .cast("long").as("chi2_term_micro"))
-        .orderBy("col", "digit")
-    }
-  }
-
-  /** First-order Markov behavior model over event sequences — the
-    * transition structure q98's raw paths only enumerate: per user the
-    * (event → next event) stream (lead window over event time), the
-    * row-normalized transition matrix in integer micro-probabilities,
-    * and the model's STATIONARY distribution — where user attention
-    * settles in the long run, the single most-quoted number of a
-    * behavior model. Exactness: the matrix is dictionary-bounded
-    * (|event_type|² cells), so it collects once and the power iteration
-    * runs eagerly over integer micro units — π'_j = Σ_i π_i·p_ij div 10⁶
-    * with PER-TERM truncation, the q136 recurrence discipline — and the
-    * oracle unrolls the identical eight rounds as generated CTEs
-    * (eagerByDesign, the Lloyd/BPE contract). Shape at 100 TB: the
-    * corpus contributes ONE user-keyed lead window + one (from, to)
-    * aggregate; everything after lives on the 25-cell dictionary. */
-  val q200MarkovStationary: QuerySpec = {
-    val (k0, rounds) = (5, 8) // |event_type| at every sf; fixpoint ≤ 8
-    val piInit = 1000000L / k0
-    val roundCtes = (1 to rounds).map { r =>
-      s"""pi$r AS (
-         |  SELECT tr.to_type AS t,
-         |    CAST(sum(pi.p * tr.p_micro // 1000000) AS BIGINT) AS p
-         |  FROM pi${r - 1} pi JOIN tr ON tr.from_type = pi.t GROUP BY 1)""".stripMargin
-    }
-    QuerySpec.oracle(
-      "q200_markov_stationary",
-      s"""WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id, event_type
-         |           FROM events),
-         |seq AS (
-         |  SELECT event_type AS from_type,
-         |    lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-         |      AS to_type
-         |  FROM e),
-         |c AS (SELECT from_type, to_type, count(*) AS cnt FROM seq
-         |      WHERE to_type IS NOT NULL GROUP BY 1, 2),
-         |tot AS (SELECT from_type, CAST(sum(cnt) AS BIGINT) AS n_out FROM c GROUP BY 1),
-         |tr AS (SELECT c.from_type, c.to_type,
-         |         CAST(c.cnt * 1000000 // t.n_out AS BIGINT) AS p_micro
-         |       FROM c JOIN tot t USING (from_type)),
-         |pi0 AS (SELECT from_type AS t, CAST($piInit AS BIGINT) AS p FROM tot),
-         |${roundCtes.mkString(",\n")}
-         |SELECT t.from_type AS event_type, t.n_out,
-         |  CAST(coalesce(s.p_micro, 0) AS BIGINT) AS p_self_micro,
-         |  CAST(pi.p AS BIGINT) AS stationary_micro
-         |FROM tot t
-         |JOIN pi$rounds pi ON pi.t = t.from_type
-         |LEFT JOIN tr s ON s.from_type = t.from_type AND s.to_type = t.from_type
-         |ORDER BY event_type""".stripMargin
-    ) { (spark, dir) =>
-      import spark.implicits._
-      val seq0 = Tables.events(spark, dir)
-        .select(col("event_type").as("from_type"),
-          lead(col("event_type"), 1).over(
-            Window.partitionBy("user_id").orderBy(col("ts"), col("event_id")))
-            .as("to_type"))
-        .filter(col("to_type").isNotNull)
-      val c = seq0.groupBy("from_type", "to_type").agg(count(lit(1)).as("cnt"))
-        .localCheckpoint(eager = false) // referenced by tot, tr, and the collect
-      val tot = c.groupBy("from_type").agg(sum(col("cnt")).cast("long").as("n_out"))
-      val tr = c.join(tot, "from_type")
-        .select(col("from_type"), col("to_type"),
-          expr("cnt * 1000000 div n_out").cast("long").as("p_micro"))
-      // the matrix is |event_type|² cells — dictionary-bounded eager
-      // state (the Lloyd/BPE eagerByDesign contract); the power
-      // iteration is exact integer arithmetic shared with the oracle
-      val cells = tr.collect()
-        .map(r => (r.getString(0), r.getString(1), r.getAs[Long]("p_micro")))
-      val types = cells.map(_._1).distinct.sorted
-      var pi: Map[String, Long] = types.map(_ -> piInit).toMap
-      for (_ <- 1 to rounds) {
-        pi = types.map { j =>
-          j -> cells.filter(_._2 == j)
-            .map { case (i, _, p) => pi.getOrElse(i, 0L) * p / 1000000L }.sum
-        }.toMap
-      }
-      val piDf = pi.toSeq.toDF("event_type", "stationary_micro")
-      tot.withColumnRenamed("from_type", "event_type")
-        .join(broadcast(tr.filter(col("from_type") === col("to_type"))
-            .select(col("from_type").as("event_type"),
-              col("p_micro").as("self_p"))),
-          Seq("event_type"), "left")
-        .join(broadcast(piDf), "event_type")
-        .select(col("event_type"), col("n_out"),
-          coalesce(col("self_p"), lit(0L)).as("p_self_micro"),
-          col("stationary_micro"))
-        .orderBy("event_type")
-    }
-  }
-
-  /** A/B conversion significance via the exact 2×2 χ² closed form — the
-    * experimentation primitive beside the drift family: per goal event,
-    * (user, day) units that SAW a view are split into arms by the
-    * deterministic user-id parity and the conversion-rate difference is
-    * tested with χ² = N(ad−bc)²/((a+b)(c+d)(a+c)(b+d)) — the 2×2 case
-    * collapses to one integer ratio, so the statistic hash-verifies with
-    * NO quantization of intermediate expectations (contrast q187's
-    * binned form). Because the parity split carries no treatment, this
-    * doubles as the A/A HARNESS TEST every experimentation platform
-    * runs first: all three goals read non-significant at α=0.05
-    * (flag threshold χ² > 3.841459), which is the correct answer — a
-    * pipeline that fabricates significance on an A/A split is broken.
-    * Products reach N⁵ → internal decimal (q187 discipline). Shape at
-    * 100 TB: ONE (user, arm, day) conditional-max aggregate over the
-    * event stream, a per-unit goal explode bounded by |goals|, one
-    * goal-keyed cell aggregate. */
-  val q201AbTest: QuerySpec = QuerySpec.oracle(
-    "q201_ab_test",
-    """WITH ud AS (
-      |  SELECT user_id, user_id % 2 AS arm, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-      |    max(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS saw,
-      |    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS bought,
-      |    max(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS clicked,
-      |    max(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) AS signed
-      |  FROM events GROUP BY 1, 2, 3),
-      |g AS (
-      |  SELECT goal, arm, conv FROM (SELECT * FROM ud WHERE saw = 1) u,
-      |    LATERAL (VALUES ('purchase', bought), ('click', clicked),
-      |             ('signup', signed)) AS t(goal, conv)),
-      |cells AS (
-      |  SELECT goal,
-      |    count(*) FILTER (WHERE arm = 0 AND conv = 1) AS a,
-      |    count(*) FILTER (WHERE arm = 0 AND conv = 0) AS b,
-      |    count(*) FILTER (WHERE arm = 1 AND conv = 1) AS c,
-      |    count(*) FILTER (WHERE arm = 1 AND conv = 0) AS d
-      |  FROM g GROUP BY 1)
-      |SELECT goal, CAST(a + b AS BIGINT) AS n_arm0, CAST(c + d AS BIGINT) AS n_arm1,
-      |  CAST(a * 1000000 // (a + b) AS BIGINT) AS rate0_micro,
-      |  CAST(c * 1000000 // (c + d) AS BIGINT) AS rate1_micro,
-      |  CAST(CASE WHEN (a+b)*(c+d)*(a+c)*(b+d) = 0 THEN 0
-      |    ELSE CAST(a+b+c+d AS HUGEINT) * (a*d - b*c) * (a*d - b*c) * 1000000
-      |      // (CAST(a+b AS HUGEINT) * (c+d) * (a+c) * (b+d)) END AS BIGINT)
-      |    AS chi2_micro,
-      |  CASE WHEN (a+b)*(c+d)*(a+c)*(b+d) = 0 THEN false
-      |    ELSE CAST(a+b+c+d AS HUGEINT) * (a*d - b*c) * (a*d - b*c) * 1000000
-      |      // (CAST(a+b AS HUGEINT) * (c+d) * (a+c) * (b+d)) > 3841459 END
-      |    AS significant
-      |FROM cells ORDER BY goal""".stripMargin
-  ) { (spark, dir) =>
-    def flag(t: String): Column =
-      max(when(col("event_type") === t, 1L).otherwise(0L))
-    val ud = Tables.events(spark, dir)
-      .groupBy(col("user_id"), (col("user_id") % 2).as("arm"),
-        to_date(col("ts")).as("day"))
-      .agg(flag("view").as("saw"), flag("purchase").as("bought"),
-        flag("click").as("clicked"), flag("signup").as("signed"))
-      .filter(col("saw") === 1L)
-    val g = ud.select(col("arm"), explode(array(
-        struct(lit("purchase").as("goal"), col("bought").as("conv")),
-        struct(lit("click").as("goal"), col("clicked").as("conv")),
-        struct(lit("signup").as("goal"), col("signed").as("conv")))).as("gc"))
-      .select(col("arm"), col("gc.goal").as("goal"), col("gc.conv").as("conv"))
-    g.groupBy("goal")
-      .agg(count(when(col("arm") === 0 && col("conv") === 1L, 1)).as("a"),
-        count(when(col("arm") === 0 && col("conv") === 0L, 1)).as("b"),
-        count(when(col("arm") === 1 && col("conv") === 1L, 1)).as("c"),
-        count(when(col("arm") === 1 && col("conv") === 0L, 1)).as("d"))
-      // N·(ad−bc)²·10⁶ reaches N⁵ — decimal inside, int64/boolean out
-      .withColumn("den", expr("CAST(a+b AS DECIMAL(38,0)) * (c+d) * (a+c) * (b+d)"))
-      .withColumn("chi2", when(col("den") === 0, 0L).otherwise(
-        expr("(CAST(a+b+c+d AS DECIMAL(38,0)) * (a*d - b*c) * (a*d - b*c) * 1000000) div den"))
-        .cast("long"))
-      .select(col("goal"), (col("a") + col("b")).cast("long").as("n_arm0"),
-        (col("c") + col("d")).cast("long").as("n_arm1"),
-        expr("a * 1000000 div (a + b)").cast("long").as("rate0_micro"),
-        expr("c * 1000000 div (c + d)").cast("long").as("rate1_micro"),
-        col("chi2").as("chi2_micro"),
-        (col("chi2") > 3841459L).as("significant"))
-      .orderBy("goal")
-  }
-
-  /** McNemar paired-recall test: IVF vs sign-LSH on the SAME ground
-    * truth — the missing inferential step above the ANN recall reports
-    * (q166/q171 say WHICH method catches more; this says whether the
-    * edge is statistically real or an artifact of this query sample).
-    * Items are the exact integer top-5 (query, neighbor) pairs; per item
-    * each method either catches it in its candidate set or not, and
-    * McNemar uses only the DISCORDANT counts: χ²·10⁶ = (b−c)²·10⁶
-    * div (b+c) against χ²₁(0.05) = 3.841459 — paired design, so the
-    * shared easy/hard items cancel instead of diluting the comparison.
-    * Both candidate generators are the verified integer machines (q171's
-    * 2-probe IVF over q170's memoized centroids; q166's 8×8 literal
-    * integer planes), so every cell of the 2×2 discordance table
-    * hash-verifies. Shape at 100 TB: the two candidate relations are the
-    * audits' own bounded shapes (probed cells / bucket joins); the test
-    * itself is two left joins on the top-5 items + ONE aggregate. */
-  val q202AnnMcnemar: QuerySpec = {
-    val (k, dims, rounds, nProbe) = (8, 64, 3, 2)
-    val planes = intPlanes(8, 8, dims, 43L)
-    def sqlIntDot(vecExpr: String, lits: Array[Long]): String =
-      s"list_reduce(list_prepend(0, list_transform(list_zip($vecExpr, " +
-        s"[${lits.mkString(",")}]), p -> p[1]*p[2])), (acc, v) -> acc + v)"
-    val bandSelects = planes.zipWithIndex.map { case (band, b) =>
-      val key = band.zipWithIndex.map { case (p, j) =>
-        s"(CASE WHEN ${sqlIntDot("qv", p)} >= 0 THEN ${1L << j} ELSE 0 END)"
-      }.mkString(" + ")
-      s"SELECT vec_id, $b AS band, $key AS key FROM q"
-    }
-    val sql =
-      s"""${kmeansSqlCtes(k, dims, rounds)},
-         |qq AS (SELECT vec_id AS query_id, qv FROM q WHERE vec_id % 25 = 0),
-         |probes AS (
-         |  SELECT query_id, cid FROM (
-         |    SELECT t.query_id, c.cid,
-         |      row_number() OVER (PARTITION BY t.query_id
-         |                         ORDER BY ${d2Sql("t.qv", "c.dims")}, c.cid) AS rn
-         |    FROM qq t CROSS JOIN c$rounds c) WHERE rn <= $nProbe),
-         |ci AS (SELECT p.query_id, a.vec_id AS neighbor_id
-         |       FROM probes p JOIN af a ON a.cid = p.cid
-         |       WHERE a.vec_id <> p.query_id),
-         |bl AS (${bandSelects.mkString("\n  UNION ALL ")}),
-         |cl AS (SELECT DISTINCT qb.vec_id AS query_id, cb.vec_id AS neighbor_id
-         |       FROM bl qb JOIN bl cb
-         |         ON qb.band = cb.band AND qb.key = cb.key AND cb.vec_id <> qb.vec_id
-         |       WHERE qb.vec_id % 25 = 0),
-         |sim AS (
-         |  SELECT qs.query_id, c.vec_id AS neighbor_id,
-         |    list_reduce(list_prepend(0, list_transform(list_zip(qs.qv, c.qv),
-         |      p -> p[1]*p[2])), (acc, v) -> acc + v) AS sim
-         |  FROM qq qs JOIN q c ON c.vec_id <> qs.query_id),
-         |top5 AS (SELECT query_id, neighbor_id FROM (
-         |  SELECT query_id, neighbor_id,
-         |    row_number() OVER (PARTITION BY query_id
-         |                       ORDER BY sim DESC, neighbor_id) AS rn FROM sim)
-         |  WHERE rn <= 5),
-         |it AS (
-         |  SELECT t.query_id, t.neighbor_id,
-         |    CASE WHEN ci.query_id IS NOT NULL THEN 1 ELSE 0 END AS a,
-         |    CASE WHEN cl.query_id IS NOT NULL THEN 1 ELSE 0 END AS l
-         |  FROM top5 t
-         |  LEFT JOIN ci ON ci.query_id = t.query_id AND ci.neighbor_id = t.neighbor_id
-         |  LEFT JOIN cl ON cl.query_id = t.query_id AND cl.neighbor_id = t.neighbor_id),
-         |cellsm AS (
-         |  SELECT count(*) AS n_items, CAST(sum(a) AS BIGINT) AS caught_ivf,
-         |    CAST(sum(l) AS BIGINT) AS caught_lsh,
-         |    count(*) FILTER (WHERE a = 1 AND l = 0) AS only_ivf,
-         |    count(*) FILTER (WHERE l = 1 AND a = 0) AS only_lsh
-         |  FROM it)
-         |SELECT CAST(n_items AS BIGINT) AS n_items, caught_ivf, caught_lsh,
-         |  CAST(only_ivf AS BIGINT) AS only_ivf, CAST(only_lsh AS BIGINT) AS only_lsh,
-         |  CAST(CASE WHEN only_ivf + only_lsh = 0 THEN 0
-         |    ELSE CAST(only_ivf - only_lsh AS HUGEINT) * (only_ivf - only_lsh)
-         |         * 1000000 // (only_ivf + only_lsh) END AS BIGINT) AS mcnemar_micro,
-         |  CASE WHEN only_ivf + only_lsh = 0 THEN false
-         |    ELSE CAST(only_ivf - only_lsh AS HUGEINT) * (only_ivf - only_lsh)
-         |         * 1000000 // (only_ivf + only_lsh) > 3841459 END AS significant
-         |FROM cellsm""".stripMargin
-    QuerySpec.oracle("q202_ann_mcnemar", sql) { (spark, dir) =>
-      val quant = quantizedVecsCk(spark, dir)
-      val cents = lloydCentroidsCached(spark, dir, -1, k, dims, rounds)
-      // IVF candidates: q171's cell routing + 2-probe join
-      val cells = quant.select(col("vec_id"), intAssign(cents).getField("cid").as("cid"))
-      val probeArr = slice(
-        graft.functions.IntCentroidDists.sortedDists(col("qv"), cents, dims), 1, nProbe)
-      val qq = quant.filter(col("vec_id") % 25 === 0)
-      val candIvf = qq.select(col("vec_id").as("query_id"), explode(probeArr).as("p"))
-        .select(col("query_id"), col("p.cid").as("cid"))
-        .join(cells.withColumnRenamed("vec_id", "neighbor_id"), "cid")
-        .filter(col("neighbor_id") =!= col("query_id"))
-        .select("query_id", "neighbor_id")
-      // LSH candidates: q166's banded bucket join, one config — band keys
-      // from ONE IntSignBandKeys kernel call (r21, the q166 rationale:
-      // plane literals as a plan reference object, bit-equal fused loop)
-      val bands = quant
-        .select(col("vec_id"), posexplode(
-          graft.functions.IntSignBandKeys.bandKeys(col("qv"),
-            planes.flatten.flatten, dims, planes.length, planes.head.length))
-          .as(Seq("band", "key")))
-      val candLsh = bands.filter(col("vec_id") % 25 === 0)
-        .withColumnRenamed("vec_id", "query_id")
-        .join(bands.withColumnRenamed("vec_id", "neighbor_id"), Seq("band", "key"))
-        .filter(col("neighbor_id") =!= col("query_id"))
-        .select("query_id", "neighbor_id").distinct()
-      // exact top-5 ground truth: the memoized session-shared relation
-      val top5 = exactTop5Cached(spark, dir)
-      top5
-        .join(candIvf.withColumn("a", lit(1L)), Seq("query_id", "neighbor_id"), "left")
-        .join(candLsh.withColumn("l", lit(1L)), Seq("query_id", "neighbor_id"), "left")
-        .agg(count(lit(1)).as("n_items"),
-          count(col("a")).as("caught_ivf"), count(col("l")).as("caught_lsh"),
-          count(when(col("a").isNotNull && col("l").isNull, 1)).as("only_ivf"),
-          count(when(col("l").isNotNull && col("a").isNull, 1)).as("only_lsh"))
-        .withColumn("mcnemar_micro",
-          when(col("only_ivf") + col("only_lsh") === 0L, 0L)
-            .otherwise(expr(
-              // (b−c)²·10⁶ passes int64 at corpus-scale item counts —
-              // decimal inside, int64 out (q187 discipline)
-              "(CAST(only_ivf - only_lsh AS DECIMAL(38,0)) * (only_ivf - only_lsh) * 1000000) div (only_ivf + only_lsh)"))
-            .cast("long"))
-        .select(col("n_items"), col("caught_ivf"), col("caught_lsh"),
-          col("only_ivf"), col("only_lsh"), col("mcnemar_micro"),
-          (col("mcnemar_micro") > 3841459L).as("significant"))
-    }
-  }
-
-  /** Spearman rank correlation, exact integers — the MONOTONE-coupling
-    * statistic beside q101's Pearson (which is linear and float) and
-    * q192's Mann-Kendall (which tests one series against time): does a
-    * nation's daily revenue RANK move with its daily volume rank?
-    * Spearman is rank arithmetic end to end, so with a deterministic
-    * (value, day) total order replacing average-rank ties (documented —
-    * micro-cent revenue makes exact ties vanishingly rare) the whole
-    * statistic hash-verifies: ρ·10⁶ = 10⁶ − 6·Σd²·10⁶ div (n(n²−1)),
-    * d = rank_x − rank_y (Σd²·10⁶ passes int64 on long calendars →
-    * decimal inside). Measured at sf0.01: ρ ∈ [0.15, 0.68] across
-    * nations — revenue-volume coupling is real but far from lockstep,
-    * exactly what a mixture planner needs to know before using volume
-    * as a revenue proxy. Shape at 100 TB: one map-side-combined
-    * (nation, day) aggregate; both rank windows ride ONE nation-keyed
-    * exchange; the carried series is calendar-bounded. */
-  val q203Spearman: QuerySpec = QuerySpec.oracle(
-    "q203_spearman",
-    """WITH rev AS (
-      |  SELECT s_nationkey AS nk, CAST(l_shipdate AS DATE) AS day,
-      |    CAST(sum(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
-      |      * (100 - CAST(CAST(l_discount AS DECIMAL(18,2)) * 100 AS BIGINT))) AS BIGINT) AS x,
-      |    CAST(sum(CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS y
-      |  FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-      |  GROUP BY 1, 2),
-      |r AS (
-      |  SELECT nk,
-      |    row_number() OVER (PARTITION BY nk ORDER BY x, day) AS rx,
-      |    row_number() OVER (PARTITION BY nk ORDER BY y, day) AS ry
-      |  FROM rev),
-      |s AS (SELECT nk, count(*) AS n,
-      |        CAST(sum((rx - ry) * (rx - ry)) AS BIGINT) AS sd2 FROM r GROUP BY 1)
-      |SELECT n_name AS nation, CAST(n AS BIGINT) AS n_days, sd2 AS sum_d2,
-      |  CAST(1000000 - CAST(6 AS HUGEINT) * sd2 * 1000000
-      |    // (CAST(n AS HUGEINT) * (n*n - 1)) AS BIGINT) AS spearman_micro
-      |FROM s JOIN nation ON n_nationkey = nk ORDER BY nation""".stripMargin
-  ) { (spark, dir) =>
-    val rev = dailyRevenueCached(spark, dir)
-    // both rank windows share the nation-keyed exchange (same partition
-    // key, different sort)
-    rev
-      .withColumn("rx", row_number().over(
-        Window.partitionBy("nk").orderBy(col("x"), col("day"))))
-      .withColumn("ry", row_number().over(
-        Window.partitionBy("nk").orderBy(col("y"), col("day"))))
-      .groupBy("nk")
-      .agg(count(lit(1)).as("n"),
-        sum(expr("CAST(rx - ry AS BIGINT) * (rx - ry)")).cast("long").as("sd2"))
-      .join(broadcast(Tables.nation(spark, dir)
-          .select(col("n_nationkey"), col("n_name"))),
-        col("nk") === col("n_nationkey"))
-      .select(col("n_name").as("nation"), col("n").cast("long").as("n_days"),
-        col("sd2").as("sum_d2"),
-        // 6·Σd²·10⁶ passes int64 on long calendars — decimal inside
-        (lit(1000000L) - expr(
-          "(CAST(6 AS DECIMAL(38,0)) * sd2 * 1000000) div (CAST(n AS DECIMAL(38,0)) * (n*n - 1))")
-          .cast("long")).as("spearman_micro"))
-      .orderBy("nation")
-  }
-
-  /** Kaplan-Meier time-to-event curve, exact integers — the survival
-    * primitive the event band lacked (q68's cohort grid counts WHO is
-    * active; KM estimates WHEN the event arrives, correctly under
-    * right-censoring): time from a user's first activity to their first
-    * purchase, users without one censored at the horizon (this fixture
-    * observes every conversion, so the censor branch is structural —
-    * the estimator must not assume it). The product-limit estimator
-    * Ŝ(t) = Π_{u≤t}(1 − d_u/n_u) is a product of rationals, made
-    * hash-exact the q200 way: quantize with PER-STEP truncation,
-    * s ← s·(n−d) div n from s₀ = 10⁶ — and because the step table is
-    * TIME-BOUNDED (one row per event day), each step's prefix fold runs
-    * in-row over the sorted step arrays (q177's list machinery; the
-    * prefix trick is `aggregate(sequence(1, i), …)` over parallel d/n
-    * arrays ↔ DuckDB list_reduce over a prepended index list). Shape at
-    * 100 TB: ONE per-user min/min aggregate over the event stream + a
-    * day-keyed step aggregate; the risk set is a reverse cumulative sum
-    * on the step table; the fold never touches corpus rows. */
-  val q204KaplanMeier: QuerySpec = QuerySpec.oracle(
-    "q204_kaplan_meier",
-    """WITH e AS (SELECT user_id, event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day
-      |           FROM events),
-      |h AS (SELECT max(day) AS hz FROM e),
-      |u AS (SELECT user_id, min(day) AS f,
-      |        min(CASE WHEN event_type = 'purchase' THEN day END) AS p
-      |      FROM e GROUP BY 1),
-      |d AS (SELECT CASE WHEN p IS NOT NULL THEN 1 ELSE 0 END AS ev,
-      |        CASE WHEN p IS NOT NULL THEN date_diff('day', f, p)
-      |             ELSE date_diff('day', f, hz) END AS t
-      |      FROM u CROSS JOIN h),
-      |steps AS (SELECT t, CAST(sum(ev) AS BIGINT) AS dd, count(*) AS at_t
-      |          FROM d GROUP BY 1),
-      |risk AS (SELECT t, dd,
-      |           CAST(sum(at_t) OVER (ORDER BY t DESC) AS BIGINT) AS n
-      |         FROM steps),
-      |ord AS (SELECT t, dd, n FROM risk WHERE dd > 0),
-      |arrs AS (SELECT list(t ORDER BY t) AS ts, list(dd ORDER BY t) AS ds,
-      |                list(n ORDER BY t) AS ns FROM ord)
-      |SELECT CAST(ts[i] AS BIGINT) AS t_days, ns[i] AS n_risk, ds[i] AS d_events,
-      |  CAST(list_reduce(list_prepend(CAST(1000000 AS BIGINT),
-      |    list_transform(generate_series(1, i), j -> CAST(j AS BIGINT))),
-      |    (acc, j) -> acc * (ns[j] - ds[j]) // ns[j]) AS BIGINT) AS s_micro
-      |FROM arrs, LATERAL unnest(generate_series(1, len(ts))) AS g(i)
-      |ORDER BY t_days""".stripMargin
-  ) { (spark, dir) =>
-    val e = Tables.events(spark, dir)
-      .select(col("user_id"), col("event_type"), to_date(col("ts")).as("day"))
-    val u = e.groupBy("user_id")
-      .agg(min(col("day")).as("f"),
-        min(when(col("event_type") === "purchase", col("day"))).as("p"))
-    val h = e.agg(max(col("day")).as("hz"))
-    val d = u.crossJoin(broadcast(h))
-      .select(when(col("p").isNotNull, 1L).otherwise(0L).as("ev"),
-        when(col("p").isNotNull, datediff(col("p"), col("f")))
-          .otherwise(datediff(col("hz"), col("f"))).cast("long").as("t"))
-    val steps = d.groupBy("t")
-      .agg(sum(col("ev")).cast("long").as("dd"), count(lit(1)).as("at_t"))
-      // time-bounded step table: the reverse-cumulative risk set rides a
-      // single-partition window over event DAYS, never users
-      .withColumn("n", sum(col("at_t")).over(
-        Window.orderBy(col("t").desc)
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)).cast("long"))
-      .filter(col("dd") > 0)
-    steps.agg(sort_array(collect_list(struct(col("t"), col("dd"), col("n")))).as("a"))
-      .select(explode(expr(
-        """transform(sequence(1, size(a)), i -> struct(
-          |  a[i-1].t AS t_days, a[i-1].n AS n_risk, a[i-1].dd AS d_events,
-          |  aggregate(sequence(1, i), CAST(1000000 AS BIGINT),
-          |    (acc, j) -> (acc * (a[j-1].n - a[j-1].dd)) div a[j-1].n) AS s_micro))""".stripMargin))
-        .as("r"))
-      .select(col("r.t_days"), col("r.n_risk"), col("r.d_events"), col("r.s_micro"))
-      .orderBy("t_days")
-  }
-
-  /** Multi-touch conversion attribution — the marketing-analytics
-    * primitive above q67's funnel: every purchase credits the
-    * touchpoints (view/click/signup) in its trailing 3-day window under
-    * the three standard models AT ONCE — first-touch, last-touch, and
-    * linear (each of k touches gets 10⁶ div k micro-credits, truncation
-    * documented), so the report shows how the models DISAGREE, which is
-    * the whole point of running more than one. Exact integers: window
-    * membership compares unix micros (q65's NTZ-robust discipline),
-    * first/last are deterministic (ts, type) row_numbers, linear credit
-    * is integral division. Shape at 100 TB: the touch-to-purchase pair
-    * join is user-keyed with a BOUNDED time window (q65's range-join
-    * argument — pairs per user bounded by window × activity rate, never
-    * all-pairs), both rank windows and the per-purchase count share one
-    * (user, purchase) exchange, and the report is one type-keyed
-    * aggregate. */
-  val q205Attribution: QuerySpec = QuerySpec.oracle(
-    "q205_attribution",
-    """WITH e AS (SELECT user_id, event_type, epoch_us(CAST(ts AS TIMESTAMP)) AS us
-      |           FROM events),
-      |p AS (SELECT user_id, us AS pus FROM e WHERE event_type = 'purchase'),
-      |t AS (SELECT user_id, event_type, us FROM e
-      |      WHERE event_type IN ('view', 'click', 'signup')),
-      |pairs AS (
-      |  SELECT p.user_id, p.pus, t.event_type, t.us
-      |  FROM p JOIN t ON t.user_id = p.user_id
-      |    AND t.us < p.pus AND t.us >= p.pus - 259200000000),
-      |rk AS (
-      |  SELECT *,
-      |    row_number() OVER (PARTITION BY user_id, pus ORDER BY us, event_type) AS rf,
-      |    row_number() OVER (PARTITION BY user_id, pus ORDER BY us DESC, event_type) AS rl,
-      |    count(*) OVER (PARTITION BY user_id, pus) AS k
-      |  FROM pairs)
-      |SELECT event_type,
-      |  CAST(count(*) FILTER (WHERE rf = 1) AS BIGINT) AS first_touch,
-      |  CAST(count(*) FILTER (WHERE rl = 1) AS BIGINT) AS last_touch,
-      |  CAST(sum(1000000 // k) AS BIGINT) AS linear_micro
-      |FROM rk GROUP BY 1 ORDER BY event_type""".stripMargin
-  ) { (spark, dir) =>
-    val e = Tables.events(spark, dir)
-      .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("us"))
-    val p = e.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("us").as("pus"))
-    val t = e.filter(col("event_type").isin("view", "click", "signup"))
-    val pairs = p.join(t, Seq("user_id"))
-      .filter(col("us") < col("pus") && col("us") >= col("pus") - 259200000000L)
-    val byP = Window.partitionBy("user_id", "pus")
-    pairs
-      .withColumn("rf", row_number().over(byP.orderBy(col("us"), col("event_type"))))
-      .withColumn("rl", row_number().over(byP.orderBy(col("us").desc, col("event_type"))))
-      .withColumn("k", count(lit(1)).over(byP))
-      .groupBy("event_type")
-      .agg(count(when(col("rf") === 1, 1)).as("first_touch"),
-        count(when(col("rl") === 1, 1)).as("last_touch"),
-        sum(expr("1000000 div k")).cast("long").as("linear_micro"))
-      .orderBy("event_type")
-  }
-
-  /** Bootstrap confidence intervals via the deterministic POISSON
-    * bootstrap — the one-pass, shard-friendly bootstrap (Chamandy et
-    * al., Google): resampling n-out-of-n is impossible to coordinate
-    * across executors, but giving every row an independent Poisson(1)
-    * weight per replicate needs NO coordination at all — and made
-    * deterministic from md5(key:replicate), the whole CI hash-verifies.
-    * Here: per-nation mean order value, B = 64 replicates; each weight
-    * is the Poisson(1) quantile of the row-replicate hash against a
-    * Scala-computed integer CDF ladder shared by both engines (q149's
-    * constant discipline), replicate means are Σwx div Σw in micro
-    * units, and the 95% band is the 2nd/63rd ranked replicate mean —
-    * rank arithmetic, no float percentiles. Shape at 100 TB: ONE
-    * map-side-combined (nation, replicate) aggregate over a ×B
-    * generator explode (B md5s per row, linear map work); the rank step
-    * runs on the nations × B table. */
-  val q206BootstrapCi: QuerySpec = {
-    val B = 64
-    // Poisson(1) CDF ladder scaled to 1e9, computed once and embedded in
-    // both engines; weights cap at 7 (P > 7 ≈ 1e-5 of 1e-9 resolution)
-    val cdf: Seq[Long] = {
-      var (p, cum) = (math.exp(-1.0), 0.0)
-      (0 to 6).map { k =>
-        if (k > 0) p = p / k
-        cum += p
-        math.floor(cum * 1e9).toLong
-      }
-    }
-    def wSql(u: String): String =
-      cdf.zipWithIndex.map { case (c, k) => s"WHEN $u < $c THEN $k" }
-        .mkString("CASE ", " ", " ELSE 7 END")
-    QuerySpec.oracle(
-      "q206_bootstrap_ci",
-      s"""WITH o AS (
-         |  SELECT c_nationkey AS nk,
-         |    ('0x' || substring(md5(CAST(o_orderkey AS VARCHAR)), 1, 15))::BIGINT
-         |      % 1000000000 AS h1,
-         |    ('0x' || substring(md5(CAST(o_orderkey AS VARCHAR)), 16, 15))::BIGINT
-         |      % 1000000000 AS h2,
-         |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS x
-         |  FROM orders JOIN customer ON o_custkey = c_custkey),
-         |w AS (
-         |  SELECT nk, r, ${wSql("(h1 + r * h2) % 1000000000")} AS w, x
-         |  FROM o CROSS JOIN (SELECT unnest(generate_series(1, $B)) AS r)),
-         |reps AS (
-         |  SELECT nk, r,
-         |    CAST(CAST(sum(w * x) AS HUGEINT) // greatest(sum(w), 1) AS BIGINT) AS m
-         |  FROM w GROUP BY 1, 2),
-         |rk AS (SELECT nk, m, row_number() OVER (PARTITION BY nk ORDER BY m, r) AS q
-         |       FROM reps),
-         |pt AS (SELECT nk, CAST(count(*) AS BIGINT) AS n_orders,
-         |         CAST(sum(CAST(x AS HUGEINT)) // count(*) AS BIGINT) AS mean_cents
-         |       FROM o GROUP BY 1)
-         |SELECT n_name AS nation, n_orders, mean_cents,
-         |  CAST(min(CASE WHEN q = 2 THEN m END) AS BIGINT) AS boot_lo,
-         |  CAST(min(CASE WHEN q = ${B - 1} THEN m END) AS BIGINT) AS boot_hi
-         |FROM pt JOIN rk USING (nk) JOIN nation ON n_nationkey = nk
-         |GROUP BY 1, 2, 3 ORDER BY nation""".stripMargin
-    ) { (spark, dir) =>
-      // ONE md5 per row; the B per-replicate uniforms derive from its two
-      // 60-bit halves via the Kirsch-Mitzenmacher double-hash family
-      // u_r = (h1 + r·h2) mod 10⁹ — the standard construction for many
-      // hash functions from two, and 64× cheaper than md5-per-replicate
-      // (the md5-per-(row, replicate) form measured 23 s at sf0.1)
-      def half(off: Int): Column =
-        pmod(conv(substring(md5(col("o_orderkey").cast("string")), off, 15), 16, 10)
-          .cast("long"), lit(1000000000L))
-      val o = Tables.orders(spark, dir)
-        .join(broadcast(Tables.customer(spark, dir)
-            .select(col("c_custkey"), col("c_nationkey"))),
-          col("o_custkey") === col("c_custkey"))
-        .select(col("c_nationkey").as("nk"), half(1).as("h1"), half(16).as("h2"),
-          cents(col("o_totalprice")).as("x"))
-      // ascending CDF thresholds folded into the CASE ladder the oracle
-      // spells out — first matching rung wins in both engines; u is a
-      // named column so the ladder tests ONE value, not 7 pmod chains
-      val wCol = cdf.zipWithIndex.foldRight(lit(7L): Column) { case ((c, k), e) =>
-        when(col("u") < c, k.toLong).otherwise(e)
-      }
-      val weights = o
-        .select(col("nk"), col("h1"), col("h2"), col("x"),
-          explode(sequence(lit(1), lit(B))).as("r"))
-        .withColumn("u", pmod(col("h1") + col("r") * col("h2"), lit(1000000000L)))
-        .withColumn("w", wCol)
-      val reps = weights.groupBy("nk", "r")
-        // w ≤ 7 and x is order cents, so Σwx stays int64-safe past 10¹⁰
-        // rows per (nation, replicate) — no decimal on the 9.6M-row path
-        .agg(expr("sum(w * x) div greatest(sum(w), 1)").cast("long").as("m"))
-      val rk = reps.withColumn("q",
-        row_number().over(Window.partitionBy("nk").orderBy(col("m"), col("r"))))
-      val pt = o.groupBy("nk")
-        .agg(count(lit(1)).as("n_orders"),
-          expr("CAST(sum(CAST(x AS DECIMAL(38,0))) div count(*) AS BIGINT)").as("mean_cents"))
-      pt.join(rk, "nk")
-        .groupBy("nk", "n_orders", "mean_cents")
-        .agg(min(when(col("q") === 2, col("m"))).as("boot_lo"),
-          min(when(col("q") === B - 1, col("m"))).as("boot_hi"))
-        .join(broadcast(Tables.nation(spark, dir)
-            .select(col("n_nationkey"), col("n_name"))),
-          col("nk") === col("n_nationkey"))
-        .select(col("n_name").as("nation"), col("n_orders").cast("long").as("n_orders"),
-          col("mean_cents"), col("boot_lo"), col("boot_hi"))
-        .orderBy("nation")
-    }
-  }
-
-  /** Mark-recapture coverage estimate for near-dup discovery — the
-    * question q164's recall audit can only answer at audit scale (exact
-    * ground truth is an all-pairs scan): at 100 TB, how many near-dup
-    * pairs exist BEYOND what the production LSH found? Ecology's answer
-    * needs no truth: run two INDEPENDENTLY SEEDED sign-LSH captures of
-    * the same pair population and apply the bias-corrected Chapman
-    * estimator N̂ = (a+1)(b+1) div (m+1) − 1 from the two catch sizes
-    * and their overlap m — small overlap between independent captures
-    * means a large unseen population, and the whole estimate is one
-    * integer expression over three pair counts. Both captures are the
-    * verified q166 integer-plane machinery (literals, banded bucket
-    * joins, never all-pairs), so a, b, m, and N̂ all hash-verify.
-    * Reported beside them: each capture's coverage Ĉ = catch·10⁶ div N̂.
-    * Shape at 100 TB: ONE capture-tagged banded bucket self-join over the
-    * corpus (the production dedup shape) whose pairs fold straight into a
-    * per-pair capture-flag aggregate — a, b, and the overlap m are three
-    * sums of that one relation, so candidate pairs cross the wire once
-    * (r19; the per-capture form shipped the pair set through four
-    * un-reused exchanges). */
-  val q207ChapmanCoverage: QuerySpec = {
-    val dims = 64
-    val configs = Seq(("a", intPlanes(8, 8, dims, 101L)), ("b", intPlanes(8, 8, dims, 202L)))
-    def sqlIntDot(vecExpr: String, lits: Array[Long]): String =
-      s"list_reduce(list_prepend(0, list_transform(list_zip($vecExpr, " +
-        s"[${lits.mkString(",")}]), p -> p[1]*p[2])), (acc, v) -> acc + v)"
-    val bandCtes = configs.map { case (name, planes) =>
-      val selects = planes.zipWithIndex.map { case (band, b) =>
-        val key = band.zipWithIndex.map { case (p, j) =>
-          s"(CASE WHEN ${sqlIntDot("qv", p)} >= 0 THEN ${1L << j} ELSE 0 END)"
-        }.mkString(" + ")
-        s"SELECT vec_id, $b AS band, $key AS key FROM q"
-      }
-      s"""b_$name AS (${selects.mkString("\n  UNION ALL ")}),
-         |c_$name AS (SELECT DISTINCT x.vec_id AS id_a, y.vec_id AS id_b
-         |  FROM b_$name x JOIN b_$name y
-         |    ON x.band = y.band AND x.key = y.key AND x.vec_id < y.vec_id)""".stripMargin
-    }
-    QuerySpec.oracle(
-      "q207_chapman_coverage",
-      s"""WITH v AS (SELECT vec_id, embedding FROM embeddings),
-         |s AS (SELECT vec_id, embedding, ${VectorFns.Sql.maxAbs("embedding")} AS scale FROM v),
-         |q AS MATERIALIZED (SELECT vec_id, ${VectorFns.Sql.quantizeInt8("embedding", "scale")} AS qv FROM s),
-         |${bandCtes.mkString(",\n")},
-         |counts AS (
-         |  SELECT (SELECT count(*) FROM c_a) AS a,
-         |    (SELECT count(*) FROM c_b) AS b,
-         |    (SELECT count(*) FROM c_a JOIN c_b USING (id_a, id_b)) AS m)
-         |SELECT CAST(a AS BIGINT) AS caught_a, CAST(b AS BIGINT) AS caught_b,
-         |  CAST(m AS BIGINT) AS overlap,
-         |  CAST(CAST(a + 1 AS HUGEINT) * (b + 1) // (m + 1) - 1 AS BIGINT)
-         |    AS chapman_est,
-         |  CAST(CAST(a AS HUGEINT) * 1000000
-         |    // (CAST(a + 1 AS HUGEINT) * (b + 1) // (m + 1) - 1) AS BIGINT)
-         |    AS coverage_a_micro,
-         |  CAST(CAST(b AS HUGEINT) * 1000000
-         |    // (CAST(a + 1 AS HUGEINT) * (b + 1) // (m + 1) - 1) AS BIGINT)
-         |    AS coverage_b_micro
-         |FROM counts""".stripMargin
-    ) { (spark, dir) =>
-      val quant = quantizedVecsCk(spark, dir)
-      // BOTH captures ride ONE tagged explode + ONE banded self-join
-      // (r19): the per-capture form computed each capture's pair set
-      // TWICE — once under its count, once under the overlap join — and
-      // the executed plan showed four un-reused pair exchanges. Tagging
-      // bucket rows with their capture and folding the distinct + overlap
-      // join into one (id_a, id_b) flag aggregate makes the candidate
-      // pairs cross the wire exactly once: a = Σ fa, b = Σ fb,
-      // m = Σ fa·fb — identical counts, half the heavy work, and the
-      // map-side combine absorbs same-pair duplicates from multiple
-      // bands before the shuffle.
-      // both captures' band keys from ONE IntSignBandKeys kernel call per
-      // capture (r21): the per-plane expression stack inlined 128 64-long
-      // array literals (~8k literal nodes) that Catalyst re-analyzed every
-      // pass — q207 ran FOUR Spark stages yet cost ~2.9 s, nearly all
-      // driver plan time; the kernel carries each capture's planes as one
-      // plan reference object, bit-equal fused integer loop (q166 note)
-      val bandArrays = configs.map { case (cap, planes) =>
-        transform(
-          graft.functions.IntSignBandKeys.bandKeys(col("qv"),
-            planes.flatten.flatten, dims, planes.length, planes.head.length),
-          (k, i) => struct(lit(cap).as("cap"), i.as("band"), k.as("key")))
-      }
-      // the bands relation is |corpus| × 16 skinny rows feeding BOTH join
-      // sides — cut it once (lazy checkpoint, the q136/q172 encode-once
-      // contract; eagerByDesign-listed)
-      val bands = quant
-        .select(col("vec_id"), explode(concat(bandArrays: _*)).as("bk"))
-        .select(col("vec_id"), col("bk.cap").as("cap"),
-          col("bk.band").as("band"), col("bk.key").as("key"))
-        .localCheckpoint(eager = false)
-      val flags = bands.select(col("vec_id").as("id_a"), col("cap"), col("band"), col("key"))
-        .join(bands.select(col("vec_id").as("id_b"), col("cap"), col("band"), col("key")),
-          Seq("cap", "band", "key"))
-        .filter(col("id_a") < col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(max(when(col("cap") === configs(0)._1, 1L).otherwise(0L)).as("fa"),
-          max(when(col("cap") === configs(1)._1, 1L).otherwise(0L)).as("fb"))
-      flags.agg(sum(col("fa")).as("a"), sum(col("fb")).as("b"),
-          sum(col("fa") * col("fb")).as("m"))
-        // (a+1)(b+1) exceeds int64 at corpus-scale pair counts — decimal
-        // inside, int64 out (q187 discipline)
-        .withColumn("est",
-          expr("(CAST(a + 1 AS DECIMAL(38,0)) * (b + 1)) div (m + 1) - 1"))
-        .select(col("a").cast("long").as("caught_a"), col("b").cast("long").as("caught_b"),
-          col("m").cast("long").as("overlap"), col("est").cast("long").as("chapman_est"),
-          expr("(CAST(a AS DECIMAL(38,0)) * 1000000) div est").cast("long")
-            .as("coverage_a_micro"),
-          expr("(CAST(b AS DECIMAL(38,0)) * 1000000) div est").cast("long")
-            .as("coverage_b_micro"))
-    }
-  }
-
-  /** Exact stratified sampler with largest-remainder apportionment —
-    * the allocation step between q56's mixture rates and X1's exact-n
-    * class sampler: given a total budget B = 200 over the
-    * (lang, source) strata, quotas are base_h = B·N_h div N plus one
-    * extra for the R = B − Σbase strata with the largest remainders
-    * (Hamilton's method — the ONLY apportionment that is exactly
-    * proportional to ±1 and sums to B by construction), then each
-    * stratum's picks are its quota_h lowest content-hash ranks
-    * (conv(md5) — reproducible across runs, partitionings, and engines,
-    * q156's discipline). The whole allocation is integer arithmetic, so
-    * the quota table AND the selected roster hash-match. Shape at
-    * 100 TB: quotas live on the bounded strata dictionary (two
-    * dictionary-sized global windows); selection is ONE stratum-keyed
-    * rank window over the corpus with the quota dictionary broadcast —
-    * no per-stratum passes, no collect. Requires B ≤ N (documented);
-    * a stratum can never be allocated past its size since
-    * base_h + 1 ≤ N_h whenever B < N. */
-  val q194StratifiedSample: QuerySpec = QuerySpec.oracle(
-    "q194_stratified_sample",
-    """WITH d AS (SELECT lang, source, doc_id FROM documents),
-      |h AS (SELECT lang, source, count(*) AS n_h FROM d GROUP BY 1, 2),
-      |tot AS (SELECT CAST(sum(n_h) AS BIGINT) AS n FROM h),
-      |q AS (
-      |  SELECT lang, source, n_h,
-      |    CAST(200 * n_h // n AS BIGINT) AS base,
-      |    CAST(200 * n_h % n AS BIGINT) AS rem
-      |  FROM h CROSS JOIN tot),
-      |r AS (
-      |  SELECT *, row_number() OVER (ORDER BY rem DESC, lang, source) AS rr,
-      |    CAST(200 - sum(base) OVER () AS BIGINT) AS leftover
-      |  FROM q),
-      |quota AS (
-      |  SELECT lang AS ql, source AS qs, n_h,
-      |    base + CASE WHEN rr <= leftover THEN 1 ELSE 0 END AS quota
-      |  FROM r),
-      |keyed AS (
-      |  SELECT lang, source, doc_id,
-      |    row_number() OVER (PARTITION BY lang, source
-      |      ORDER BY ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT,
-      |        doc_id) AS rk
-      |  FROM d)
-      |SELECT k.lang, k.source, CAST(n_h AS BIGINT) AS n_h,
-      |  CAST(quota AS BIGINT) AS quota, k.doc_id, CAST(rk AS BIGINT) AS pick
-      |FROM keyed k JOIN quota q ON q.ql = k.lang AND q.qs = k.source
-      |WHERE rk <= quota ORDER BY k.lang, k.source, pick""".stripMargin
-  ) { (spark, dir) =>
-    val budget = 200L
-    val d = Tables.documents(spark, dir).select("lang", "source", "doc_id")
-    val h = d.groupBy("lang", "source").agg(count(lit(1)).as("n_h"))
-    val tot = h.agg(sum(col("n_h")).cast("long").as("n"))
-    val quota = h.crossJoin(broadcast(tot))
-      .withColumn("base", expr(s"$budget * n_h div n"))
-      .withColumn("rem", expr(s"$budget * n_h % n"))
-      // two dictionary-sized global windows: the remainder rank and the
-      // base-total leftover — strata dictionaries, never corpus rows
-      .withColumn("rr", row_number().over(
-        Window.orderBy(col("rem").desc, col("lang"), col("source"))))
-      .withColumn("leftover",
-        lit(budget) - sum(col("base")).over(Window.partitionBy()))
-      .select(col("lang").as("ql"), col("source").as("qs_src"), col("n_h"),
-        (col("base") + when(col("rr") <= col("leftover"), 1L).otherwise(0L))
-          .as("quota"))
-    val keyed = d.withColumn("rk", row_number().over(
-      Window.partitionBy("lang", "source").orderBy(
-        expr("CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 15), 16, 10) AS BIGINT)"),
-        col("doc_id"))))
-    keyed.join(broadcast(quota),
-        col("ql") === col("lang") && col("qs_src") === col("source"))
-      .filter(col("rk") <= col("quota"))
-      .select(col("lang"), col("source"), col("n_h").cast("long").as("n_h"),
-        col("quota").cast("long").as("quota"), col("doc_id"),
-        col("rk").cast("long").as("pick"))
-      .orderBy("lang", "source", "pick")
-  }
-
-  /** Character trigrams of a text column, 1-based sliding window — the
-    * language-ID feature (Cavnar & Trenkle 1994). Guarded for length < 3
-    * (sequence(1, 0) is DESCENDING in Spark — the q141 pitfall). */
-  private def charTrigrams(text: Column): Column =
-    when(length(text) >= 3,
-      transform(sequence(lit(1), length(text) - 2), i => text.substr(i, lit(3))))
-      .otherwise(typedlit(Seq.empty[String]))
-
-  /** Per-language rank profiles (Cavnar-Trenkle): the top-`k` character
-    * trigrams of each language's training text by frequency (ties broken
-    * by gram — deterministic both engines over ASCII), weighted
-    * w = k + 1 − rank. Returns (p_lang, g, w). The profile relation is
-    * LANGUAGE-DICTIONARY sized (|langs| × k rows) no matter the corpus —
-    * the property that lets scoring broadcast it. */
-  private[graft] def langIdProfiles(train: DataFrame, k: Int): DataFrame =
-    train.select(col("lang"), explode(charTrigrams(col("text"))).as("g"))
-      .groupBy("lang", "g").agg(count(lit(1)).as("c"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("lang").orderBy(col("c").desc, col("g"))))
-      .filter(col("rk") <= k)
-      .select(col("lang").as("p_lang"), col("g"),
-        (lit(k + 1) - col("rk")).cast("long").as("w"))
-
-  /** Score documents against [[langIdProfiles]] and pick the argmax
-    * language (score desc, lang asc — the oracle's row_number order).
-    * Per-doc score = Σ gram_count · profile_weight, exact integers
-    * (count ≤ doc length, w ≤ k — the product can't overflow before the
-    * heat death of a 2⁶³-char document). Returns
-    * (doc_id, lang_true, lang_pred). Docs sharing no gram with any
-    * profile drop out (inner join) — identically in both engines. */
-  private[graft] def langIdPredict(docs: DataFrame, profiles: DataFrame): DataFrame =
-    docs.select(col("doc_id"), col("lang").as("lang_true"),
-        explode(charTrigrams(col("text"))).as("g"))
-      .groupBy("doc_id", "lang_true", "g").agg(count(lit(1)).as("c"))
-      .join(broadcast(profiles), "g")
-      .groupBy("doc_id", "lang_true", "p_lang")
-      .agg(sum(expr("c * w")).as("s"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("doc_id").orderBy(col("s").desc, col("p_lang"))))
-      .filter(col("rk") === 1)
-      .select(col("doc_id"), col("lang_true"), col("p_lang").as("lang_pred"))
-
-  /** Language identification — the ingest operator the corpus queries all
-    * CONSUME a `lang` column from but nothing previously produced (VERDICT
-    * r18): the classic Cavnar-Trenkle character-trigram rank-profile
-    * classifier, trained on the corpus's labeled docs (deterministic 80%
-    * split, doc_id mod 5 ≠ 0), scoring the held-out 20%, reporting the
-    * confusion matrix plus overall accuracy. Everything is exact integer
-    * arithmetic — trigram counts, rank weights w = 65 − rank, dot-product
-    * scores, micro-unit accuracy — so the whole report hash-verifies
-    * against DuckDB running the identical pipeline. On THIS corpus the
-    * labels are generator-assigned noise (every lang draws from the same
-    * 29-word list), so accuracy honestly reads ≈ chance — the operator's
-    * separating power on signal-bearing text is pinned instead by
-    * PipelineQueriesSpec's fixture, where distinct character distributions
-    * must classify 100%. Shape at 100 TB: profile training is ONE
-    * map-side-combined (lang, gram) aggregate (gram space is charset³-
-    * bounded); the profile table is |langs|·k rows and broadcasts;
-    * scoring is one linear gram scan + a doc-keyed argmax window — no
-    * corpus-sized shuffle beyond the per-doc gram aggregate. */
-  private val langProfMemo = SessionMemo[DataFrame]("langProf")
-
-  val q208LangId: QuerySpec = {
-    val k = 64
-    QuerySpec.oracle(
-      "q208_langid_confusion",
-      s"""WITH docs AS (SELECT doc_id, lang, text FROM documents WHERE len(text) >= 3),
-         |tg AS (SELECT lang,
-         |    unnest(list_transform(generate_series(1, len(text) - 2), i -> substring(text, i, 3))) AS g
-         |  FROM docs WHERE doc_id % 5 <> 0),
-         |cnt AS (SELECT lang, g, count(*) AS c FROM tg GROUP BY 1, 2),
-         |prof AS (SELECT lang AS p_lang, g, CAST(${k + 1} - rk AS BIGINT) AS w FROM (
-         |    SELECT lang, g, c, row_number() OVER (PARTITION BY lang ORDER BY c DESC, g) AS rk
-         |    FROM cnt)
-         |  WHERE rk <= $k),
-         |hg AS (SELECT doc_id, lang AS lang_true,
-         |    unnest(list_transform(generate_series(1, len(text) - 2), i -> substring(text, i, 3))) AS g
-         |  FROM docs WHERE doc_id % 5 = 0),
-         |hc AS (SELECT doc_id, lang_true, g, count(*) AS c FROM hg GROUP BY 1, 2, 3),
-         |sc AS (SELECT doc_id, lang_true, p_lang, sum(c * w) AS s
-         |  FROM hc JOIN prof USING (g) GROUP BY 1, 2, 3),
-         |pred AS (SELECT doc_id, lang_true, p_lang AS lang_pred,
-         |    row_number() OVER (PARTITION BY doc_id ORDER BY s DESC, p_lang) AS rk FROM sc),
-         |conf AS (SELECT lang_true, lang_pred, count(*) AS n_docs FROM pred WHERE rk = 1 GROUP BY 1, 2),
-         |tot AS (SELECT CAST(sum(n_docs) AS BIGINT) AS n,
-         |    CAST(coalesce(sum(n_docs) FILTER (WHERE lang_true = lang_pred), 0) AS BIGINT) AS nc
-         |  FROM conf)
-         |SELECT lang_true, lang_pred, CAST(n_docs AS BIGINT) AS n_docs,
-         |  CAST(nc * 1000000 // n AS BIGINT) AS acc_micro
-         |FROM conf CROSS JOIN tot ORDER BY lang_true, lang_pred""".stripMargin
-    ) { (spark, dir) =>
-      val docs = Tables.documents(spark, dir)
-        .select(col("doc_id"), col("lang"), col("text"))
-        .filter(length(col("text")) >= 3)
-      // the trained rank-profile table is the FIT — |langs|·k rows behind
-      // a corpus-sized training scan; memoized per (session, dir) like
-      // every other fit-once/serve-many model state (r21)
-      val prof = langProfMemo(spark, dir)(
-        langIdProfiles(docs.filter(pmod(col("doc_id"), lit(5)) =!= 0), k)
-          .localCheckpoint(eager = false))
-      val pred = langIdPredict(docs.filter(pmod(col("doc_id"), lit(5)) === 0), prof)
-      val conf = pred.groupBy("lang_true", "lang_pred").agg(count(lit(1)).as("n_docs"))
-      val tot = conf.agg(sum(col("n_docs")).cast("long").as("n"),
-        coalesce(sum(when(col("lang_true") === col("lang_pred"), col("n_docs"))), lit(0L))
-          .cast("long").as("nc"))
-      conf.crossJoin(broadcast(tot))
-        .select(col("lang_true"), col("lang_pred"),
-          col("n_docs").cast("long").as("n_docs"),
-          expr("nc * 1000000 div n").cast("long").as("acc_micro"))
-        .orderBy("lang_true", "lang_pred")
-    }
-  }
-
-  /** Single-pass weighted reservoir sample (Efraimidis-Spirakis A-ES; see
-    * [[Sampling.weightedReservoir]]) — the sampling band's missing
-    * single-pass weighted form (VERDICT r18): q12 samples exact-n uniform,
-    * q143 walks PPS systematically (needs a global prefix sum), q194
-    * apportions a stratified budget — this one draws k docs proportional
-    * to length in ONE pass with O(k) state, the form streaming ingest
-    * needs. Deterministic: exponential keys
-    * E = ladder[md5(salt:id) mod L] div w over the shared integer quantile
-    * ladder (q206's discipline), so the ROSTER hash-verifies — DuckDB
-    * recomputes the identical keys and picks. Shape at 100 TB: one scan,
-    * per-partition bounded heaps, a k-row merge (bottom-k-of-union is the
-    * KMV semilattice); the oracle's global rank window is the AUDIT shape,
-    * the Spark plan carries no window and no sort at all. */
-  val q209WeightedReservoir: QuerySpec = {
-    val (k, levels, salt) = (100, 1024, "r19")
-    val ladderSql = Sampling.expLadderNano(levels).mkString("[", ", ", "]")
-    QuerySpec.oracle(
-      "q209_weighted_reservoir",
-      s"""WITH d AS (SELECT doc_id, n_chars FROM documents WHERE n_chars > 0),
-         |e AS (SELECT doc_id, n_chars,
-         |    ($ladderSql)[CAST(('0x' || substring(md5('$salt:' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT % $levels AS BIGINT) + 1]
-         |      // CAST(n_chars AS BIGINT) AS e_key
-         |  FROM d),
-         |r AS (SELECT *, row_number() OVER (ORDER BY e_key, doc_id) AS pick FROM e)
-         |SELECT CAST(pick AS BIGINT) AS pick, doc_id, CAST(n_chars AS BIGINT) AS w,
-         |  CAST(e_key AS BIGINT) AS e_key
-         |FROM r WHERE pick <= $k ORDER BY pick""".stripMargin
-    ) { (spark, dir) =>
-      val d = Tables.documents(spark, dir).select(col("doc_id"), col("n_chars"))
-      Sampling.weightedReservoir(d, "doc_id", "n_chars", k, salt, levels)
-        .select(col("sample_rank").cast("long").as("pick"), col("doc_id"),
-          col("n_chars").cast("long").as("w"), col("e_key").cast("long").as("e_key"))
-        .orderBy("pick")
-    }
-  }
-
-  /** Autocorrelation audit in exact integers — the diagnostic the series
-    * band's estimators presuppose a value for: q177's EWMA half-life,
-    * q184/q186's trend/seasonal smoothing and q189's changepoint window
-    * all implicitly assume HOW correlated consecutive days are; this
-    * reports it. Per nation over the q189 daily shipped-revenue series,
-    * lag-k autocorrelation r_k = Σ d_t·d_{t−k} / Σ d_t² at k ∈ {1,2,3,7}
-    * (7 = the weekly seasonality q186 models), with d = x − (S div n) —
-    * the INTEGER-truncated mean (q136's discipline) so every term is
-    * exact cross-engine. Quantization: the micro ratio divides by the
-    * pre-truncated denominator (num div greatest(den div 10⁶, 1)) so no
-    * intermediate ever exceeds max(num, den) — at 100 TB the products
-    * run in decimal (q187) but the ×10⁶ blow-up that would breach 38
-    * digits never happens. beyond_noise is the classic |r| > 2/√n white-
-    * noise band, squared into integers (documented heuristic, q187's
-    * χ²/dof style). Shape at 100 TB: the corpus contributes ONE
-    * map-side-combined (nation, day) aggregate; the lag windows and the
-    * final sums all ride one nation-keyed exchange over the calendar-
-    * bounded series. */
-  val q210AcfAudit: QuerySpec = {
-    val lags = Seq(1, 2, 3, 7)
-    val lagColsSql = lags.map(k =>
-      s"lag(d, $k) OVER (PARTITION BY nk ORDER BY day) AS d$k").mkString(",\n      |    ")
-    val numColsSql = lags.map(k =>
-      s"sum(CAST(d AS HUGEINT) * d$k) AS n$k").mkString(",\n      |    ")
-    val valsSql = lags.map(k => s"($k, n$k)").mkString(", ")
-    QuerySpec.oracle(
-      "q210_acf_audit",
-      s"""WITH rev AS (
-         |  SELECT s_nationkey AS nk, CAST(l_shipdate AS DATE) AS day,
-         |    CAST(sum(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
-         |      * (100 - CAST(CAST(l_discount AS DECIMAL(18,2)) * 100 AS BIGINT))) AS BIGINT) AS x
-         |  FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-         |  GROUP BY 1, 2),
-         |st AS (SELECT nk, CAST(count(*) AS BIGINT) AS n, CAST(sum(x) AS BIGINT) AS s
-         |       FROM rev GROUP BY 1),
-         |c AS (SELECT r.nk, day, x - (s // n) AS d, n FROM rev r JOIN st ON st.nk = r.nk),
-         |w AS (SELECT nk, n, d,
-         |    $lagColsSql
-         |  FROM c),
-         |agg AS (SELECT nk, any_value(n) AS n, sum(CAST(d AS HUGEINT) * d) AS den,
-         |    $numColsSql
-         |  FROM w GROUP BY nk),
-         |lg AS (SELECT nk, n, CAST(l.nm // greatest(den // 1000000, 1) AS BIGINT) AS acf,
-         |    l.k
-         |  FROM agg, LATERAL (VALUES $valsSql) AS l(k, nm))
-         |SELECT nn.n_name AS nation, CAST(k AS BIGINT) AS lag, n AS n_days,
-         |  acf AS acf_micro, acf * acf * n > 4000000000000 AS beyond_noise
-         |FROM lg JOIN nation nn ON nn.n_nationkey = lg.nk
-         |ORDER BY nation, lag""".stripMargin
-    ) { (spark, dir) =>
-      val rev = dailyRevenue(spark, dir)
-      val st = rev.groupBy("nk")
-        .agg(count(lit(1)).cast("long").as("n"), sum(col("x")).cast("long").as("s"))
-      val byDay = Window.partitionBy("nk").orderBy("day")
-      val w = rev.join(broadcast(st), "nk")
-        .withColumn("d", col("x") - expr("s div n"))
-      val lagged = lags.foldLeft(w)((df, k) =>
-        df.withColumn(s"d$k", lag(col("d"), k).over(byDay)))
-      // d² passes int64 at corpus scale — decimal inside (q187), and the
-      // div-first micro ratio keeps everything under 38 digits
-      val aggCols = Seq(first(col("n")).as("n"),
-        sum(expr("CAST(d AS DECIMAL(38,0)) * d")).as("den")) ++
-        lags.map(k => sum(expr(s"CAST(d AS DECIMAL(38,0)) * d$k")).as(s"n$k"))
-      val agg = lagged.groupBy("nk").agg(aggCols.head, aggCols.tail: _*)
-      val lg = agg.select(col("nk"), col("n"), col("den"),
-          explode(array(lags.map(k =>
-            struct(lit(k.toLong).as("k"), col(s"n$k").as("nm"))): _*)).as("l"))
-        .select(col("nk"), col("n"), col("l.k").as("lag"),
-          expr("l.nm div greatest(den div 1000000, 1)").cast("long").as("acf_micro"))
-      lg.join(broadcast(Tables.nation(spark, dir)
-            .select(col("n_nationkey"), col("n_name"))),
-          col("nk") === col("n_nationkey"))
-        .select(col("n_name").as("nation"), col("lag"), col("n").as("n_days"),
-          col("acf_micro"),
-          expr("acf_micro * acf_micro * n > 4000000000000").as("beyond_noise"))
-        .orderBy("nation", "lag")
-    }
-  }
-
-  /** Partial autocorrelation at lags 1–3 — q210's ACF says how much an
-    * MA signature persists; the PACF says the AR order (the pair is the
-    * Box-Jenkins identification toolkit, and quoting one without the
-    * other is how series get mis-modeled). Closed-form Durbin-Levinson,
-    * exact integers in micro units with the SAME truncation both
-    * engines: φ₁₁ = r₁; φ₂₂ = (r₂·10⁶ − r₁²)·10⁶ div (10¹² − r₁²);
-    * φ₂₁ = r₁(10⁶ − φ₂₂) div 10⁶; φ₃₃ = (r₃·10⁶ − φ₂₁r₂ − φ₂₂r₁)·10⁶
-    * div (10¹² − φ₂₁r₁ − φ₂₂r₂). Every micro value is ≤ ~10⁶ in
-    * magnitude, so products cap at 10¹² and the ×10⁶ numerators at
-    * ~10¹⁸ — inside int64 at ANY corpus scale (the inputs are already
-    * ratios; this is the rare statistic with no decimal-inside need).
-    * Degenerate denominators (|r| → 1) emit 0, both engines; and since
-    * a near-degenerate denominator (|r₁| just under 10⁶) can make the
-    * raw φ₂₂ ratio blow past 10⁶ — re-breaching int64 in the φ₃₃
-    * numerator, where Spark would wrap and ANSI DuckDB would raise —
-    * φ₂₂ is clamped to [−10⁶, 10⁶] in BOTH engines (principled: a
-    * partial autocorrelation is a correlation), which restores the
-    * ≤4·10¹⁸ bound on every downstream term. Shape: the
-    * whole query is q210's one (nation, day) aggregate + lag exchange;
-    * the recursion runs on the 25-row ACF dictionary. */
-  val q215PacfAudit: QuerySpec = QuerySpec.oracle(
-    "q215_pacf_audit",
-    s"""WITH rev AS (
-       |  SELECT s_nationkey AS nk, CAST(l_shipdate AS DATE) AS day,
-       |    CAST(sum(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
-       |      * (100 - CAST(CAST(l_discount AS DECIMAL(18,2)) * 100 AS BIGINT))) AS BIGINT) AS x
-       |  FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-       |  GROUP BY 1, 2),
-       |st AS (SELECT nk, CAST(count(*) AS BIGINT) AS n, CAST(sum(x) AS BIGINT) AS s
-       |       FROM rev GROUP BY 1),
-       |c AS (SELECT r.nk, day, x - (s // n) AS d, n FROM rev r JOIN st ON st.nk = r.nk),
-       |w AS (SELECT nk, n, d,
-       |    lag(d, 1) OVER (PARTITION BY nk ORDER BY day) AS d1,
-       |    lag(d, 2) OVER (PARTITION BY nk ORDER BY day) AS d2,
-       |    lag(d, 3) OVER (PARTITION BY nk ORDER BY day) AS d3
-       |  FROM c),
-       |agg AS (SELECT nk, any_value(n) AS n, sum(CAST(d AS HUGEINT) * d) AS den,
-       |    sum(CAST(d AS HUGEINT) * d1) AS n1, sum(CAST(d AS HUGEINT) * d2) AS n2,
-       |    sum(CAST(d AS HUGEINT) * d3) AS n3
-       |  FROM w GROUP BY nk),
-       |acf AS (SELECT nk, n,
-       |    CAST(n1 // greatest(den // 1000000, 1) AS BIGINT) AS r1,
-       |    CAST(n2 // greatest(den // 1000000, 1) AS BIGINT) AS r2,
-       |    CAST(n3 // greatest(den // 1000000, 1) AS BIGINT) AS r3
-       |  FROM agg),
-       |p2 AS (SELECT *, greatest(least(CASE WHEN 1000000000000 - r1*r1 = 0 THEN 0
-       |    ELSE (r2*1000000 - r1*r1) * 1000000 // (1000000000000 - r1*r1) END,
-       |    1000000), -1000000) AS pacf2
-       |  FROM acf),
-       |p3 AS (SELECT *, r1 * (1000000 - pacf2) // 1000000 AS f21 FROM p2)
-       |SELECT nn.n_name AS nation, n AS n_days,
-       |  r1 AS pacf1_micro, CAST(pacf2 AS BIGINT) AS pacf2_micro,
-       |  CAST(CASE WHEN 1000000000000 - f21*r1 - pacf2*r2 = 0 THEN 0
-       |    ELSE (r3*1000000 - f21*r2 - pacf2*r1) * 1000000
-       |         // (1000000000000 - f21*r1 - pacf2*r2) END AS BIGINT) AS pacf3_micro
-       |FROM p3 JOIN nation nn ON nn.n_nationkey = p3.nk
-       |ORDER BY nation""".stripMargin
-  ) { (spark, dir) =>
-    val rev = dailyRevenue(spark, dir)
-    val st = rev.groupBy("nk")
-      .agg(count(lit(1)).cast("long").as("n"), sum(col("x")).cast("long").as("s"))
-    val byDay = Window.partitionBy("nk").orderBy("day")
-    val lagged = (1 to 3).foldLeft(
-        rev.join(broadcast(st), "nk").withColumn("d", col("x") - expr("s div n")))(
-      (df, k) => df.withColumn(s"d$k", lag(col("d"), k).over(byDay)))
-    val acf = lagged.groupBy("nk")
-      .agg(first(col("n")).as("n"),
-        sum(expr("CAST(d AS DECIMAL(38,0)) * d")).as("den"),
-        sum(expr("CAST(d AS DECIMAL(38,0)) * d1")).as("n1"),
-        sum(expr("CAST(d AS DECIMAL(38,0)) * d2")).as("n2"),
-        sum(expr("CAST(d AS DECIMAL(38,0)) * d3")).as("n3"))
-      .select(col("nk"), col("n"),
-        expr("n1 div greatest(den div 1000000, 1)").cast("long").as("r1"),
-        expr("n2 div greatest(den div 1000000, 1)").cast("long").as("r2"),
-        expr("n3 div greatest(den div 1000000, 1)").cast("long").as("r3"))
-    acf
-      .withColumn("pacf2", greatest(least(
-        when(expr("1000000000000 - r1*r1") === 0L, 0L)
-          .otherwise(expr("(r2*1000000 - r1*r1) * 1000000 div (1000000000000 - r1*r1)")),
-        lit(1000000L)), lit(-1000000L)))
-      .withColumn("f21", expr("r1 * (1000000 - pacf2) div 1000000"))
-      .join(broadcast(Tables.nation(spark, dir)
-          .select(col("n_nationkey"), col("n_name"))),
-        col("nk") === col("n_nationkey"))
-      .select(col("n_name").as("nation"), col("n").as("n_days"),
-        col("r1").as("pacf1_micro"), col("pacf2").cast("long").as("pacf2_micro"),
-        when(expr("1000000000000 - f21*r1 - pacf2*r2") === 0L, 0L)
-          .otherwise(expr(
-            "(r3*1000000 - f21*r2 - pacf2*r1) * 1000000 div (1000000000000 - f21*r1 - pacf2*r2)"))
-          .cast("long").as("pacf3_micro"))
-      .orderBy("nation")
-  }
-
-  /** Yule-Walker AR(p≤3) fit + one-step backtest — the band's missing
-    * FITTING step (VERDICT r19 item 4): q210/q215 identify the order
-    * (ACF/PACF); this fits the AR coefficients those statistics imply
-    * and answers "which model" with an out-of-the-box backtest against
-    * the naive lag-1 forecast. The coefficients are free: Durbin-Levinson
-    * forward coefficients ARE the Yule-Walker solution, and q215's
-    * closed forms already compute them — φ(1)=(r₁); φ(2)=(φ₂₁,φ₂₂);
-    * φ(3)ₖ = φ(2)ₖ − φ₃₃·φ(2)₃₋ₖ, all exact micro-unit integers with the
-    * same truncation both engines. One-step forecast at day t:
-    * x̂ = mean + Σ φᵢ·d_{t−i} div 10⁶ (per-term truncation, the q200
-    * discipline); backtest over every day with 3 lags available; per
-    * (nation, p) the report carries SSE(AR_p) as a micro ratio of
-    * SSE(naive) via div-first quantization (q210's trick — int128-safe
-    * at ANY corpus scale), so beats_naive is the decision a forecasting
-    * pipeline reads. On near-white daily revenue the AR forecast ≈ the
-    * mean, halving the naive differencing variance — the fixture pin.
-    * Shape at 100 TB: the corpus-sized work is the ONE memoized
-    * (nation, day) aggregate ([[dailyRevenueCached]]); lags, fit, and
-    * backtest all live on the calendar-bounded series. Reference analog:
-    * /root/reference/src/main.py:192-194 (fit → transform → score). */
-  val q217ArFit: QuerySpec = QuerySpec.oracle(
-    "q217_ar_fit",
-    s"""WITH rev AS (
-       |  SELECT s_nationkey AS nk, CAST(l_shipdate AS DATE) AS day,
-       |    CAST(sum(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
-       |      * (100 - CAST(CAST(l_discount AS DECIMAL(18,2)) * 100 AS BIGINT))) AS BIGINT) AS x
-       |  FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-       |  GROUP BY 1, 2),
-       |st AS (SELECT nk, CAST(count(*) AS BIGINT) AS n, CAST(sum(x) AS BIGINT) AS s
-       |       FROM rev GROUP BY 1),
-       |c AS (SELECT r.nk, day, x - (s // n) AS d, n FROM rev r JOIN st ON st.nk = r.nk),
-       |w AS (SELECT nk, n, d,
-       |    lag(d, 1) OVER (PARTITION BY nk ORDER BY day) AS d1,
-       |    lag(d, 2) OVER (PARTITION BY nk ORDER BY day) AS d2,
-       |    lag(d, 3) OVER (PARTITION BY nk ORDER BY day) AS d3
-       |  FROM c),
-       |agg AS (SELECT nk, any_value(n) AS n, sum(CAST(d AS HUGEINT) * d) AS den,
-       |    sum(CAST(d AS HUGEINT) * d1) AS n1, sum(CAST(d AS HUGEINT) * d2) AS n2,
-       |    sum(CAST(d AS HUGEINT) * d3) AS n3
-       |  FROM w GROUP BY nk),
-       |acf AS (SELECT nk, n,
-       |    CAST(n1 // greatest(den // 1000000, 1) AS BIGINT) AS r1,
-       |    CAST(n2 // greatest(den // 1000000, 1) AS BIGINT) AS r2,
-       |    CAST(n3 // greatest(den // 1000000, 1) AS BIGINT) AS r3
-       |  FROM agg),
-       |p2 AS (SELECT *, greatest(least(CASE WHEN 1000000000000 - r1*r1 = 0 THEN 0
-       |    ELSE (r2*1000000 - r1*r1) * 1000000 // (1000000000000 - r1*r1) END,
-       |    1000000), -1000000) AS pacf2
-       |  FROM acf),
-       |p3 AS (SELECT *, r1 * (1000000 - pacf2) // 1000000 AS f21 FROM p2),
-       |coef AS (SELECT nk, r1 AS a1, f21 AS b1, pacf2 AS b2,
-       |    greatest(least(CASE WHEN 1000000000000 - f21*r1 - pacf2*r2 = 0 THEN 0
-       |      ELSE (r3*1000000 - f21*r2 - pacf2*r1) * 1000000
-       |           // (1000000000000 - f21*r1 - pacf2*r2) END, 1000000), -1000000) AS c3
-       |  FROM p3),
-       |coef3 AS (SELECT *, b1 - (c3 * b2 // 1000000) AS c1,
-       |    b2 - (c3 * b1 // 1000000) AS c2 FROM coef),
-       |err AS (
-       |  SELECT w.nk,
-       |    CAST(d - d1 AS HUGEINT) AS e0,
-       |    CAST(d - (CAST(a1 AS HUGEINT) * d1 // 1000000) AS HUGEINT) AS e1,
-       |    CAST(d - (CAST(b1 AS HUGEINT) * d1 // 1000000)
-       |           - (CAST(b2 AS HUGEINT) * d2 // 1000000) AS HUGEINT) AS e2,
-       |    CAST(d - (CAST(c1 AS HUGEINT) * d1 // 1000000)
-       |           - (CAST(c2 AS HUGEINT) * d2 // 1000000)
-       |           - (CAST(c3 AS HUGEINT) * d3 // 1000000) AS HUGEINT) AS e3
-       |  FROM w JOIN coef3 ON coef3.nk = w.nk WHERE d3 IS NOT NULL),
-       |sse AS (SELECT nk, count(*) AS n_eval,
-       |    sum(e0*e0) AS s0, sum(e1*e1) AS s1, sum(e2*e2) AS s2, sum(e3*e3) AS s3
-       |  FROM err GROUP BY nk)
-       |SELECT nn.n_name AS nation, CAST(p.p AS BIGINT) AS p,
-       |  CAST(n_eval AS BIGINT) AS n_eval,
-       |  CAST(p.f1 AS BIGINT) AS phi1_micro, CAST(p.f2 AS BIGINT) AS phi2_micro,
-       |  CAST(p.f3 AS BIGINT) AS phi3_micro,
-       |  CAST(p.sp // greatest(s0 // 1000000, 1) AS BIGINT) AS sse_ratio_micro,
-       |  p.sp // greatest(s0 // 1000000, 1) <= 1000000 AS beats_naive
-       |FROM sse JOIN coef3 co ON co.nk = sse.nk
-       |JOIN nation nn ON nn.n_nationkey = sse.nk,
-       |LATERAL (VALUES (1, co.a1, 0, 0, s1), (2, co.b1, co.b2, 0, s2),
-       |  (3, co.c1, co.c2, co.c3, s3)) AS p(p, f1, f2, f3, sp)
-       |ORDER BY nation, p""".stripMargin
-  ) { (spark, dir) =>
-    val rev = dailyRevenue(spark, dir)
-    val st = rev.groupBy("nk")
-      .agg(count(lit(1)).cast("long").as("n"), sum(col("x")).cast("long").as("s"))
-    val byDay = Window.partitionBy("nk").orderBy("day")
-    // the fit aggregate AND the backtest both walk this lagged relation —
-    // cut the calendar-bounded window result once instead of executing
-    // the lag window per consumer
-    val lagged = (1 to 3).foldLeft(
-        rev.join(broadcast(st), "nk").withColumn("d", col("x") - expr("s div n")))(
-      (df, k) => df.withColumn(s"d$k", lag(col("d"), k).over(byDay)))
-      .localCheckpoint(eager = false)
-    val coef = lagged.groupBy("nk")
-      .agg(sum(expr("CAST(d AS DECIMAL(38,0)) * d")).as("den"),
-        sum(expr("CAST(d AS DECIMAL(38,0)) * d1")).as("n1"),
-        sum(expr("CAST(d AS DECIMAL(38,0)) * d2")).as("n2"),
-        sum(expr("CAST(d AS DECIMAL(38,0)) * d3")).as("n3"))
-      .select(col("nk"),
-        expr("n1 div greatest(den div 1000000, 1)").cast("long").as("r1"),
-        expr("n2 div greatest(den div 1000000, 1)").cast("long").as("r2"),
-        expr("n3 div greatest(den div 1000000, 1)").cast("long").as("r3"))
-      .withColumn("pacf2", greatest(least(
-        when(expr("1000000000000 - r1*r1") === 0L, 0L)
-          .otherwise(expr("(r2*1000000 - r1*r1) * 1000000 div (1000000000000 - r1*r1)")),
-        lit(1000000L)), lit(-1000000L)))
-      .withColumn("f21", expr("r1 * (1000000 - pacf2) div 1000000"))
-      .withColumn("c3", greatest(least(
-        when(expr("1000000000000 - f21*r1 - pacf2*r2") === 0L, 0L)
-          .otherwise(expr(
-            "(r3*1000000 - f21*r2 - pacf2*r1) * 1000000 div (1000000000000 - f21*r1 - pacf2*r2)")),
-        lit(1000000L)), lit(-1000000L)))
-      .select(col("nk"), col("r1").as("a1"), col("f21").as("b1"),
-        col("pacf2").as("b2"), col("c3"))
-      .withColumn("c1", expr("b1 - (c3 * b2 div 1000000)"))
-      .withColumn("c2", expr("b2 - (c3 * b1 div 1000000)"))
-    // the backtest walks the SAME lagged relation the fit aggregated —
-    // the memoized checkpoint base makes the second walk dictionary-cheap
-    val sse = lagged.filter(col("d3").isNotNull)
-      .join(broadcast(coef), "nk")
-      .select(col("nk"),
-        expr("CAST(d - d1 AS DECIMAL(38,0))").as("e0"),
-        expr("CAST(d - (CAST(a1 AS DECIMAL(38,0)) * d1 div 1000000) AS DECIMAL(38,0))")
-          .as("e1"),
-        expr("""CAST(d - (CAST(b1 AS DECIMAL(38,0)) * d1 div 1000000)
-               |       - (CAST(b2 AS DECIMAL(38,0)) * d2 div 1000000) AS DECIMAL(38,0))"""
-          .stripMargin).as("e2"),
-        expr("""CAST(d - (CAST(c1 AS DECIMAL(38,0)) * d1 div 1000000)
-               |       - (CAST(c2 AS DECIMAL(38,0)) * d2 div 1000000)
-               |       - (CAST(c3 AS DECIMAL(38,0)) * d3 div 1000000) AS DECIMAL(38,0))"""
-          .stripMargin).as("e3"))
-      .groupBy("nk")
-      .agg(count(lit(1)).cast("long").as("n_eval"),
-        sum(expr("e0 * e0")).as("s0"), sum(expr("e1 * e1")).as("s1"),
-        sum(expr("e2 * e2")).as("s2"), sum(expr("e3 * e3")).as("s3"))
-    sse.join(broadcast(coef), "nk")
-      .select(col("nk"), col("n_eval"), col("s0"),
-        explode(array(
-          struct(lit(1).as("p"), col("a1").as("f1"), lit(0L).as("f2"),
-            lit(0L).as("f3"), col("s1").as("sp")),
-          struct(lit(2).as("p"), col("b1").as("f1"), col("b2").as("f2"),
-            lit(0L).as("f3"), col("s2").as("sp")),
-          struct(lit(3).as("p"), col("c1").as("f1"), col("c2").as("f2"),
-            col("c3").as("f3"), col("s3").as("sp")))).as("pp"))
-      .join(broadcast(Tables.nation(spark, dir)
-          .select(col("n_nationkey"), col("n_name"))),
-        col("nk") === col("n_nationkey"))
-      .select(col("n_name").as("nation"), col("pp.p").cast("long").as("p"),
-        col("n_eval"),
-        col("pp.f1").cast("long").as("phi1_micro"),
-        col("pp.f2").cast("long").as("phi2_micro"),
-        col("pp.f3").cast("long").as("phi3_micro"),
-        expr("pp.sp div greatest(s0 div 1000000, 1)").cast("long")
-          .as("sse_ratio_micro"),
-        expr("pp.sp div greatest(s0 div 1000000, 1) <= 1000000").as("beats_naive"))
-      .orderBy("nation", "p")
-  }
-
-  /** Embedding drift report over a (label, half, qv) relation — the
-    * operator behind [[q224EmbeddingDrift]], public so the spec can feed
-    * it a PLANTED drift fixture: per label, the integer centroid of each
-    * half (per-dim truncating div — q170's update rule), the squared
-    * centroid shift, the average within-half scatter (inertia per point),
-    * and drift = shift²·10⁶ div scatter with the 0.25 flag. */
-  def embeddingDrift(q: DataFrame): DataFrame = {
-    val dimrows = q.select(col("label"), col("half"),
-        posexplode(col("qv")).as(Seq("pos", "val")))
-    // ONE (label, half, pos) aggregate carries the sufficient statistics
-    // (n, Σval, Σval²): the centroid is s1 div n, and the within-half
-    // scatter Σ(val − c)² expands EXACTLY to s2 − 2·c·s1 + n·c² for the
-    // integer (truncating-div) c — all integer arithmetic, so the value
-    // is bit-identical to the row-walk form. This removes the second
-    // corpus explode pass and the |corpus·dims|-row dimrows⋈cent join the
-    // inertia previously paid (r22, guide §2.3 sufficient statistics /
-    // §1.2 one pass): the corpus is touched once and everything
-    // downstream is (label × half × dims) dictionary-sized.
-    val cent = dimrows.groupBy("label", "half", "pos")
-      .agg(count(lit(1)).cast("long").as("n"),
-        sum(col("val")).cast("long").as("s1"),
-        sum(expr("CAST(val AS DECIMAL(38,0)) * val")).as("s2"))
-      .select(col("label"), col("half"), col("pos"), col("n"),
-        expr("s1 div n").cast("long").as("c"), col("s1"), col("s2"))
-    val shift = cent.filter(col("half") === 0)
-      .select(col("label"), col("pos"), col("c").as("ca"), col("n").as("n_a"))
-      .join(cent.filter(col("half") === 1)
-          .select(col("label"), col("pos"), col("c").as("cb"), col("n").as("n_b")),
-        Seq("label", "pos"))
-      .groupBy("label")
-      .agg(sum(expr("(ca - cb) * (ca - cb)")).cast("long").as("shift_sq"),
-        first(col("n_a")).as("n_a"), first(col("n_b")).as("n_b"))
-    val inert = cent
-      .groupBy("label", "half")
-      .agg(sum(expr("""s2 - 2 * CAST(c AS DECIMAL(38,0)) * s1
-                     |   + CAST(n AS DECIMAL(38,0)) * c * c""".stripMargin)).as("ss"),
-        first(col("n")).as("n"))
-      .groupBy("label")
-      .agg(expr("sum(ss) div sum(n)").cast("long").as("inertia_avg"))
-    shift.join(inert, "label")
-      .select(col("label"), col("n_a"), col("n_b"), col("shift_sq"),
-        col("inertia_avg"),
-        expr("shift_sq * 1000000 div greatest(inertia_avg, 1)").cast("long")
-          .as("drift_micro"),
-        expr("shift_sq * 1000000 div greatest(inertia_avg, 1) > 250000").as("drifted"))
-      .orderBy("label")
-  }
-
-  /** Embedding-distribution drift monitor — the check an embedding
-    * pipeline runs when a model, preprocessing, or corpus version
-    * changes: per label, how far did the centroid MOVE between two
-    * corpus slices, relative to the cloud's own scatter
-    * (between-centroid d² over average within-half inertia — a
-    * discrete homogeneity readout in exact integers; Rahimi-style
-    * population drift monitoring reduced to sufficient statistics). The
-    * declared split is vec_id PARITY — an A/A HARNESS TEST (q201's
-    * discipline): random halves of one distribution must read
-    * non-drifted, and they do (~0.08 vs the 0.25 flag); the spec plants
-    * a real shift and pins the flag firing. Everything is q170-style
-    * integer arithmetic (per-dim truncating-div centroids, integer d²),
-    * so the monitor hash-verifies. Shape at 100 TB: two
-    * map-side-combined (label, half, dim) aggregates — sufficient
-    * statistics, the corpus never shuffles raw vectors. */
-  val q224EmbeddingDrift: QuerySpec = QuerySpec.oracle(
-    "q224_embedding_drift",
-    s"""WITH v AS (SELECT vec_id, label, embedding FROM embeddings),
-       |s AS (SELECT vec_id, label, embedding, ${VectorFns.Sql.maxAbs("embedding")} AS scale FROM v),
-       |q AS (SELECT vec_id, label, vec_id % 2 AS half,
-       |    ${VectorFns.Sql.quantizeInt8("embedding", "scale")} AS qv FROM s),
-       |dimrows AS (SELECT label, half, g.i AS pos, qv[g.i] AS val
-       |  FROM q CROSS JOIN generate_series(1, 64) g(i)),
-       |cent AS (SELECT label, half, pos,
-       |    CAST(sum(val) // count(*) AS BIGINT) AS c, CAST(count(*) AS BIGINT) AS n
-       |  FROM dimrows GROUP BY 1, 2, 3),
-       |shift AS (SELECT a.label,
-       |    CAST(sum((a.c - b.c) * (a.c - b.c)) AS BIGINT) AS shift_sq,
-       |    any_value(a.n) AS n_a, any_value(b.n) AS n_b
-       |  FROM cent a JOIN cent b ON a.label = b.label AND a.pos = b.pos
-       |  WHERE a.half = 0 AND b.half = 1 GROUP BY a.label),
-       |inert0 AS (SELECT d.label, d.half,
-       |    sum(CAST((d.val - c.c) AS HUGEINT) * (d.val - c.c)) AS ss,
-       |    any_value(c.n) AS n
-       |  FROM dimrows d
-       |  JOIN cent c ON c.label = d.label AND c.half = d.half AND c.pos = d.pos
-       |  GROUP BY 1, 2),
-       |ic AS (SELECT label, CAST(sum(ss) // sum(n) AS BIGINT) AS inertia_avg
-       |  FROM inert0 GROUP BY label)
-       |SELECT s.label, s.n_a, s.n_b, s.shift_sq, ic.inertia_avg,
-       |  CAST(s.shift_sq * 1000000 // greatest(ic.inertia_avg, 1) AS BIGINT)
-       |    AS drift_micro,
-       |  s.shift_sq * 1000000 // greatest(ic.inertia_avg, 1) > 250000 AS drifted
-       |FROM shift s JOIN ic ON ic.label = s.label
-       |ORDER BY s.label""".stripMargin
-  ) { (spark, dir) =>
-    val q = Tables.embeddings(spark, dir)
-      .withColumn("scale", VectorFns.maxAbs(col("embedding")))
-      .select(col("label"), pmod(col("vec_id"), lit(2)).as("half"),
-        VectorFns.quantizeInt8(col("embedding"), col("scale")).as("qv"))
-    embeddingDrift(q)
-  }
-
-  /** Ljung-Box whiteness test on the AR(1) residuals — the CHECK step
-    * that completes Box-Jenkins (q210/q215 identify, q217 fits, nothing
-    * verified the fit left white noise behind): per nation, residuals
-    * e_t = d_t − φ̂₁·d_{t−1} div 10⁶ (q217's AR(1) forecast error over
-    * every day with a lag), their lag-{1,2,3} autocorrelations by the
-    * same div-first micro quantization, and
-    * Q = n(n+2)·Σ_k r_k²/(n−k) with per-term truncating division —
-    * whiteness rejected when Q_micro exceeds the χ²(3) α=0.05 critical
-    * value 7.815 (the documented-constant flag discipline, q187/q192).
-    * The report is the fit's acceptance test: residual r₁ collapses to
-    * ≈0 (the AR(1) removed exactly the lag-1 structure it models,
-    * spec-pinned), and a rejection names the nation whose series needs a
-    * richer model. int128-safe: every product runs in decimal/HUGEINT
-    * before the ÷10⁶. Shape: the memoized series base + two nation-keyed
-    * lag windows (d, then e) + two 25-row aggregates. */
-  val q223LjungBox: QuerySpec = QuerySpec.oracle(
-    "q223_ljung_box",
-    """WITH rev AS (
-      |  SELECT s_nationkey AS nk, CAST(l_shipdate AS DATE) AS day,
-      |    CAST(sum(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
-      |      * (100 - CAST(CAST(l_discount AS DECIMAL(18,2)) * 100 AS BIGINT))) AS BIGINT) AS x
-      |  FROM lineitem JOIN supplier ON l_suppkey = s_suppkey GROUP BY 1, 2),
-      |st AS (SELECT nk, CAST(count(*) AS BIGINT) AS n, CAST(sum(x) AS BIGINT) AS s
-      |       FROM rev GROUP BY 1),
-      |c AS (SELECT r.nk, day, x - (s // n) AS d FROM rev r JOIN st ON st.nk = r.nk),
-      |w AS (SELECT nk, day, d, lag(d, 1) OVER (PARTITION BY nk ORDER BY day) AS d1
-      |      FROM c),
-      |agg AS (SELECT nk, sum(CAST(d AS HUGEINT) * d) AS den,
-      |    sum(CAST(d AS HUGEINT) * d1) AS n1
-      |  FROM w GROUP BY nk),
-      |acf AS (SELECT nk, CAST(n1 // greatest(den // 1000000, 1) AS BIGINT) AS a1
-      |        FROM agg),
-      |e AS (SELECT w.nk, day, d - (CAST(a1 AS HUGEINT) * d1 // 1000000) AS e
-      |  FROM w JOIN acf ON acf.nk = w.nk WHERE d1 IS NOT NULL),
-      |ew AS (SELECT nk, e,
-      |    lag(e, 1) OVER (PARTITION BY nk ORDER BY day) AS e1,
-      |    lag(e, 2) OVER (PARTITION BY nk ORDER BY day) AS e2,
-      |    lag(e, 3) OVER (PARTITION BY nk ORDER BY day) AS e3
-      |  FROM e),
-      |ra AS (SELECT nk, CAST(count(*) AS BIGINT) AS n,
-      |    sum(CAST(e AS HUGEINT) * e) AS den,
-      |    sum(CAST(e AS HUGEINT) * e1) AS m1, sum(CAST(e AS HUGEINT) * e2) AS m2,
-      |    sum(CAST(e AS HUGEINT) * e3) AS m3
-      |  FROM ew GROUP BY nk),
-      |rr AS (SELECT nk, n,
-      |    CAST(m1 // greatest(den // 1000000, 1) AS BIGINT) AS r1,
-      |    CAST(m2 // greatest(den // 1000000, 1) AS BIGINT) AS r2,
-      |    CAST(m3 // greatest(den // 1000000, 1) AS BIGINT) AS r3
-      |  FROM ra),
-      |q AS (SELECT nk, n, r1, r2, r3,
-      |    CAST(CAST(n AS HUGEINT) * (n + 2)
-      |      * (r1*r1 // (n-1) + r2*r2 // (n-2) + r3*r3 // (n-3)) // 1000000 AS BIGINT)
-      |      AS q_lb
-      |  FROM rr)
-      |SELECT nn.n_name AS nation, n AS n_resid, r1 AS racf1_micro,
-      |  r2 AS racf2_micro, r3 AS racf3_micro, q_lb AS q_lb_micro,
-      |  q_lb > 7815000 AS whiteness_rejected
-      |FROM q JOIN nation nn ON nn.n_nationkey = q.nk
-      |ORDER BY nation""".stripMargin
-  ) { (spark, dir) =>
-    val rev = dailyRevenue(spark, dir)
-    val st = rev.groupBy("nk")
-      .agg(count(lit(1)).cast("long").as("n"), sum(col("x")).cast("long").as("s"))
-    val byDay = Window.partitionBy("nk").orderBy("day")
-    val w = rev.join(broadcast(st), "nk")
-      .withColumn("d", col("x") - expr("s div n"))
-      .withColumn("d1", lag(col("d"), 1).over(byDay))
-    val a1 = w.groupBy("nk")
-      .agg(sum(expr("CAST(d AS DECIMAL(38,0)) * d")).as("den"),
-        sum(expr("CAST(d AS DECIMAL(38,0)) * d1")).as("n1"))
-      .select(col("nk"),
-        expr("n1 div greatest(den div 1000000, 1)").cast("long").as("a1"))
-    val e = w.filter(col("d1").isNotNull).join(broadcast(a1), "nk")
-      .select(col("nk"), col("day"),
-        expr("d - (CAST(a1 AS DECIMAL(38,0)) * d1 div 1000000)").cast("long").as("e"))
-    val ew = (1 to 3).foldLeft(e)((df, k) =>
-      df.withColumn(s"e$k", lag(col("e"), k).over(byDay)))
-    ew.groupBy("nk")
-      .agg(count(lit(1)).cast("long").as("n"),
-        sum(expr("CAST(e AS DECIMAL(38,0)) * e")).as("den"),
-        sum(expr("CAST(e AS DECIMAL(38,0)) * e1")).as("m1"),
-        sum(expr("CAST(e AS DECIMAL(38,0)) * e2")).as("m2"),
-        sum(expr("CAST(e AS DECIMAL(38,0)) * e3")).as("m3"))
-      .select(col("nk"), col("n"),
-        expr("m1 div greatest(den div 1000000, 1)").cast("long").as("r1"),
-        expr("m2 div greatest(den div 1000000, 1)").cast("long").as("r2"),
-        expr("m3 div greatest(den div 1000000, 1)").cast("long").as("r3"))
-      .withColumn("q_lb", expr(
-        """CAST(CAST(n AS DECIMAL(38,0)) * (n + 2)
-          |  * (r1*r1 div (n-1) + r2*r2 div (n-2) + r3*r3 div (n-3)) div 1000000
-          |  AS BIGINT)""".stripMargin))
-      .join(broadcast(Tables.nation(spark, dir)
-          .select(col("n_nationkey"), col("n_name"))),
-        col("nk") === col("n_nationkey"))
-      .select(col("n_name").as("nation"), col("n").as("n_resid"),
-        col("r1").as("racf1_micro"), col("r2").as("racf2_micro"),
-        col("r3").as("racf3_micro"), col("q_lb").as("q_lb_micro"),
-        (col("q_lb") > 7815000L).as("whiteness_rejected"))
-      .orderBy("nation")
-  }
-
-  /** RAG SERVING capstone — the retrieval twin of q157's corpus-
-    * construction chain (VERDICT r19 item 3): every stage existed in
-    * isolation (q84 chunks, q174 BM25, q166 integer ANN, q185 RRF, q169
-    * integer MMR, q149 eval) but nothing composed the serving side end
-    * to end, the way a deployed RAG system actually runs a query.
-    * Pipeline, one oracle-verified relation: (1) chunk the corpus with
-    * q84's 128/96 overlapping windows; (2) SPARSE arm: q174's BM25 over
-    * the CHUNK corpus (chunk-level tf/df/dl, sorted-term pivot order for
-    * float exactness), doc score = max over its chunks (the standard
-    * MaxP aggregation), top-10 docs; (3) DENSE arm: exact int8 inner-
-    * product top-10 over the memoized quantized corpus (the q166 audit
-    * contract — production swaps q43/q171's IVF candidates, the rule
-    * only consumes (query, cand, rank)); (4) q185's RRF fuses the two
-    * rank lists (Σ 10⁶ div (60+rank)), top-8 shortlist; (5) q169's
-    * integer MMR (λ=70) re-ranks the shortlist for diversity, picking 5
-    * — in-row via the codegen'd kernel, unrolled greedy CTEs in the
-    * oracle (the one-definition discipline); (6) q149's per-query
-    * MRR/NDCG@5 against the label ground truth, shared float literals.
-    * Reference analog: the inference chain /root/reference/src/main.py:
-    * 192-194 (fetch → transform → score), scaled to a retrieval stack.
-    * Shape at 100 TB: term-at-a-time BM25 (no doc×query product), the
-    * dense scan is the broadcast-query audit form, fusion/MMR/eval live
-    * on |Q|×shortlist relations. */
-  /** Memoized chunk index per (session, dir): q84's 128/96 overlapping
-    * windows with the chunk token count — the serving-side retrieval
-    * index q216's BM25 arm reads four ways (corpus stats, tf, df, dl).
-    * A deployed RAG system materializes exactly this relation once per
-    * corpus version; the memo is that contract in session form. */
-  private val chunkIndexMemo = SessionMemo[DataFrame]("chunkIndex")
-  private def chunkIndexCached(spark: SparkSession, dir: String): DataFrame =
-    chunkIndexMemo(spark, dir) {
-      val (width, stride) = (128, 96)
-      Tables.documents(spark, dir)
-        .select(col("doc_id"), lowToksCol.as("ts"))
-        .select(col("doc_id"), col("ts"),
-          explode(sequence(lit(1), greatest(size(col("ts")), lit(1)), lit(stride))).as("s"))
-        .select(col("doc_id"),
-          ((col("s") - 1).cast("long") / stride).cast("long").as("chunk_idx"),
-          slice(col("ts"), col("s"), lit(width)).as("chunk"))
-        .filter(size(col("chunk")) > 0)
-        .withColumn("dl", size(col("chunk")).cast("long"))
-        .localCheckpoint(eager = false)
-    }
-
-  /** Memoized CHUNK-level BM25 postings + stats per (session, dir) — the
-    * [[bm25IndexCached]] twin over [[chunkIndexCached]]'s windows: one row
-    * per distinct (doc, chunk, token) with (tf, df, dl), exactly the
-    * multiset q216's per-evaluation ctf ⋈ cdf ⋈ dl chain produced, plus
-    * the 1-row (n_chunks, sum_dl). */
-  private val chunkBm25IndexMemo = SessionMemo[Bm25Index]("chunkBm25Index")
-  private def chunkBm25IndexCached(spark: SparkSession, dir: String): Bm25Index =
-    chunkBm25IndexMemo(spark, dir) {
-      val cdl = chunkIndexCached(spark, dir)
-      val cst = cdl.agg(count(lit(1)).as("n_chunks"), sum(col("dl")).as("sum_dl"))
-      val cpair = cdl.select(col("doc_id"), col("chunk_idx"), explode(col("chunk")).as("token"))
-      val ctf = cpair.groupBy("doc_id", "chunk_idx", "token").agg(count(lit(1)).as("tf"))
-      val cdf = cpair.distinct().groupBy("token").agg(count(lit(1)).as("df"))
-      // token-keyed repartition before the cut (r22): AQE coalesced the
-      // postings checkpoint to ONE partition, so q216's term-at-a-time
-      // scoring join ran its whole postings scan serially (the 0.7 s
-      // single-task job in the r22 JobProbe). token is the key every
-      // serving join probes; the broadcast query side preserves this
-      // partitioning, so scoring parallelizes over the postings layout.
-      Bm25Index(
-        graft.PlanDump.cut(
-          ctf.join(cdf, "token")
-            .join(cdl.select("doc_id", "chunk_idx", "dl"), Seq("doc_id", "chunk_idx"))
-            .repartition(col("token")),
-          "chunkBm25Postings"),
-        cst.localCheckpoint(eager = false))
-    }
-
-  val q216RagServe: QuerySpec = {
-    val (nQTerms, short, fuse, kPick, lam) = (4, 10, 8, 5, 70)
-    def dotSql(a: String, b: String): String =
-      s"list_reduce(list_prepend(0, list_transform(list_zip($a, $b), " +
-        "p -> p[1]*p[2])), (acc, v) -> acc + v)"
-    val sSql =
-      """((CAST(n_chunks AS DOUBLE) - CAST(df AS DOUBLE) + 0.5) / (CAST(df AS DOUBLE) + 0.5))
-        | * ((CAST(tf AS DOUBLE) * 2.2) / (CAST(tf AS DOUBLE)
-        |      + 1.2 * (0.25 + 0.75 * CAST(dl AS DOUBLE)
-        |               / (CAST(sum_dl AS DOUBLE) / CAST(n_chunks AS DOUBLE)))))"""
-        .stripMargin.replace("\n", "")
-    val pivSql = (1 to nQTerms)
-      .map(i => s"max(CASE WHEN ti = $i THEN s END) AS s$i").mkString(", ")
-    val totSql = (1 to nQTerms).map(i => s"coalesce(s$i, 0.0)").mkString(" + ")
-    val stepCtes = (2 to kPick).map { t =>
-      s"""m$t AS (
-         |  SELECT c.query_id, c.cand_id, c.rel, max(ps.s) AS maxsim
-         |  FROM cands c
-         |  LEFT JOIN pk${t - 1} x ON x.query_id = c.query_id AND x.cand_id = c.cand_id
-         |  JOIN psim ps ON ps.query_id = c.query_id AND ps.id_a = c.cand_id
-         |  JOIN pk${t - 1} p ON p.query_id = ps.query_id AND p.cand_id = ps.id_b
-         |  WHERE x.cand_id IS NULL
-         |  GROUP BY 1, 2, 3),
-         |p$t AS MATERIALIZED (
-         |  SELECT query_id, cand_id, rel, obj FROM (
-         |    SELECT query_id, cand_id, rel, $lam * rel - ${100 - lam} * maxsim AS obj,
-         |      row_number() OVER (PARTITION BY query_id
-         |                         ORDER BY $lam * rel - ${100 - lam} * maxsim DESC, cand_id) AS rn
-         |    FROM m$t) WHERE rn = 1),
-         |pk$t AS MATERIALIZED (SELECT * FROM pk${t - 1}
-         |  UNION ALL SELECT query_id, cand_id FROM p$t)""".stripMargin
-    }
-    val unionAll = (1 to kPick)
-      .map(t => s"SELECT query_id, $t AS pick_order, cand_id, rel, obj FROM p$t")
-      .mkString(" UNION ALL ")
-    def dl(v: Double): String = s"'$v'::DOUBLE"
-    val rels = (1 to 5)
-      .map(i => s"max(CASE WHEN pick_order = $i THEN rel01 END) AS rel$i").mkString(", ")
-    val nRel = (1 to 5).map(i => s"rel$i").mkString(" + ")
-    val dcg = (1 to 5).map(i => s"rel$i * ${dl(NdcgW(i - 1))}").mkString(" + ")
-    val mrr = (1 to 5).map(i => s"WHEN rel$i = 1 THEN ${dl(InvRank(i - 1))}").mkString(" ")
-    val idcg = (1 to 5).map(i => s"WHEN $i THEN ${dl(NdcgCum(i - 1))}").mkString(" ")
-    val sql =
-      s"""WITH toks AS (SELECT doc_id, $LowToksSql AS ts FROM documents),
-         |starts AS (SELECT doc_id, ts,
-         |    unnest(generate_series(1, greatest(len(ts), 1), 96)) AS s FROM toks),
-         |cdl AS MATERIALIZED (SELECT doc_id, CAST((s - 1) // 96 AS BIGINT) AS chunk_idx,
-         |    ts[s:s+127] AS chunk, CAST(len(ts[s:s+127]) AS BIGINT) AS dl
-         |  FROM starts WHERE len(ts[s:s+127]) > 0),
-         |cst AS (SELECT CAST(count(*) AS BIGINT) AS n_chunks,
-         |    CAST(sum(dl) AS BIGINT) AS sum_dl FROM cdl),
-         |cpair AS MATERIALIZED (SELECT doc_id, chunk_idx, unnest(chunk) AS token FROM cdl),
-         |ctf AS (SELECT doc_id, chunk_idx, token, count(*) AS tf FROM cpair GROUP BY 1, 2, 3),
-         |cdf AS (SELECT token, count(*) AS df
-         |  FROM (SELECT DISTINCT doc_id, chunk_idx, token FROM cpair) GROUP BY 1),
-         |qt AS (SELECT doc_id AS query_id,
-         |    unnest(list_sort(list_distinct(ts))[1:$nQTerms]) AS token
-         |  FROM toks WHERE doc_id % 50 = 0),
-         |qti AS (SELECT query_id, token,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY token) AS ti FROM qt),
-         |sc AS (SELECT q.query_id, t.doc_id, t.chunk_idx, q.ti, $sSql AS s
-         |  FROM qti q
-         |  JOIN ctf t ON t.token = q.token
-         |  JOIN cdf ON cdf.token = q.token
-         |  JOIN (SELECT doc_id, chunk_idx, dl FROM cdl) l
-         |    ON l.doc_id = t.doc_id AND l.chunk_idx = t.chunk_idx
-         |  CROSS JOIN cst
-         |  WHERE t.doc_id <> q.query_id),
-         |piv AS (SELECT query_id, doc_id, chunk_idx, $pivSql FROM sc GROUP BY 1, 2, 3),
-         |cscore AS (SELECT query_id, doc_id, max($totSql) AS score FROM piv GROUP BY 1, 2),
-         |ra AS (SELECT query_id, doc_id AS cand_id, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY score DESC, doc_id) AS rnk FROM cscore),
-         |v AS (SELECT vec_id, embedding FROM embeddings),
-         |sv AS (SELECT vec_id, embedding, ${VectorFns.Sql.maxAbs("embedding")} AS scale FROM v),
-         |qz AS MATERIALIZED (SELECT vec_id,
-         |    ${VectorFns.Sql.quantizeInt8("embedding", "scale")} AS qv FROM sv),
-         |qh AS MATERIALIZED (SELECT vec_id AS query_id, qv AS qv_q FROM qz WHERE vec_id % 50 = 0),
-         |dsim AS (SELECT qh.query_id, c.vec_id AS cand_id, ${dotSql("qh.qv_q", "c.qv")} AS rel
-         |  FROM qh JOIN qz c ON c.vec_id <> qh.query_id),
-         |rb AS (SELECT query_id, cand_id, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY rel DESC, cand_id) AS rnk FROM dsim),
-         |tops AS (
-         |  SELECT query_id, cand_id, rnk FROM ra WHERE rnk <= $short
-         |  UNION ALL SELECT query_id, cand_id, rnk FROM rb WHERE rnk <= $short),
-         |fused AS (SELECT query_id, cand_id,
-         |    CAST(sum(1000000 // (60 + rnk)) AS BIGINT) AS rrf_micro,
-         |    CAST(count(*) AS BIGINT) AS n_arms
-         |  FROM tops GROUP BY 1, 2),
-         |fsh AS MATERIALIZED (SELECT query_id, cand_id, rrf_micro, n_arms FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |      ORDER BY rrf_micro DESC, cand_id) AS rn FROM fused) WHERE rn <= $fuse),
-         |cands AS MATERIALIZED (SELECT f.query_id, f.cand_id, z.qv,
-         |    ${dotSql("q.qv_q", "z.qv")} AS rel
-         |  FROM fsh f JOIN qz z ON z.vec_id = f.cand_id
-         |  JOIN qh q ON q.query_id = f.query_id),
-         |psim AS MATERIALIZED (SELECT a.query_id, a.cand_id AS id_a, b.cand_id AS id_b,
-         |    ${dotSql("a.qv", "b.qv")} AS s
-         |  FROM cands a JOIN cands b ON a.query_id = b.query_id AND a.cand_id <> b.cand_id),
-         |p1 AS MATERIALIZED (SELECT query_id, cand_id, rel, rel AS obj FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |      ORDER BY rel DESC, cand_id) AS rn FROM cands) WHERE rn = 1),
-         |pk1 AS MATERIALIZED (SELECT query_id, cand_id FROM p1),
-         |${stepCtes.mkString(",\n")},
-         |picks AS ($unionAll),
-         |lab AS MATERIALIZED (SELECT vec_id, label FROM embeddings),
-         |pkr AS MATERIALIZED (SELECT p.query_id, p.pick_order, p.cand_id, p.rel, p.obj,
-         |    f.rrf_micro, f.n_arms,
-         |    CASE WHEN cl2.label = ql.label THEN 1 ELSE 0 END AS rel01
-         |  FROM picks p
-         |  JOIN fsh f ON f.query_id = p.query_id AND f.cand_id = p.cand_id
-         |  JOIN lab ql ON ql.vec_id = p.query_id
-         |  JOIN lab cl2 ON cl2.vec_id = p.cand_id),
-         |met AS (SELECT query_id, $rels FROM pkr GROUP BY 1),
-         |mq AS (SELECT query_id,
-         |    CAST($nRel AS BIGINT) AS n_rel,
-         |    CASE $mrr ELSE 0.0 END AS mrr,
-         |    CASE WHEN $nRel = 0 THEN 0.0
-         |         ELSE ($dcg) / (CASE ($nRel) $idcg END) END AS ndcg
-         |  FROM met)
-         |SELECT p.query_id, CAST(p.pick_order AS BIGINT) AS pick_order, p.cand_id,
-         |  CAST(p.rel AS BIGINT) AS rel, p.rrf_micro, p.n_arms,
-         |  CAST(p.obj AS BIGINT) AS obj, p.rel01 = 1 AS relevant,
-         |  m.n_rel, m.mrr, m.ndcg
-         |FROM pkr p JOIN mq m ON m.query_id = p.query_id
-         |ORDER BY p.query_id, p.pick_order""".stripMargin
-    QuerySpec.oracle("q216_rag_serve", sql) { (spark, dir) =>
-      // (1) the memoized chunk index — q84's windows, materialized once
-      // per session; the chunk POSTINGS (tf ⋈ df ⋈ dl) + corpus stats are
-      // memoized one level up too (r21, the bm25IndexCached economics:
-      // each evaluation re-ran the chunk-token explode + three aggregates)
-      val toks = Tables.documents(spark, dir).select(col("doc_id"), lowToksCol.as("ts"))
-      val Bm25Index(cpost, cst) = chunkBm25IndexCached(spark, dir)
-      // (2) sparse arm: q174's BM25, chunk-level, MaxP to doc rank
-      val qt = toks.filter(col("doc_id") % 50 === 0)
-        .select(col("doc_id").as("query_id"),
-          explode(slice(array_sort(array_distinct(col("ts"))), 1, nQTerms)).as("token"))
-        .withColumn("ti",
-          row_number().over(Window.partitionBy("query_id").orderBy("token")))
-      val idf = (col("n_chunks").cast("double") - col("df").cast("double") + lit(0.5)) /
-        (col("df").cast("double") + lit(0.5))
-      val avgdl = col("sum_dl").cast("double") / col("n_chunks").cast("double")
-      val tfn = (col("tf").cast("double") * lit(2.2)) /
-        (col("tf").cast("double") +
-          lit(1.2) * (lit(0.25) + lit(0.75) * col("dl").cast("double") / avgdl))
-      val sc = broadcast(qt).join(cpost, "token")
-        .crossJoin(broadcast(cst))
-        .filter(col("doc_id") =!= col("query_id"))
-        .select(col("query_id"), col("doc_id"), col("chunk_idx"), col("ti"),
-          (idf * tfn).as("s"))
-      val piv = sc.groupBy("query_id", "doc_id", "chunk_idx")
-        .agg(max(when(col("ti") === 1, col("s"))).as("s1"),
-          (2 to nQTerms).map(i => max(when(col("ti") === i, col("s"))).as(s"s$i")): _*)
-      val total = (1 to nQTerms).map(i => coalesce(col(s"s$i"), lit(0.0))).reduce(_ + _)
-      // per-query top-`short` via the bounded-heap aggregate, not a window
-      // (r22): row_number forced a full sort-shuffle of every scored
-      // (query, doc) row; TopKByScore's map-side heaps move ≤ short rows
-      // per query per partition and the posexplode position IS the rank —
-      // identical ordering contract (score DESC, id ASC)
-      val cscore = piv.select(col("query_id"), col("doc_id"), total.as("st"))
-        .groupBy("query_id", "doc_id").agg(max(col("st")).as("score"))
-      val ra = cscore.groupBy("query_id")
-        .agg(graft.functions.TopKByScore.topK(col("score"), col("doc_id"), short).as("topk"))
-        .select(col("query_id"), posexplode(col("topk")))
-        .select(col("query_id"), col("col.id").as("cand_id"),
-          (col("pos") + 1).as("rnk"))
-      // (3) dense arm: exact int8 dots over the memoized quantized corpus.
-      // rel is an int8-dot long (|rel| ≤ 127²·64 ≪ 2⁵³), so the double
-      // cast for the heap's score slot is exact and ties break on cand_id
-      // exactly as the window form did
-      val quant = quantizedVecsCk(spark, dir)
-      val qh = quant.filter(col("vec_id") % 50 === 0)
-        .select(col("vec_id").as("query_id"), col("qv").as("qv_q"))
-      val rb = quant.join(broadcast(qh), col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id").as("cand_id"),
-          graft.functions.LongDotExpr.dot(col("qv_q"), col("qv")).as("rel"))
-        .groupBy("query_id")
-        .agg(graft.functions.TopKByScore.topK(col("rel").cast("double"),
-          col("cand_id"), short).as("topk"))
-        .select(col("query_id"), posexplode(col("topk")))
-        .select(col("query_id"), col("col.id").as("cand_id"),
-          (col("pos") + 1).as("rnk"))
-      // (4) RRF fuse, top-8 shortlist
-      // |Q|×8 rows, referenced twice (MMR input + pick provenance join):
-      // without the cut both retrieval arms re-execute per reference
-      val fsh = ra.unionByName(rb)
-        .groupBy("query_id", "cand_id")
-        .agg(sum(expr("1000000 div (60 + rnk)")).cast("long").as("rrf_micro"),
-          count(lit(1)).cast("long").as("n_arms"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("query_id").orderBy(col("rrf_micro").desc, col("cand_id"))))
-        .filter(col("rn") <= fuse).drop("rn")
-      val fshCk = graft.PlanDump.cut(fsh, "q216_rrfShortlist")
-      // (5) integer MMR over the fused shortlist — q169's in-row kernel
-      val picks = fshCk
-        .join(quant.withColumnRenamed("vec_id", "cand_id"), "cand_id")
-        .join(broadcast(qh), "query_id")
-        .select(col("query_id"), col("cand_id"), col("qv"),
-          graft.functions.LongDotExpr.dot(col("qv_q"), col("qv")).as("rel"))
-        .groupBy("query_id")
-        .agg(collect_list(struct(col("cand_id").as("id"), col("rel"), col("qv"))).as("cs"))
-        .select(col("query_id"), posexplode(
-          graft.functions.IntMmrExpression.intMmr(col("cs"), kPick, lam)))
-        .select(col("query_id"), (col("pos") + 1).cast("long").as("pick_order"),
-          col("col.id").as("cand_id"), col("col.rel").as("rel"), col("col.obj").as("obj"))
-        .join(fshCk, Seq("query_id", "cand_id"))
-      // (6) q149's per-query MRR/NDCG@5 against the label ground truth
-      val lab = Tables.embeddings(spark, dir).select(col("vec_id"), col("label"))
-      // |Q|×5 rows, referenced twice (metric pivot + final join) with the
-      // whole MMR chain upstream — same cut rationale as fsh
-      val pkr = picks
-        .join(broadcast(lab.select(col("vec_id").as("query_id"), col("label").as("qlabel"))),
-          "query_id")
-        .join(lab.select(col("vec_id").as("cand_id"), col("label").as("clabel")), "cand_id")
-        .withColumn("rel01", when(col("clabel") === col("qlabel"), 1).otherwise(0))
-        .localCheckpoint(eager = false)
-      val met = pkr.groupBy("query_id")
-        .agg(max(when(col("pick_order") === 1, col("rel01"))).as("rel1"),
-          (2 to 5).map(i => max(when(col("pick_order") === i, col("rel01"))).as(s"rel$i")): _*)
-      val nRelC = (1 to 5).map(i => col(s"rel$i")).reduce(_ + _)
-      val dcgC = (1 to 5).map(i => col(s"rel$i") * lit(NdcgW(i - 1))).reduce(_ + _)
-      val mrrC = (1 to 5).foldLeft(null: Column) { (acc, i) =>
-        if (acc == null) when(col(s"rel$i") === 1, InvRank(i - 1))
-        else acc.when(col(s"rel$i") === 1, InvRank(i - 1))
-      }.otherwise(0.0)
-      val idcgC = (1 to 5).foldLeft(null: Column) { (acc, i) =>
-        if (acc == null) when(nRelC === i, NdcgCum(i - 1))
-        else acc.when(nRelC === i, NdcgCum(i - 1))
-      }
-      val mq = met.select(col("query_id"), nRelC.cast("long").as("n_rel"),
-        mrrC.as("mrr"),
-        when(nRelC === 0, 0.0).otherwise(dcgC / idcgC).as("ndcg"))
-      pkr.join(mq, "query_id")
-        .select(col("query_id"), col("pick_order"), col("cand_id"),
-          col("rel").cast("long").as("rel"), col("rrf_micro"), col("n_arms"),
-          col("obj").cast("long").as("obj"), (col("rel01") === 1).as("relevant"),
-          col("n_rel"), col("mrr"), col("ndcg"))
-        .orderBy("query_id", "pick_order")
-    }
-  }
-
-  /** KMV set-OPERATION estimates — the sketch family's missing algebra:
-    * q161 estimates ONE set's cardinality, but the questions a 100 TB
-    * pipeline actually asks are pairwise ("how much do these feeds
-    * overlap", "is this segment a subset of that one"). Theta-sketch
-    * style over the order sets of the six (returnflag, linestatus)
-    * segments: per segment the k=128 smallest md5 hashes of its order
-    * keys; for each segment pair, Û = (k'−1)·2⁶⁰ div h_(k') from the
-    * bottom-k' of the sketch UNION, and Ĵ = m div k' where m counts
-    * union-sample members present in BOTH sketches — sound because any
-    * union-bottom-k hash belonging to A is necessarily in bottom-k(A),
-    * so sketch membership is exact for the sample. Intersection
-    * estimate = Ĵ·Û. Everything is md5-prefix integer arithmetic, so
-    * estimates AND their exact audits (the per-pair distinct joins the
-    * sketch replaces at scale) hash-verify. Shape at 100 TB: one
-    * (segment, key) distinct + one bounded-heap bottom-k per segment
-    * (constant state, the KMV semilattice); ALL pair arithmetic lives on
-    * the 6×128-row sketch dictionary; the exact side is the audit
-    * reference, like q180's striped ranks. */
-  val q211KmvSetOps: QuerySpec = {
-    val k = 128
-    val M = 1152921504606846976L // 2^60, the md5-prefix-15 hash space
-    QuerySpec.oracle(
-      "q211_kmv_set_ops",
-      s"""WITH base AS (SELECT DISTINCT l_returnflag || l_linestatus AS t, l_orderkey AS p
-         |  FROM lineitem),
-         |u AS (SELECT DISTINCT t,
-         |    ('0x' || substring(md5(CAST(p AS VARCHAR)), 1, 15))::BIGINT AS h FROM base),
-         |sk AS (SELECT t, h FROM
-         |    (SELECT t, h, row_number() OVER (PARTITION BY t ORDER BY h) AS rn FROM u)
-         |  WHERE rn <= $k),
-         |tp AS (SELECT a.t AS ta, b.t AS tb
-         |  FROM (SELECT DISTINCT t FROM base) a
-         |  JOIN (SELECT DISTINCT t FROM base) b ON a.t < b.t),
-         |us AS (SELECT ta, tb, h, row_number() OVER (PARTITION BY ta, tb ORDER BY h) AS rn
-         |  FROM (SELECT DISTINCT p.ta, p.tb, s.h FROM tp p
-         |        JOIN sk s ON s.t = p.ta OR s.t = p.tb)),
-         |kth AS (SELECT ta, tb, max(h) AS hk, count(*) AS ks FROM us WHERE rn <= $k
-         |        GROUP BY 1, 2),
-         |mm AS (SELECT us.ta, us.tb, count(*) AS m
-         |  FROM us
-         |  JOIN sk a ON a.t = us.ta AND a.h = us.h
-         |  JOIN sk b ON b.t = us.tb AND b.h = us.h
-         |  WHERE us.rn <= $k GROUP BY 1, 2),
-         |cnt AS (SELECT t, count(*) AS n FROM base GROUP BY 1),
-         |ix AS (SELECT x.t AS ta, y.t AS tb, count(*) AS i
-         |  FROM base x JOIN base y ON x.p = y.p AND x.t < y.t GROUP BY 1, 2)
-         |SELECT kth.ta AS type_a, kth.tb AS type_b,
-         |  CAST(ca.n AS BIGINT) AS n_a_exact, CAST(cb.n AS BIGINT) AS n_b_exact,
-         |  CAST(CAST(ks - 1 AS HUGEINT) * $M // hk AS BIGINT) AS union_est,
-         |  CAST(ca.n + cb.n - coalesce(ix.i, 0) AS BIGINT) AS union_exact,
-         |  CAST(coalesce(mm.m, 0) * 1000000 // ks AS BIGINT) AS jaccard_micro,
-         |  CAST(CAST(coalesce(mm.m, 0) AS HUGEINT)
-         |    * (CAST(ks - 1 AS HUGEINT) * $M // hk) // ks AS BIGINT) AS inter_est,
-         |  CAST(coalesce(ix.i, 0) AS BIGINT) AS inter_exact
-         |FROM kth
-         |LEFT JOIN mm ON mm.ta = kth.ta AND mm.tb = kth.tb
-         |JOIN cnt ca ON ca.t = kth.ta
-         |JOIN cnt cb ON cb.t = kth.tb
-         |LEFT JOIN ix ON ix.ta = kth.ta AND ix.tb = kth.tb
-         |ORDER BY type_a, type_b""".stripMargin
-    ) { (spark, dir) =>
-      import graft.functions.BottomKRows
-      // the distinct (segment, order) relation feeds FIVE plan branches
-      // (hashes, the type dictionary, exact counts, both sides of the
-      // exact-intersection self-join) — cut it once (lazy checkpoint, the
-      // q207 skinny-relation rule; r21: each branch re-ran the corpus
-      // scan + distinct per evaluation)
-      val base = Tables.lineitem(spark, dir)
-        .select(concat(col("l_returnflag"), col("l_linestatus")).as("t"),
-          col("l_orderkey").as("p"))
-        .distinct()
-        .localCheckpoint(eager = false)
-      val u = base.select(col("t"),
-          conv(substring(md5(col("p").cast("string")), 1, 15), 16, 10).cast("long").as("h"))
-        .distinct()
-      // per-segment bottom-k: ONE bounded-heap aggregate, no per-segment
-      // window sort (hashes nonneg → zero-padded hex IS numeric order)
-      val sk = u.groupBy("t")
-        .agg(BottomKRows.bottomK(lpad(hex(col("h")), 16, "0"), struct(col("h")), k)
-          .as("mins"))
-        .select(col("t"), explode(col("mins")).as("m"))
-        .select(col("t"), col("m.h").as("h"))
-      val types = base.select("t").distinct()
-      val tp = types.select(col("t").as("ta"))
-        .join(types.select(col("t").as("tb")), col("ta") < col("tb"))
-      val us = tp.join(broadcast(sk),
-          col("t") === col("ta") || col("t") === col("tb"))
-        .select("ta", "tb", "h").distinct()
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("ta", "tb").orderBy("h")))
-        .filter(col("rn") <= k)
-      val kth = us.groupBy("ta", "tb").agg(max(col("h")).as("hk"), count(lit(1)).as("ks"))
-      val mm = us.select(col("ta"), col("tb"), col("h").as("uh"))
-        .join(broadcast(sk.select(col("t").as("at"), col("h").as("ah"))),
-          col("at") === col("ta") && col("ah") === col("uh"))
-        .join(broadcast(sk.select(col("t").as("bt"), col("h").as("bh"))),
-          col("bt") === col("tb") && col("bh") === col("uh"))
-        .groupBy("ta", "tb").agg(count(lit(1)).as("m"))
-      val cnt = base.groupBy("t").agg(count(lit(1)).as("n"))
-      // exact per-pair intersection via ONE groupBy on the order key + an
-      // in-row pair expansion (r22, VERDICT item 4): |A∩B| for (ta < tb) is
-      // the number of orders carrying both segments, so grouping the
-      // distinct (t, p) relation by p and emitting the sorted type-pairs
-      // per order computes the identical count with ONE exchange on p —
-      // the previous base⋈base self-join shuffled BOTH |base|-sized sides
-      // on p and risked |distinct|² on a hot order key. Per-order state is
-      // bounded by the segment dictionary (≤ |distinct t| entries), and
-      // (t, p) is already distinct so collect_list is the type set.
-      val ix = base.groupBy("p")
-        .agg(sort_array(collect_list(col("t"))).as("ts"))
-        .filter(size(col("ts")) >= 2)
-        .select(explode(flatten(transform(col("ts"), (a, i) =>
-          transform(slice(col("ts"), i + lit(2), size(col("ts"))),
-            b => struct(a.as("ta"), b.as("tb")))))).as("pr"))
-        .groupBy(col("pr.ta").as("ta"), col("pr.tb").as("tb"))
-        .agg(count(lit(1)).as("i"))
-      kth
-        .join(mm, Seq("ta", "tb"), "left")
-        .join(broadcast(cnt.select(col("t").as("ta"), col("n").as("na"))), "ta")
-        .join(broadcast(cnt.select(col("t").as("tb"), col("n").as("nb"))), "tb")
-        .join(ix, Seq("ta", "tb"), "left")
-        // (k−1)·2⁶⁰ and m·Û exceed int64 — decimal inside, int64 out
-        .withColumn("union_est",
-          expr(s"(CAST(ks - 1 AS DECIMAL(38,0)) * $M) div hk"))
-        .select(col("ta").as("type_a"), col("tb").as("type_b"),
-          col("na").cast("long").as("n_a_exact"), col("nb").cast("long").as("n_b_exact"),
-          col("union_est").cast("long").as("union_est"),
-          (col("na") + col("nb") - coalesce(col("i"), lit(0L))).cast("long").as("union_exact"),
-          expr("coalesce(m, 0) * 1000000 div ks").cast("long").as("jaccard_micro"),
-          expr("(CAST(coalesce(m, 0) AS DECIMAL(38,0)) * union_est) div ks")
-            .cast("long").as("inter_est"),
-          coalesce(col("i"), lit(0L)).cast("long").as("inter_exact"))
-        .orderBy("type_a", "type_b")
-    }
-  }
-
-  /** Repetition quality rules (Rae et al. 2021's Gopher filters, the
-    * occurrence-fraction form) — the ingest gate q21's char/token ratios
-    * and q146's compression signal bracket but never state directly: per
-    * doc the fraction of duplicate 2-gram and 3-gram OCCURRENCES
-    * ((total − distinct)·10⁶ div total) and the most-common-token share,
-    * with repetitive/top-heavy flags at documented thresholds (the
-    * published rules threshold character fractions; occurrence fractions
-    * are the exact-integer variant — same signal, no length weighting).
-    * The top-token share folds IN-ROW over the sorted token array (max
-    * run length, a two-slot integer state — q184's homogeneous-list
-    * fold), so the whole report is one embarrassingly parallel scan: no
-    * shuffle except the presentation sort, the q21 shape. */
-  val q213RepetitionRules: QuerySpec = QuerySpec.oracle(
-    "q213_repetition_rules",
-    s"""WITH toks AS (SELECT doc_id, $LowToksSql AS ts FROM documents),
-       |g AS (SELECT doc_id, ts, list_sort(ts) AS tss, len(ts) AS n,
-       |    CASE WHEN len(ts) >= 2 THEN list_transform(generate_series(1, len(ts) - 1),
-       |      i -> concat_ws(' ', ts[i], ts[i+1])) ELSE [] END AS g2,
-       |    CASE WHEN len(ts) >= 3 THEN list_transform(generate_series(1, len(ts) - 2),
-       |      i -> concat_ws(' ', ts[i], ts[i+1], ts[i+2])) ELSE [] END AS g3
-       |  FROM toks),
-       |m AS (SELECT doc_id, n,
-       |    len(g2) AS t2, len(list_distinct(g2)) AS d2,
-       |    len(g3) AS t3, len(list_distinct(g3)) AS d3,
-       |    CASE WHEN n = 0 THEN 0 ELSE
-       |      list_reduce(list_prepend([1, 1], list_transform(generate_series(2, n),
-       |        i -> [i, 0])),
-       |        (acc, e) -> CASE WHEN tss[e[1]] = tss[e[1] - 1]
-       |          THEN [acc[1] + 1, greatest(acc[2], acc[1] + 1)]
-       |          ELSE [1, acc[2]] END)[2] END AS topc
-       |  FROM g)
-       |SELECT doc_id, CAST(n AS BIGINT) AS n_tokens,
-       |  CAST(CASE WHEN t2 = 0 THEN 0 ELSE (t2 - d2) * 1000000 // t2 END AS BIGINT)
-       |    AS dup2_micro,
-       |  CAST(CASE WHEN t3 = 0 THEN 0 ELSE (t3 - d3) * 1000000 // t3 END AS BIGINT)
-       |    AS dup3_micro,
-       |  CAST(CASE WHEN n = 0 THEN 0 ELSE topc * 1000000 // n END AS BIGINT)
-       |    AS top_token_micro,
-       |  CASE WHEN t3 = 0 THEN false ELSE (t3 - d3) * 1000000 // t3 > 180000 END
-       |    AS repetitive,
-       |  CASE WHEN n = 0 THEN false ELSE topc * 1000000 // n > 200000 END
-       |    AS top_heavy
-       |FROM m ORDER BY doc_id""".stripMargin
-  ) { (spark, dir) =>
-    // r21: the gram construction + array_distinct + sorted-run fold now run
-    // as native kernels — DistinctGramCountExpr counts distinct k-grams
-    // without materializing gram strings, and the max sorted-run length IS
-    // the max token multiplicity (TopTokenCountExpr's hash count), so the
-    // sort disappears. Values bit-identical; oracle SQL unchanged.
-    // doc_id sort BEFORE the kernel projection (the q23 pattern): the
-    // global orderBy's range-bound sampling re-executes its child, and
-    // above the sort the kernels run once.
-    Tables.documents(spark, dir)
-      .orderBy("doc_id")
-      .withColumn("ts", lowToksCol)
-      // long BEFORE the micro arithmetic: size() is 32-bit, and
-      // (t2 - d2) * 1000000 wraps silently past ~2147 duplicate gram
-      // occurrences while the DuckDB len() side computes in BIGINT —
-      // the q187 decimal-inside discipline applied to int32.
-      .withColumn("n", size(col("ts")).cast("long"))
-      .withColumn("t2", greatest(col("n") - 1, lit(0L)))
-      .withColumn("d2", graft.functions.DistinctGramCountExpr
-        .distinctGramCount(col("ts"), 2).cast("long"))
-      .withColumn("t3", greatest(col("n") - 2, lit(0L)))
-      .withColumn("d3", graft.functions.DistinctGramCountExpr
-        .distinctGramCount(col("ts"), 3).cast("long"))
-      .withColumn("topc", graft.functions.TopTokenCountExpr
-        .topTokenCount(col("ts")).cast("long"))
-      .select(col("doc_id"), col("n").cast("long").as("n_tokens"),
-        when(col("t2") === 0, 0L)
-          .otherwise(expr("(t2 - d2) * 1000000 div t2")).cast("long").as("dup2_micro"),
-        when(col("t3") === 0, 0L)
-          .otherwise(expr("(t3 - d3) * 1000000 div t3")).cast("long").as("dup3_micro"),
-        when(col("n") === 0, 0L)
-          .otherwise(expr("topc * 1000000 div n")).cast("long").as("top_token_micro"),
-        when(col("t3") === 0, lit(false))
-          .otherwise(expr("(t3 - d3) * 1000000 div t3 > 180000")).as("repetitive"),
-        when(col("n") === 0, lit(false))
-          .otherwise(expr("topc * 1000000 div n > 200000")).as("top_heavy"))
-  }
-
-  /** Hard-negative mining for contrastive/triplet training — the
-    * training-data op the ANN band's machinery exists to serve: for each
-    * anchor (the q166 1-in-25 slice), the top-3 most-similar candidates
-    * of a DIFFERENT label (lang) by exact int8 inner product, reported
-    * beside the best SAME-label candidate and the triplet margin
-    * pos_sim − neg_sim — negatives with small or negative margins are
-    * the ones a triplet loss learns from (Schroff et al. 2015's
-    * semi-hard ordering falls out of sorting this report). Exactness:
-    * the sims are the q166 integer dots, labels join on vec_id = doc_id,
-    * so the entire mining roster hash-verifies. Shape at 100 TB: the
-    * brute-force sim scan is the broadcast-anchor audit contract
-    * (anchors ≪ corpus); production swaps the candidate generator for
-    * q43/q171's IVF cells unchanged — the mining rule only consumes
-    * (anchor, cand, sim, label). */
-  val q214HardNegatives: QuerySpec = QuerySpec.oracle(
-    "q214_hard_negatives",
-    s"""WITH v AS (SELECT vec_id, embedding FROM embeddings),
-       |s AS (SELECT vec_id, embedding, ${VectorFns.Sql.maxAbs("embedding")} AS scale FROM v),
-       |q AS (SELECT vec_id, ${VectorFns.Sql.quantizeInt8("embedding", "scale")} AS qv FROM s),
-       |ql AS (SELECT q.vec_id, qv, lang FROM q JOIN documents d ON d.doc_id = q.vec_id),
-       |sim AS (
-       |  SELECT a.vec_id AS anchor_id, a.lang AS a_lang,
-       |    c.vec_id AS cand_id, c.lang AS c_lang,
-       |    list_reduce(list_prepend(0, list_transform(list_zip(a.qv, c.qv),
-       |      p -> p[1]*p[2])), (acc, v) -> acc + v) AS sim
-       |  FROM ql a JOIN ql c ON c.vec_id <> a.vec_id
-       |  WHERE a.vec_id % 25 = 0),
-       |neg AS (SELECT anchor_id, cand_id, sim,
-       |    row_number() OVER (PARTITION BY anchor_id ORDER BY sim DESC, cand_id) AS rk
-       |  FROM sim WHERE c_lang <> a_lang),
-       |pos AS (SELECT anchor_id, cand_id AS pos_id, sim AS pos_sim,
-       |    row_number() OVER (PARTITION BY anchor_id ORDER BY sim DESC, cand_id) AS rk
-       |  FROM sim WHERE c_lang = a_lang)
-       |SELECT n.anchor_id, CAST(n.rk AS BIGINT) AS rank, n.cand_id AS neg_id,
-       |  CAST(n.sim AS BIGINT) AS neg_sim, p.pos_id, CAST(p.pos_sim AS BIGINT) AS pos_sim,
-       |  CAST(p.pos_sim - n.sim AS BIGINT) AS margin
-       |FROM neg n JOIN pos p ON p.anchor_id = n.anchor_id AND p.rk = 1
-       |WHERE n.rk <= 3 ORDER BY n.anchor_id, rank""".stripMargin
-  ) { (spark, dir) =>
-    def intDot(a: Column, b: Column): Column = graft.functions.LongDotExpr.dot(a, b)
-    val labels = Tables.documents(spark, dir).select(col("doc_id"), col("lang"))
-    val ql = quantizedVecsCk(spark, dir)
-      .join(labels, col("doc_id") === col("vec_id")).drop("doc_id")
-    val anchors = ql.filter(pmod(col("vec_id"), lit(25)) === 0)
-      .select(col("vec_id").as("anchor_id"), col("qv").as("aqv"), col("lang").as("a_lang"))
-    val sim = ql.join(broadcast(anchors), col("vec_id") =!= col("anchor_id"))
-      .select(col("anchor_id"), col("a_lang"), col("vec_id").as("cand_id"),
-        col("lang").as("c_lang"), intDot(col("aqv"), col("qv")).as("sim"))
-    // both rank windows partition on anchor_id — one exchange, reused
-    val byAnchor = Window.partitionBy("anchor_id").orderBy(col("sim").desc, col("cand_id"))
-    val neg = sim.filter(col("c_lang") =!= col("a_lang"))
-      .withColumn("rk", row_number().over(byAnchor)).filter(col("rk") <= 3)
-    val pos = sim.filter(col("c_lang") === col("a_lang"))
-      .withColumn("rk", row_number().over(byAnchor)).filter(col("rk") === 1)
-      .select(col("anchor_id"), col("cand_id").as("pos_id"), col("sim").as("pos_sim"))
-    neg.join(pos, "anchor_id")
-      .select(col("anchor_id"), col("rk").cast("long").as("rank"),
-        col("cand_id").as("neg_id"), col("sim").cast("long").as("neg_sim"),
-        col("pos_id"), col("pos_sim").cast("long").as("pos_sim"),
-        (col("pos_sim") - col("sim")).cast("long").as("margin"))
-      .orderBy("anchor_id", "rank")
-  }
+  import CorpusQueries._, DedupQueries._, SeriesQueries._, ServingQueries._,
+    SketchQueries._, VectorQueries._
 
   val all: Seq[QuerySpec] = Seq(
     q30DedupExact, q31NgramJaccard, q32MinHash, q33SimHash,

@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.LongType
 
 /** Positional operators (SURVEY.md §2.5 F5): the reference zips parallel
   * arrays by position (`self.train_df[index]` with `self.text_df[index]`,
@@ -12,9 +12,8 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * contract is forced, these are the safe forms.
   *
   * `monotonically_increasing_id` is NOT a row number (it jumps between
-  * partitions); the two correct options are a window row_number over an
-  * explicit order (one shuffle) or RDD zipWithIndex (order = partition
-  * order, no shuffle — two passes).
+  * partitions); the correct option is a window row_number over an
+  * explicit order (one shuffle), deterministic under any partitioning.
   */
 object Positional {
 
@@ -24,14 +23,6 @@ object Positional {
                           indexCol: String = "row_idx"): DataFrame = {
     val w = Window.orderBy(orderCols.map(col): _*)
     df.withColumn(indexCol, row_number().over(w).cast(LongType) - 1)
-  }
-
-  /** Partition-order row index via RDD zipWithIndex — no global sort, two
-    * passes; index is only as stable as the upstream partitioning. */
-  def withRowIndexZip(df: DataFrame, indexCol: String = "row_idx"): DataFrame = {
-    val schema = StructType(df.schema.fields :+ StructField(indexCol, LongType, nullable = false))
-    val rdd = df.rdd.zipWithIndex().map { case (r, i) => Row.fromSeq(r.toSeq :+ i) }
-    df.sparkSession.createDataFrame(rdd, schema)
   }
 
   /** Positional join of two frames by their explicit sort orders. */

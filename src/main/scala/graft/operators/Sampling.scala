@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.BottomKRows
+import graft.functions.Exprs.hash60
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -172,8 +173,7 @@ object Sampling {
                         k: Int, salt: String, levels: Int = 1024): DataFrame = {
     val ladder = expLadderNano(levels)
     val j = pmod(
-      conv(substring(md5(concat(lit(s"$salt:"), col(idCol).cast("string"))), 1, 15), 16, 10)
-        .cast("long"),
+      hash60(concat(lit(s"$salt:"), col(idCol).cast("string"))),
       lit(levels.toLong))
     require(!df.columns.contains("__lv"),
       "weightedReservoir temp-column collision: rename input column __lv")

@@ -36,7 +36,7 @@ object TextQueries {
 
   /** DuckDB rendering of TextFns.tokenId. */
   private def tokenIdSql(t: String, vocab: Int): String =
-    s"CAST(concat('0x', substring(md5($t), 1, 15)) AS BIGINT) % $vocab"
+    s"${hash60Sql(t)} % $vocab"
 
   /** Shared raw text-statistics columns (chars/tokens/punct/upper/stopword
     * counts) — ONE engine-matched definition used by q21 and q39, so the
@@ -255,7 +255,7 @@ object TextQueries {
   private def manifestSql(from: String): String =
     s"""SELECT lang, source, count(*) AS n_docs,
        |  CAST(sum(n_chars) AS BIGINT) AS n_chars,
-       |  CAST(sum(('0x' || substring(md5(CAST(doc_id AS VARCHAR) || '|' || text), 1, 15))::BIGINT)
+       |  CAST(sum(${hash60Sql("CAST(doc_id AS VARCHAR) || '|' || text")})
        |    % $ChecksumModulus AS BIGINT) AS checksum
        |FROM $from GROUP BY 1, 2""".stripMargin
 
@@ -1227,8 +1227,8 @@ object TextQueries {
        |  SELECT r.doc_id, r.lang, r.text FROM r
        |  JOIN k USING (doc_id)
        |  WHERE r.text NOT IN (SELECT text FROM ev)),
-       |${PipelineQueries.spanCtes(PipelineQueries.SpanK, PipelineQueries.SpanMaxOcc,
-            PipelineQueries.SpanMin, from = "s")},
+       |${DedupQueries.spanCtes(DedupQueries.SpanK, DedupQueries.SpanMaxOcc,
+            DedupQueries.SpanMin, from = "s")},
        |iv AS (SELECT id_b AS doc, start_b AS st, start_b + span_toks - 1 AS e FROM spans),
        |mx AS (SELECT doc, st, e, max(e) OVER (PARTITION BY doc ORDER BY st, e
        |  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pe FROM iv),
@@ -1288,8 +1288,8 @@ object TextQueries {
     // sub-document dedup over the survivor set: only (n_toks, n_removed)
     // are consumed, so the scrub's clean_text column prunes away
     val scrubbed = Dedup.spanScrub(survivors, "doc_id", "text",
-        k = PipelineQueries.SpanK, minSpan = PipelineQueries.SpanMin,
-        maxOcc = PipelineQueries.SpanMaxOcc)
+        k = DedupQueries.SpanK, minSpan = DedupQueries.SpanMin,
+        maxOcc = DedupQueries.SpanMaxOcc)
       .select(col("doc_id"), (col("n_toks") - col("n_removed")).as("kept_toks"))
     val sv = survivors.select("doc_id", "lang").join(scrubbed, Seq("doc_id"))
     val packed = StripedWindow.runningSum(

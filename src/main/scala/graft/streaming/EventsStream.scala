@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.Exprs.hash60
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
@@ -246,8 +247,8 @@ object EventsStream {
       // CMS partial: the q173 seeded-row bucket scheme over this batch
       val cells = keys.select(explode(array((0 until d).map(j =>
           struct(lit(j).as("j"),
-            pmod(conv(substring(md5(concat(lit(s"$j:"), col("t"))), 1, 15), 16, 10)
-              .cast("long"), lit(w.toLong)).as("bucket"))): _*)).as("cell"))
+            pmod(hash60(concat(lit(s"$j:"), col("t"))), lit(w.toLong)).as("bucket"))): _*))
+          .as("cell"))
         .groupBy(col("cell.j").as("j"), col("cell.bucket").as("bucket"))
         .agg(count(lit(1)).cast("long").as("c"))
       val cms = latestView(spark, s"$stateDir/cms", beforeVersion = Some(id)) match {
@@ -258,7 +259,7 @@ object EventsStream {
       cms.write.mode("overwrite").parquet(s"$stateDir/cms/v=$id")
       // KMV partial: distinct key hashes; merge = bottom-k of the union
       val hs = keys.distinct()
-        .select(conv(substring(md5(col("t")), 1, 15), 16, 10).cast("long").as("h"))
+        .select(hash60(col("t")).as("h"))
       val kmv = (latestView(spark, s"$stateDir/kmv", beforeVersion = Some(id)) match {
         case Some(prior) => prior.unionByName(hs)
         case None => hs
@@ -272,8 +273,7 @@ object EventsStream {
       // sorted v column answers any quantile by integer rank arithmetic
       // exactly as q180's batch sketch does.
       val qv = batch.select(
-        conv(substring(md5(col("event_id").cast("string")), 1, 15), 16, 10)
-          .cast("long").as("h"),
+        hash60(col("event_id").cast("string")).as("h"),
         (col("value").cast("decimal(18,2)") * 100).cast("long").as("v"))
       val qnt = (latestView(spark, s"$stateDir/qnt", beforeVersion = Some(id)) match {
         case Some(prior) => prior.unionByName(qv)

@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.SparkSpec
-import graft.operators.PipelineQueries
+import graft.operators.DedupQueries
 import org.apache.spark.sql.functions._
 
 class BloomFilterSpec extends SparkSpec {
@@ -77,9 +77,9 @@ class BloomFilterSpec extends SparkSpec {
   }
 
   test("q51 (bloom-prefiltered) is row-for-row identical to q38 (exact join)") {
-    val exact = PipelineQueries.q38Contamination.build(spark, sf)
+    val exact = DedupQueries.q38Contamination.build(spark, sf)
       .collect().map(_.toSeq).toSeq
-    val bloom = PipelineQueries.q51ContaminationBloom.build(spark, sf)
+    val bloom = DedupQueries.q51ContaminationBloom.build(spark, sf)
       .collect().map(_.toSeq).toSeq
     assert(bloom === exact, "the exact verify join must cancel every false positive")
   }

@@ -17,15 +17,15 @@ class PipelineQueriesSpec extends SparkSpec {
     val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
       n = 3, minJaccard = 0.5, maxDocFreq = 1000)
     val labels = Dedup.dedupGroups(docs.select("doc_id"), "doc_id", pairs)
-    val reused = PipelineQueries.dedupKeepFlagsFrom(labels, docs)
+    val reused = DedupQueries.dedupKeepFlagsFrom(labels, docs)
       .orderBy("doc_id").collect().map(_.toString).toSeq
-    val declared = PipelineQueries.q59DedupKeeplist.build(spark, sf)
+    val declared = DedupQueries.q59DedupKeeplist.build(spark, sf)
       .collect().map(_.toString).toSeq
     assert(reused === declared)
   }
 
   test("q78: recall/candidate bounds, LSH frontier orders by candidate mass") {
-    val rows = PipelineQueries.q78AnnRecall.build(spark, sf).collect()
+    val rows = VectorQueries.q78AnnRecall.build(spark, sf).collect()
       .map(r => r.getAs[String]("method") ->
         (r.getAs[Double]("recall"), r.getAs[Double]("candidate_fraction"))).toMap
     assert(rows.keySet ===
@@ -45,8 +45,8 @@ class PipelineQueriesSpec extends SparkSpec {
   }
 
   test("q56: deterministic sample, rates in (0, 1], rate shrinks with source size") {
-    val a = PipelineQueries.q56MixtureResample.build(spark, sf).collect()
-    val b = PipelineQueries.q56MixtureResample.build(spark, sf).collect()
+    val a = CorpusQueries.q56MixtureResample.build(spark, sf).collect()
+    val b = CorpusQueries.q56MixtureResample.build(spark, sf).collect()
     assert(a.map(_.toString).toSeq === b.map(_.toString).toSeq, "same sample every run")
     assert(a.nonEmpty)
     val rates = a.map(r => r.getAs[String]("source") -> r.getAs[Double]("keep_rate")).toMap
@@ -57,7 +57,7 @@ class PipelineQueriesSpec extends SparkSpec {
   }
 
   test("q57: conditional probabilities are exact count ratios with coherent prefixes") {
-    val rows = PipelineQueries.q57BigramLm.build(spark, sf).collect()
+    val rows = CorpusQueries.q57BigramLm.build(spark, sf).collect()
     assert(rows.length === 30)
     rows.foreach { r =>
       val (nAb, nA, p) =
@@ -76,7 +76,7 @@ class PipelineQueriesSpec extends SparkSpec {
   }
 
   test("q58: quantized surprisal is an exact integer-bit average, ordered desc") {
-    val rows = PipelineQueries.q58LmSurprisal.build(spark, sf).collect()
+    val rows = CorpusQueries.q58LmSurprisal.build(spark, sf).collect()
     assert(rows.length === 20)
     rows.foreach { r =>
       val (n, s, avg) = (r.getAs[Long]("n_bigrams"),
@@ -92,7 +92,7 @@ class PipelineQueriesSpec extends SparkSpec {
   }
 
   test("q59: exactly one keep per group, and it is the argmax-quality member") {
-    val rows = PipelineQueries.q59DedupKeeplist.build(spark, sf).collect()
+    val rows = DedupQueries.q59DedupKeeplist.build(spark, sf).collect()
     assert(rows.nonEmpty)
     val byGroup = rows.groupBy(_.getAs[Long]("group_id"))
     byGroup.foreach { case (g, members) =>
@@ -111,7 +111,7 @@ class PipelineQueriesSpec extends SparkSpec {
   }
 
   test("q100: bounded-heap postings ≡ collect-then-slice; df consistent with list length") {
-    val out = PipelineQueries.q100InvertedIndex.build(spark, sf).collect()
+    val out = ServingQueries.q100InvertedIndex.build(spark, sf).collect()
     assert(out.nonEmpty)
     out.foreach { r =>
       val df = r.getAs[Long]("df")
@@ -136,7 +136,7 @@ class PipelineQueriesSpec extends SparkSpec {
   }
 
   test("q116: source Jaccard in (0, 1]; intersections bounded by both set sizes") {
-    val rows = PipelineQueries.q116SourceOverlap.build(spark, sf).collect()
+    val rows = CorpusQueries.q116SourceOverlap.build(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (nab, na, nb) = (r.getAs[Long]("n_ab"), r.getAs[Long]("n_a"), r.getAs[Long]("n_b"))
@@ -149,7 +149,7 @@ class PipelineQueriesSpec extends SparkSpec {
   }
 
   test("q115: keywords are ≤3 per doc, every doc covered, top_score positive") {
-    val rows = PipelineQueries.q115KeywordExtract.build(spark, sf).collect()
+    val rows = CorpusQueries.q115KeywordExtract.build(spark, sf).collect()
     val docs = graft.sources.Tables.documents(spark, sf).count()
     assert(rows.length == docs, "every (non-empty) document gets keywords")
     rows.foreach { r =>
@@ -160,7 +160,7 @@ class PipelineQueriesSpec extends SparkSpec {
   }
 
   test("q94: lifts are internally consistent (single integer N) and ordered desc") {
-    val rows = PipelineQueries.q94Collocations.build(spark, sf).collect()
+    val rows = CorpusQueries.q94Collocations.build(spark, sf).collect()
     assert(rows.nonEmpty && rows.length <= 30)
     // lift = n_ab·N / (n_a·n_b) ⇒ N = lift·n_a·n_b / n_ab must recover the
     // SAME integer bigram total from every row — any marginal/total mixup
@@ -1093,7 +1093,7 @@ class PipelineQueriesSpec extends SparkSpec {
 
   test("q129: TV distance bounds, identical distributions tie, skew ranks highest") {
     // driver-table invariants: TV ∈ [0, 1), token totals positive
-    val rows = PipelineQueries.q129SourceDivergence.build(spark, sf).collect()
+    val rows = CorpusQueries.q129SourceDivergence.build(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val tv = r.getAs[Double]("tv_distance")
@@ -1111,7 +1111,7 @@ class PipelineQueriesSpec extends SparkSpec {
     ).toDF("doc_id", "text", "source")
     val dir = java.nio.file.Files.createTempDirectory("graft_q129").toString
     docs.write.parquet(s"$dir/documents.parquet")
-    val planted = PipelineQueries.q129SourceDivergence.build(spark, dir)
+    val planted = CorpusQueries.q129SourceDivergence.build(spark, dir)
       .collect().map(r => r.getAs[String]("source") -> r.getAs[Double]("tv_distance")).toMap
     assert(planted("uniform1") == planted("uniform2"),
       s"same distribution, different volume → identical TV: $planted")
@@ -1120,7 +1120,7 @@ class PipelineQueriesSpec extends SparkSpec {
   }
 
   test("q210: ACF values bounded, full lag grid per nation") {
-    val rows = PipelineQueries.q210AcfAudit.build(spark, sf).collect()
+    val rows = SeriesQueries.q210AcfAudit.build(spark, sf).collect()
     assert(rows.nonEmpty)
     // |r| ≤ 1 in exact arithmetic; div-first quantization can overshoot
     // by at most 1 part in 10⁶ of the denominator
@@ -1136,10 +1136,10 @@ class PipelineQueriesSpec extends SparkSpec {
   }
 
   test("q215: pacf1 equals q210's lag-1 ACF per nation (Durbin-Levinson base case)") {
-    val acf1 = PipelineQueries.q210AcfAudit.build(spark, sf).collect()
+    val acf1 = SeriesQueries.q210AcfAudit.build(spark, sf).collect()
       .filter(_.getAs[Long]("lag") == 1L)
       .map(r => r.getAs[String]("nation") -> r.getAs[Long]("acf_micro")).toMap
-    val pacf = PipelineQueries.q215PacfAudit.build(spark, sf).collect()
+    val pacf = SeriesQueries.q215PacfAudit.build(spark, sf).collect()
     assert(pacf.nonEmpty)
     pacf.foreach { r =>
       val n = r.getAs[String]("nation")
@@ -1171,7 +1171,7 @@ class PipelineQueriesSpec extends SparkSpec {
       s"LSH candidate recall $recall below the declared floor (caught ${lshRegion.size}/${exact.size})")
     // the declared query resolves the full corpus: one row per vector,
     // canonical ids are group minima, keeps count the groups
-    val rows = PipelineQueries.q218SemanticDedupFull.build(spark, sf).collect()
+    val rows = DedupQueries.q218SemanticDedupFull.build(spark, sf).collect()
     assert(rows.length == emb.count())
     assert(rows.forall(r => r.getAs[Long]("canonical_id") <= r.getAs[Long]("vec_id")))
     val keeps = rows.count(_.getAs[Boolean]("keep"))
@@ -1183,7 +1183,7 @@ class PipelineQueriesSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     // the declared query: random halves of ONE distribution — an A/A
     // harness test, every label must read non-drifted
-    val rows = PipelineQueries.q224EmbeddingDrift.build(spark, sf).collect()
+    val rows = VectorQueries.q224EmbeddingDrift.build(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(!r.getAs[Boolean]("drifted") &&
@@ -1199,7 +1199,7 @@ class PipelineQueriesSpec extends SparkSpec {
         if (i % 2 == 1) vec(20) else vec(0))) ++
       (0 until 40).map(i => ("n", i.toLong % 2, vec(0))))
       .toDF("label", "half", "qv")
-    val out = PipelineQueries.embeddingDrift(planted).collect()
+    val out = VectorQueries.embeddingDrift(planted).collect()
       .map(r => r.getAs[String]("label") -> r).toMap
     assert(out("s").getAs[Boolean]("drifted"),
       s"planted +20/dim shift must flag: ${out("s")}")
@@ -1208,10 +1208,10 @@ class PipelineQueriesSpec extends SparkSpec {
   }
 
   test("q223: AR(1) residuals lose the lag-1 structure the fit models") {
-    val acf1 = PipelineQueries.q210AcfAudit.build(spark, sf).collect()
+    val acf1 = SeriesQueries.q210AcfAudit.build(spark, sf).collect()
       .filter(_.getAs[Long]("lag") == 1L)
       .map(r => r.getAs[String]("nation") -> r.getAs[Long]("acf_micro")).toMap
-    val rows = PipelineQueries.q223LjungBox.build(spark, sf).collect()
+    val rows = SeriesQueries.q223LjungBox.build(spark, sf).collect()
     assert(rows.length == acf1.size)
     rows.foreach { r =>
       val n = r.getAs[String]("nation")
@@ -1228,7 +1228,7 @@ class PipelineQueriesSpec extends SparkSpec {
   }
 
   test("q222: SemDeDup groups are cluster-local and keep the most prototypical member") {
-    val rows = PipelineQueries.q222SemDedupClusters.build(spark, sf).collect()
+    val rows = DedupQueries.q222SemDedupClusters.build(spark, sf).collect()
     assert(rows.nonEmpty)
     val byGroup = rows.groupBy(_.getAs[Long]("group_id"))
     byGroup.foreach { case (g, rs) =>
@@ -1247,7 +1247,7 @@ class PipelineQueriesSpec extends SparkSpec {
   }
 
   test("q220: reliability table is self-consistent and ECE re-derives from its own bins") {
-    val rows = PipelineQueries.q220CalibrationEce.build(spark, sf).collect()
+    val rows = SeriesQueries.q220CalibrationEce.build(spark, sf).collect()
     assert(rows.nonEmpty)
     val n = rows.map(_.getAs[Long]("n_docs")).sum
     rows.foreach { r =>
@@ -1267,10 +1267,10 @@ class PipelineQueriesSpec extends SparkSpec {
   }
 
   test("q221: the piecewise fit splits exactly at q189's changepoint") {
-    val cp = PipelineQueries.q189CusumChangepoint.build(spark, sf).collect()
+    val cp = SeriesQueries.q189CusumChangepoint.build(spark, sf).collect()
       .map(r => r.getAs[String]("nation") ->
         (r.getAs[Long]("cp_t"), r.getAs[Long]("n_days"))).toMap
-    val rows = PipelineQueries.q221PiecewiseTrend.build(spark, sf).collect()
+    val rows = SeriesQueries.q221PiecewiseTrend.build(spark, sf).collect()
     assert(rows.length == cp.size)
     rows.foreach { r =>
       val nation = r.getAs[String]("nation")
@@ -1286,7 +1286,7 @@ class PipelineQueriesSpec extends SparkSpec {
   }
 
   test("q216: the serving chain is internally consistent (picks, fusion provenance, metrics)") {
-    val rows = PipelineQueries.q216RagServe.build(spark, sf).collect()
+    val rows = ServingQueries.q216RagServe.build(spark, sf).collect()
     assert(rows.nonEmpty && rows.length % 5 == 0, "five picks per query")
     rows.groupBy(_.getAs[Long]("query_id")).foreach { case (q, rs) =>
       assert(rs.map(_.getAs[Long]("pick_order")).sorted.toSeq == (1L to 5L),
@@ -1318,9 +1318,9 @@ class PipelineQueriesSpec extends SparkSpec {
   }
 
   test("q217: every AR order beats the naive lag-1 backtest; phi1 is q215's pacf1 (Yule-Walker base)") {
-    val pacf1 = PipelineQueries.q215PacfAudit.build(spark, sf).collect()
+    val pacf1 = SeriesQueries.q215PacfAudit.build(spark, sf).collect()
       .map(r => r.getAs[String]("nation") -> r.getAs[Long]("pacf1_micro")).toMap
-    val rows = PipelineQueries.q217ArFit.build(spark, sf).collect()
+    val rows = SeriesQueries.q217ArFit.build(spark, sf).collect()
     assert(rows.length == pacf1.size * 3, "three AR orders per nation")
     rows.foreach { r =>
       val n = r.getAs[String]("nation")
@@ -1339,7 +1339,7 @@ class PipelineQueriesSpec extends SparkSpec {
   }
 
   test("q211: KMV union/Jaccard estimates land inside their sampling-error envelopes") {
-    val rows = PipelineQueries.q211KmvSetOps.build(spark, sf).collect()
+    val rows = SketchQueries.q211KmvSetOps.build(spark, sf).collect()
     assert(rows.length >= 3, "at least the returnflag segment pairs")
     rows.foreach { r =>
       val (ue, ux) = (r.getAs[Long]("union_est"), r.getAs[Long]("union_exact"))
@@ -1365,7 +1365,7 @@ class PipelineQueriesSpec extends SparkSpec {
     ).toDF("doc_id", "text", "lang", "source", "n_chars")
     val dir = java.nio.file.Files.createTempDirectory("graft_q213").toString
     docs.write.parquet(s"$dir/documents.parquet")
-    val rows = PipelineQueries.q213RepetitionRules.build(spark, dir).collect()
+    val rows = CorpusQueries.q213RepetitionRules.build(spark, dir).collect()
       .map(r => r.getAs[Long]("doc_id") -> r).toMap
     assert(rows(1L).getAs[Boolean]("repetitive"), s"looped 2-gram doc: ${rows(1L)}")
     assert(rows(2L).getAs[Boolean]("top_heavy"), s"one-token-dominant doc: ${rows(2L)}")
@@ -1375,7 +1375,7 @@ class PipelineQueriesSpec extends SparkSpec {
   }
 
   test("q214: hard negatives rank by similarity, margins consistent, labels differ") {
-    val rows = PipelineQueries.q214HardNegatives.build(spark, sf).collect()
+    val rows = VectorQueries.q214HardNegatives.build(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.groupBy(_.getAs[Long]("anchor_id")).foreach { case (a, rs) =>
       val byRank = rs.sortBy(_.getAs[Long]("rank"))
@@ -1409,14 +1409,14 @@ class PipelineQueriesSpec extends SparkSpec {
     val train = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
     val heldOut = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
     assert(heldOut.count() >= 3, "split must hold out docs of every language")
-    val prof = PipelineQueries.langIdProfiles(train, k = 64)
+    val prof = CorpusQueries.langIdProfiles(train, k = 64)
     // profile shape: at most k rows per language, weights in [1, k]
     val profRows = prof.collect()
     profRows.groupBy(_.getAs[String]("p_lang")).foreach { case (l, rs) =>
       assert(rs.length <= 64, s"$l profile exceeds k")
       assert(rs.forall(r => r.getAs[Long]("w") >= 1 && r.getAs[Long]("w") <= 64))
     }
-    val pred = PipelineQueries.langIdPredict(heldOut, prof).collect()
+    val pred = CorpusQueries.langIdPredict(heldOut, prof).collect()
     assert(pred.nonEmpty)
     val wrong = pred.filter(r =>
       r.getAs[String]("lang_true") != r.getAs[String]("lang_pred"))
@@ -1448,8 +1448,8 @@ class PipelineQueriesSpec extends SparkSpec {
     val heldOut = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
     val nHeld = heldOut.count()
     assert(nHeld >= 6, "split must hold out several docs")
-    val prof = PipelineQueries.langIdProfiles(train, k = 64)
-    val pred = PipelineQueries.langIdPredict(heldOut, prof).collect()
+    val prof = CorpusQueries.langIdProfiles(train, k = 64)
+    val pred = CorpusQueries.langIdPredict(heldOut, prof).collect()
     assert(pred.length == nHeld)
     val acc = pred.count(r =>
       r.getAs[String]("lang_true") == r.getAs[String]("lang_pred")).toDouble / nHeld

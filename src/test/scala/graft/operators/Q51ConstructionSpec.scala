@@ -46,7 +46,7 @@ class Q51ConstructionSpec extends SparkSpec {
       sentinel("__q51_flush")
       seen.clear()
 
-      val df = PipelineQueries.q51ContaminationBloom.build(spark, sf)
+      val df = DedupQueries.q51ContaminationBloom.build(spark, sf)
       // Analysis-only touches (schema) are allowed; jobs are not.
       assert(df.columns.toSeq === Seq("doc_id", "n_sh", "n_hit", "contamination"))
 

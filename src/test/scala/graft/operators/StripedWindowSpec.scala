@@ -119,15 +119,15 @@ class StripedWindowSpec extends SparkSpec {
     df.collect().map(_.toSeq.toVector).toVector.sortBy(_.mkString("|"))
 
   test("q36 striped pack is row-identical to the per-lang window form") {
-    assert(rows(PipelineQueries.q36SequencePack.build(spark, sf)) === rows(oldQ36(sf)))
+    assert(rows(CorpusQueries.q36SequencePack.build(spark, sf)) === rows(oldQ36(sf)))
   }
 
   test("q52 striped mixture is row-identical to the per-source window form") {
-    assert(rows(PipelineQueries.q52DataMixture.build(spark, sf)) === rows(oldQ52(sf)))
+    assert(rows(CorpusQueries.q52DataMixture.build(spark, sf)) === rows(oldQ52(sf)))
   }
 
   test("q55 striped curriculum is row-identical to the per-bucket rank form") {
-    assert(rows(PipelineQueries.q55Curriculum.build(spark, sf)) === rows(oldQ55(sf)))
+    assert(rows(CorpusQueries.q55Curriculum.build(spark, sf)) === rows(oldQ55(sf)))
   }
 
   test("q36/q52/q55 plans: no data-sized window keyed by the bare column") {
@@ -140,8 +140,8 @@ class StripedWindowSpec extends SparkSpec {
     // data — the 100×-scale killer this family escaped — matches neither
     // and fails.
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LogicalWindow}
-    for (q <- Seq(PipelineQueries.q36SequencePack, PipelineQueries.q52DataMixture,
-        PipelineQueries.q55Curriculum)) {
+    for (q <- Seq(CorpusQueries.q36SequencePack, CorpusQueries.q52DataMixture,
+        CorpusQueries.q55Curriculum)) {
       val plan = q.build(spark, sf).queryExecution.optimizedPlan
       val windows = plan.collect { case w: LogicalWindow => w }
       assert(windows.nonEmpty, s"${q.name}: expected Window operators in plan:\n$plan")
