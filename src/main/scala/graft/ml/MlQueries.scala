@@ -3,7 +3,7 @@ package graft.ml
 import graft.QuerySpec
 import graft.functions.Exprs.{hash60, hash60Sql}
 import graft.operators.Sampling
-import graft.sources.Tables
+import graft.sources.{Staged, Tables}
 import org.apache.spark.sql.functions._
 
 /** Rows-only QuerySpecs for the ML surface (MLlib fits are not
@@ -62,21 +62,17 @@ object MlQueries {
     * cheap corpus-level signal that the embedding learned SOMETHING).
     * Rows-only per SURVEY §5 (MLlib fits are excluded from the SQL
     * oracle); exact reload-transform parity is pinned in
-    * SentimentPipelineSpec. First build per (dir) fits and saves; repeat
-    * builds load — the one-time index-build economics of q43's quantizer.
+    * SentimentPipelineSpec. First build per (session, dir) fits and saves
+    * ([[Staged]]); repeat builds load — the one-time index-build economics
+    * of q43's quantizer.
     * The centroid is a posexplode dimension-sum — vector state never
     * leaves the executors except as the |source|×dims aggregate. */
   val q168W2vReport: QuerySpec = QuerySpec.rowsOnly("q168_w2v_report") { (spark, dir) =>
     import org.apache.spark.ml.functions.vector_to_array
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val path = s"target/graft_w2v_$tag"
     val docs = Tables.documents(spark, dir)
-    // completion-marker guard, not directory existence: a crashed or
-    // interrupted first fit leaves a partial w2v/ that would pass a bare
-    // dir probe and fail Word2VecModel.load on every later build (the
-    // q179 _SUCCESS pattern; ADVICE r17)
-    if (!Features.w2vComplete(path))
+    val path = Staged(spark, dir, "w2v") { path =>
       Features.fitWord2Vec(docs, "text", vectorSize = 32, minCount = 2).save(path)
+    }
     val feats = TextFeaturizer.load(path).transform(docs, "text")
       .select(col("source"), vector_to_array(col("features")).as("a"))
     val norms = feats

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.QuerySpec
 import graft.sources.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Byte-pair-encoding tokenizer TRAINING as a distributed operator — the

@@ -2,8 +2,7 @@ package graft.operators
 
 import graft.QuerySpec
 import graft.functions.Exprs._
-import graft.sources.Tables
-import org.apache.spark.sql.Column
+import graft.sources.{Staged, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -1226,13 +1225,13 @@ object EventQueries {
     * exactly what makes this verifiable: the final CMS/KMV state is
     * SPLIT-INVARIANT, so DuckDB can recompute it from the events table
     * with no notion of batching and the maintained state must hash-match
-    * cell for cell. First build per dir: copy events into a 3-file source
-    * layout, drive the AvailableNow stream through three foreachBatch
-    * merge steps, mark done; repeat builds read the persisted state (the
-    * q168/q179 one-time-layout economics). Output: the d=4 × w=64 CMS
-    * cell counts (part = hash row), the KMV bottom-64 key hashes
-    * (part = -1, slot = rank), and since r19 the q180-style bottom-64
-    * quantile sample — its rank hashes (part = -2) and value cents
+    * cell for cell. First build per (session, dir) ([[Staged]]): copy
+    * events into a 3-file source layout and drive the AvailableNow stream
+    * through three foreachBatch merge steps; repeat builds read the
+    * persisted state (the q168/q179 one-time-layout economics). Output:
+    * the d=4 × w=64 CMS cell counts (part = hash row), the KMV bottom-64
+    * key hashes (part = -1, slot = rank), and since r19 the q180-style
+    * bottom-64 quantile sample — its rank hashes (part = -2) and value cents
     * (part = -3) in (h, v) pair order — one int64 schema for all three
     * sketch kinds.
     * Shape at 100 TB: per trigger one map-side-combined batch aggregate
@@ -1265,14 +1264,7 @@ object EventQueries {
          |ORDER BY part, slot""".stripMargin
     ) { (spark, dir) =>
       import graft.streaming.EventsStream
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val root = s"target/graft_stream_sketch_$tag"
-      val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      // marker v2: r19 added the quantile state — a pre-r19 _SKETCHED dir
-      // lacks qnt/, so the old marker must not satisfy the new report
-      val done = new org.apache.hadoop.fs.Path(s"$root/_SKETCHED_V2")
-      if (!fs.exists(done)) {
-        fs.delete(new org.apache.hadoop.fs.Path(root), true)
+      val root = Staged(spark, dir, "stream_sketch") { root =>
         val ev = Tables.events(spark, dir)
           .select("event_id", "ts", "user_id", "event_type", "value")
         // ANY 3-way split works — the merge identity is the point — but
@@ -1283,7 +1275,6 @@ object EventQueries {
           spark.readStream.schema(ev.schema)
             .option("maxFilesPerTrigger", "1").parquet(s"$root/src"),
           s"$root/state", s"$root/ckpt", d, w, k)
-        fs.create(done, true).close()
       }
       val cms = EventsStream.latestView(spark, s"$root/state/cms").get
       val kmv = EventsStream.latestView(spark, s"$root/state/kmv").get

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.QuerySpec
 import graft.functions.Exprs._
-import graft.sources.Tables
+import graft.sources.{Staged, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -557,8 +557,8 @@ object Relational {
     * its leading column only (SinksSpec measures the gap). The DuckDB
     * mirror runs the same filter+aggregate over the unordered source table
     * — same rows, different layout, which is the claim: z-ordering is pure
-    * physical design. Layout write is one-time per (dir), _SUCCESS-marked;
-    * eager by design like q76/q79/q82. */
+    * physical design. The layout is staged once per (session, dir)
+    * ([[graft.sources.Staged]]); eager by design like q76/q79/q82. */
   val q83ZOrderScan: QuerySpec = QuerySpec.oracle(
     "q83_zorder_scan",
     """SELECT l_returnflag, count(*) AS n_rows,
@@ -566,12 +566,11 @@ object Relational {
       |FROM lineitem WHERE l_partkey <= 100 AND l_suppkey <= 5
       |GROUP BY 1 ORDER BY 1""".stripMargin
   ) { (spark, dir) =>
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val path = s"target/graft_zorder_$tag/lineitem"
-    if (!new java.io.File(path, "_SUCCESS").exists)
+    val root = Staged(spark, dir, "zorder") { root =>
       graft.sources.Sinks.writeParquetZOrdered(
-        Tables.lineitem(spark, dir), path, partitions = 8, "l_partkey", "l_suppkey")
-    spark.read.parquet(path)
+        Tables.lineitem(spark, dir), s"$root/lineitem", partitions = 8, "l_partkey", "l_suppkey")
+    }
+    spark.read.parquet(s"$root/lineitem")
       .filter(col("l_partkey") <= 100 && col("l_suppkey") <= 5)
       .groupBy("l_returnflag")
       .agg(count(lit(1)).as("n_rows"), dsum(col("l_extendedprice")).as("sum_price"))

@@ -4,7 +4,7 @@ import graft.QuerySpec
 import graft.functions.Exprs._
 import graft.functions.TextFns
 import graft.functions.TextFns._
-import graft.sources.{Sinks, Tables}
+import graft.sources.{Sinks, Staged, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -266,25 +266,21 @@ object TextQueries {
     manifestOf(Tables.documents(spark, dir)).orderBy("lang", "source")
   }
 
-  /** One-time snapshot history for q144/q145 (sentinel = 3 committed
-    * versions): v0 = the source table; v1 = the 'fr' slice re-sourced to
+  /** Snapshot history for q144/q145, staged once per (session, dir)
+    * ([[Staged]]): v0 = the source table; v1 = the 'fr' slice re-sourced to
     * 'rev1' with n_chars + 500 (an UPDATE generation); v2 = v1 minus
     * every 13th doc (a DELETE generation). All states derive from the
-    * source table, so rebuilding is idempotent and the DuckDB mirrors can
-    * recompute any version from first principles. */
-  private def ensureSnapshots(spark: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val path = s"target/graft_snap_$tag/documents"
-    if (Sinks.committedVersions(path).size < 3) {
+    * source table, so the DuckDB mirrors can recompute any version from
+    * first principles. */
+  private def ensureSnapshots(spark: org.apache.spark.sql.SparkSession, dir: String): String =
+    Staged(spark, dir, "snap") { root =>
       val v0 = Tables.documents(spark, dir)
       val v1 = v0.select(col("doc_id"), col("text"), col("lang"),
         when(col("lang") === "fr", lit("rev1")).otherwise(col("source")).as("source"),
         when(col("lang") === "fr", col("n_chars") + 500).otherwise(col("n_chars")).as("n_chars"))
       val v2 = v1.filter(col("doc_id") % 13 =!= 0)
-      Seq(v0, v1, v2).foreach(Sinks.writeSnapshot(_, path))
-    }
-    path
-  }
+      Seq(v0, v1, v2).foreach(Sinks.writeSnapshot(_, s"$root/documents"))
+    } + "/documents"
 
   /** Time travel over the snapshot log ([[Sinks.readSnapshotAsOf]]): read
     * the table AS OF v1 while the log has moved on to v2 — the
@@ -695,8 +691,8 @@ object TextQueries {
     * columns nulled on the legacy half, so the oracle derives the same
     * rows from `documents` with a CASE on the generation predicate —
     * verifying the Spark-side mergeSchema semantics against first
-    * principles. Eager by design (the one-time layout write, like q76);
-    * repeat builds see the _SUCCESS markers and are job-free. */
+    * principles. Eager by design (the layout is staged once per
+    * (session, dir) by [[Staged]], like q76); repeat builds are job-free. */
   val q79SchemaEvolution: QuerySpec = QuerySpec.oracle(
     "q79_schema_evolution",
     """SELECT CASE WHEN doc_id % 2 = 1 THEN lang END AS lang,
@@ -705,16 +701,14 @@ object TextQueries {
       |  CAST(sum(CASE WHEN doc_id % 2 = 1 THEN n_chars END) AS BIGINT) AS sum_chars
       |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin
   ) { (spark, dir) =>
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val (v1, v2) = (s"target/graft_evolved_$tag/v1", s"target/graft_evolved_$tag/v2")
-    if (!new java.io.File(v1, "_SUCCESS").exists || !new java.io.File(v2, "_SUCCESS").exists) {
+    val root = Staged(spark, dir, "evolved") { root =>
       val docs = Tables.documents(spark, dir)
       docs.filter(col("doc_id") % 2 === 0).select("doc_id", "text")
-        .write.mode("overwrite").parquet(v1)
+        .write.mode("overwrite").parquet(s"$root/v1")
       docs.filter(col("doc_id") % 2 === 1)
-        .write.mode("overwrite").parquet(v2)
+        .write.mode("overwrite").parquet(s"$root/v2")
     }
-    Tables.readMergedParquet(spark, v1, v2)
+    Tables.readMergedParquet(spark, s"$root/v1", s"$root/v2")
       .groupBy("lang")
       .agg(count(lit(1)).as("n_docs"),
         count(col("n_chars")).as("n_known"),
@@ -729,18 +723,17 @@ object TextQueries {
     * and aggregated; the DuckDB mirror runs the same aggregate over the
     * PARQUET source table, so a hash match proves the ORC round-trip is
     * lossless (values, types, nulls) without DuckDB ever reading ORC.
-    * Eager by design (the one-time sink write, like q76/q79); repeat
-    * builds see the _SUCCESS marker and are job-free. */
+    * Eager by design (the sink write is staged once per (session, dir) by
+    * [[Staged]], like q76/q79); repeat builds are job-free. */
   val q82OrcRoundtrip: QuerySpec = QuerySpec.oracle(
     "q82_orc_roundtrip",
     """SELECT lang, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sum_chars
       |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin
   ) { (spark, dir) =>
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val path = s"target/graft_orc_$tag/documents"
-    if (!new java.io.File(path, "_SUCCESS").exists)
-      Sinks.writeOrc(Tables.documents(spark, dir), path, targetFiles = 4)
-    Sinks.readOrc(spark, path)
+    val root = Staged(spark, dir, "orc") { root =>
+      Sinks.writeOrc(Tables.documents(spark, dir), s"$root/documents", targetFiles = 4)
+    }
+    Sinks.readOrc(spark, s"$root/documents")
       .groupBy("lang")
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
       .orderBy("lang")
@@ -765,16 +758,15 @@ object TextQueries {
     * TablesSpec hostile-text case proves default line-splitting breaks
     * such rows); multiLine makes each file one task's unit — the price of
     * newline-bearing CSV, and why parquet is the analytic format and CSV
-    * only the boundary one. Eager by design (one-time layout write,
-    * _SUCCESS-guarded like q82). */
+    * only the boundary one. Eager by design (layout staged once per
+    * (session, dir) by [[Staged]], like q82). */
   val q86CsvRoundtrip: QuerySpec = QuerySpec.oracle(
     "q86_csv_roundtrip",
     "SELECT doc_id, text, lang, source, n_chars FROM documents ORDER BY doc_id"
   ) { (spark, dir) =>
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val base = s"target/graft_csv_$tag"
-    if (!new java.io.File(s"$base/v1", "_SUCCESS").exists)
+    val base = Staged(spark, dir, "csv") { base =>
       Tables.writeVersionedCsv(Tables.documents(spark, dir).coalesce(4), base, "v1")
+    }
     spark.read.schema(documentsSchema)
       .option("header", "true").option("multiLine", "true").csv(s"$base/v1")
       .select("doc_id", "text", "lang", "source", "n_chars")
@@ -783,17 +775,16 @@ object TextQueries {
 
   /** JSON-lines round-trip ([[Sinks.writeJsonLines]]/`readJsonLines`),
     * same per-row lossless claim as q86 for the splittable
-    * object-per-line interchange format. Eager by design (one-time
-    * layout write, _SUCCESS-guarded). */
+    * object-per-line interchange format. Eager by design (layout staged
+    * once per (session, dir) by [[Staged]]). */
   val q87JsonRoundtrip: QuerySpec = QuerySpec.oracle(
     "q87_json_roundtrip",
     "SELECT doc_id, text, lang, source, n_chars FROM documents ORDER BY doc_id"
   ) { (spark, dir) =>
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val path = s"target/graft_json_$tag/documents"
-    if (!new java.io.File(path, "_SUCCESS").exists)
-      Sinks.writeJsonLines(Tables.documents(spark, dir), path, targetFiles = 4)
-    Sinks.readJsonLines(spark, path, documentsSchema)
+    val root = Staged(spark, dir, "json") { root =>
+      Sinks.writeJsonLines(Tables.documents(spark, dir), s"$root/documents", targetFiles = 4)
+    }
+    Sinks.readJsonLines(spark, s"$root/documents", documentsSchema)
       .select("doc_id", "text", "lang", "source", "n_chars")
       .orderBy("doc_id")
   }
@@ -808,19 +799,19 @@ object TextQueries {
     * unicode text included — survived markup escaping both ways. The
     * fixture text is verified markup-free-hostile anyway (entities and
     * angle brackets escape/unescape symmetrically). Eager by design
-    * (one-time layout write, _SUCCESS-guarded like q82/q86/q87). */
+    * (layout staged once per (session, dir) by [[Staged]], like
+    * q82/q86/q87). */
   val q179XmlRoundtrip: QuerySpec = QuerySpec.oracle(
     "q179_xml_roundtrip",
     "SELECT doc_id, text, lang, source, n_chars FROM documents ORDER BY doc_id"
   ) { (spark, dir) =>
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val path = s"target/graft_xml_$tag/documents"
-    if (!new java.io.File(path, "_SUCCESS").exists)
+    val root = Staged(spark, dir, "xml") { root =>
       Tables.documents(spark, dir).coalesce(4).write
         .format("xml").option("rowTag", "doc").option("rootTag", "documents")
-        .mode("overwrite").save(path)
+        .mode("overwrite").save(s"$root/documents")
+    }
     spark.read.schema(documentsSchema)
-      .format("xml").option("rowTag", "doc").load(path)
+      .format("xml").option("rowTag", "doc").load(s"$root/documents")
       .select("doc_id", "text", "lang", "source", "n_chars")
       .orderBy("doc_id")
   }
@@ -837,19 +828,18 @@ object TextQueries {
     * would still return correct rows, which is exactly why only a plan
     * assert can catch it. The DuckDB mirror runs the same filter+aggregate
     * over the unpartitioned source table: partitioning is pure physical
-    * design, same claim as q83. Eager by design (one-time layout write,
-    * _SUCCESS-guarded like q76/q79/q82/q83). */
+    * design, same claim as q83. Eager by design (layout staged once per
+    * (session, dir) by [[Staged]], like q76/q79/q82/q83). */
   val q85PartitionPrunedScan: QuerySpec = QuerySpec.oracle(
     "q85_partition_pruned_scan",
     """SELECT source, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sum_chars
       |FROM documents WHERE lang IN ('en', 'zh') GROUP BY 1 ORDER BY 1""".stripMargin
   ) { (spark, dir) =>
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val path = s"target/graft_partitioned_$tag/documents"
-    if (!new java.io.File(path, "_SUCCESS").exists)
-      Sinks.writeParquetPartitioned(Tables.documents(spark, dir), path, "lang",
+    val root = Staged(spark, dir, "partitioned") { root =>
+      Sinks.writeParquetPartitioned(Tables.documents(spark, dir), s"$root/documents", "lang",
         spreadCol = col("doc_id"), tasksPerValue = 2)
-    val agg = spark.read.parquet(path)
+    }
+    val agg = spark.read.parquet(s"$root/documents")
       .filter(col("lang").isin("en", "zh"))
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
@@ -875,19 +865,18 @@ object TextQueries {
     * only (SinksSpec measures the gap on exactly this table). The DuckDB
     * mirror runs the same filter+aggregate over the unordered source
     * table: dictionary z-ordering is pure physical design. Eager by
-    * design (one-time layout write, _SUCCESS-guarded). */
+    * design (layout staged once per (session, dir) by [[Staged]]). */
   val q89ZOrderDictScan: QuerySpec = QuerySpec.oracle(
     "q89_zorder_dict_scan",
     """SELECT source, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sum_chars
       |FROM documents WHERE lang = 'es' AND source IN ('src3', 'src4', 'src5')
       |GROUP BY 1 ORDER BY 1""".stripMargin
   ) { (spark, dir) =>
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val path = s"target/graft_zdict_$tag/documents"
-    if (!new java.io.File(path, "_SUCCESS").exists)
+    val root = Staged(spark, dir, "zdict") { root =>
       Sinks.writeParquetZOrderedDict(
-        Tables.documents(spark, dir), path, partitions = 8, "lang", "source")
-    spark.read.parquet(path)
+        Tables.documents(spark, dir), s"$root/documents", partitions = 8, "lang", "source")
+    }
+    spark.read.parquet(s"$root/documents")
       .filter(col("lang") === "es" && col("source").isin("src3", "src4", "src5"))
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
@@ -903,9 +892,9 @@ object TextQueries {
     * returns the whole merged table; the DuckDB mirror derives the same
     * state from the source table with a CASE patch — so the hash match
     * proves the overwrite replaced exactly the patched partition and
-    * nothing else. Patch rows derive from the SOURCE table, so the merged
-    * state is idempotent; the one-time step is sentinel-guarded like the
-    * other layout builders (eager by design). */
+    * nothing else. Patch rows derive from the SOURCE table; the layout is
+    * staged once per (session, dir) by [[Staged]] like the other layout
+    * builders (eager by design). */
   val q103PartitionOverwrite: QuerySpec = QuerySpec.oracle(
     "q103_partition_overwrite",
     """SELECT doc_id, text, lang,
@@ -913,10 +902,8 @@ object TextQueries {
       |  CASE WHEN lang = 'de' THEN n_chars + 1000 ELSE n_chars END AS n_chars
       |FROM documents ORDER BY doc_id""".stripMargin
   ) { (spark, dir) =>
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val path = s"target/graft_dynpart_$tag/documents"
-    val sentinel = new java.io.File(path, "_PATCHED")
-    if (!sentinel.exists) {
+    val root = Staged(spark, dir, "dynpart") { root =>
+      val path = s"$root/documents"
       Sinks.writeParquetPartitioned(Tables.documents(spark, dir), path, "lang",
         spreadCol = col("doc_id"), tasksPerValue = 2)
       def siblings: Seq[String] = new java.io.File(path).listFiles()
@@ -932,9 +919,8 @@ object TextQueries {
         spreadCol = col("doc_id"), tasksPerValue = 2)
       require(siblings == before,
         "q103: dynamic overwrite touched sibling partitions — mode not applied")
-      new java.io.FileOutputStream(sentinel).close()
     }
-    spark.read.parquet(path)
+    spark.read.parquet(s"$root/documents")
       .select("doc_id", "text", "lang", "source", "n_chars")
       .orderBy("doc_id")
   }
@@ -946,15 +932,13 @@ object TextQueries {
     * actually collapsed; the query reads the compacted layout and the
     * hash match against the source table proves compaction is
     * value-neutral — pure physical design, like q83/q85/q89's layouts.
-    * Sentinel-guarded one-time build (eager by design). */
+    * Staged once per (session, dir) by [[Staged]] (eager by design). */
   val q104Compaction: QuerySpec = QuerySpec.oracle(
     "q104_compaction",
     "SELECT doc_id, text, lang, source, n_chars FROM documents ORDER BY doc_id"
   ) { (spark, dir) =>
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val path = s"target/graft_compact_$tag/documents"
-    val sentinel = new java.io.File(path, "_COMPACTED")
-    if (!sentinel.exists) {
+    val root = Staged(spark, dir, "compact") { root =>
+      val path = s"$root/documents"
       Tables.documents(spark, dir).repartition(64)
         .write.mode("overwrite").parquet(path)
       def nFiles = new java.io.File(path).listFiles()
@@ -964,9 +948,8 @@ object TextQueries {
       Sinks.compactParquet(spark, path, targetFileBytes = 8L << 20)
       require(nFiles < before / 4,
         s"q104: compaction left $nFiles of $before files — no collapse")
-      new java.io.FileOutputStream(sentinel).close()
     }
-    spark.read.parquet(path)
+    spark.read.parquet(s"$root/documents")
       .select("doc_id", "text", "lang", "source", "n_chars")
       .orderBy("doc_id")
   }
@@ -1079,15 +1062,14 @@ object TextQueries {
     * sibling check. The query reads the maintained layout and the hash
     * match against the source table proves per-partition compaction is
     * value-neutral and keeps the partition column readable — pure
-    * physical design. Sentinel-guarded one-time build (eager by design). */
+    * physical design. Staged once per (session, dir) by [[Staged]] (eager
+    * by design). */
   val q120CompactionPartitioned: QuerySpec = QuerySpec.oracle(
     "q120_compaction_partitioned",
     "SELECT doc_id, text, lang, source, n_chars FROM documents ORDER BY doc_id"
   ) { (spark, dir) =>
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val path = s"target/graft_compactpart_$tag/documents"
-    val sentinel = new java.io.File(path, "_COMPACTED")
-    if (!sentinel.exists) {
+    val root = Staged(spark, dir, "compactpart") { root =>
+      val path = s"$root/documents"
       Tables.documents(spark, dir).repartition(16, col("doc_id"))
         .write.mode("overwrite").partitionBy("lang").parquet(path)
       def layout: Map[String, Seq[String]] = new java.io.File(path).listFiles()
@@ -1117,9 +1099,8 @@ object TextQueries {
       Sinks.compactParquetPartitioned(spark, path, targetFileBytes = 8L << 20)
       require(layout == after,
         "q120: re-compaction touched already-compact partitions — skip contract broken")
-      new java.io.FileOutputStream(sentinel).close()
     }
-    spark.read.parquet(path)
+    spark.read.parquet(s"$root/documents")
       .select("doc_id", "text", "lang", "source", "n_chars")
       .orderBy("doc_id")
   }

@@ -44,7 +44,7 @@ object Bucketing {
     * catalog entry; the pre-delete below keeps the write path clean. */
   def ensureOrdersLineitemBucketed(spark: SparkSession, dir: String,
                                    numBuckets: Int = 8): (String, String) = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val tag = Staged.tag(dir)
     val specs = Seq(
       (s"b_orders$tag", Tables.orders(spark, dir), "o_orderkey"),
       (s"b_lineitem$tag", Tables.lineitem(spark, dir), "l_orderkey"))

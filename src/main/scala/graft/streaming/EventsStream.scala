@@ -3,7 +3,7 @@ package graft.streaming
 import graft.functions.Exprs.hash60
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming rebuild of the reference's live path (SURVEY.md §2.9:

@@ -49,8 +49,8 @@ class ConstructionSweepSpec extends SparkSpec {
     // codebook IS the index, same contract as q43's coarse quantizer;
     // q128 composes that codebook with q43's coarse cells (both cached)
     "q127_ann_pq", "q128_ann_ivfpq",
-    // q79's FIRST build materializes the two-generation parquet layout the
-    // merged scan reads (one-time, _SUCCESS-marked; repeat builds job-free)
+    // q79's first build per session materializes the two-generation parquet
+    // layout the merged scan reads (Staged; repeat builds job-free)
     "q79_schema_evolution",
     // q80 iterates CC over the delta subgraph at build, like q35/q59/q73
     "q80_dedup_incremental",
@@ -104,33 +104,33 @@ class ConstructionSweepSpec extends SparkSpec {
     // q207 builds from the memoized quantized-corpus checkpoint — a cold
     // cache materializes it at build (the same shared-index economics)
     "q207_chapman_coverage",
-    // q82's FIRST build writes the ORC layout (one-time, _SUCCESS-marked)
+    // q82's first build per session writes the ORC layout (Staged)
     "q82_orc_roundtrip",
-    // q83's FIRST build writes the z-ordered layout (+ its one-row min/max
-    // normalization aggregate); one-time, _SUCCESS-marked
+    // q83's first build per session writes the z-ordered layout (+ its
+    // one-row min/max normalization aggregate; Staged)
     "q83_zorder_scan",
-    // q85's FIRST build writes the lang-partitioned directory layout
-    // (one-time, _SUCCESS-marked; the pruning asserts are driver-side
-    // file-listing only, job-free on repeat builds)
+    // q85's first build per session writes the lang-partitioned directory
+    // layout (Staged; the pruning asserts are driver-side file-listing
+    // only, job-free on repeat builds)
     "q85_partition_pruned_scan",
-    // q86/q87's FIRST builds write the CSV / JSON-lines layouts the
-    // round-trips read (one-time, _SUCCESS-marked)
+    // q86/q87's first builds per session write the CSV / JSON-lines
+    // layouts the round-trips read (Staged)
     "q86_csv_roundtrip", "q87_json_roundtrip",
-    // q179's FIRST build writes the XML layout (one-time, _SUCCESS-marked)
+    // q179's first build per session writes the XML layout (Staged)
     "q179_xml_roundtrip",
-    // q89's FIRST build writes the dict-z-ordered layout (+ its two tiny
-    // dictionary/max-code aggregates); one-time, _SUCCESS-marked
+    // q89's first build per session writes the dict-z-ordered layout (+ its
+    // two tiny dictionary/max-code aggregates; Staged)
     "q89_zorder_dict_scan",
-    // q103's FIRST build writes the lang-partitioned layout then
-    // dynamic-overwrites the 'de' partition (one-time, _PATCHED-marked;
-    // repeat builds job-free)
+    // q103's first build per session writes the lang-partitioned layout
+    // then dynamic-overwrites the 'de' partition (Staged; repeat builds
+    // job-free)
     "q103_partition_overwrite",
-    // q104's FIRST build fragments documents into 64 shards then compacts
-    // them (one-time, _COMPACTED-marked; repeat builds job-free)
+    // q104's first build per session fragments documents into 64 shards
+    // then compacts them (Staged; repeat builds job-free)
     "q104_compaction",
-    // q120's FIRST build writes a fragmented lang-partitioned layout then
-    // compacts each partition (one-time, _COMPACTED-marked; the second
-    // compaction pass is skip-all and job-free; repeat builds job-free)
+    // q120's first build per session writes a fragmented lang-partitioned
+    // layout then compacts each partition (Staged; the second compaction
+    // pass is skip-all and job-free; repeat builds job-free)
     "q120_compaction_partitioned",
     // q136's edge relation sits behind a (nominally lazy) localCheckpoint;
     // under AQE, toRdd at checkpoint CREATION already executes the
@@ -143,18 +143,20 @@ class ConstructionSweepSpec extends SparkSpec {
     // cut per round (the dangling + contribution double-reference), so the
     // rounds execute at build under AQE
     "q162_personalized_pagerank",
-    // q168's FIRST build fits + saves the Word2Vec featurizer (the one-time
-    // index-build economics of q43's quantizer; repeat builds load from the
-    // saved layout — still a driver-side read of the persisted model)
+    // q168's first build per session fits + saves the Word2Vec featurizer
+    // (Staged; the index-build economics of q43's quantizer; repeat builds
+    // load from the saved layout — still a driver-side read of the
+    // persisted model)
     "q168_w2v_report",
     // q167: the co-supply edge dictionary sits behind a (nominally lazy)
     // localCheckpoint — q136's index-build-shaped trade, one cut for the
     // four references the census makes
     "q167_triangle_count",
-    // q144/q145's FIRST build writes the three-version snapshot log
-    // (one-time, commit-marker-guarded; repeat builds list committed
-    // versions driver-side and are job-free — except q144's travelled-vs-
-    // latest count assert, the documented in-build pin)
+    // q144/q145's first build per session writes the three-version
+    // snapshot log (Staged; repeat builds list committed versions
+    // driver-side and write nothing — their jobs are each version read's
+    // parquet schema inference and q144's travelled-vs-latest count
+    // assert, the documented in-build pin)
     "q144_time_travel", "q145_snapshot_diff",
     // q141/q142 learn BPE merges at build: each round's argmax is a 1-row
     // collect that must become a literal in the next round's rewrite —
@@ -170,9 +172,9 @@ class ConstructionSweepSpec extends SparkSpec {
     // checkpoint creation executes the upstream stages at build, q136's
     // index-build-shaped trade
     "q181_hop_distance",
-    // q183's FIRST build copies events into the 3-file stream source and
-    // drives the AvailableNow sketch-maintenance stream (one-time,
-    // _SKETCHED-marked; repeat builds read the persisted state)
+    // q183's first build per session copies events into the 3-file stream
+    // source and drives the AvailableNow sketch-maintenance stream (Staged;
+    // repeat builds read the persisted state)
     "q183_stream_sketch_state",
     // r21 shared-relation memos: a COLD cache materializes the memoized
     // relation at build (checkpoint creation executes the upstream stages

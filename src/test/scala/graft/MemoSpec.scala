@@ -65,19 +65,37 @@ class MemoSpec extends SparkSpec {
     assert(SessionMemo.buildSeconds.containsKey("memoSpec.inner"))
   }
 
-  test("ConcurrentHashMap is constructed only in SessionMemo and the two per-JVM caches") {
-    val allowed = Set("SessionMemo.scala", "Tables.scala", "Similarity.scala")
-    val construct = """new\s+(java\.util\.concurrent\.)?ConcurrentHashMap\b""".r
+  /** Lines of src/main matching `pattern` outside the `allowed` files,
+    * comment lines included only when `inComments`. */
+  private def sourceHits(pattern: scala.util.matching.Regex, allowed: Set[String],
+                         inComments: Boolean): Seq[String] = {
     val files = Files.walk(Paths.get("src/main/scala")).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
     assert(files.size > 50, "source tree not found from the working directory")
-    val offending = for {
+    for {
       f: Path <- files
       if !allowed(f.getFileName.toString)
       (line, n) <- Files.readAllLines(f).asScala.zipWithIndex
       code = line.trim
-      if !code.startsWith("//") && !code.startsWith("*") && construct.findFirstIn(code).nonEmpty
+      if inComments || (!code.startsWith("//") && !code.startsWith("*"))
+      if pattern.findFirstIn(code).nonEmpty
     } yield s"$f:${n + 1}"
+  }
+
+  test("ConcurrentHashMap is constructed only in SessionMemo and the two per-JVM caches") {
+    val offending = sourceHits("""new\s+(java\.util\.concurrent\.)?ConcurrentHashMap\b""".r,
+      Set("SessionMemo.scala", "Tables.scala", "Similarity.scala"), inComments = false)
+    assert(offending.isEmpty, offending.mkString("; "))
+  }
+
+  test("the staged-layout dir tag is spelled only in Staged") {
+    val offending = sourceHits(java.util.regex.Pattern.quote("[^A-Za-z0-9]").r,
+      Set("Staged.scala"), inComments = true)
+    assert(offending.isEmpty, offending.mkString("; "))
+  }
+
+  test("no on-disk layout marker decides a rebuild") {
+    val offending = sourceHits("_PATCHED|_COMPACTED|_SKETCHED".r, Set.empty, inComments = true)
     assert(offending.isEmpty, offending.mkString("; "))
   }
 }

@@ -21,7 +21,6 @@ class MergeSpec extends SparkSpec {
   }
 
   test("upsert anti join broadcasts the delta's key projection") {
-    import spark.implicits._
     val target = spark.range(0, 10000).select(col("id"), (col("id") % 7).as("n"))
     val updates = spark.range(0, 100).select(col("id"), lit(-1L).as("n"))
     val plan = Merge.upsert(target, updates, "id")

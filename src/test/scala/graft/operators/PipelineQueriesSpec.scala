@@ -563,7 +563,6 @@ class PipelineQueriesSpec extends SparkSpec {
       ((n).toLong, k.toLong, (BigInt(x.max) * 1000000 / n).toLong,
         (num * 1000000 / (k * n)).toLong)
     }
-    import org.apache.spark.sql.functions._
     val byCol: Map[String, Seq[Long]] = Map(
       "lineitem.l_suppkey" -> graft.sources.Tables.lineitem(spark, sf)
         .groupBy("l_suppkey").count().collect().map(_.getAs[Long]("count")).toSeq,
@@ -1180,7 +1179,6 @@ class PipelineQueriesSpec extends SparkSpec {
 
   test("q224: parity halves read A/A (no drift); a planted shift fires the flag") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     // the declared query: random halves of ONE distribution — an A/A
     // harness test, every label must read non-drifted
     val rows = VectorQueries.q224EmbeddingDrift.build(spark, sf).collect()

@@ -22,7 +22,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("LSH near-dup join finds planted identical vectors") {
-    import spark.implicits._
     val base = Tables.embeddings(spark, sf).filter(col("vec_id") < 50)
     // plant: vec 1000 = copy of vec 0
     val copy = base.filter(col("vec_id") === 0)
@@ -205,7 +204,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("KNN classify predicts the planted label for a cloned cluster") {
-    import spark.implicits._
     // train: 10 copies of vec 0 with label 7; queries: vec 0 itself
     val emb = Tables.embeddings(spark, sf)
     val v0 = emb.filter(col("vec_id") === 0)
