@@ -17,28 +17,26 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * 4 s to 64 s at sf0.1. This kernel runs the same arithmetic as two
   * primitive loops inside whole-stage codegen (microseconds per row).
   *
-  * W and b are NOT stored in the tree: they regenerate lazily from the four
-  * defining scalars (java.util.Random's sequence is part of its published
-  * contract), so expression equality/serialization stay scalar-sized and
-  * the generated code receives the flattened matrix via a reference object.
+  * W (flattened row-major, D·d) and b are drawn once by the owning
+  * [[graft.ml.RffSvc.RffMap]] and passed in by reference through the second
+  * parameter list: every copy Catalyst makes of the expression (analysis,
+  * optimisation, `withNewChildren`) shares the same arrays, so the D×d
+  * Gaussian draw happens once per map, not once per instance. Equality
+  * and hashing read only the first list — the four defining scalars, which
+  * determine W and b — and the generated code receives the arrays as
+  * reference objects.
   * Float-op order matches the HOF form exactly: the dot accumulates
   * left-to-right, then cos(acc + bᵢ) is scaled — bit-identical outputs to
   * the r16 composable implementation.
   */
 case class RffTransformExpr(child: Expression, inputDim: Int, numComponents: Int,
-                            gamma: Double, seed: Long) extends UnaryExpression {
+                            gamma: Double, seed: Long)(val w: Array[Double], val b: Array[Double])
+    extends UnaryExpression {
 
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def nullable: Boolean = true
+  override protected def otherCopyArgs: Seq[AnyRef] = Seq(w, b)
 
-  // regenerated, never serialized with the tree: @transient + lazy
-  @transient private lazy val (wFlat: Array[Double], bArr: Array[Double]) = {
-    val rnd = new java.util.Random(seed)
-    val sd = math.sqrt(2.0 * gamma)
-    val w = Array.fill(numComponents * inputDim)(rnd.nextGaussian() * sd)
-    val b = Array.fill(numComponents)(rnd.nextDouble() * 2.0 * math.Pi)
-    (w, b)
-  }
   @transient private lazy val scale = math.sqrt(2.0 / numComponents)
 
   override protected def nullSafeEval(input: Any): Any = {
@@ -60,16 +58,16 @@ case class RffTransformExpr(child: Expression, inputDim: Int, numComponents: Int
       var acc = 0.0
       val off = c * d
       j = 0
-      while (j < d) { acc += wFlat(off + j) * x(j); j += 1 }
-      out(c) = scale * math.cos(acc + bArr(c))
+      while (j < d) { acc += w(off + j) * x(j); j += 1 }
+      out(c) = scale * math.cos(acc + b(c))
       c += 1
     }
     new GenericArrayData(out)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val wRef = ctx.addReferenceObj("rffW", wFlat, "double[]")
-    val bRef = ctx.addReferenceObj("rffB", bArr, "double[]")
+    val wRef = ctx.addReferenceObj("rffW", w, "double[]")
+    val bRef = ctx.addReferenceObj("rffB", b, "double[]")
     val (dVar, jVar, cVar, accVar, xVar, outVar) = (ctx.freshName("d"),
       ctx.freshName("j"), ctx.freshName("c"), ctx.freshName("acc"),
       ctx.freshName("x"), ctx.freshName("out"))
@@ -97,11 +95,12 @@ case class RffTransformExpr(child: Expression, inputDim: Int, numComponents: Int
   }
 
   override protected def withNewChildInternal(newChild: Expression): RffTransformExpr =
-    copy(child = newChild)
+    copy(child = newChild)(w, b)
 }
 
 object RffTransformExpr {
-  def rff(x: Column, inputDim: Int, numComponents: Int, gamma: Double, seed: Long): Column =
+  def rff(x: Column, inputDim: Int, numComponents: Int, gamma: Double, seed: Long,
+          w: Array[Double], b: Array[Double]): Column =
     ColumnBridge.column(
-      RffTransformExpr(ColumnBridge.expression(x), inputDim, numComponents, gamma, seed))
+      RffTransformExpr(ColumnBridge.expression(x), inputDim, numComponents, gamma, seed)(w, b))
 }

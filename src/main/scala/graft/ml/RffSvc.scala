@@ -21,20 +21,30 @@ import org.apache.spark.sql.types.StructType
   * trade a 100 TB training set needs: kernel SVM is O(n²) in support
   * vectors, RFF+LinearSVC is one narrow featurization map and a linear fit.
   *
-  * Spark-first shape: W and b are plan LITERALS (D×d doubles — a few
-  * hundred KB, shipped once with the plan like any broadcast scalar), and
-  * z(x) is a pure Catalyst higher-order-function chain
-  * (`transform`/`zip_with`/`aggregate` + `cos`) over `vector_to_array` —
-  * zero UDFs, fully distributed, no fitted state beyond the classifier.
-  * Determinism: (seed, γ, D, d) regenerates W and b bit-exactly
-  * (java.util.Random's sequence is part of its published contract), so
-  * persistence stores four scalars, not the matrix.
+  * Spark-first shape: W and b (D×d doubles — a few hundred KB) are drawn
+  * once per [[RffMap]] and shipped with the plan by reference, and z(x) is
+  * one codegen'd Catalyst expression over `vector_to_array` — fully
+  * distributed, no fitted state beyond the classifier. Determinism:
+  * (seed, γ, D, d) regenerates W and b bit-exactly (java.util.Random's
+  * sequence is part of its published contract), so persistence stores four
+  * scalars, not the matrix.
   */
 object RffSvc {
 
   /** The random feature map's parameters — everything needed to rebuild the
     * projection exactly. */
   final case class RffMap(inputDim: Int, numComponents: Int, gamma: Double, seed: Long) {
+
+    /** W ~ N(0, 2γ)^{D×d} (flattened row-major) and b ~ U[0, 2π]^D, drawn
+      * once per map from `seed`; every z(x) expression built from this map
+      * holds these two arrays by reference. */
+    @transient lazy val (w: Array[Double], b: Array[Double]) = {
+      val rnd = new java.util.Random(seed)
+      val sd = math.sqrt(2.0 * gamma)
+      val w = Array.fill(numComponents * inputDim)(rnd.nextGaussian() * sd)
+      val b = Array.fill(numComponents)(rnd.nextDouble() * 2.0 * math.Pi)
+      (w, b)
+    }
 
     /** z(x) over an `array<double>` column: for each (wᵢ, bᵢ),
       * sqrt(2/D)·cos(wᵢ·x + bᵢ) — as the codegen'd
@@ -45,7 +55,7 @@ object RffSvc {
       * kernel tier joined Trainer.models(); the kernel emits bit-identical
       * values (same accumulation order). */
     def transformArray(x: Column): Column =
-      graft.functions.RffTransformExpr.rff(x, inputDim, numComponents, gamma, seed)
+      graft.functions.RffTransformExpr.rff(x, inputDim, numComponents, gamma, seed, w, b)
 
     /** features (VectorUDT) → rff_features (VectorUDT), ready for any MLlib
       * linear estimator. */
@@ -98,21 +108,31 @@ object RffSvc {
       new org.apache.spark.ml.util.MLWriter {
         override protected def saveImpl(path: String): Unit = model.save(path)
       }
+    /** This model's prediction over a vector column, as one column:
+      * `svc.predict` on z(x). [[Trainer.prediction]] scores the kernel tier
+      * through it. */
+    def prediction(features: Column): Column = {
+      val svc = model.svc
+      udf((v: Vector) => svc.predict(v)).apply(z(features))
+    }
+    private def z(features: Column): Column =
+      array_to_vector(model.rff.transformArray(vector_to_array(features)))
+
     override def transform(ds: Dataset[_]): DataFrame = {
       val out = transformSchema(ds.schema)
       val svc = model.svc
       val threshold = svc.getThreshold
-      val z = array_to_vector(model.rff.transformArray(vector_to_array(col($(featuresCol)))))
+      val features = col($(featuresCol))
       val raw = $(rawPredictionCol)
       val pred = $(predictionCol)
       val withRaw =
         if (raw.isEmpty) ds.toDF()
         else ds.withColumn(raw,
-          udf((v: Vector) => svc.predictRaw(v)).apply(z).as(raw, out(raw).metadata))
+          udf((v: Vector) => svc.predictRaw(v)).apply(z(features)).as(raw, out(raw).metadata))
       // with the margin present, predict from it, as MLlib's raw2prediction does
       if (pred.isEmpty) withRaw
       else withRaw.withColumn(pred,
-        (if (raw.isEmpty) udf((v: Vector) => svc.predict(v)).apply(z)
+        (if (raw.isEmpty) prediction(features)
          else udf((r: Vector) => if (r(1) > threshold) 1.0 else 0.0).apply(col(raw)))
           .as(pred, out(pred).metadata))
     }

@@ -84,12 +84,13 @@ object SentimentPipeline {
 
   /** §3.2: score a batch of raw texts with every model in one pass. The
     * result is `tweet` followed by one double `pred_<model>` column per
-    * model, in model-name order; only predictions are computed. */
+    * model, in model-name order; only predictions are computed. A batch is
+    * one page or micro-batch, so it comes back as ONE partition: one task
+    * and one file per sink append. */
   def scoreBatch(texts: DataFrame, textCol: String, trained: Trained): DataFrame = {
     val featurized = trained.featurizer.transform(
       texts.withColumnRenamed(textCol, "tweet"), "tweet")
-    val scored = Trainer.scoreAll(featurized, trained.models)
-    scored.select("tweet", scored.columns.filter(_.startsWith("pred_")).toSeq: _*)
+    Trainer.scoreAll(featurized, trained.models, col("tweet")).coalesce(1)
   }
 
   /** §3.2 live loop as ONE composed entry point (the reference's

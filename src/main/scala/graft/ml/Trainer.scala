@@ -1,10 +1,10 @@
 package graft.ml
 
 import org.apache.spark.ml.classification._
-import org.apache.spark.ml.param.ParamMap
+import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.ml.util.MLWritable
-import org.apache.spark.ml.Transformer
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.ml.{PredictionModel, Transformer}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference's classifier surface (SURVEY.md §2.10 M1-M3, M5-M8):
@@ -72,7 +72,8 @@ object Trainer {
         name -> scala.concurrent.Future {
           val m = est.fit(train)
           modelDir.foreach(d => m.asInstanceOf[MLWritable].write.overwrite().save(s"$d/$name"))
-          val row = confusion(predictOnly(m, "prediction").transform(valid)).collect().head
+          val row = confusion(valid.withColumn("prediction", prediction(m, col("features"))))
+            .collect().head
           ((m: Transformer), row)
         }(ec)
       }
@@ -97,32 +98,6 @@ object Trainer {
     (fitted.map { case (name, (m, _)) => name -> m }.toMap, runs)
   }
 
-  /** Hyperparameter selection via k-fold cross-validation (beyond the
-    * reference, which trains every model at fixed defaults): grid over
-    * LogisticRegression regularization, areaUnderROC objective. Each fold's
-    * fits parallelize over the cluster; returns the refit best model and the
-    * per-candidate mean metrics. */
-  def tuneLogisticRegression(train: DataFrame, folds: Int = 3, seed: Long = 15)
-      : (org.apache.spark.ml.tuning.CrossValidatorModel, Array[Double]) = {
-    import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
-    import org.apache.spark.ml.tuning.{CrossValidator, ParamGridBuilder}
-    val lr = new LogisticRegression().setMaxIter(25)
-    // no regParam=0.0 in the grid: elasticNetParam is inert at zero
-    // regularization, which would duplicate a candidate
-    val grid = new ParamGridBuilder()
-      .addGrid(lr.regParam, Array(0.01, 0.1))
-      .addGrid(lr.elasticNetParam, Array(0.0, 0.5))
-      .build()
-    val cv = new CrossValidator()
-      .setEstimator(lr)
-      .setEvaluator(new BinaryClassificationEvaluator().setMetricName("areaUnderROC"))
-      .setEstimatorParamMaps(grid)
-      .setNumFolds(folds)
-      .setSeed(seed)
-    val model = cv.fit(train)
-    (model, model.avgMetrics)
-  }
-
   /** Loader dispatch for the registry's model names (MLlib load is typed
     * per class, so the registry alone can't reconstruct a model). */
   def loadModel(name: String, path: String): Transformer = name match {
@@ -144,22 +119,22 @@ object Trainer {
       .coalesce(1).write.mode("overwrite").parquet(s"$modelDir/_registry")
   }
 
-  /** `m` computing its prediction only, into `predictionCol`: a copy whose
-    * `rawPredictionCol` and `probabilityCol` are empty, MLlib's switch for
-    * skipping an output (the [[RffSvc]] tier takes the same params). `m`
-    * itself is not changed. Validation and serving both score through this. */
-  def predictOnly(m: Transformer, predictionCol: String): Transformer = {
-    val extra = ParamMap(m.getParam("predictionCol") -> predictionCol)
-    Seq("rawPredictionCol", "probabilityCol").filter(m.hasParam)
-      .foreach(p => extra.put(m.getParam(p), ""))
-    m.copy(extra)
+  /** `m`'s prediction over a vector column, as one column: MLlib's public
+    * `PredictionModel.predict`, or the kernel tier's `svc.predict` on z(x).
+    * No margin, probability or feature-map column is computed. Validation
+    * and serving both score through this. */
+  def prediction(m: Transformer, features: Column): Column = m match {
+    case r: RffSvc.RffSvcTransformer => r.prediction(features)
+    case p: PredictionModel[Vector @unchecked, _] => udf((v: Vector) => p.predict(v)).apply(features)
+    case other => throw new IllegalArgumentException(s"not a prediction model: ${other.uid}")
   }
 
-  /** Multi-model fan-out scoring (M7, src/main.py:150-158): one pass, one
-    * added `pred_<name>` column per model in name order — not the
-    * reference's per-row loop. */
-  def scoreAll(df: DataFrame, fitted: Map[String, Transformer]): DataFrame =
-    fitted.toSeq.sortBy(_._1).foldLeft(df) { case (acc, (name, m)) =>
-      predictOnly(m, s"pred_$name").transform(acc)
-    }
+  /** Multi-model fan-out scoring (M7, src/main.py:150-158): `keep`, then one
+    * `pred_<name>` column per model in name order, as ONE select over the
+    * `features` column — not the reference's per-row loop. A projection, so
+    * the result keeps `df`'s partitioning. */
+  def scoreAll(df: DataFrame, fitted: Map[String, Transformer], keep: Column*): DataFrame =
+    df.select(keep ++ fitted.toSeq.sortBy(_._1).map { case (name, m) =>
+      prediction(m, col("features")).as(s"pred_$name")
+    }: _*)
 }

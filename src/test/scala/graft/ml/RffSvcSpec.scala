@@ -1,10 +1,13 @@
 package graft.ml
 
 import graft.SparkSpec
+import graft.functions.RffTransformExpr
 import java.nio.file.Files
 import org.apache.spark.ml.classification.LinearSVC
+import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.ml.linalg.{Vector, Vectors}
 import org.apache.spark.ml.param.ParamMap
+import org.apache.spark.sql.functions.col
 import scala.util.Random
 
 /** The kernel-SVM capability gap, closed: the reference's default `SVC()` is
@@ -105,5 +108,30 @@ class RffSvcSpec extends SparkSpec {
     assert(t.getOrDefault(t.featuresCol) == "features")
     assert(t.getOrDefault(t.rawPredictionCol) == "rawPrediction")
     assert(t.getOrDefault(t.predictionCol) == "prediction")
+  }
+
+  test("z(x) expressions from one map share its drawn W and b and agree bit for bit") {
+    import spark.implicits._
+    val map = RffSvc.RffMap(inputDim = 2, numComponents = 64, gamma = 1.0, seed = 15)
+    val x = xorData(50, seed = 7).toDF("label", "features")
+      .select(vector_to_array(col("features")).as("x"))
+    // two independently built columns, each copied by analysis on its way
+    // into a plan (optimisation folds this local input to a literal relation)
+    val (df1, df2) = (x.select(map.transformArray(col("x")).as("z")),
+      x.select(map.transformArray(col("x")).as("z")))
+    def exprs(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.expressions.flatMap(_.collect { case e: RffTransformExpr => e })
+    val built = Seq(df1, df2).flatMap(exprs)
+    assert(built.size == 2)
+    val e = built.head
+    val copies = built ++ Seq(e.withNewChildren(e.children), e.clone(),
+      e.makeCopy(e.productIterator.map(_.asInstanceOf[AnyRef]).toArray))
+      .map(_.asInstanceOf[RffTransformExpr])
+    assert(copies.forall(c => (c.w eq map.w) && (c.b eq map.b)), "one draw per map")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.getSeq[Double](0).map(java.lang.Double.doubleToRawLongBits)).toSeq
+    val z1 = rows(df1)
+    assert(z1.size == 50 && z1.forall(_.size == 64))
+    assert(rows(df2) == z1, "same map, same bits")
   }
 }

@@ -3,9 +3,13 @@ package graft.ml
 import graft.SparkSpec
 import java.nio.charset.Charset
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.catalyst.expressions.NamedExpression
 import org.apache.spark.sql.functions.{col, when}
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{DoubleType, StringType}
+import scala.jdk.CollectionConverters._
 import scala.util.Random
 
 /** End-to-end test of the reference pipeline shape (SURVEY.md §3.1-3.2) on a
@@ -76,22 +80,6 @@ class SentimentPipelineSpec extends SparkSpec {
     assert(reScored.select("prediction").collect().head.getDouble(0) == 1.0)
   }
 
-  test("cross-validation tunes regularization and beats majority baseline") {
-    val csv = makeCsv(400)
-    val (sampled, _) = SentimentPipeline.readAndFetchData(spark, csv, total = 300)
-    val labeled = sampled.withColumn("label",
-      org.apache.spark.sql.functions.when(
-        org.apache.spark.sql.functions.col("sentiment") === 4, 1.0).otherwise(0.0))
-    val featurizer = Features.fit(labeled, "tweet")
-    val featurized = featurizer.transform(labeled, "tweet")
-    val (cvModel, metrics) = Trainer.tuneLogisticRegression(featurized, folds = 3)
-    assert(metrics.length == 4, "one mean metric per grid candidate")
-    assert(metrics.max > 0.9, s"separable signal -> high AUC, got ${metrics.toSeq}")
-    val preds = cvModel.transform(featurized)
-    val acc = Trainer.confusion(preds).collect().head.getAs[Double]("accuracy")
-    assert(acc > 0.8, s"tuned accuracy $acc")
-  }
-
   test("golden: balanced sampler reproduces the reference artifact shape") {
     // the reference's only committed output is data/tweets_1000.csv — 1000
     // rows, exactly 500 per class, sampler format (SURVEY §5 golden test)
@@ -158,6 +146,46 @@ class SentimentPipelineSpec extends SparkSpec {
     val after = spark.read.parquet(outDir).collect()
     assert(after.length == 3, "checkpoint prevents rescoring already-seen files")
     assert(after.map(r => r.getAs[String]("tweet")).distinct.length == 3)
+    // each micro-batch is scored as one partition: one file per batch_id
+    val filesPerBatch = Files.list(Paths.get(outDir)).iterator().asScala.toSeq
+      .filter(_.getFileName.toString.startsWith("batch_id="))
+      .map(p => p.getFileName.toString -> parquetFiles(p.toString).size).toMap
+    assert(filesPerBatch.size == 3 && filesPerBatch.values.forall(_ == 1),
+      s"parquet files per batch_id partition: $filesPerBatch")
+  }
+
+  private def parquetFiles(dir: String): Seq[String] =
+    Files.list(Paths.get(dir)).iterator().asScala.toSeq
+      .map(_.getFileName.toString).filter(_.endsWith(".parquet"))
+
+  test("scoring job budget: one 15-text batch is one job, one task, one file") {
+    import spark.implicits._
+    val trained = SentimentPipeline.train(spark, makeCsv(300), total = 200)
+    val batch = (0 until 15).map(i => s"I ${if (i % 2 == 0) "love" else "hate"} this $i").toDF("text")
+    val sink = Files.createTempDirectory("graft_score_sink").toString + "/scored"
+    // a first append outside the count: the sink exists, as on a later page
+    SentimentPipeline.scoreBatch(batch, "text", trained).write.mode("append").parquet(sink)
+    val filesBefore = parquetFiles(sink).size
+
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger(0)
+    val tasks = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = tasks.incrementAndGet()
+    }
+    ColumnBridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      val scored = SentimentPipeline.scoreBatch(batch, "text", trained)
+      ColumnBridge.drainListenerBus(sc)
+      assert(jobs.get() == 0, s"building the scored DataFrame started ${jobs.get()} job(s)")
+      scored.write.mode("append").parquet(sink)
+      ColumnBridge.drainListenerBus(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get() == 1, s"score + append ran ${jobs.get()} jobs")
+    assert(tasks.get() == 1, s"score + append ran ${tasks.get()} tasks")
+    assert(parquetFiles(sink).size == filesBefore + 1, "one append, one parquet file")
   }
 
   test("word2vec featurizer: learned embedding trains, persists, reloads with exact parity") {
