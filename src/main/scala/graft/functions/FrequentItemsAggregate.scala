@@ -44,13 +44,26 @@ case class FrequentItemsSketch(child: Expression, k: Int,
   override def createAggregationBuffer(): mutable.HashMap[UTF8String, Long] =
     mutable.HashMap.empty[UTF8String, Long]
 
+  /** The classic Misra-Gries step: increment a tracked item, start
+    * tracking under capacity, otherwise decrement everything (dropping
+    * zeros) — each decrement discards k+1 distinct occurrences, which is
+    * where the n/(k+1) error bound comes from. */
   override def update(m: mutable.HashMap[UTF8String, Long], input: InternalRow)
       : mutable.HashMap[UTF8String, Long] = {
     val v = child.eval(input)
-    // retain = clone: eval may return a buffer-backed UTF8String that the
-    // next row overwrites; only a newly TRACKED key needs the copy.
-    if (v != null)
-      MisraGries.offer(m, k, v.asInstanceOf[UTF8String], (u: UTF8String) => u.clone())
+    if (v != null) {
+      val item = v.asInstanceOf[UTF8String]
+      m.get(item) match {
+        case Some(c) => m.update(item, c + 1)
+        // clone: eval may return a buffer-backed UTF8String that the next
+        // row overwrites; only a newly TRACKED key needs the copy
+        case None if m.size < k => m.update(item.clone(), 1L)
+        case None =>
+          val dead = m.iterator.filter(_._2 == 1L).map(_._1).toList
+          m.mapValuesInPlace((_, c) => c - 1)
+          dead.foreach(m.remove)
+      }
+    }
     m
   }
 
@@ -115,27 +128,4 @@ object FrequentItemsSketch {
   def frequentItems(item: Column, k: Int): Column =
     ColumnBridge.column(
       FrequentItemsSketch(ColumnBridge.expression(item), k).toAggregateExpression())
-}
-
-/** The Misra-Gries offer step, shared by the batch sketch above and the
-  * streaming keyed-state twin (`streaming.EventsStream.trendingUsers`) so
-  * the count > n/(k+1) superset guarantee both document is provably the
-  * SAME rule — a fix to one cannot silently strand the other. */
-object MisraGries {
-  /** The classic step: increment a tracked item, start tracking under
-    * capacity, otherwise decrement everything (dropping zeros) — each
-    * decrement discards k+1 distinct occurrences, which is where the
-    * n/(k+1) error bound comes from. `retain` defensively copies a newly
-    * tracked key (buffer-backed UTF8String needs a clone; value types pass
-    * identity). */
-  def offer[K](m: mutable.HashMap[K, Long], k: Int, item: K, retain: K => K): Unit = {
-    m.get(item) match {
-      case Some(c) => m.update(item, c + 1)
-      case None if m.size < k => m.update(retain(item), 1L)
-      case None =>
-        val dead = m.iterator.filter(_._2 == 1L).map(_._1).toList
-        m.mapValuesInPlace((_, c) => c - 1)
-        dead.foreach(m.remove)
-    }
-  }
 }

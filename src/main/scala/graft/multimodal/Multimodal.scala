@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal columns (north-star band): image/audio/video as opaque
@@ -531,14 +531,5 @@ object Multimodal {
         }
       }
     }
-  }
-
-  /** "Resize": metadata-level transform kept in pure column expressions —
-    * payload untouched (a real resize would swap FakeCodec). */
-  def resizeMeta(media: Dataset[MediaRecord], maxDim: Int): DataFrame = {
-    val scale = least(lit(1.0), lit(maxDim) / greatest(col("width"), col("height")))
-    media.toDF().withColumn("scale", round(scale, 6))
-      .withColumn("out_width", greatest(floor(col("width") * col("scale")), lit(1)).cast("int"))
-      .withColumn("out_height", greatest(floor(col("height") * col("scale")), lit(1)).cast("int"))
   }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.storage.StorageLevel
 
 /** Deduplication operators for training-data pipelines (north-star band):
   * exact, n-gram Jaccard, MinHash+LSH banding, SimHash, embedding-cosine
-  * (the last via Similarity.cosinePairs / lshNearDupPairs).
+  * (the last via Similarity.cosinePairs / signLshNearDupPairs).
   *
   * Scale design: every path is shuffle-on-key (shingle, band key, simhash) —
   * never an all-pairs product. Candidate generation joins only rows sharing
@@ -168,12 +168,6 @@ object Dedup {
   def simHash(text: Column, bits: Int = 16): Column =
     coalesce(graft.functions.SimHashExpr.simHash(text, bits), lit(0L))
 
-  /** Docs grouped by identical simhash (hamming-0 near-dup groups). */
-  def simHashGroups(docs: DataFrame, idCol: String, textCol: String, bits: Int = 16): DataFrame =
-    docs.select(col(idCol).as("doc"), simHash(col(textCol), bits).as("simhash"))
-      .groupBy("simhash")
-      .agg(count(lit(1)).as("n_docs"), min(col("doc")).as("min_doc"))
-
   /** Transitive closure over a near-dup pair graph: every node mapped to the
     * smallest id of its connected component — the group-resolution step a
     * training-data pipeline runs after `minHashPairs`/`simHashPairs` so that
@@ -299,7 +293,6 @@ object Dedup {
           parent.keys.toArray.iterator.map(k => (k, find(k)))
         }
         .toDF("node", "lbl")
-      graft.PlanDump.dumpIfEnabled(solved, "ccTinySolve")
       // EAGER checkpoint: the solve must run while the edge cache is hot —
       // a lazy cut materialized after unpersist would re-execute the
       // (often expensive) candidate-pair plan
@@ -335,7 +328,6 @@ object Dedup {
       // hop per round saves a round on straggly graphs but costs more than
       // it saves; a second jump does not reduce rounds at all)
       val stepped = jump(hop(hop(labels)))
-      if (iter == 0) graft.PlanDump.dumpIfEnabled(stepped, "ccRound")
       val next = stepped.localCheckpoint(eager = false)
       val nextSum = checksumOf(next)
       converged = nextSum.compareTo(checksum) == 0

@@ -861,10 +861,9 @@ object DedupQueries {
 
   private def spanPairsCached(spark: SparkSession, dir: String): DataFrame =
     spanPairsMemo(spark, dir) {
-      graft.PlanDump.cut(
-        Dedup.spanPairs(Tables.documents(spark, dir), "doc_id", "text",
-          k = SpanK, minSpan = SpanMin, maxOcc = SpanMaxOcc),
-        "spanPairs")
+      Dedup.spanPairs(Tables.documents(spark, dir), "doc_id", "text",
+          k = SpanK, minSpan = SpanMin, maxOcc = SpanMaxOcc)
+        .localCheckpoint(eager = false)
     }
 
   /** Exact duplicated-substring spans (Lee et al. 2021) — see

@@ -151,7 +151,6 @@ object Graph {
     val contribEdgesPlan = edgesCk.join(deg, Seq("src_t", "src"))
       .repartition(col("src_t"), col("src"))
       .sortWithinPartitions("src_t", "src")
-    graft.PlanDump.dumpIfEnabled(contribEdgesPlan, "prGraphBase_contribEdges")
     val contribEdges = contribEdgesPlan.localCheckpoint(eager = false)
     PrGraphBase(deg, nodesFlagged, contribEdges,
       nNodes = structureRow.getLong(0),

@@ -31,51 +31,10 @@ object Quality {
     * `count(key)` (not `count(*)`) so NULL-keyed rows are excluded from
     * both sides — countDistinct skips NULLs, and counting them on the raw
     * side would report a lone NULL-keyed row as a "duplicate". NULL keys
-    * are a different defect; gate them with [[nullKeyCount]]. */
+    * are a different defect and are not counted here. */
   def duplicateKeyCount(df: DataFrame, keyCol: String, rule: String): DataFrame =
     df.agg((count(col(keyCol)) - countDistinct(col(keyCol))).as("n_violations"))
       .select(lit(rule).as("rule"), col("n_violations"))
-
-  /** Null-key rule: rows whose key is NULL — the companion to
-    * [[duplicateKeyCount]] so the two defect classes report separately.
-    * `count(when(...))` rather than `sum(when(...))`: count yields 0 over
-    * an EMPTY frame where sum yields NULL, and a gate comparing
-    * `n_violations == 0` on an empty table must read 0, not NULL —
-    * the same contract [[duplicateKeyCount]]'s count arithmetic gives. */
-  def nullKeyCount(df: DataFrame, keyCol: String, rule: String): DataFrame =
-    df.agg(count(when(col(keyCol).isNull, lit(1))).as("n_violations"))
-      .select(lit(rule).as("rule"), col("n_violations"))
-
-  /** IN-FLIGHT rule telemetry via CollectMetrics (`Dataset.observe`): the
-    * same conditional-count rules as [[predicateReport]], but piggybacked
-    * on a query the pipeline is ALREADY running — the counts ride the
-    * existing scan as accumulator-style metrics, so the gate costs ZERO
-    * extra passes (predicateReport is the standalone audit; this is the
-    * production write-path form: every ingest batch reports its violation
-    * counts for free, and the caller alarms after the action completes).
-    * Read the counts from the returned Observation AFTER an action has
-    * run the DataFrame. BATCH ONLY — Observation objects reject streaming
-    * Datasets; streams use [[observedRulesNamed]]. */
-  def observedRules(df: DataFrame, rules: Seq[(String, Column)]):
-      (DataFrame, org.apache.spark.sql.Observation) = {
-    require(rules.nonEmpty, "observedRules needs at least one rule")
-    val obs = org.apache.spark.sql.Observation()
-    val cols = rules.map { case (n, p) => sum(when(p, 1L).otherwise(0L)).as(n) }
-    (df.observe(obs, cols.head, cols.tail: _*), obs)
-  }
-
-  /** The STREAMING form of [[observedRules]]: the string-named
-    * `observe` variant, whose per-micro-batch counts surface in every
-    * `StreamingQueryProgress.observedMetrics(name)` — the zero-extra-pass
-    * per-batch quality feed an ingest stream alarms on (and the same call
-    * works on batch frames, where the metrics ride the QueryExecution
-    * listener instead). */
-  def observedRulesNamed(df: DataFrame, name: String,
-                         rules: Seq[(String, Column)]): DataFrame = {
-    require(rules.nonEmpty, "observedRulesNamed needs at least one rule")
-    val cols = rules.map { case (n, p) => sum(when(p, 1L).otherwise(0L)).as(n) }
-    df.observe(name, cols.head, cols.tail: _*)
-  }
 
   /** k-anonymity audit over a quasi-identifier tuple — the re-identification
     * gate a training-data release runs before shipping rows that carry
@@ -137,14 +96,6 @@ object Quality {
             col("n_trail") >= minTrailing,
           lit(false)).as("is_anomaly"))
   }
-
-  /** [[volumeAnomalyReport]] folded to the gate's (rule, n_violations)
-    * shape — how many periods broke their trailing fence. */
-  def volumeAnomalyCount(df: DataFrame, dayCol: Column, rule: String,
-                         trailingDays: Int = 7, k: Double = 3.0): DataFrame =
-    volumeAnomalyReport(df, dayCol, trailingDays, k)
-      .agg(count(when(col("is_anomaly"), lit(1))).as("n_violations"))
-      .select(lit(rule).as("rule"), col("n_violations"))
 
   /** Referential-integrity rule: child rows whose foreign key has no match
     * in the parent's primary key (orphans), counted via a left anti join —

@@ -496,11 +496,10 @@ object ServingQueries {
       // serving join probes; the broadcast query side preserves this
       // partitioning, so scoring parallelizes over the postings layout.
       Bm25Index(
-        graft.PlanDump.cut(
-          ctf.join(cdf, "token")
-            .join(cdl.select("doc_id", "chunk_idx", "dl"), Seq("doc_id", "chunk_idx"))
-            .repartition(col("token")),
-          "chunkBm25Postings"),
+        ctf.join(cdf, "token")
+          .join(cdl.select("doc_id", "chunk_idx", "dl"), Seq("doc_id", "chunk_idx"))
+          .repartition(col("token"))
+          .localCheckpoint(eager = false),
         cst.localCheckpoint(eager = false))
     }
 
@@ -714,7 +713,7 @@ object ServingQueries {
         .withColumn("rn", row_number().over(
           Window.partitionBy("query_id").orderBy(col("rrf_micro").desc, col("cand_id"))))
         .filter(col("rn") <= fuse).drop("rn")
-      val fshCk = graft.PlanDump.cut(fsh, "q216_rrfShortlist")
+      val fshCk = fsh.localCheckpoint(eager = false)
       // (5) integer MMR over the fused shortlist — q169's in-row kernel
       val picks = fshCk
         .join(quant.withColumnRenamed("vec_id", "cand_id"), "cand_id")

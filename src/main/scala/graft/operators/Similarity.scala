@@ -1,8 +1,6 @@
 package graft.operators
 
 import graft.functions.{CosineSimilarityExpr, DotProductExpr, TopKByScore, VectorFns}
-import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
-import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -14,10 +12,10 @@ import org.apache.spark.sql.functions._
   *     (queries ≪ corpus is the realistic shape), so the corpus streams
   *     through one codegen'd scan, each partition keeping a local top-k via
   *     the window; no corpus shuffle. The baseline and the oracle.
-  *   - `lshTopK`: approximate path for 100 TB — MLlib
-  *     BucketedRandomProjectionLSH buckets both sides so the join touches
-  *     only colliding buckets; recall is testable against the brute-force
-  *     baseline (SimilaritySpec).
+  *   - `ivfTopK`/`pqTopK`/`ivfPqTopK` (top-k) and `signLshNearDupPairs`
+  *     (pairs): approximate paths for 100 TB — only probed cells or
+  *     colliding sign-LSH buckets are joined; recall is testable against
+  *     the brute-force baseline (SimilaritySpec).
   */
 object Similarity {
 
@@ -134,7 +132,7 @@ object Similarity {
 
   /** All pairs (i < j) above a cosine threshold — the embedding near-dup
     * primitive. Quadratic: use only on a blocked/bucketed subset; the scale
-    * path is `lshNearDupPairs`. */
+    * path is `signLshNearDupPairs`. */
   def cosinePairs(vecs: DataFrame, minCosine: Double): DataFrame = {
     val a = vecs.select(col("vec_id").as("id_a"), col("embedding").as("emb_a"))
     val b = vecs.select(col("vec_id").as("id_b"), col("embedding").as("emb_b"))
@@ -149,26 +147,6 @@ object Similarity {
     // array at the analyzer, then converts to an ml DenseVector
     df.withColumn("features",
       org.apache.spark.ml.functions.array_to_vector(col("embedding").cast("array<double>")))
-
-  /** Approximate neighbor join via random-projection LSH: only colliding
-    * buckets are joined, so cost scales with bucket occupancy, not |A|×|B|. */
-  def lshNearDupPairs(vecs: DataFrame, maxL2: Double, bucketLength: Double = 2.0,
-                      numTables: Int = 8, seed: Long = 42): DataFrame = {
-    val v = toMlVector(vecs)
-    val lsh = new BucketedRandomProjectionLSH()
-      .setInputCol("features").setOutputCol("hashes")
-      .setBucketLength(bucketLength).setNumHashTables(numTables).setSeed(seed)
-    val model = lsh.fit(v)
-    // hash once and reuse on both sides (approxSimilarityJoin skips
-    // re-transforming when the hash column is present)
-    val hashed = model.transform(v)
-    model.approxSimilarityJoin(hashed, hashed, maxL2, "dist")
-      .select(
-        col("datasetA.vec_id").as("id_a"),
-        col("datasetB.vec_id").as("id_b"),
-        col("dist"))
-      .filter(col("id_a") < col("id_b"))
-  }
 
   /** Pair similarity over precomputed norms (q_norm/c_norm columns):
     * NULL first (length mismatch / null elements — matching the fused
@@ -562,17 +540,5 @@ object Similarity {
       .select(col("query_id"), col("col.id").as("neighbor_id"),
         (col("pos") + 1).cast("long").as("rank"), col("col.score").as("sim"))
     if (refine <= k) adcTopK else exactRerank(adcTopK, queries, corpus, k)
-  }
-
-  /** Approximate top-k for one query vector (LSH path of the ANN surface). */
-  def lshTopK(corpus: DataFrame, key: Vector, k: Int, bucketLength: Double = 2.0,
-              numTables: Int = 8, seed: Long = 42): DataFrame = {
-    val v = toMlVector(corpus)
-    val lsh = new BucketedRandomProjectionLSH()
-      .setInputCol("features").setOutputCol("hashes")
-      .setBucketLength(bucketLength).setNumHashTables(numTables).setSeed(seed)
-    val model = lsh.fit(v)
-    model.approxNearestNeighbors(v, key, k)
-      .select(col("vec_id"), col("distCol").as("dist"))
   }
 }

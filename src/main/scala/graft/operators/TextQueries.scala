@@ -1260,12 +1260,11 @@ object TextQueries {
     // parallelizes over the cut. Keyed (hash) repartition, not
     // round-robin: no sort-before-repartition pass, deterministic
     // placement under retries (guide §2.5).
-    val survivors = graft.PlanDump.cut(
-      r.join(winners, Seq("doc_id"))
-        .join(evalTexts, Seq("text"), "left_anti")
-        .select("doc_id", "lang", "text")
-        .repartition(col("doc_id")),
-      "q157_survivors")
+    val survivors = r.join(winners, Seq("doc_id"))
+      .join(evalTexts, Seq("text"), "left_anti")
+      .select("doc_id", "lang", "text")
+      .repartition(col("doc_id"))
+      .localCheckpoint(eager = false)
     // sub-document dedup over the survivor set: only (n_toks, n_removed)
     // are consumed, so the scrub's clean_text column prunes away
     val scrubbed = Dedup.spanScrub(survivors, "doc_id", "text",

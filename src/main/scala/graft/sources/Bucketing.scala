@@ -21,12 +21,6 @@ object Bucketing {
     sortCol.fold(w)(c => w.sortBy(c)).format("parquet").saveAsTable(table)
   }
 
-  /** Join two same-bucketed tables on the bucket key — planner sees the
-    * matching output partitionings and elides both exchanges. */
-  def bucketedJoin(spark: SparkSession, leftTable: String, rightTable: String,
-                   key: String): DataFrame =
-    spark.table(leftTable).join(spark.table(rightTable), key)
-
   /** Idempotent per-(session, dir) layout for q76: orders and lineitem from
     * `dir` written bucketed by their order key into the session warehouse,
     * once — repeat calls (Verify's build, the plan sweep, Bench's two timed

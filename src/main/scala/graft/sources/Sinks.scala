@@ -8,33 +8,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   */
 object Sinks {
 
-  /** Write parquet with bounded file sizes: `targetFiles` output partitions,
-    * each further split at `maxRecordsPerFile` rows — both knobs the
-    * planner can't infer on its own.
-    *
-    * Always one round-robin repartition: probing the current partition count
-    * (`df.rdd.getNumPartitions`) would force AQE to EXECUTE every upstream
-    * stage just to pick coalesce-vs-repartition, doubling job cost; a single
-    * predictable shuffle is the cheaper contract for a sink utility.
-    */
-  def writeParquetSized(df: DataFrame, path: String, targetFiles: Int,
-                        maxRecordsPerFile: Long = 5000000L): Unit = {
-    df.repartition(targetFiles).write
-      .mode("overwrite")
-      .option("maxRecordsPerFile", maxRecordsPerFile.toString)
-      .parquet(path)
-  }
-
-  /** Write parquet sorted within files by `sortCols` — clusters values so
-    * parquet row-group min/max statistics prune effectively on those
-    * columns (poor man's Z-order for a single sort dimension). */
-  def writeParquetClustered(df: DataFrame, path: String, partitions: Int,
-                            sortCols: Seq[String]): Unit = {
-    df.repartition(partitions)
-      .sortWithinPartitions(sortCols.head, sortCols.tail: _*)
-      .write.mode("overwrite").parquet(path)
-  }
-
   /** Write parquet Z-ORDERED on two long columns: rows range-partitioned
     * AND sorted by the Morton interleave of (colA, colB), so files tile the
     * two-dimensional key plane — BOTH columns get tight per-file and

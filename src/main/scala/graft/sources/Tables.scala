@@ -126,32 +126,6 @@ object Tables {
       .option("encoding", "ISO-8859-1")
       .csv(path)
 
-  /** Fault-tolerant Sentiment140 scan: PERMISSIVE mode captures rows that
-    * don't parse (wrong arity, bad ints) in `_corrupt_record` instead of
-    * failing the job — on a 1M-row scraped-tweet CSV some rows WILL be
-    * malformed, and at 100 TB a single bad row must not kill the pipeline.
-    * Route rows with `splitCorrupt` — Spark disallows a query that touches
-    * ONLY the corrupt column on an uncached CSV scan
-    * (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN).
-    */
-  def sentiment140Permissive(spark: SparkSession, path: String): DataFrame =
-    spark.read
-      .schema(sentiment140Schema.add(StructField("_corrupt_record", StringType)))
-      .option("header", "false")
-      .option("encoding", "ISO-8859-1")
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .csv(path)
-
-  /** Split a permissive scan into (good, quarantined) row streams. Caches
-    * the parse once: both halves read the cached result, and the cache is
-    * what makes corrupt-column-only queries legal on a CSV source. */
-  def splitCorrupt(df: DataFrame): (DataFrame, DataFrame) = {
-    val cached = df.cache()
-    (cached.filter(col("_corrupt_record").isNull).drop("_corrupt_record"),
-      cached.filter(col("_corrupt_record").isNotNull))
-  }
-
   /** Schema-evolution-tolerant parquet read: union of all file schemas
     * (columns absent in older files arrive as nulls) — the data-lake
     * reality where a table's schema widens over time. */

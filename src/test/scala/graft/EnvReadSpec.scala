@@ -5,16 +5,15 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** No production behaviour reads an env var or a JVM system property: every
-  * read in src/main/scala must be on this allowlist of deployment settings
-  * and evidence hooks. A new knob fails here instead of shipping silently. */
+  * read in src/main/scala must be on this allowlist of deployment settings.
+  * A new knob fails here instead of shipping silently. */
 class EnvReadSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   /** (file name, key) pairs allowed to be read. */
   private val allowed = Set(
     "LocalSession.scala" -> "SPARK_GRAFT_CPUS",
     "Bench.scala" -> "SPARK_GRAFT_SF_DIR",
-    "Bench.scala" -> "SPARK_GRAFT_WARM_DIR",
-    "PlanDump.scala" -> "GRAFT_CK_PLANS")
+    "Bench.scala" -> "SPARK_GRAFT_WARM_DIR")
 
   private val read = """sys\.env|System\.getenv|sys\.props|System\.getProperty""".r
   private val key = "\"([^\"]*)\"".r

@@ -122,15 +122,6 @@ class MultimodalSpec extends SparkSpec {
       "too-short mvhd is malformed, never trusted")
   }
 
-  test("resizeMeta clamps the longest side") {
-    val out = Multimodal.resizeMeta(Multimodal.syntheticMedia(spark, 100), maxDim = 100)
-    val rows = out.collect()
-    assert(rows.forall(r => r.getAs[Int]("out_width") <= 100 && r.getAs[Int]("out_height") <= 100))
-    // small assets are never upscaled
-    assert(rows.filter(r => r.getAs[Int]("width") <= 100 && r.getAs[Int]("height") <= 100)
-      .forall(r => r.getAs[Int]("out_width") == r.getAs[Int]("width")))
-  }
-
   test("dHash: stable under uniform brightness shift, far for a different image, clones at hamming 0") {
     import java.awt.image.BufferedImage
     def png(f: (Int, Int) => Int): Array[Byte] = {

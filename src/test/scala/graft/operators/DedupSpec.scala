@@ -86,15 +86,6 @@ class DedupSpec extends SparkSpec {
       .getSeq[Long](1).forall(_ == Long.MaxValue))
   }
 
-  test("simhash groups exact dups together and separates distinct docs") {
-    val groups = Dedup.simHashGroups(planted, "doc_id", "text")
-      .collect().map(r => r.getAs[Long]("simhash") -> r.getAs[Long]("n_docs"))
-    // docs 0/1/5 are identical; doc 2 (one word changed) may legitimately
-    // collide at 16 bits too — so the dup group has ≥3 members
-    assert(groups.exists(_._2 >= 3), "identical docs share a simhash")
-    assert(groups.length >= 3, "distinct docs get distinct hashes")
-  }
-
   test("simhash of NULL text is 0, matching the composable form and the oracle") {
     // The composable sum(when(...)) form — and q33's DuckDB CASE mirror —
     // computes 0 for NULL text; the kernel coalesces to the same value so

@@ -60,22 +60,6 @@ class RelationalSpec extends SparkSpec {
       s"knn must not force-broadcast the neighbors relation:\n$knn")
   }
 
-  test("positional zip: ordered index and zipWithIndex agree on sorted input") {
-    val docs = Tables.documents(spark, sf).select("doc_id", "lang")
-    val ordered = Positional.withRowIndexOrdered(docs, Seq("doc_id"))
-    val rows = ordered.orderBy("row_idx").collect()
-    assert(rows.head.getAs[Long]("row_idx") == 0L)
-    assert(rows.length == docs.count())
-    // index follows doc_id order
-    val ids = rows.map(_.getAs[Long]("doc_id"))
-    assert(ids.sorted.sameElements(ids))
-    val zipped = Positional.zipByPosition(
-      docs, Seq("doc_id"),
-      Tables.documents(spark, sf).select(col("doc_id").as("d2"), col("source")), Seq("d2"))
-    assert(zipped.filter(col("doc_id") =!= col("d2")).count() == 0,
-      "same order => rows align positionally")
-  }
-
   /** Reference Levenshtein (two-row DP) — the independent mirror for q93. */
   private def lev(a: String, b: String): Int = {
     var prev = (0 to b.length).toArray

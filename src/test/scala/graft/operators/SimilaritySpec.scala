@@ -21,17 +21,6 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
-  test("LSH near-dup join finds planted identical vectors") {
-    val base = Tables.embeddings(spark, sf).filter(col("vec_id") < 50)
-    // plant: vec 1000 = copy of vec 0
-    val copy = base.filter(col("vec_id") === 0)
-      .select(lit(1000L).as("vec_id"), col("embedding"), col("label"))
-    val vecs = base.unionByName(copy)
-    val pairs = Similarity.lshNearDupPairs(vecs, maxL2 = 0.01)
-      .collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
-    assert(pairs.contains((0L, 1000L)), s"identical vector pair found: $pairs")
-  }
-
   test("sign-LSH recall ≥0.9 on planted near-dups, few random survivors") {
     val base = Tables.embeddings(spark, sf).filter(col("vec_id") < 100)
     // jittered copy of each vector (cos ≈ 0.99) under vec_id + 10000

@@ -17,7 +17,7 @@ class BucketingSpec extends SparkSpec {
       // force a non-broadcast join: otherwise BroadcastHashJoin would hide
       // the exchange regardless of bucketing and the assertion is vacuous
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = Bucketing.bucketedJoin(spark, "b_orders", "b_lineitem", "okey")
+      val joined = spark.table("b_orders").join(spark.table("b_lineitem"), "okey")
       val plan = joined.queryExecution.executedPlan.toString
       assert(plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin"),
         s"broadcast disabled, expected a shuffle-family join:\n$plan")

@@ -5,20 +5,6 @@ import java.nio.file.Files
 
 class SinksSpec extends SparkSpec {
 
-  test("sized writer bounds file count and rows per file") {
-    val out = Files.createTempDirectory("graft_sized").toString + "/li"
-    Sinks.writeParquetSized(Tables.lineitem(spark, sf), out,
-      targetFiles = 2, maxRecordsPerFile = 2000)
-    val files = new java.io.File(out).listFiles().filter(_.getName.endsWith(".parquet"))
-    // 2 partitions × ceil(rows/partition / 2000) files each
-    assert(files.length >= 2, s"got ${files.length} files")
-    files.foreach { f =>
-      val n = spark.read.parquet(f.getPath).count()
-      assert(n <= 2000, s"file ${f.getName} has $n rows")
-    }
-    assert(spark.read.parquet(out).count() == Tables.lineitem(spark, sf).count())
-  }
-
   test("z-ordered layout clusters BOTH dimensions; plain sort only its leading column") {
     import org.apache.spark.sql.functions._
     val src = Tables.lineitem(spark, sf).select("l_partkey", "l_suppkey", "l_quantity")
@@ -309,18 +295,6 @@ class SinksSpec extends SparkSpec {
       Thread.sleep(300) // listener events post async; give any stray job time to surface
       assert(jobs.get() == 0, s"guard must fail fast, but ${jobs.get()} job(s) ran")
     } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
-  test("clustered writer sorts within files for row-group pruning") {
-    val out = Files.createTempDirectory("graft_clustered").toString + "/li"
-    Sinks.writeParquetClustered(Tables.lineitem(spark, sf), out, 2, Seq("l_shipdate"))
-    val files = new java.io.File(out).listFiles().filter(_.getName.endsWith(".parquet"))
-    files.foreach { f =>
-      // the re-read column is TIMESTAMP_NTZ; ISO strings sort chronologically
-      val dates = spark.read.parquet(f.getPath)
-        .selectExpr("CAST(l_shipdate AS STRING)").collect().map(_.getString(0))
-      assert(dates.sameElements(dates.sorted), s"${f.getName} not sorted")
-    }
   }
 
   test("snapshot log: versions commit in order and time travel resolves <= asOf") {

@@ -1,7 +1,6 @@
 package graft.sources
 
 import graft.SparkSpec
-import java.nio.charset.Charset
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 
@@ -41,23 +40,6 @@ class TablesSpec extends SparkSpec {
       .orderBy("id").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     assert(jsonBack === expect,
       "JSON-lines round-trip must preserve hostile text with no reader options")
-  }
-
-  test("permissive CSV scan quarantines malformed rows instead of failing") {
-    val dir = Files.createTempDirectory("graft_csv").toString
-    val rows = Seq(
-      """4,1,"d",NO_QUERY,u1,"good tweet"""",
-      """notanint,2,"d",NO_QUERY,u2,"bad sentiment type"""",
-      """0,3,"d",NO_QUERY,u3,"another good one"""")
-    Files.write(Paths.get(s"$dir/t.csv"),
-      rows.mkString("\n").getBytes(Charset.forName("ISO-8859-1")))
-    val df = Tables.sentiment140Permissive(spark, s"$dir/t.csv")
-    val (good, bad) = Tables.splitCorrupt(df)
-    assert(good.count() == 2)
-    assert(!good.columns.contains("_corrupt_record"))
-    assert(bad.count() == 1)
-    assert(bad.select("_corrupt_record").collect().head.getString(0).contains("notanint"))
-    df.unpersist()
   }
 
   test("event queries are NTZ-robust: a TIMESTAMP_NTZ ts yields identical results") {

@@ -2,13 +2,21 @@ package graft.streaming
 
 import graft.SparkSpec
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Drives real streaming queries (file source, AvailableNow trigger) over
-  * deterministic json micro-batches and checks event-time semantics against
-  * hand-computed expectations.
+  * deterministic json micro-batches and checks the maintained state and
+  * the per-batch hook against hand-computed expectations.
   */
 class EventsStreamSpec extends SparkSpec {
+
+  private val eventSchema =
+    "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, value DOUBLE"
+
+  /** A json-lines file stream of events, one file per micro-batch. */
+  private def eventStream(dir: String): DataFrame =
+    spark.readStream.schema(eventSchema).option("maxFilesPerTrigger", "1").json(dir)
 
   private def writeBatch(dir: String, name: String, lines: Seq[String]): Unit =
     Files.write(Paths.get(s"$dir/$name"), lines.mkString("\n").getBytes)
@@ -21,75 +29,12 @@ class EventsStreamSpec extends SparkSpec {
     Files.createTempDirectory("graft_out").toString,
     Files.createTempDirectory("graft_ckpt").toString)
 
-  test("watermarked tumbling window aggregates per hour") {
-    val (src, out, ckpt) = tempDirs()
-    writeBatch(src, "b0.json", Seq(
-      evt(1, "2024-01-01 10:05:00", 1, "click", 10),
-      evt(2, "2024-01-01 10:55:00", 2, "click", 5),
-      evt(3, "2024-01-01 11:05:00", 1, "view", 7)))
-    // Append mode emits a window only once the watermark passes it, and the
-    // watermark persists in the checkpoint BETWEEN runs — so drive three
-    // AvailableNow runs (a restart-recovery pattern): data, then sentinels
-    // that push the watermark past the data windows.
-    def run(): Unit = EventsStream.runToParquet(
-      EventsStream.tumblingCounts(EventsStream.readEventStream(spark, src)), out, ckpt)
-    run()
-    writeBatch(src, "b1.json", Seq(evt(98, "2024-01-02 01:00:00", 99, "sentinel", 0)))
-    run()
-    writeBatch(src, "b2.json", Seq(evt(99, "2024-01-02 02:00:00", 99, "sentinel", 0)))
-    run()
-    val rows = spark.read.parquet(out)
-      .filter(col("event_type") =!= "sentinel")
-      .orderBy("window_start", "event_type").collect()
-    assert(rows.length == 2)
-    assert(rows(0).getAs[Long]("n_events") == 2 && rows(0).getAs[Double]("sum_value") == 15.0)
-    assert(rows(1).getAs[String]("event_type") == "view")
-  }
-
-  test("streaming MV maintenance: view ≡ batch recompute across micro-batches and restart") {
-    val (src, view, ckpt) = tempDirs()
-    def run(): Unit = EventsStream.maintainDailyView(
-      EventsStream.readEventStream(spark, src), view, ckpt)
-    def recompute(): Map[(String, String), (Long, java.math.BigDecimal)] =
-      spark.read.schema(EventsStream.eventSchema).json(src)
-        .groupBy(to_date(date_trunc("day", col("ts"))).as("day"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(col("value").cast("decimal(18,2)")).cast("decimal(18,2)").as("sum_value"))
-        .collect()
-        .map(r => (r.getAs[java.sql.Date]("day").toString, r.getAs[String]("event_type")) ->
-          ((r.getAs[Long]("n_events"), r.getAs[java.math.BigDecimal]("sum_value")))).toMap
-    def viewState(): Map[(String, String), (Long, java.math.BigDecimal)] =
-      EventsStream.latestView(spark, view).get.collect()
-        .map(r => (r.getAs[java.sql.Date]("day").toString, r.getAs[String]("event_type")) ->
-          ((r.getAs[Long]("n_events"), r.getAs[java.math.BigDecimal]("sum_value")))).toMap
-
-    writeBatch(src, "b0.json", Seq(
-      evt(1, "2024-01-01 10:00:00", 1, "click", 1.25),
-      evt(2, "2024-01-01 11:00:00", 2, "view", 2.50)))
-    writeBatch(src, "b1.json", Seq(
-      evt(3, "2024-01-01 12:00:00", 1, "click", 4.75),
-      evt(4, "2024-01-02 09:00:00", 3, "click", 8.00)))
-    run() // two micro-batches (maxFilesPerTrigger = 1) → two merge steps
-    assert(viewState() === recompute(),
-      "after two merges the view is bit-identical to the from-scratch rollup")
-
-    writeBatch(src, "b2.json", Seq(
-      evt(5, "2024-01-02 10:00:00", 1, "view", 16.5)))
-    run() // RESTART from the checkpoint: continues versioning, merges the delta
-    assert(viewState() === recompute(),
-      "restart continues the view incrementally — still ≡ recompute")
-
-    val before = viewState()
-    run() // no new data: no batch fires, the view must not move
-    assert(viewState() === before, "an empty trigger leaves the view untouched")
-  }
-
   test("streaming sketch maintenance: batch-merged CMS/KMV ≡ from-scratch recompute, exactly") {
     val (src, state, ckpt) = tempDirs()
     val (d, w, k) = (4, 64, 8) // k small so the bottom-k branch is live
     def run(): Unit = EventsStream.maintainSketches(
-      EventsStream.readEventStream(spark, src), state, ckpt, d, w, k)
-    def allKeys() = spark.read.schema(EventsStream.eventSchema).json(src)
+      eventStream(src), state, ckpt, d, w, k)
+    def allKeys() = spark.read.schema(eventSchema).json(src)
       .select(concat_ws(":", col("event_type"), col("user_id")).as("t"))
     def recomputeCms(): Map[(Int, Long), Long] = allKeys()
       .select(explode(array((0 until d).map(j =>
@@ -112,7 +57,7 @@ class EventsStreamSpec extends SparkSpec {
         .map(_.getAs[Long]("h")).sorted.toSeq
     // the q180-style quantile sample: k smallest (rank-hash, value) PAIRS
     def recomputeQnt(): Seq[(Long, Long)] =
-      spark.read.schema(EventsStream.eventSchema).json(src)
+      spark.read.schema(eventSchema).json(src)
         .select(conv(substring(md5(col("event_id").cast("string")), 1, 15), 16, 10)
             .cast("long").as("h"),
           (col("value").cast("decimal(18,2)") * 100).cast("long").as("v"))
@@ -143,7 +88,7 @@ class EventsStreamSpec extends SparkSpec {
     assert(stateKmv() === recomputeKmv())
     assert(stateQnt() === recomputeQnt())
     // the merged CMS preserves total mass: Σ cells per row j = total events
-    val total = spark.read.schema(EventsStream.eventSchema).json(src).count()
+    val total = spark.read.schema(eventSchema).json(src).count()
     stateCms().groupBy(_._1._1).foreach { case (j, cells) =>
       assert(cells.values.sum == total, s"row $j mass ${cells.values.sum} != $total")
     }
@@ -164,178 +109,6 @@ class EventsStreamSpec extends SparkSpec {
     }
   }
 
-  test("streaming dedup drops re-delivered event_ids") {
-    val (src, out, ckpt) = tempDirs()
-    writeBatch(src, "b0.json", Seq(
-      evt(1, "2024-01-01 10:00:00", 1, "click", 1),
-      evt(1, "2024-01-01 10:00:00", 1, "click", 1), // exact redelivery
-      evt(2, "2024-01-01 10:01:00", 1, "click", 2)))
-    val stream = EventsStream.readEventStream(spark, src)
-    EventsStream.runToParquet(EventsStream.dedupEvents(stream), out, ckpt)
-    val ids = spark.read.parquet(out).select("event_id").collect().map(_.getLong(0)).sorted
-    assert(ids.toSeq == Seq(1L, 2L))
-  }
-
-  test("dedup state PLATEAUS under the watermark while naive key-only state grows forever") {
-    // The evidence for EventsStream.dedupEvents' scale claim: replay 8
-    // hourly micro-batches of 10 fresh event_ids each and watch
-    // StreamingQueryProgress.stateOperators.numRowsTotal. With
-    // dropDuplicatesWithinWatermark (1h delay) an id's state expires once
-    // the watermark passes its event time, so the store holds only the
-    // last few hours' keys — the totals stop growing (plateau) while
-    // cumulative input keeps climbing. The naive key-only
-    // dropDuplicates("event_id") — the classic scale bug the scaladoc
-    // names — retains every id ever seen: its store must reach exactly
-    // the 80 distinct keys. Asserting BOTH turns the API choice into
-    // measured state-store evidence.
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    def runTracked(df: org.apache.spark.sql.DataFrame, out: String, ckpt: String): Long = {
-      val q = df.writeStream.outputMode(OutputMode.Append).format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      // last progress entry that actually reports the dedup state store
-      q.recentProgress.reverseIterator
-        .find(_.stateOperators.nonEmpty)
-        .map(_.stateOperators.map(_.numRowsTotal).sum)
-        .getOrElse(sys.error("no stateOperators progress reported"))
-    }
-    val src = Files.createTempDirectory("graft_plateau_src").toString
-    val (outB, ckptB) = (Files.createTempDirectory("graft_plateau_outb").toString,
-      Files.createTempDirectory("graft_plateau_ckptb").toString)
-    val (outN, ckptN) = (Files.createTempDirectory("graft_plateau_outn").toString,
-      Files.createTempDirectory("graft_plateau_ckptn").toString)
-    val hours = 0 until 8
-    val (bounded, naive) = hours.foldLeft((Vector.empty[Long], Vector.empty[Long])) {
-      case ((b, n), h) =>
-        writeBatch(src, f"b$h%02d.json", (0 until 10).map { i =>
-          evt(h * 10L + i, f"2024-01-01 ${10 + h}%02d:00:00", 1, "click", 1)
-        })
-        val stream = () => EventsStream.readEventStream(spark, src)
-        (b :+ runTracked(EventsStream.dedupEvents(stream(), watermark = "1 hour"), outB, ckptB),
-         n :+ runTracked(stream().withWatermark("ts", "1 hour").dropDuplicates("event_id"), outN, ckptN))
-    }
-    // both variants pass every (distinct) row through
-    assert(spark.read.parquet(outB).count() == 80L)
-    assert(spark.read.parquet(outN).count() == 80L)
-    // the naive store grows with every batch and ends holding ALL keys
-    assert(naive.last == 80L, s"naive key-only state should hold every id: $naive")
-    assert(naive == naive.sorted && naive.distinct.size == naive.size,
-      s"naive state must grow strictly: $naive")
-    // the watermarked store plateaus: the last runs hold a constant few
-    // hours of keys, well below the 80 the stream carried
-    val tail3 = bounded.takeRight(3)
-    assert(tail3.distinct.size == 1,
-      s"bounded state should be steady over the final runs: $bounded")
-    assert(bounded.last <= 45L,
-      s"bounded state should hold only within-watermark keys: $bounded")
-  }
-
-  test("session windows split on gap > 10 minutes") {
-    val (src, out, ckpt) = tempDirs()
-    writeBatch(src, "b0.json", Seq(
-      evt(1, "2024-01-01 10:00:00", 1, "click", 1),
-      evt(2, "2024-01-01 10:05:00", 1, "click", 1), // same session
-      evt(3, "2024-01-01 10:30:00", 1, "click", 1), // gap 25m -> new session
-      evt(4, "2024-01-01 10:02:00", 2, "click", 1))) // other user
-    def run(): Unit = EventsStream.runToParquet(
-      EventsStream.sessionCounts(EventsStream.readEventStream(spark, src)), out, ckpt)
-    run()
-    writeBatch(src, "b1.json", Seq(evt(98, "2024-01-02 01:00:00", 99, "sentinel", 0)))
-    run()
-    writeBatch(src, "b2.json", Seq(evt(99, "2024-01-02 02:00:00", 99, "sentinel", 0)))
-    run()
-    val rows = spark.read.parquet(out)
-      .filter(col("user_id") < 10)
-      .orderBy("user_id", "session_start").collect()
-    assert(rows.length == 3)
-    assert(rows(0).getAs[Long]("n_events") == 2, "first session has 2 events")
-    assert(rows(1).getAs[Long]("n_events") == 1)
-    assert(rows(2).getAs[Long]("user_id") == 2L)
-  }
-
-  test("flatMapGroupsWithState keeps running per-user state across micro-batches") {
-    val (src, out, ckpt) = tempDirs()
-    writeBatch(src, "b0.json", Seq(
-      evt(1, "2024-01-01 10:00:00", 1, "click", 10),
-      evt(2, "2024-01-01 10:01:00", 1, "click", 30)))
-    def run(): Unit = EventsStream.runToParquet(
-      EventsStream.runningUserStats(EventsStream.readEventStream(spark, src)).toDF(),
-      out, ckpt)
-    run()
-    // second file in a SECOND run: state must survive the checkpoint restart
-    writeBatch(src, "b1.json", Seq(evt(3, "2024-01-01 10:02:00", 1, "view", 5)))
-    run()
-    val rows = spark.read.parquet(out)
-      .orderBy("n_events").collect()
-    assert(rows.map(_.getAs[Long]("n_events")).toSeq == Seq(2L, 3L),
-      "one emission per batch, counts accumulate")
-    val last = rows.last
-    assert(last.getAs[Double]("total_value") == 45.0)
-    assert(last.getAs[Double]("max_value") == 30.0)
-  }
-
-  test("streaming Misra-Gries trending users: bounded state survives restart, heavy user leads") {
-    val (src, out, ckpt) = tempDirs()
-    writeBatch(src, "b0.json", Seq(
-      evt(1, "2024-01-01 10:00:00", 7, "click", 1),
-      evt(2, "2024-01-01 10:01:00", 7, "click", 1),
-      evt(3, "2024-01-01 10:02:00", 7, "click", 1),
-      evt(4, "2024-01-01 10:03:00", 2, "click", 1)))
-    def run(): Unit = EventsStream.runToParquet(
-      EventsStream.trendingUsers(EventsStream.readEventStream(spark, src), k = 4, topN = 2).toDF(),
-      out, ckpt)
-    run()
-    // SECOND run over a new file: the summary must come back from the
-    // checkpointed state, not restart from zero
-    writeBatch(src, "b1.json", Seq(
-      evt(5, "2024-01-01 10:04:00", 7, "click", 1),
-      evt(6, "2024-01-01 10:05:00", 3, "click", 1)))
-    run()
-    val rows = spark.read.parquet(out).orderBy(col("est_count").desc).collect()
-    val top = rows.head
-    assert(top.getAs[Long]("user_id") == 7L)
-    assert(top.getAs[Long]("est_count") == 4L, "3 from batch 0 + 1 from batch 1")
-    assert(rows.count(_.getAs[Int]("rank") == 1) == 2, "one leader emission per batch")
-  }
-
-  test("stream-stream join pairs clicks with in-window purchases across batches") {
-    val (src, out, ckpt) = tempDirs()
-    writeBatch(src, "b0.json", Seq(
-      evt(1, "2024-01-01 10:00:00", 1, "click", 0),
-      evt(2, "2024-01-01 10:10:00", 1, "purchase", 42)))   // in window, same batch
-    writeBatch(src, "b1.json", Seq(
-      evt(3, "2024-01-01 10:25:00", 1, "purchase", 7),     // in window, LATER batch
-      evt(4, "2024-01-01 11:00:00", 1, "purchase", 9),     // past the 30m window
-      evt(5, "2024-01-01 10:05:00", 2, "purchase", 5)))    // other user
-    val stream = EventsStream.readEventStream(spark, src)
-    val clicks = stream.filter(col("event_type") === "click")
-    val purchases = stream.filter(col("event_type") === "purchase")
-    EventsStream.runToParquet(
-      EventsStream.clickPurchaseJoin(clicks, purchases), out, ckpt)
-    val rows = spark.read.parquet(out).orderBy("purchase_ts").collect()
-    assert(rows.map(_.getAs[Double]("value")).toSeq == Seq(42.0, 7.0),
-      s"exactly the in-window same-user purchases: ${rows.mkString(",")}")
-    assert(rows.forall(_.getAs[Long]("click_id") == 1L))
-  }
-
-  test("stream-static join enriches events against a batch dimension table") {
-    import spark.implicits._
-    val (src, out, ckpt) = tempDirs()
-    writeBatch(src, "b0.json", Seq(
-      evt(1, "2024-01-01 10:00:00", 1, "click", 10),
-      evt(2, "2024-01-01 10:01:00", 2, "click", 20),
-      evt(3, "2024-01-01 10:02:00", 3, "click", 30)))   // no dim row → dropped
-    val userDim = Seq((1L, "gold"), (2L, "silver")).toDF("user_id", "tier")
-    // a static side needs no watermark: it is re-read per micro-batch and
-    // broadcastable — the standard enrichment-join shape
-    val enriched = EventsStream.readEventStream(spark, src).join(userDim, "user_id")
-    EventsStream.runToParquet(enriched, out, ckpt)
-    val rows = spark.read.parquet(out).orderBy("event_id").collect()
-    assert(rows.map(_.getAs[String]("tier")).toSeq == Seq("gold", "silver"))
-    assert(rows.map(_.getAs[Long]("event_id")).toSeq == Seq(1L, 2L))
-  }
-
   test("bloom blocklist probe runs unchanged on a stream (decontamination on arrival)") {
     // The q51/q75 scan-side probe is a stateless codegen'd expression, so
     // the SAME decontamination predicate filters a stream on arrival — the
@@ -354,9 +127,10 @@ class EventsStreamSpec extends SparkSpec {
     writeBatch(src, "b1.json", Seq(
       evt(4, "2024-01-01 10:03:00", 2, "scroll", 4),
       evt(5, "2024-01-01 10:04:00", 3, "click", 5)))
-    val stream = EventsStream.readEventStream(spark, src)
+    val stream = eventStream(src)
       .filter(BloomFilterOps.mightContain(bits, mBits, 6, col("event_type")))
-    EventsStream.runToParquet(stream, out, ckpt)
+    EventsStream.runForeachBatch(stream, ckpt)((batch, _) =>
+      batch.write.mode("append").parquet(out))
     val flagged = spark.read.parquet(out).select("event_id")
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(flagged === Seq(1L, 3L, 5L),
@@ -368,7 +142,7 @@ class EventsStreamSpec extends SparkSpec {
     writeBatch(src, "b0.json", Seq(
       evt(1, "2024-01-01 10:00:00", 1, "click", 10),
       evt(2, "2024-01-01 10:01:00", 1, "view", 20)))
-    val stream = EventsStream.readEventStream(spark, src)
+    val stream = eventStream(src)
     EventsStream.runForeachBatch(stream, ckpt) { (batch, _) =>
       batch.withColumn("doubled", col("value") * 2)
         .write.mode("append").parquet(out)
@@ -376,83 +150,5 @@ class EventsStreamSpec extends SparkSpec {
     val rows = spark.read.parquet(out).orderBy("event_id").collect()
     assert(rows.length == 2)
     assert(rows.map(_.getAs[Double]("doubled")).toSeq == Seq(20.0, 40.0))
-  }
-
-  test("observedRulesNamed: per-micro-batch violation counts ride the stream's progress") {
-    val (src, out, ckpt) = tempDirs()
-    writeBatch(src, "b0.json", Seq(
-      evt(1, "2024-01-01 10:00:00", 1, "click", 10),
-      evt(2, "2024-01-01 10:01:00", 2, "click", -3),
-      evt(3, "2024-01-01 10:02:00", 1, "view", -1)))
-    val stream = EventsStream.readEventStream(spark, src)
-    val observed = graft.operators.Quality.observedRulesNamed(stream, "gate",
-      Seq("neg_value" -> (col("value") < 0),
-        "is_view" -> (col("event_type") === "view")))
-    val q = observed.writeStream
-      .format("parquet").option("path", out)
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val gate = q.recentProgress.toSeq
-      .flatMap(p => Option(p.observedMetrics.get("gate")))
-    assert(gate.nonEmpty, "no observed metrics surfaced in the stream progress")
-    assert(gate.map(_.getAs[Long]("neg_value")).sum === 2L)
-    assert(gate.map(_.getAs[Long]("is_view")).sum === 1L)
-    // the stream's rows themselves were untouched by the observation
-    assert(spark.read.parquet(out).count() === 3L)
-  }
-
-  test("late-data accounting: the watermark's per-trigger drops are recorded and persisted") {
-    val (src, out, ckpt) = tempDirs()
-    val acctDir = java.nio.file.Files.createTempDirectory("graft_acct").toString
-    // FileStreamSource orders by modification time — force it, or the
-    // planted batch sequence is filesystem-timestamp roulette
-    def plant(i: Int, name: String, lines: Seq[String]): Unit = {
-      writeBatch(src, name, lines)
-      java.nio.file.Files.setLastModifiedTime(
-        java.nio.file.Paths.get(s"$src/$name"),
-        java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
-    }
-    // Spark 4 keeps TWO watermarks per trigger: eviction uses the value
-    // updated at trigger start, but LATE-ROW FILTERING uses the previous
-    // trigger's value (SPARK-24699's two-watermark contract) — so a row
-    // only counts as dropped once the watermark passed its window two
-    // triggers before it arrives. The plant: b2's 20:30 pushes the
-    // filter watermark seen by b3 to 18:00, closing the 10:00 window
-    // before the straggler shows up.
-    plant(0, "b0.json", Seq(
-      evt(1, "2024-01-01 10:05:00", 1, "click", 10),
-      evt(2, "2024-01-01 10:55:00", 2, "click", 5)))
-    plant(1, "b1.json", Seq(evt(3, "2024-01-01 20:00:00", 1, "view", 7)))
-    plant(2, "b2.json", Seq(evt(4, "2024-01-01 20:30:00", 1, "view", 1)))
-    plant(3, "b3.json", Seq(
-      evt(5, "2024-01-01 10:30:00", 3, "click", 2), // LATE: filter wm 18:00
-      evt(6, "2024-01-01 20:45:00", 1, "view", 4))) // on time
-    val acct = EventsStream.runWindowedWithAccounting(
-      EventsStream.readEventStream(spark, src), out, ckpt, acctDir)
-    // every planted row was observed by some trigger
-    assert(acct.map(_.input_rows).sum === 6L)
-    // exactly the planted straggler was dropped (one partial row), in the
-    // trigger whose in-effect watermark was 20:30 - 2h = 18:30 UTC
-    val dropped = acct.filter(_.dropped_late_rows > 0)
-    assert(dropped.map(_.dropped_late_rows).sum === 1L,
-      s"expected exactly the planted late row dropped: $acct")
-    assert(dropped.head.watermark_ms ===
-      java.time.Instant.parse("2024-01-01T18:30:00Z").toEpochMilli)
-    assert(dropped.head.input_rows === 2L)
-    // the audit trail is persisted beside the maintained state
-    val persisted = spark.read.parquet(acctDir)
-    assert(persisted.count() === acct.size.toLong)
-    assert(persisted.columns.sorted.toSeq ===
-      Seq("batch_id", "dropped_late_rows", "input_rows", "watermark_ms"))
-    // and the dropped row never reached the windowed output: the 10:00
-    // window was emitted with its two on-time rows only
-    val outRows = spark.read.parquet(out)
-      .filter(col("window_start") === "2024-01-01 10:00:00")
-      .collect()
-    assert(outRows.nonEmpty &&
-      outRows.forall(r => r.getAs[Long]("n_events") === 2L),
-      s"late row leaked into a closed window: ${outRows.mkString(";")}")
   }
 }
