@@ -21,15 +21,6 @@ object Bench {
     * longer loses its HEAD (the opening brace) and never parses. */
   val LineBudget: Int = 1850
 
-  /** The driver-contract stdout line, built from per-query medians. Pure so
-    * BenchLineSpec can pin the budget against the FULL current query set at
-    * worst-case value widths — the guard that keeps query growth from
-    * silently re-truncating the line. Values start at centisecond precision
-    * (trailing zeros stripped) and the whole line DEGRADES to deci- then
-    * whole-second precision if the query count pushes it past the budget —
-    * 0.1 s resolution is still below host noise, and a parseable coarse
-    * line beats a truncated precise one (four rounds of parsed:null). The
-    * full-precision record stays in target/bench.json. */
   /** Clean-machine parallel-canary anchor (seconds — BASELINE.md's measured
     * idle value): the divisor of the cpar-normalization rule below. */
   val CleanCanaryPar: Double = 0.70
@@ -44,6 +35,15 @@ object Bench {
     * uniformly hot runs) — raises the median; a spike cannot. */
   val CparNormThreshold: Double = 1.05
 
+  /** The driver-contract stdout line, built from per-query medians. Pure so
+    * BenchLineSpec can pin the budget against the FULL current query set at
+    * worst-case value widths — the guard that keeps query growth from
+    * silently re-truncating the line. Values start at centisecond precision
+    * (trailing zeros stripped) and the whole line DEGRADES to deci- then
+    * whole-second precision if the query count pushes it past the budget —
+    * 0.1 s resolution is still below host noise, and a parseable coarse
+    * line beats a truncated precise one (four rounds of parsed:null). The
+    * full-precision record stays in target/bench.json. */
   def stdoutLine(results: scala.collection.immutable.ListMap[String, Double],
                  sfDir: String, cpar: Double = -1.0,
                  cparMed: Double = -1.0): String = {
@@ -64,8 +64,8 @@ object Bench {
     // failure sentinels (-1) are NEVER folded away, a failing query must
     // stay visible on the driver channel by name.
     def render(scale: Int, stripQ: Boolean, withCpar: Boolean,
-               minimal: Boolean = false, restBelow: Double = 0.0,
-               topK: Int = 0, failedArray: Boolean = false): String = {
+               minimal: Boolean, restBelow: Double,
+               topK: Int, failedArray: Boolean): String = {
       val f = fmtAt(scale) _
       def key(k: String) = {
         val short = k.takeWhile(_ != '_')

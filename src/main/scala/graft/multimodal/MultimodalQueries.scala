@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * in MultimodalSpec). */
 object MultimodalQueries {
 
-  val q70DecodeFeatures: QuerySpec = QuerySpec.rowsOnly("q70_media_features") { (spark, dir) =>
+  val q70DecodeFeatures: QuerySpec = QuerySpec.rowsOnly("q70_media_features") { (spark, _) =>
     val media = Multimodal.syntheticMedia(spark, 2000)
     Multimodal.decodeFeatures(media)
       .groupBy("kind")
@@ -19,7 +19,7 @@ object MultimodalQueries {
       .orderBy("kind")
   }
 
-  val q71FrameSample: QuerySpec = QuerySpec.rowsOnly("q71_frame_sample") { (spark, dir) =>
+  val q71FrameSample: QuerySpec = QuerySpec.rowsOnly("q71_frame_sample") { (spark, _) =>
     val media = Multimodal.syntheticMedia(spark, 2000)
     Multimodal.sampleFrames(media, everyN = 5)
       .groupBy("media_id")
@@ -31,7 +31,7 @@ object MultimodalQueries {
     * payloads are not BMFF, so every row exercises the documented fallback
     * path deterministically (parsed = false, duration from metadata);
     * MultimodalSpec covers the parsed = true path with a real MP4. */
-  val q72VideoMeta: QuerySpec = QuerySpec.rowsOnly("q72_video_meta") { (spark, dir) =>
+  val q72VideoMeta: QuerySpec = QuerySpec.rowsOnly("q72_video_meta") { (spark, _) =>
     val media = Multimodal.syntheticMedia(spark, 2000)
     Multimodal.videoMetadata(media).toDF()
       .groupBy("parsed")
@@ -48,7 +48,7 @@ object MultimodalQueries {
     * Exact duplicates are planted by cloning every 50th image payload
     * under a shifted id, so the pair set is deterministic and non-empty:
     * every planted clone must surface at hamming 0. */
-  val q148ImageDedup: QuerySpec = QuerySpec.rowsOnly("q148_image_dedup") { (spark, dir) =>
+  val q148ImageDedup: QuerySpec = QuerySpec.rowsOnly("q148_image_dedup") { (spark, _) =>
     import spark.implicits._
     val media = Multimodal.syntheticMedia(spark, 2000)
     val clones = media.filter(col("kind") === "image" && col("media_id") % 50 === 0)
@@ -64,7 +64,7 @@ object MultimodalQueries {
     * loudness-gradient fingerprints ([[Multimodal.AudioHash]], volume-
     * invariant by construction; real-WAV path pinned in MultimodalSpec)
     * into the same pigeonhole hamming join. Clones planted as in q148. */
-  val q150AudioDedup: QuerySpec = QuerySpec.rowsOnly("q150_audio_dedup") { (spark, dir) =>
+  val q150AudioDedup: QuerySpec = QuerySpec.rowsOnly("q150_audio_dedup") { (spark, _) =>
     import spark.implicits._
     val media = Multimodal.syntheticMedia(spark, 2000)
     val clones = media.filter(col("kind") === "audio" && col("media_id") % 50 === 0)
@@ -88,7 +88,7 @@ object MultimodalQueries {
     * noise clips must not pair at all. Shape at 100 TB: decode is
     * per-row mapPartitions work, frame hashes are 64-bit ints, and the
     * pair discovery is the banded hamming join — never all-pairs. */
-  val q212VideoDedup: QuerySpec = QuerySpec.rowsOnly("q212_video_dedup") { (spark, dir) =>
+  val q212VideoDedup: QuerySpec = QuerySpec.rowsOnly("q212_video_dedup") { (spark, _) =>
     import spark.implicits._
     val media = Multimodal.syntheticY4mMedia(spark, 500)
     val clones = media.filter(col("media_id") % 25 === 0)

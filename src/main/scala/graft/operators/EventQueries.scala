@@ -9,35 +9,27 @@ import org.apache.spark.sql.functions._
 /** Event-time operators in batch form (SURVEY.md §2.9): the same
   * window/session_window expressions the streaming module uses, run over the
   * events table so DuckDB can verify the semantics independently —
-  * session_window against a gaps-and-islands formulation.
+  * session_window (q107) against a gaps-and-islands formulation.
   */
 object EventQueries {
 
-  val q60TumblingWindow: QuerySpec = QuerySpec.oracle(
+  val q60TumblingWindow: QuerySpec = QuerySpec.sql(
     "q60_tumbling_window",
     """SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS window_start, event_type,
       |  count(*) AS n_events,
       |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
       |FROM events
       |GROUP BY 1, 2
-      |ORDER BY window_start, event_type""".stripMargin
-  ) { (spark, dir) =>
-    Tables.events(spark, dir)
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("sum_value"))
-      .select(col("w.start").as("window_start"), col("event_type"),
-        col("n_events"), col("sum_value"))
-      .orderBy("window_start", "event_type")
-  }
+      |ORDER BY window_start, event_type""".stripMargin)
 
-  /** session_window (10-minute gap) verified against an independent SQL
-    * sessionization: new session when the gap to the previous event of the
-    * same user exceeds 10 minutes; session end = last ts + gap. The gap
-    * comparison is strictly `>`: Spark merges a session whose end TOUCHES
-    * the next event's start (an event at exactly prev+gap extends the
-    * session) — pinned empirically by EventQueriesSpec's exact-boundary
-    * fixture. */
-  val q61SessionWindow: QuerySpec = QuerySpec.oracle(
+  /** Gaps-and-islands sessionization (10-minute gap): new session when the
+    * gap to the previous event of the same user exceeds 10 minutes; session
+    * end = last ts + gap. The gap comparison is strictly `>`, matching
+    * Spark's session_window, which merges a session whose end TOUCHES the
+    * next event's start — pinned empirically by EventQueriesSpec's
+    * exact-boundary fixture. q107 runs session_window itself against this
+    * formulation. */
+  val q61SessionWindow: QuerySpec = QuerySpec.sql(
     "q61_session_window",
     """WITH d AS (
       |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts,
@@ -52,15 +44,7 @@ object EventQueries {
       |SELECT user_id, min(ts) AS session_start,
       |  max(ts) + INTERVAL 10 MINUTE AS session_end, count(*) AS n_events
       |FROM s GROUP BY user_id, sid
-      |ORDER BY user_id, session_start""".stripMargin
-  ) { (spark, dir) =>
-    Tables.events(spark, dir)
-      .groupBy(col("user_id"), session_window(col("ts"), "10 minutes").as("w"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"), col("w.start").as("session_start"),
-        col("w.end").as("session_end"), col("n_events"))
-      .orderBy("user_id", "session_start")
-  }
+      |ORDER BY user_id, session_start""".stripMargin)
 
   /** As-of join (clicks ⟕ most recent prior purchase per user) — the
     * union-window operator verified against DuckDB's native ASOF JOIN. */
@@ -475,8 +459,12 @@ object EventQueries {
     * across engines or even runs; here variance is derived from exact
     * decimal sums (Σv, Σv²) so every figure is order-independent and
     * bit-identical in DuckDB: var = (n·Σv² − (Σv)²) / (n·(n−1)), identical
-    * double expression order on both sides. */
-  val q66ValueMoments: QuerySpec = QuerySpec.oracle(
+    * double expression order on both sides. n < 2 is an explicit NULL
+    * (undefined sample variance): the zero denominator would give NULL
+    * in Spark but inf in DuckDB. The numerator is clamped at 0: on an
+    * all-equal group double cancellation can leave it slightly negative,
+    * where Spark's sqrt returns NaN and DuckDB's raises. */
+  val q66ValueMoments: QuerySpec = QuerySpec.sql(
     "q66_value_moments",
     """WITH s AS (
       |  SELECT event_type, count(*) AS n_events,
@@ -491,36 +479,14 @@ object EventQueries {
       |  CASE WHEN n_events < 2 THEN NULL ELSE
       |    sqrt(greatest(CAST(n_events AS DOUBLE) * sum_v2 - sum_v * sum_v, 0)
       |      / (CAST(n_events AS DOUBLE) * (CAST(n_events AS DOUBLE) - 1))) END AS std_value
-      |FROM s ORDER BY event_type""".stripMargin
-  ) { (spark, dir) =>
-    val s = Tables.events(spark, dir)
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n_events"),
-        dsum(col("value")).as("sum_v"),
-        dsum(col("value") * col("value"), 4).as("sum_v2"))
-    val nD = col("n_events").cast("double")
-    // explicit NULL for n=1: the n·(n−1) denominator is zero there, where
-    // Spark's non-ANSI division yields NULL but DuckDB's IEEE float division
-    // yields inf — pin the same answer (undefined sample variance) on both.
-    // The numerator is clamped at 0 on both sides: when all values in a
-    // group are equal, double cancellation can leave it slightly negative,
-    // where Spark's sqrt returns NaN but DuckDB's raises an error.
-    val variance = when(col("n_events") < 2, lit(null).cast("double"))
-      .otherwise(greatest(nD * col("sum_v2") - col("sum_v") * col("sum_v"), lit(0d))
-        / (nD * (nD - lit(1))))
-    s.select(col("event_type"), col("n_events"),
-        (col("sum_v") / col("n_events")).as("mean_value"),
-        variance.as("var_value"),
-        sqrt(variance).as("std_value"))
-      .orderBy("event_type")
-  }
+      |FROM s ORDER BY event_type""".stripMargin)
 
   /** Click→purchase conversion funnel: per clicker, purchases at-or-after
     * their first click; one-row summary with the unrounded conversion
     * ratio. Two hash aggregations + one key join — no windows needed. The
     * per-user purchase total goes through decimal at BOTH aggregation
     * levels so the global sum is order-independent. */
-  val q67Funnel: QuerySpec = QuerySpec.oracle(
+  val q67Funnel: QuerySpec = QuerySpec.sql(
     "q67_funnel",
     """WITH c AS (
       |  SELECT user_id, min(CAST(ts AS TIMESTAMP)) AS first_click
@@ -535,23 +501,7 @@ object EventQueries {
       |  count(p.user_id) AS n_converted,
       |  CAST(count(p.user_id) AS DOUBLE) / count(*) AS conversion,
       |  CAST(sum(CAST(coalesce(p.purch_value, 0) AS DECIMAL(18,2))) AS DOUBLE) AS converted_value
-      |FROM c LEFT JOIN p ON c.user_id = p.user_id""".stripMargin
-  ) { (spark, dir) =>
-    val ev = Tables.events(spark, dir)
-    val c = ev.filter(col("event_type") === "click")
-      .groupBy("user_id").agg(min(col("ts")).as("first_click"))
-    val p = ev.filter(col("event_type") === "purchase")
-      .join(c, Seq("user_id"))
-      .filter(col("ts") >= col("first_click"))
-      .groupBy("user_id")
-      .agg(count(lit(1)).as("n_purch"), dsum(col("value")).as("purch_value"))
-    c.join(p.select(col("user_id").as("p_user"), col("purch_value")),
-        col("user_id") === col("p_user"), "left")
-      .agg(count(lit(1)).as("n_clickers"),
-        count(col("p_user")).as("n_converted"),
-        (count(col("p_user")).cast("double") / count(lit(1))).as("conversion"),
-        dsum(coalesce(col("purch_value"), lit(0))).as("converted_value"))
-  }
+      |FROM c LEFT JOIN p ON c.user_id = p.user_id""".stripMargin)
 
   /** Weekly retention cohorts: users bucketed by first-seen week, counted
     * per active-week offset — first-touch agg, distinct activity pairs, one
@@ -585,18 +535,11 @@ object EventQueries {
   /** Distinct aggregation under event-time windows (q14 is global distinct;
     * this is the per-window form): exact distinct users per hour — planned
     * as one Expand pass, the same shape q16's profiling uses. */
-  val q69WindowDistinct: QuerySpec = QuerySpec.oracle(
+  val q69WindowDistinct: QuerySpec = QuerySpec.sql(
     "q69_window_distinct",
     """SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS window_start,
       |  count(DISTINCT user_id) AS n_users, count(*) AS n_events
-      |FROM events GROUP BY 1 ORDER BY 1""".stripMargin
-  ) { (spark, dir) =>
-    Tables.events(spark, dir)
-      .groupBy(window(col("ts"), "1 hour").as("w"))
-      .agg(countDistinct(col("user_id")).as("n_users"), count(lit(1)).as("n_events"))
-      .select(col("w.start").as("window_start"), col("n_users"), col("n_events"))
-      .orderBy("window_start")
-  }
+      |FROM events GROUP BY 1 ORDER BY 1""".stripMargin)
 
   /** Per-group z-score outlier detection: per-event-type mean/std from the
     * same exact decimal moments as q66 (order-independent, engine-exact),
@@ -753,7 +696,7 @@ object EventQueries {
     * single IEEE division of two integer counts — hash-identical across
     * engines, same bar as q57's p_cond. Ordering ties break on event_id
     * (unique), making the lag deterministic on both sides. */
-  val q92EventTransitions: QuerySpec = QuerySpec.oracle(
+  val q92EventTransitions: QuerySpec = QuerySpec.sql(
     "q92_event_transitions",
     """WITH d AS (
       |  SELECT user_id, event_type,
@@ -767,20 +710,7 @@ object EventQueries {
       |  CAST(n_trans AS DOUBLE)
       |    / CAST(CAST(sum(n_trans) OVER (PARTITION BY prev_type) AS BIGINT) AS DOUBLE) AS p_trans
       |FROM p
-      |ORDER BY prev_type, event_type""".stripMargin
-  ) { (spark, dir) =>
-    val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    val d = Tables.events(spark, dir)
-      .select(col("user_id"), col("event_type"),
-        lag(col("event_type"), 1).over(w).as("prev_type"))
-      .filter(col("prev_type").isNotNull)
-    val p = d.groupBy("prev_type", "event_type").agg(count(lit(1)).as("n_trans"))
-    val totals = Window.partitionBy("prev_type")
-    p.withColumn("n_from", sum(col("n_trans")).over(totals))
-      .withColumn("p_trans",
-        col("n_trans").cast("double") / col("n_from").cast("double"))
-      .orderBy("prev_type", "event_type")
-  }
+      |ORDER BY prev_type, event_type""".stripMargin)
 
   /** User journey paths (product-analytics "top paths" report): each
     * user's first three events rendered as a `a>b>c` path string, counted
@@ -815,7 +745,7 @@ object EventQueries {
       .orderBy(col("n_users").desc, col("path"))
   }
 
-  /** Per-user session metrics — aggregation OVER q61's session windows
+  /** Per-user session metrics — aggregation OVER session_window's sessions
     * (sessions as first-class rows feeding a second aggregate), the
     * engagement summary behind DAU/stickiness reporting: session count,
     * event volume, the largest session, total sessionized time, and
@@ -875,7 +805,7 @@ object EventQueries {
     * never an all-pairs product; item marginals and the 1-row user count
     * broadcast back. Every score is exact integer-count arithmetic in
     * exactly-rounded IEEE ops. */
-  val q111Cooccurrence: QuerySpec = QuerySpec.oracle(
+  val q111Cooccurrence: QuerySpec = QuerySpec.sql(
     "q111_cooccurrence",
     """WITH basket AS (SELECT DISTINCT user_id, event_type FROM events),
       |u AS (SELECT CAST(count(DISTINCT user_id) AS BIGINT) AS n_users FROM basket),
@@ -893,26 +823,7 @@ object EventQueries {
       |JOIN item ia ON ia.event_type = item_a
       |JOIN item ib ON ib.event_type = item_b
       |CROSS JOIN u
-      |ORDER BY item_a, item_b""".stripMargin
-  ) { (spark, dir) =>
-    val basket = Tables.events(spark, dir)
-      .select("user_id", "event_type").distinct()
-    val users = basket.agg(countDistinct(col("user_id")).as("n_users"))
-    val item = basket.groupBy("event_type").agg(count(lit(1)).as("n"))
-    val pair = basket.select(col("user_id"), col("event_type").as("item_a"))
-      .join(basket.select(col("user_id"), col("event_type").as("item_b")), "user_id")
-      .filter(col("item_a") < col("item_b"))
-      .groupBy("item_a", "item_b").agg(count(lit(1)).as("n_ab"))
-    pair
-      .join(broadcast(item.select(col("event_type").as("item_a"), col("n").as("n_a"))), Seq("item_a"))
-      .join(broadcast(item.select(col("event_type").as("item_b"), col("n").as("n_b"))), Seq("item_b"))
-      .crossJoin(broadcast(users))
-      .select(col("item_a"), col("item_b"), col("n_ab"), col("n_a"), col("n_b"),
-        (col("n_ab").cast("double") / col("n_users").cast("double")).as("support"),
-        ((col("n_ab").cast("double") * col("n_users").cast("double"))
-          / (col("n_a").cast("double") * col("n_b").cast("double"))).as("lift"))
-      .orderBy("item_a", "item_b")
-  }
+      |ORDER BY item_a, item_b""".stripMargin)
 
   /** User-growth (adoption) curve: new users per HOUR — first-seen
     * timestamp per user, the same anchor q68's retention cohorts use —
@@ -924,7 +835,7 @@ object EventQueries {
     * 1-row denominator ride the time-bounded hourly series (q99's
     * bounded-window argument). No decimal trick needed — the running sum
     * is over integer counts, exact in any association order. */
-  val q113GrowthCurve: QuerySpec = QuerySpec.oracle(
+  val q113GrowthCurve: QuerySpec = QuerySpec.sql(
     "q113_growth_curve",
     """WITH fs AS (
       |  SELECT user_id, date_trunc('hour', min(CAST(ts AS TIMESTAMP))) AS first_hour
@@ -938,22 +849,7 @@ object EventQueries {
       |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS DOUBLE)
       |    / CAST(n_total AS DOUBLE) AS cum_share
       |FROM hourly CROSS JOIN tot
-      |ORDER BY first_hour""".stripMargin
-  ) { (spark, dir) =>
-    val hourly = Tables.events(spark, dir)
-      .groupBy("user_id").agg(date_trunc("hour", min(col("ts"))).as("first_hour"))
-      .groupBy("first_hour").agg(count(lit(1)).as("new_users"))
-    val tot = hourly.agg(sum(col("new_users")).as("n_total"))
-    // ACCEPTED WindowExec warning: calendar-bounded input (one row per
-    // HOUR — bounded by the calendar, not the event stream)
-    val w = Window.orderBy("first_hour")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    hourly.crossJoin(broadcast(tot))
-      .withColumn("cum_users", sum(col("new_users")).over(w))
-      .select(col("first_hour"), col("new_users"), col("cum_users"),
-        (col("cum_users").cast("double") / col("n_total").cast("double")).as("cum_share"))
-      .orderBy("first_hour")
-  }
+      |ORDER BY first_hour""".stripMargin)
 
   /** Robust per-group outlier detection via MAD (median absolute
     * deviation) — the resistant complement to q54's mean/std z-scores,

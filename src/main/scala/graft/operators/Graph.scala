@@ -20,48 +20,6 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Power-iteration PageRank in EXACT integer micro-units.
-    *
-    * Ranks are bigint micro-units (1.0 ≡ `unit`), the damping factor is a
-    * percentage, and each edge contribution is ONE integral division
-    * `(rank * dampingPct) div (100 * deg)` — so every iteration is
-    * deterministic integer arithmetic, bit-identical across engines and
-    * across partitionings (no float sum-order drift), which is what makes
-    * a distributed PageRank hash-verifiable against an independent SQL
-    * unrolling. The truncation the integral division introduces is part
-    * of the operator's published contract (ranks are lower bounds within
-    * |E| + |V| units per iteration of the rational fixpoint iterate).
-    *
-    * `edges` must carry (src_t, src, dst_t, dst); for an undirected graph
-    * provide BOTH orientations. DIRECTED graphs with sinks are in
-    * contract: each iteration collects the damped mass sitting on
-    * dangling nodes (no out-edges) and redistributes it equally —
-    * `(danglingMass · dampingPct) div (100 · |V|)` to every node, the
-    * standard correction without which sink mass simply vanishes and
-    * rank totals decay toward the teleport floor. The node set is
-    * src ∪ dst; nodes receiving no contributions still hold
-    * teleport + dangling share.
-    *
-    * Scale shape: the edge list joined with its out-degrees is
-    * pre-partitioned on the (src_t, src) key every round joins on and cut
-    * behind ONE lazy localCheckpoint, so all rounds share a single
-    * materialization of the |E|-sized relation. The BUILD IS EAGER: the
-    * one-action structure probe below (and, under AQE, checkpoint
-    * creation itself) executes the edge subtree at construction — an
-    * index-build-shaped step, policed by ConstructionSweepSpec's eager
-    * allowlist. Per round only the node-sized rank relation shuffles,
-    * plus the map-side-combined contribution aggregate. The
-    * dangling term references each round's rank relation TWICE (the
-    * anti-join aggregate + the contribution join), so on graphs that
-    * actually have dangling nodes each round is cut behind a
-    * localCheckpoint — without it the two references double the logical
-    * plan per round and the chain goes exponential in the iteration count
-    * (measured: 218 statically-planned exchanges at 5 rounds vs ~10 with
-    * the cut); the share rides as a broadcast scalar. Graphs with NO
-    * dangling nodes (every undirected graph) are detected by one
-    * build-time node-sized action and take the lean single-reference
-    * lazy chain — no per-round checkpoints, one job end to end.
-    */
   /** One cached materialization of a PageRank-family graph: the caller's
     * edge relation cut behind its own checkpoint, the degree /
     * contribution / flagged-node relations derived from it, and the
@@ -158,6 +116,48 @@ object Graph {
       allReceive = structureRow.getLong(1) == 0 && structureRow.getLong(2) == 0)
   }
 
+  /** Power-iteration PageRank in EXACT integer micro-units.
+    *
+    * Ranks are bigint micro-units (1.0 ≡ `unit`), the damping factor is a
+    * percentage, and each edge contribution is ONE integral division
+    * `(rank * dampingPct) div (100 * deg)` — so every iteration is
+    * deterministic integer arithmetic, bit-identical across engines and
+    * across partitionings (no float sum-order drift), which is what makes
+    * a distributed PageRank hash-verifiable against an independent SQL
+    * unrolling. The truncation the integral division introduces is part
+    * of the operator's published contract (ranks are lower bounds within
+    * |E| + |V| units per iteration of the rational fixpoint iterate).
+    *
+    * `edges` must carry (src_t, src, dst_t, dst); for an undirected graph
+    * provide BOTH orientations. DIRECTED graphs with sinks are in
+    * contract: each iteration collects the damped mass sitting on
+    * dangling nodes (no out-edges) and redistributes it equally —
+    * `(danglingMass · dampingPct) div (100 · |V|)` to every node, the
+    * standard correction without which sink mass simply vanishes and
+    * rank totals decay toward the teleport floor. The node set is
+    * src ∪ dst; nodes receiving no contributions still hold
+    * teleport + dangling share.
+    *
+    * Scale shape: the edge list joined with its out-degrees is
+    * pre-partitioned on the (src_t, src) key every round joins on and cut
+    * behind ONE lazy localCheckpoint, so all rounds share a single
+    * materialization of the |E|-sized relation. The BUILD IS EAGER: the
+    * one-action structure probe in [[prGraphBase]] (and, under AQE, checkpoint
+    * creation itself) executes the edge subtree at construction — an
+    * index-build-shaped step, policed by ConstructionSweepSpec's eager
+    * allowlist. Per round only the node-sized rank relation shuffles,
+    * plus the map-side-combined contribution aggregate. The
+    * dangling term references each round's rank relation TWICE (the
+    * anti-join aggregate + the contribution join), so on graphs that
+    * actually have dangling nodes each round is cut behind a
+    * localCheckpoint — without it the two references double the logical
+    * plan per round and the chain goes exponential in the iteration count
+    * (measured: 218 statically-planned exchanges at 5 rounds vs ~10 with
+    * the cut); the share rides as a broadcast scalar. Graphs with NO
+    * dangling nodes (every undirected graph) are detected by one
+    * build-time node-sized action and take the lean single-reference
+    * lazy chain — no per-round checkpoints, one job end to end.
+    */
   def pageRank(edges: DataFrame, iterations: Int, dampingPct: Int = 85,
                unit: Long = 1000000L): DataFrame =
     pageRankFrom(prGraphBase(edges), iterations, dampingPct, unit)
@@ -468,13 +468,6 @@ object Graph {
          |ORDER BY rank_units DESC, node_type, node_id LIMIT 50""".stripMargin
   }
 
-  /** Personalized PageRank over the q136 trade graph, seeded at nation-1
-    * customers: "which counterparties sit closest to nation 1's trade?"
-    * — the related-entity ranking a topic- or region-conditioned source
-    * weighting consumes. Three rounds (proximity orderings stabilize much
-    * faster than global importance), damped 0.85, exact integer
-    * micro-units; zero-mass nodes (unreachable in 3 hops) drop before the
-    * top-50 so the LIMIT stays meaningful. */
   /** Memoized (seed ∩ nodes, count) for q162's nation-1 seed set per
     * (session, dir) — the serving contract one level down from
     * [[tradeGraphBase]]: a PPR serving system resolves its seed set
@@ -490,6 +483,13 @@ object Graph {
       seedsInGraphOf(tradeGraphBase(spark, dir), seeds)
     }
 
+  /** Personalized PageRank over the q136 trade graph, seeded at nation-1
+    * customers: "which counterparties sit closest to nation 1's trade?"
+    * — the related-entity ranking a topic- or region-conditioned source
+    * weighting consumes. Three rounds (proximity orderings stabilize much
+    * faster than global importance), damped 0.85, exact integer
+    * micro-units; zero-mass nodes (unreachable in 3 hops) drop before the
+    * top-50 so the LIMIT stays meaningful. */
   val q162PersonalizedPageRank: QuerySpec = QuerySpec.oracle(
     "q162_personalized_pagerank", pprOracleSql(3)
   ) { (spark, dir) =>
@@ -650,31 +650,6 @@ object Graph {
     triangleStats(coSupplyEdges(spark, dir)).orderBy("node_id")
   }
 
-  /** Label-propagation community detection (Raghavan et al. 2007,
-    * SYNCHRONOUS variant, fixed 2 rounds) over the co-supply graph — the
-    * community statistic after PageRank/CC/triangles: each node adopts
-    * the MAJORITY label among its neighbors' previous-round labels, ties
-    * broken by smallest label, labels initialized to node ids. A fixed
-    * round count makes the synchronous schedule fully deterministic (no
-    * convergence test, no float), so every per-round label — not just the
-    * final partition — is exact integer relational algebra and the oracle
-    * unrolls the identical recurrence as generated CTEs (q136's
-    * discipline). Differs from connected components (q35) exactly where
-    * it should: CC merges everything reachable; LPA's majority vote keeps
-    * densely-knit neighborhoods in distinct communities inside one
-    * component (this graph is one component; LPA at these parameters
-    * partitions it into 4). Graph parameters are chosen where the fixture
-    * has structure to show: minRepeat=3 (the ≥2 graph is 99.9%-complete —
-    * 4946/4950 possible edges — and ANY majority dynamic on a
-    * near-complete graph collapses to one label; at ≥3 density drops to
-    * ~22%) and 2 rounds (measured label counts by round at sf0.01:
-    * 100 → 20 → 4 → 1 — the random trade fixture has no stable
-    * communities, so the report freezes the dynamic before the
-    * known-degenerate fixpoint). Shape at scale: per round ONE edge-keyed
-    * join carrying (node, nbr-label) + one (node, label) count + a
-    * node-partitioned argmax window — the adjacency is cut once behind a
-    * checkpoint (referenced every round), rounds shuffle node-sized label
-    * relations, and nothing is ever quadratic in the dictionary. */
   /** Synchronous label propagation over an undirected edge set (one row
     * per edge, (s_a, s_b)): labels start as node ids; each of the fixed
     * `rounds` rounds every node adopts the majority label among its
@@ -701,6 +676,31 @@ object Graph {
     labels
   }
 
+  /** Label-propagation community detection (Raghavan et al. 2007,
+    * SYNCHRONOUS variant, fixed 2 rounds) over the co-supply graph — the
+    * community statistic after PageRank/CC/triangles: each node adopts
+    * the MAJORITY label among its neighbors' previous-round labels, ties
+    * broken by smallest label, labels initialized to node ids. A fixed
+    * round count makes the synchronous schedule fully deterministic (no
+    * convergence test, no float), so every per-round label — not just the
+    * final partition — is exact integer relational algebra and the oracle
+    * unrolls the identical recurrence as generated CTEs (q136's
+    * discipline). Differs from connected components (q35) exactly where
+    * it should: CC merges everything reachable; LPA's majority vote keeps
+    * densely-knit neighborhoods in distinct communities inside one
+    * component (this graph is one component; LPA at these parameters
+    * partitions it into 4). Graph parameters are chosen where the fixture
+    * has structure to show: minRepeat=3 (the ≥2 graph is 99.9%-complete —
+    * 4946/4950 possible edges — and ANY majority dynamic on a
+    * near-complete graph collapses to one label; at ≥3 density drops to
+    * ~22%) and 2 rounds (measured label counts by round at sf0.01:
+    * 100 → 20 → 4 → 1 — the random trade fixture has no stable
+    * communities, so the report freezes the dynamic before the
+    * known-degenerate fixpoint). Shape at scale: per round ONE edge-keyed
+    * join carrying (node, nbr-label) + one (node, label) count + a
+    * node-partitioned argmax window — the adjacency is cut once behind a
+    * checkpoint (referenced every round), rounds shuffle node-sized label
+    * relations, and nothing is ever quadratic in the dictionary. */
   val q175LabelPropagation: QuerySpec = {
     val rounds = 2
     val roundCtes = (1 to rounds).map { r =>

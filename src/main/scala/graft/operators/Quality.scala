@@ -36,23 +36,6 @@ object Quality {
     df.agg((count(col(keyCol)) - countDistinct(col(keyCol))).as("n_violations"))
       .select(lit(rule).as("rule"), col("n_violations"))
 
-  /** k-anonymity audit over a quasi-identifier tuple — the re-identification
-    * gate a training-data release runs before shipping rows that carry
-    * demographic-shaped columns: every QI combination observed, its row
-    * count, and whether it meets the k threshold (a group smaller than k
-    * means those rows are re-identifiable by their QI tuple alone). One
-    * map-side-combined aggregate over one scan — the report is
-    * |QI-combinations|-sized, never row-sized, and nothing collects. The
-    * caller supplies GENERALIZED columns (bucketed continuous values,
-    * truncated codes); auditing raw high-cardinality QIs is a degenerate
-    * all-singletons report, not a useful gate. */
-  def kAnonymityReport(df: DataFrame, qiCols: Seq[(String, Column)], k: Long): DataFrame = {
-    require(qiCols.nonEmpty && k >= 2, "need at least one QI column and k >= 2")
-    df.groupBy(qiCols.map { case (n, c) => c.as(n) }: _*)
-      .agg(count(lit(1)).as("n_rows"))
-      .withColumn("k_anon", col("n_rows") >= k)
-  }
-
   /** Volume-anomaly report: per-period row counts fenced against a
     * TRAILING calendar window's robust trend — the rule that catches
     * "today's partition is 40% smaller than trend", which no row-level

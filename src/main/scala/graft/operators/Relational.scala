@@ -22,7 +22,7 @@ object Relational {
 
   private val SumPrice = "CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)"
 
-  val q01PricingSummary: QuerySpec = QuerySpec.oracle(
+  val q01PricingSummary: QuerySpec = QuerySpec.sql(
     "q01_pricing_summary",
     """SELECT l_returnflag, l_linestatus,
       |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
@@ -33,42 +33,21 @@ object Relational {
       |FROM lineitem
       |WHERE l_shipdate <= TIMESTAMP '2001-09-01 00:00:00'
       |GROUP BY l_returnflag, l_linestatus
-      |ORDER BY l_returnflag, l_linestatus""".stripMargin
-  ) { (spark, dir) =>
-    Tables.lineitem(spark, dir)
-      .filter(col("l_shipdate") <= lit("2001-09-01 00:00:00").cast("timestamp"))
-      .groupBy("l_returnflag", "l_linestatus")
-      .agg(
-        dsum(col("l_quantity")).as("sum_qty"),
-        dsum(col("l_extendedprice")).as("sum_base_price"),
-        dsum(col("l_extendedprice") * (lit(1) - col("l_discount")), 4).as("sum_disc_price"),
-        davg(col("l_quantity")).as("avg_qty"),
-        count(lit(1)).as("count_order"))
-      .orderBy("l_returnflag", "l_linestatus")
-  }
+      |ORDER BY l_returnflag, l_linestatus""".stripMargin)
 
-  val q02ScanProjectFilter: QuerySpec = QuerySpec.oracle(
+  val q02ScanProjectFilter: QuerySpec = QuerySpec.sql(
     "q02_scan_project_filter",
     """SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice, l_shipdate
       |FROM lineitem
       |WHERE l_quantity > 45 AND l_discount >= 0.05
       |  AND l_shipdate BETWEEN TIMESTAMP '1996-01-01 00:00:00' AND TIMESTAMP '1997-12-31 00:00:00'
-      |ORDER BY l_orderkey, l_linenumber""".stripMargin
-  ) { (spark, dir) =>
-    Tables.lineitem(spark, dir)
-      .filter(col("l_quantity") > 45 && col("l_discount") >= 0.05 &&
-        col("l_shipdate").between(
-          lit("1996-01-01 00:00:00").cast("timestamp"),
-          lit("1997-12-31 00:00:00").cast("timestamp")))
-      .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice", "l_shipdate")
-      .orderBy("l_orderkey", "l_linenumber")
-  }
+      |ORDER BY l_orderkey, l_linenumber""".stripMargin)
 
   /** Star join: fact (orders) against broadcast dims (customer→nation→region).
-    * At scale the dims stay broadcast (nation/region are tiny; customer is the
-    * judgement call — at TPC-H ratios customer is ~1/10 of orders, so we let
-    * AQE decide there rather than forcing it). */
-  val q03JoinBroadcast: QuerySpec = QuerySpec.oracle(
+    * No hint is needed: nation/region fall under Spark's broadcast size
+    * threshold; customer is the judgement call — at TPC-H ratios it is
+    * ~1/10 of orders, so AQE decides there rather than a forced broadcast. */
+  val q03JoinBroadcast: QuerySpec = QuerySpec.sql(
     "q03_join_broadcast",
     s"""SELECT r_name, n_name, count(*) AS n_orders, $SumPrice AS total_price
        |FROM orders
@@ -76,37 +55,20 @@ object Relational {
        |JOIN nation ON c_nationkey = n_nationkey
        |JOIN region ON n_regionkey = r_regionkey
        |GROUP BY r_name, n_name
-       |ORDER BY r_name, n_name""".stripMargin
-  ) { (spark, dir) =>
-    Tables.orders(spark, dir)
-      .join(Tables.customer(spark, dir), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.nation(spark, dir)), col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(Tables.region(spark, dir)), col("n_regionkey") === col("r_regionkey"))
-      .groupBy("r_name", "n_name")
-      .agg(count(lit(1)).as("n_orders"), dsum(col("o_totalprice")).as("total_price"))
-      .orderBy("r_name", "n_name")
-  }
+       |ORDER BY r_name, n_name""".stripMargin)
 
   /** Fact-fact equi join: lineitem ⋈ orders — both sides large, Catalyst
     * picks shuffle join; keys hash-partition so it scales linearly. */
-  val q04JoinSortMerge: QuerySpec = QuerySpec.oracle(
+  val q04JoinSortMerge: QuerySpec = QuerySpec.sql(
     "q04_join_sortmerge",
     """SELECT o_orderpriority, count(*) AS n_lines,
       |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
       |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
       |WHERE o_orderstatus = 'F'
       |GROUP BY o_orderpriority
-      |ORDER BY o_orderpriority""".stripMargin
-  ) { (spark, dir) =>
-    Tables.lineitem(spark, dir)
-      .join(Tables.orders(spark, dir).filter(col("o_orderstatus") === "F"),
-        col("l_orderkey") === col("o_orderkey"))
-      .groupBy("o_orderpriority")
-      .agg(count(lit(1)).as("n_lines"), dsum(col("l_extendedprice")).as("sum_price"))
-      .orderBy("o_orderpriority")
-  }
+      |ORDER BY o_orderpriority""".stripMargin)
 
-  val q05JoinSemiAnti: QuerySpec = QuerySpec.oracle(
+  val q05JoinSemiAnti: QuerySpec = QuerySpec.sql(
     "q05_join_semi_anti",
     """WITH with_o AS (
       |  SELECT c_nationkey, count(*) AS n_customers, 'with_orders' AS segment_kind
@@ -117,38 +79,16 @@ object Relational {
       |  FROM customer c WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
       |  GROUP BY c_nationkey)
       |SELECT * FROM (SELECT * FROM with_o UNION ALL SELECT * FROM no_o) u
-      |ORDER BY segment_kind, c_nationkey""".stripMargin
-  ) { (spark, dir) =>
-    val c = Tables.customer(spark, dir)
-    val o = Tables.orders(spark, dir).select("o_custkey")
-    def agg0(kind: String, joinType: String) =
-      c.join(o, c("c_custkey") === o("o_custkey"), joinType)
-        .groupBy("c_nationkey")
-        .agg(count(lit(1)).as("n_customers"))
-        .withColumn("segment_kind", lit(kind))
-    agg0("with_orders", "left_semi")
-      .unionByName(agg0("no_orders", "left_anti"))
-      .orderBy("segment_kind", "c_nationkey")
-  }
+      |ORDER BY segment_kind, c_nationkey""".stripMargin)
 
-  val q06AggRollup: QuerySpec = QuerySpec.oracle(
+  val q06AggRollup: QuerySpec = QuerySpec.sql(
     "q06_agg_rollup",
     s"""SELECT coalesce(o_orderstatus, 'ALL') AS status,
        |  coalesce(o_orderpriority, 'ALL') AS priority,
        |  count(*) AS n_orders, $SumPrice AS total_price
        |FROM orders
        |GROUP BY ROLLUP(o_orderstatus, o_orderpriority)
-       |ORDER BY status, priority""".stripMargin
-  ) { (spark, dir) =>
-    Tables.orders(spark, dir)
-      .rollup("o_orderstatus", "o_orderpriority")
-      .agg(count(lit(1)).as("n_orders"), dsum(col("o_totalprice")).as("total_price"))
-      .select(
-        coalesce(col("o_orderstatus"), lit("ALL")).as("status"),
-        coalesce(col("o_orderpriority"), lit("ALL")).as("priority"),
-        col("n_orders"), col("total_price"))
-      .orderBy("status", "priority")
-  }
+       |ORDER BY status, priority""".stripMargin)
 
   /** Confusion-matrix-shaped pivot (reference A1, src/main.py:121-122, rebuilt
     * as a real pivot instead of sklearn.confusion_matrix). */
@@ -170,26 +110,19 @@ object Relational {
       .orderBy("event_type")
   }
 
-  val q08WindowTopK: QuerySpec = QuerySpec.oracle(
+  val q08WindowTopK: QuerySpec = QuerySpec.sql(
     "q08_window_topk",
     """SELECT o_custkey, o_orderkey, o_totalprice, rk FROM (
       |  SELECT o_custkey, o_orderkey, o_totalprice,
-      |    row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rk
+      |    CAST(row_number() OVER (PARTITION BY o_custkey
+      |      ORDER BY o_totalprice DESC, o_orderkey) AS BIGINT) AS rk
       |  FROM orders) t
       |WHERE rk <= 3
-      |ORDER BY o_custkey, rk""".stripMargin
-  ) { (spark, dir) =>
-    val w = Window.partitionBy("o_custkey").orderBy(col("o_totalprice").desc, col("o_orderkey"))
-    Tables.orders(spark, dir)
-      .withColumn("rk", asLong(row_number().over(w)))
-      .filter(col("rk") <= 3)
-      .select("o_custkey", "o_orderkey", "o_totalprice", "rk")
-      .orderBy("o_custkey", "rk")
-  }
+      |ORDER BY o_custkey, rk""".stripMargin)
 
   /** Running/lag window over event time: the exact-decimal running sum keeps
     * the cumulative double bit-identical to DuckDB's. */
-  val q09WindowRunning: QuerySpec = QuerySpec.oracle(
+  val q09WindowRunning: QuerySpec = QuerySpec.sql(
     "q09_window_running",
     """SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, value,
       |  CAST(sum(CAST(value AS DECIMAL(18,2))) OVER (
@@ -197,33 +130,16 @@ object Relational {
       |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_value,
       |  lag(value) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_value
       |FROM events
-      |ORDER BY user_id, ts, event_id""".stripMargin
-  ) { (spark, dir) =>
-    val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    Tables.events(spark, dir)
-      .withColumn("running_value",
-        sum(col("value").cast("decimal(18,2)")).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)).cast("double"))
-      .withColumn("prev_value", lag(col("value"), 1).over(w))
-      .select("event_id", "user_id", "ts", "value", "running_value", "prev_value")
-      .orderBy("user_id", "ts", "event_id")
-  }
+      |ORDER BY user_id, ts, event_id""".stripMargin)
 
-  val q10SetOps: QuerySpec = QuerySpec.oracle(
+  val q10SetOps: QuerySpec = QuerySpec.sql(
     "q10_setops",
     """SELECT 'both' AS tag, nkey FROM (
       |  SELECT c_nationkey AS nkey FROM customer INTERSECT SELECT s_nationkey FROM supplier) a
       |UNION ALL
       |SELECT 'cust_only' AS tag, nkey FROM (
       |  SELECT c_nationkey AS nkey FROM customer EXCEPT SELECT s_nationkey FROM supplier) b
-      |ORDER BY tag, nkey""".stripMargin
-  ) { (spark, dir) =>
-    val c = Tables.customer(spark, dir).select(col("c_nationkey").as("nkey"))
-    val s = Tables.supplier(spark, dir).select(col("s_nationkey").as("nkey"))
-    c.intersect(s).withColumn("tag", lit("both"))
-      .unionByName(c.except(s).withColumn("tag", lit("cust_only")))
-      .select("tag", "nkey")
-      .orderBy("tag", "nkey")
-  }
+      |ORDER BY tag, nkey""".stripMargin)
 
   val q11DatesMath: QuerySpec = QuerySpec.oracle(
     "q11_dates_math",
@@ -274,7 +190,7 @@ object Relational {
   }
 
   /** CUBE over two dimensions (A4's other half; rollup is q06). */
-  val q13AggCube: QuerySpec = QuerySpec.oracle(
+  val q13AggCube: QuerySpec = QuerySpec.sql(
     "q13_agg_cube",
     """SELECT coalesce(l_returnflag, 'ALL') AS rflag,
       |  coalesce(l_linestatus, 'ALL') AS lstatus,
@@ -282,35 +198,18 @@ object Relational {
       |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
       |FROM lineitem
       |GROUP BY CUBE(l_returnflag, l_linestatus)
-      |ORDER BY rflag, lstatus""".stripMargin
-  ) { (spark, dir) =>
-    Tables.lineitem(spark, dir)
-      .cube("l_returnflag", "l_linestatus")
-      .agg(count(lit(1)).as("n_lines"), dsum(col("l_quantity")).as("sum_qty"))
-      .select(
-        coalesce(col("l_returnflag"), lit("ALL")).as("rflag"),
-        coalesce(col("l_linestatus"), lit("ALL")).as("lstatus"),
-        col("n_lines"), col("sum_qty"))
-      .orderBy("rflag", "lstatus")
-  }
+      |ORDER BY rflag, lstatus""".stripMargin)
 
   /** Exact distinct aggregation (A5's oracle-able half; the HLL++
     * approx_count_distinct bound is asserted in RelationalSpec). */
-  val q14Distinct: QuerySpec = QuerySpec.oracle(
+  val q14Distinct: QuerySpec = QuerySpec.sql(
     "q14_distinct",
     """SELECT o_orderpriority,
       |  count(DISTINCT o_custkey) AS n_customers,
       |  count(*) AS n_orders
       |FROM orders
       |GROUP BY o_orderpriority
-      |ORDER BY o_orderpriority""".stripMargin
-  ) { (spark, dir) =>
-    Tables.orders(spark, dir)
-      .groupBy("o_orderpriority")
-      .agg(countDistinct(col("o_custkey")).as("n_customers"),
-        count(lit(1)).as("n_orders"))
-      .orderBy("o_orderpriority")
-  }
+      |ORDER BY o_orderpriority""".stripMargin)
 
   /** Exact percentiles (linear interpolation — same definition in Spark's
     * `percentile` and DuckDB's `quantile_cont`). Quantile positions are
@@ -379,8 +278,11 @@ object Relational {
   /** Correlated-aggregate semantics (orders above 1.5× their customer's
     * average) — expressed as a join against the per-customer aggregate on
     * both engines (Catalyst decorrelates a correlated subquery to exactly
-    * this shape). */
-  val q17CorrelatedAgg: QuerySpec = QuerySpec.oracle(
+    * this shape). cust_avg stays UNROUNDED: the exact-decimal-sum / count
+    * double is bit-identical across engines, while round() at a .xx5
+    * boundary is not (Spark rounds the binary double, DuckDB the decimal
+    * rendering). */
+  val q17CorrelatedAgg: QuerySpec = QuerySpec.sql(
     "q17_correlated_agg",
     """WITH ca AS (
       |  SELECT o_custkey AS ck,
@@ -389,20 +291,7 @@ object Relational {
       |SELECT o_orderkey, o_custkey, o_totalprice, avg_price AS cust_avg
       |FROM orders JOIN ca ON o_custkey = ck
       |WHERE o_totalprice > 1.5 * avg_price
-      |ORDER BY o_orderkey""".stripMargin
-  ) { (spark, dir) =>
-    val orders = Tables.orders(spark, dir)
-    val ca = orders.groupBy(col("o_custkey").as("ck"))
-      .agg((dsum(col("o_totalprice")) / count(lit(1))).as("avg_price"))
-    orders.join(ca, col("o_custkey") === col("ck"))
-      .filter(col("o_totalprice") > lit(1.5) * col("avg_price"))
-      // cust_avg stays UNROUNDED: the exact-decimal-sum / count double is
-      // bit-identical across engines, while round() at a .xx5 boundary is
-      // not (Spark rounds the binary double, DuckDB the decimal rendering)
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-        col("avg_price").as("cust_avg"))
-      .orderBy("o_orderkey")
-  }
+      |ORDER BY o_orderkey""".stripMargin)
 
   /** argmin/argmax aggregates (min_by/max_by ↔ arg_min/arg_max), keyed on
     * the unique order key so ties cannot arise. */
@@ -702,31 +591,22 @@ object Relational {
       .orderBy("week", "o_orderpriority")
   }
 
-  /** k-anonymity audit ([[Quality.kAnonymityReport]]) over the customer
-    * table's demographic-shaped quasi-identifiers — q133's governance
+  /** k-anonymity audit over the customer table's demographic-shaped quasi-identifiers — q133's governance
     * companion: before a release, every (segment, nation, balance-bucket)
     * combination is counted and groups below k = 5 are flagged as
     * re-identifiable. The balance QI is GENERALIZED to a 2000-wide bucket
     * (one exactly-rounded IEEE floor division, q95's binning idiom) — the
-    * generalization IS the operator's input contract; the audit itself is
-    * one map-side-combined aggregate, report sized by QI combinations. */
-  val q137KAnonymity: QuerySpec = QuerySpec.oracle(
+    * generalization IS the audit's input contract (auditing raw
+    * high-cardinality QIs is a degenerate all-singletons report); the
+    * audit itself is one map-side-combined aggregate, report sized by QI
+    * combinations. */
+  val q137KAnonymity: QuerySpec = QuerySpec.sql(
     "q137_k_anonymity",
     """SELECT c_mktsegment AS segment, c_nationkey AS nation,
       |  CAST(floor(c_acctbal / 2000.0) AS BIGINT) AS bal_bucket,
       |  count(*) AS n_rows, count(*) >= 5 AS k_anon
       |FROM customer GROUP BY 1, 2, 3
-      |ORDER BY 1, 2, 3""".stripMargin
-  ) { (spark, dir) =>
-    Quality.kAnonymityReport(
-        Tables.customer(spark, dir),
-        Seq(
-          "segment" -> col("c_mktsegment"),
-          "nation" -> col("c_nationkey"),
-          "bal_bucket" -> floor(col("c_acctbal") / lit(2000.0)).cast("long")),
-        k = 5L)
-      .orderBy("segment", "nation", "bal_bucket")
-  }
+      |ORDER BY 1, 2, 3""".stripMargin)
 
   /** Right-to-be-forgotten cascade audit: a deletion request list (every
     * 97th customer — the deterministic stand-in for a GDPR batch) cascades
@@ -873,34 +753,22 @@ object Relational {
     * the corpus contributes only the per-name count aggregation. This is
     * the same dedup-to-dictionary discipline q31/q35 apply to shingles:
     * make the O(n²) step O(|vocab|²) and attach rows back by equi-join /
-    * pre-aggregation. The distance kernel is the THRESHOLD-bounded
-    * Levenshtein — a banded DP that visits O(k·min(|a|,|b|)) cells and
-    * abandons a pair the moment every band entry exceeds k, returning −1
-    * — instead of filtering the full O(|a|·|b|) distance after the fact;
-    * on a pair that can't match, that's the difference between rejecting
-    * at the length gap and computing the whole matrix. For pairs within
-    * the threshold the bounded form returns the exact distance, so rows
-    * and values hash-match DuckDB's classic unit-cost DP. */
-  val q93FuzzyNamePairs: QuerySpec = QuerySpec.oracle(
+    * pre-aggregation. The filter is the natural `levenshtein(a, b) <= 3`;
+    * in a session with [[graft.GraftExtensions]],
+    * [[graft.plans.BoundLevenshteinRule]] rewrites it to the
+    * THRESHOLD-bounded banded DP, which visits O(k·min(|a|,|b|)) cells
+    * and rejects a non-matching pair at the length gap instead of filling
+    * the whole matrix (over a 64-name dictionary either form is cheap).
+    * `dist` is cast to BIGINT, the type DuckDB's levenshtein returns. */
+  val q93FuzzyNamePairs: QuerySpec = QuerySpec.sql(
     "q93_fuzzy_name_pairs",
     """WITH names AS (SELECT p_name, count(*) AS n_parts FROM part GROUP BY 1)
       |SELECT a.p_name AS name_a, b.p_name AS name_b,
-      |  levenshtein(a.p_name, b.p_name) AS dist,
+      |  CAST(levenshtein(a.p_name, b.p_name) AS BIGINT) AS dist,
       |  a.n_parts AS n_a, b.n_parts AS n_b
       |FROM names a JOIN names b ON a.p_name < b.p_name
       |WHERE levenshtein(a.p_name, b.p_name) <= 3
-      |ORDER BY dist, name_a, name_b""".stripMargin
-  ) { (spark, dir) =>
-    val names = Tables.part(spark, dir)
-      .groupBy("p_name").agg(count(lit(1)).as("n_parts"))
-    val a = names.select(col("p_name").as("name_a"), col("n_parts").as("n_a"))
-    val b = names.select(col("p_name").as("name_b"), col("n_parts").as("n_b"))
-    a.join(broadcast(b), col("name_a") < col("name_b"))
-      .withColumn("dist", levenshtein(col("name_a"), col("name_b"), 3).cast("long"))
-      .filter(col("dist") >= 0)
-      .select("name_a", "name_b", "dist", "n_a", "n_b")
-      .orderBy("dist", "name_a", "name_b")
-  }
+      |ORDER BY dist, name_a, name_b""".stripMargin)
 
   /** Jaro-Winkler fuzzy pairs ([[graft.functions.JaroWinklerExpression]])
     * over the part-name dictionary — q93's blocking discipline with the
@@ -934,7 +802,7 @@ object Relational {
   /** Sorted-neighborhood fuzzy blocking — the THIRD blocking discipline
     * beside LSH banding (q32/q88) and pigeonhole hamming (q33/q148):
     * sort the dictionary once, compare each entry only to its next `w`
-    * neighbors in sort order, verify with the banded Levenshtein. Sorted
+    * neighbors in sort order, verify with Levenshtein (q93's filter). Sorted
     * order puts shared-prefix variants adjacent, so candidate volume is
     * |dict|·w instead of |dict|² — the classic record-linkage sweep
     * (Hernández & Stolfo 1995), and the blocking of choice when edits
@@ -944,7 +812,7 @@ object Relational {
     * like q36's). The miss it accepts by design: a FIRST-letter edit
     * sorts far away — exactly why q93's exhaustive quadratic stays the
     * reference within dictionary budgets. */
-  val q158SortedNeighborhood: QuerySpec = QuerySpec.oracle(
+  val q158SortedNeighborhood: QuerySpec = QuerySpec.sql(
     "q158_sorted_neighborhood",
     """WITH names AS (SELECT DISTINCT p_name FROM part),
       |s AS (SELECT p_name,
@@ -956,25 +824,10 @@ object Relational {
       |  SELECT p_name AS name_a, n1 AS name_b FROM s WHERE n1 IS NOT NULL
       |  UNION ALL SELECT p_name, n2 FROM s WHERE n2 IS NOT NULL
       |  UNION ALL SELECT p_name, n3 FROM s WHERE n3 IS NOT NULL)
-      |SELECT name_a, name_b, levenshtein(name_a, name_b) AS dist
+      |SELECT name_a, name_b, CAST(levenshtein(name_a, name_b) AS BIGINT) AS dist
       |FROM cand
       |WHERE levenshtein(name_a, name_b) <= 3
-      |ORDER BY name_a, name_b""".stripMargin
-  ) { (spark, dir) =>
-    val w = Window.orderBy("p_name")
-    val s = Tables.part(spark, dir).select("p_name").distinct()
-      .withColumn("n1", lead(col("p_name"), 1).over(w))
-      .withColumn("n2", lead(col("p_name"), 2).over(w))
-      .withColumn("n3", lead(col("p_name"), 3).over(w))
-    val cand = s.select(col("p_name").as("name_a"), col("n1").as("name_b"))
-      .unionByName(s.select(col("p_name").as("name_a"), col("n2").as("name_b")))
-      .unionByName(s.select(col("p_name").as("name_a"), col("n3").as("name_b")))
-      .filter(col("name_b").isNotNull)
-    cand.withColumn("dist", levenshtein(col("name_a"), col("name_b"), 3).cast("long"))
-      .filter(col("dist") >= 0)
-      .select("name_a", "name_b", "dist")
-      .orderBy("name_a", "name_b")
-  }
+      |ORDER BY name_a, name_b""".stripMargin)
 
   /** Fixed-width histogram + cumulative distribution of order totals —
     * the data-profiling primitive behind outlier thresholds and mixture
@@ -1031,26 +884,14 @@ object Relational {
     * cells. Spark plans one scan + Expand (3× fan-out of the grouping
     * columns only, same machinery as rollup) + one aggregate — the
     * marginals never rescan the source. */
-  val q96GroupingSets: QuerySpec = QuerySpec.oracle(
+  val q96GroupingSets: QuerySpec = QuerySpec.sql(
     "q96_grouping_sets",
     s"""SELECT coalesce(o_orderstatus, 'ALL') AS status,
        |  coalesce(o_orderpriority, 'ALL') AS priority,
        |  count(*) AS n_orders, $SumPrice AS total_price
        |FROM orders
        |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-       |ORDER BY status, priority""".stripMargin
-  ) { (spark, dir) =>
-    Tables.orders(spark, dir)
-      .groupingSets(
-        Seq(Seq(col("o_orderstatus")), Seq(col("o_orderpriority")), Seq.empty),
-        col("o_orderstatus"), col("o_orderpriority"))
-      .agg(count(lit(1)).as("n_orders"), dsum(col("o_totalprice")).as("total_price"))
-      .select(
-        coalesce(col("o_orderstatus"), lit("ALL")).as("status"),
-        coalesce(col("o_orderpriority"), lit("ALL")).as("priority"),
-        col("n_orders"), col("total_price"))
-      .orderBy("status", "priority")
-  }
+       |ORDER BY status, priority""".stripMargin)
 
   /** Table diff (the change-data-capture primitive behind snapshot
     * reconciliation): classify every key as added / removed / changed
@@ -1129,7 +970,7 @@ object Relational {
     * is (rev − prev) / prev on decimal-exact revenues: two exactly-
     * rounded IEEE ops on identical inputs, so it hash-matches; the first
     * week's NULLs survive as genuine NULLs on both engines. */
-  val q99WeeklyWow: QuerySpec = QuerySpec.oracle(
+  val q99WeeklyWow: QuerySpec = QuerySpec.sql(
     "q99_weekly_wow",
     """WITH w AS (
       |  SELECT CAST(date_trunc('week', o_orderdate) AS DATE) AS week,
@@ -1140,20 +981,7 @@ object Relational {
       |  lag(revenue) OVER (ORDER BY week) AS prev_revenue,
       |  (revenue - lag(revenue) OVER (ORDER BY week))
       |    / lag(revenue) OVER (ORDER BY week) AS wow
-      |FROM w ORDER BY week""".stripMargin
-  ) { (spark, dir) =>
-    val weekly = Tables.orders(spark, dir)
-      .groupBy(date_trunc("week", col("o_orderdate")).cast("date").as("week"))
-      .agg(count(lit(1)).as("n_orders"), dsum(col("o_totalprice")).as("revenue"))
-    // ACCEPTED WindowExec warning: calendar-bounded input (one row per
-    // WEEK — bounded by the calendar, not the order stream)
-    val win = Window.orderBy("week")
-    weekly
-      .withColumn("prev_revenue", lag(col("revenue"), 1).over(win))
-      .withColumn("wow",
-        (col("revenue") - col("prev_revenue")) / col("prev_revenue"))
-      .orderBy("week")
-  }
+      |FROM w ORDER BY week""".stripMargin)
 
   /** Exact reproducible bivariate statistics — Pearson correlation and
     * sample covariance of (l_quantity, l_discount) per return flag,
@@ -1167,7 +995,7 @@ object Relational {
     * zero-variance group's numerator can cancel slightly negative in
     * doubles (q66's documented clamp), and a zero denominator pins NULL
     * (undefined correlation) on both engines. */
-  val q101Correlation: QuerySpec = QuerySpec.oracle(
+  val q101Correlation: QuerySpec = QuerySpec.sql(
     "q101_correlation",
     """WITH s AS (
       |  SELECT l_returnflag, count(*) AS n,
@@ -1187,27 +1015,7 @@ object Relational {
       |    ELSE (CAST(n AS DOUBLE) * sxy - sx * sy)
       |      / (sqrt(greatest(CAST(n AS DOUBLE) * sxx - sx * sx, 0))
       |         * sqrt(greatest(CAST(n AS DOUBLE) * syy - sy * sy, 0))) END AS corr_qty_disc
-      |FROM s ORDER BY l_returnflag""".stripMargin
-  ) { (spark, dir) =>
-    val s = Tables.lineitem(spark, dir)
-      .groupBy("l_returnflag")
-      .agg(count(lit(1)).as("n"),
-        dsum(col("l_quantity")).as("sx"),
-        dsum(col("l_discount")).as("sy"),
-        dsum(col("l_quantity") * col("l_discount"), 4).as("sxy"),
-        dsum(col("l_quantity") * col("l_quantity"), 4).as("sxx"),
-        dsum(col("l_discount") * col("l_discount"), 4).as("syy"))
-    val nD = col("n").cast("double")
-    val num = nD * col("sxy") - col("sx") * col("sy")
-    val dx = sqrt(greatest(nD * col("sxx") - col("sx") * col("sx"), lit(0d)))
-    val dy = sqrt(greatest(nD * col("syy") - col("sy") * col("sy"), lit(0d)))
-    s.select(col("l_returnflag"), col("n"),
-        when(col("n") < 2, lit(null).cast("double"))
-          .otherwise(num / (nD * (nD - lit(1)))).as("cov_qty_disc"),
-        when(col("n") < 2 || dx === 0d || dy === 0d, lit(null).cast("double"))
-          .otherwise(num / (dx * dy)).as("corr_qty_disc"))
-      .orderBy("l_returnflag")
-  }
+      |FROM s ORDER BY l_returnflag""".stripMargin)
 
   /** Bounded sliding-frame window (4-week rolling revenue) — the moving-
     * aggregate reporting primitive q09's UNBOUNDED-PRECEDING cumulative
@@ -1219,7 +1027,7 @@ object Relational {
     * window input is the weekly series (calendar-bounded, q99's
     * argument); the head-of-series average divides by the real frame
     * count, not a constant 4. */
-  val q102RollingRevenue: QuerySpec = QuerySpec.oracle(
+  val q102RollingRevenue: QuerySpec = QuerySpec.sql(
     "q102_rolling_revenue",
     """WITH w AS (
       |  SELECT CAST(date_trunc('week', o_orderdate) AS DATE) AS week,
@@ -1234,22 +1042,7 @@ object Relational {
       |    ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS DOUBLE)
       |    / CAST(count(*) OVER (ORDER BY week
       |        ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS DOUBLE) AS roll4_avg
-      |FROM w ORDER BY week""".stripMargin
-  ) { (spark, dir) =>
-    val weekly = Tables.orders(spark, dir)
-      .groupBy(date_trunc("week", col("o_orderdate")).cast("date").as("week"))
-      .agg(dsum(col("o_totalprice")).as("revenue"))
-    // ACCEPTED WindowExec warning: calendar-bounded input (one row per
-    // WEEK — bounded by the calendar, not the order stream)
-    val frame = Window.orderBy("week").rowsBetween(-3, Window.currentRow)
-    weekly
-      .withColumn("roll4_revenue",
-        sum(col("revenue").cast("decimal(18,2)")).over(frame).cast("double"))
-      .withColumn("roll4_weeks", count(lit(1)).over(frame))
-      .withColumn("roll4_avg",
-        col("roll4_revenue") / col("roll4_weeks").cast("double"))
-      .orderBy("week")
-  }
+      |FROM w ORDER BY week""".stripMargin)
 
   /** Ratio-to-parent + rank-within-parent (the BI "share of region"
     * report): nation order revenue as a fraction of its region's total,
@@ -1262,7 +1055,7 @@ object Relational {
     * tiebreak only for bit-stable plans — revenue ties can't occur on
     * decimal-exact sums of distinct order sets, but determinism is not
     * left to luck. */
-  val q108RevenueShare: QuerySpec = QuerySpec.oracle(
+  val q108RevenueShare: QuerySpec = QuerySpec.sql(
     "q108_revenue_share",
     """WITH nr AS (
       |  SELECT r_name, n_name, count(*) AS n_orders,
@@ -1277,21 +1070,7 @@ object Relational {
       |    OVER (PARTITION BY r_name) AS DOUBLE) AS region_share,
       |  CAST(rank() OVER (PARTITION BY r_name
       |    ORDER BY revenue DESC, n_name) AS BIGINT) AS region_rank
-      |FROM nr ORDER BY r_name, region_rank""".stripMargin
-  ) { (spark, dir) =>
-    val nr = Tables.orders(spark, dir)
-      .join(Tables.customer(spark, dir), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.nation(spark, dir)), col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(Tables.region(spark, dir)), col("n_regionkey") === col("r_regionkey"))
-      .groupBy("r_name", "n_name")
-      .agg(count(lit(1)).as("n_orders"), dsum(col("o_totalprice")).as("revenue"))
-    val region = Window.partitionBy("r_name")
-    val ranked = Window.partitionBy("r_name").orderBy(col("revenue").desc, col("n_name"))
-    nr.withColumn("region_share",
-        col("revenue") / sum(col("revenue").cast("decimal(18,2)")).over(region).cast("double"))
-      .withColumn("region_rank", rank().over(ranked).cast("long"))
-      .orderBy("r_name", "region_rank")
-  }
+      |FROM nr ORDER BY r_name, region_rank""".stripMargin)
 
   /** Time-series densification (gap detection): the calendar scaffold —
     * every (nation, week) cell the corpus COULD have filled, built from
@@ -1414,7 +1193,7 @@ object Relational {
     * of 1 through the left join. The per-key count is the only
     * corpus-scale work; the histogram and its share window are bounded
     * by the max multiplicity (≤7 here). */
-  val q118FanoutProfile: QuerySpec = QuerySpec.oracle(
+  val q118FanoutProfile: QuerySpec = QuerySpec.sql(
     "q118_fanout_profile",
     """WITH f AS (
       |  SELECT o_orderkey, count(l_orderkey) AS n_items
@@ -1424,19 +1203,7 @@ object Relational {
       |SELECT n_items, n_orders,
       |  CAST(n_orders AS DOUBLE)
       |    / CAST(CAST(sum(n_orders) OVER () AS BIGINT) AS DOUBLE) AS order_share
-      |FROM h ORDER BY n_items""".stripMargin
-  ) { (spark, dir) =>
-    val f = Tables.orders(spark, dir)
-      .join(Tables.lineitem(spark, dir).select("l_orderkey"),
-        col("l_orderkey") === col("o_orderkey"), "left")
-      .groupBy("o_orderkey").agg(count(col("l_orderkey")).as("n_items"))
-    val h = f.groupBy("n_items").agg(count(lit(1)).as("n_orders"))
-    val w = Window.partitionBy()
-    h.select(col("n_items"), col("n_orders"),
-        (col("n_orders").cast("double")
-          / sum(col("n_orders")).over(w).cast("double")).as("order_share"))
-      .orderBy("n_items")
-  }
+      |FROM h ORDER BY n_items""".stripMargin)
 
   /** Equi-DEPTH histogram (deciles) — the complement of q95's fixed-width
     * form: bucket boundaries are the exact interpolated 10..90th
@@ -1491,7 +1258,7 @@ object Relational {
     * correctness condition. The ratios divide small exact integers in
     * double — IEEE rounds them identically in both engines, so the
     * hash comparison is sound (q118's order_share argument). */
-  val q121RankDistribution: QuerySpec = QuerySpec.oracle(
+  val q121RankDistribution: QuerySpec = QuerySpec.sql(
     "q121_rank_distribution",
     """SELECT n_name, o_orderkey,
       |  percent_rank() OVER (PARTITION BY n_name ORDER BY o_orderpriority) AS pr_priority,
@@ -1501,22 +1268,7 @@ object Relational {
       |FROM orders
       |JOIN customer ON o_custkey = c_custkey
       |JOIN nation ON c_nationkey = n_nationkey
-      |ORDER BY n_name, o_orderkey""".stripMargin
-  ) { (spark, dir) =>
-    val peers = Window.partitionBy("n_name").orderBy("o_orderpriority")
-    val total = Window.partitionBy("n_name").orderBy("o_totalprice", "o_orderkey")
-    Tables.orders(spark, dir)
-      .select("o_orderkey", "o_custkey", "o_orderpriority", "o_totalprice")
-      .join(Tables.customer(spark, dir).select("c_custkey", "c_nationkey"),
-        col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.nation(spark, dir).select("n_nationkey", "n_name")),
-        col("c_nationkey") === col("n_nationkey"))
-      .select(col("n_name"), col("o_orderkey"),
-        percent_rank().over(peers).as("pr_priority"),
-        cume_dist().over(peers).as("cd_priority"),
-        ntile(8).over(total).cast("long").as("price_tile"))
-      .orderBy("n_name", "o_orderkey")
-  }
+      |ORDER BY n_name, o_orderkey""".stripMargin)
 
   /** l-diversity audit — q137's governance companion one rung up the
     * privacy ladder: k-anonymity says each quasi-identifier group is big
@@ -1530,7 +1282,7 @@ object Relational {
     * homogeneity share numerator — shares stay integer, no float). Shape:
     * two stacked map-side-combined aggregates — (QI, sensitive) counts,
     * then QI rollup — report sized by QI combinations, never the corpus. */
-  val q178LDiversity: QuerySpec = QuerySpec.oracle(
+  val q178LDiversity: QuerySpec = QuerySpec.sql(
     "q178_l_diversity",
     """WITH g AS (
       |  SELECT c_nationkey AS nation,
@@ -1541,20 +1293,7 @@ object Relational {
       |  count(*) AS l_distinct, count(*) >= 3 AS l_diverse,
       |  CAST(max(n) AS BIGINT) AS top_segment_rows
       |FROM g GROUP BY 1, 2
-      |ORDER BY 1, 2""".stripMargin
-  ) { (spark, dir) =>
-    Tables.customer(spark, dir)
-      .groupBy(col("c_nationkey").as("nation"),
-        floor(col("c_acctbal") / lit(2000.0)).cast("long").as("bal_bucket"),
-        col("c_mktsegment").as("segment"))
-      .agg(count(lit(1)).as("n"))
-      .groupBy("nation", "bal_bucket")
-      .agg(sum(col("n")).cast("long").as("n_rows"),
-        count(lit(1)).as("l_distinct"),
-        (count(lit(1)) >= 3).as("l_diverse"),
-        max(col("n")).as("top_segment_rows"))
-      .orderBy("nation", "bal_bucket")
-  }
+      |ORDER BY 1, 2""".stripMargin)
 
   /** t-closeness audit — the third rung of the privacy ladder (k-anonymity
     * q137: groups big enough to hide in; l-diversity q178: sensitive

@@ -120,23 +120,6 @@ object Sampling {
     (train, valid)
   }
 
-  /** Probability-proportional-to-size SYSTEMATIC sample: walk the corpus in
-    * `idCol` order, drop a pin every `step = max(total_weight div targetN, 1)`
-    * weight units, keep the rows a pin lands in. Every row's inclusion
-    * probability is proportional to its weight (the mixture-subsampling
-    * primitive: token-weighted corpus thinning keeps the TOKEN distribution,
-    * where uniform row sampling would skew it toward short documents), and
-    * rows heavier than `step` are kept with `n_hits > 1` so downstream
-    * weighting stays unbiased — a PPS sample that silently capped
-    * multiplicity would under-represent exactly the heavy rows it exists
-    * to keep.
-    *
-    * Everything is integer arithmetic over an exclusive prefix sum, so the
-    * selection is deterministic and cross-engine exact. The prefix sum runs
-    * STRIPED ([[StripedWindow]], q36's machinery): 16 range stripes over
-    * `idCol`, so no single task ever owns the corpus-wide ordered scan. The
-    * 1-row total rides the broadcast scalar idiom.
-    */
   /** The -ln((j+1)/(levels+1)) exponential quantile ladder in NANO units —
     * the shared integer constants that make the weighted reservoir
     * deterministic and cross-engine exact (q206's CDF-ladder discipline):
@@ -199,6 +182,23 @@ object Sampling {
     sampleByOrderKey(keyed, Nil, orderKey, k)
   }
 
+  /** Probability-proportional-to-size SYSTEMATIC sample: walk the corpus in
+    * `idCol` order, drop a pin every `step = max(total_weight div targetN, 1)`
+    * weight units, keep the rows a pin lands in. Every row's inclusion
+    * probability is proportional to its weight (the mixture-subsampling
+    * primitive: token-weighted corpus thinning keeps the TOKEN distribution,
+    * where uniform row sampling would skew it toward short documents), and
+    * rows heavier than `step` are kept with `n_hits > 1` so downstream
+    * weighting stays unbiased — a PPS sample that silently capped
+    * multiplicity would under-represent exactly the heavy rows it exists
+    * to keep.
+    *
+    * Everything is integer arithmetic over an exclusive prefix sum, so the
+    * selection is deterministic and cross-engine exact. The prefix sum runs
+    * STRIPED ([[StripedWindow]], q36's machinery): 16 range stripes over
+    * `idCol`, so no single task ever owns the corpus-wide ordered scan. The
+    * 1-row total rides the broadcast scalar idiom.
+    */
   def ppsSystematic(df: DataFrame, idCol: String, weightCol: String,
                     targetN: Long, stripes: Int = 16): DataFrame = {
     require(targetN >= 1, "targetN must be positive")

@@ -313,11 +313,6 @@ object Similarity {
     ivfTopKFrom(corpusCells, qCells, k)
   }
 
-  /** The IVF index split out so a caller (q78's recall report) can fit the
-    * k-means quantizer ONCE and reuse the cell assignments for both the
-    * top-k and the candidate-mass statistics. Returns
-    * (corpusCells(neighbor_id, c_emb, cell, c_norm),
-    *  qCells(query_id, q_emb, q_norm, cell) — one row per probed cell). */
   /** Per-JVM cache of fitted coarse quantizers keyed by (corpus plan
     * semantic hash, nLists, seed) — the documented index-build-once
     * contract made literal: re-deriving cell assignments for the same
@@ -330,6 +325,11 @@ object Similarity {
   private val quantizerCache = new java.util.concurrent.ConcurrentHashMap[
     (Int, Int, Long), org.apache.spark.ml.clustering.KMeansModel]()
 
+  /** The IVF index split out so a caller (q78's recall report) can fit the
+    * k-means quantizer ONCE and reuse the cell assignments for both the
+    * top-k and the candidate-mass statistics. Returns
+    * (corpusCells(neighbor_id, c_emb, cell, c_norm),
+    *  qCells(query_id, q_emb, q_norm, cell) — one row per probed cell). */
   private[operators] def ivfAssignments(queries: DataFrame, corpus: DataFrame,
                                         nLists: Int, nProbe: Int,
                                         seed: Long): (DataFrame, DataFrame) = {

@@ -219,18 +219,6 @@ object TextQueries {
         expr("bit_xor(rolling_fp)").as("xor_fp"))
   }
 
-  /** Partition-manifest checksums — q25's content-addressing at the
-    * (lang, source) partition grain, which is what makes snapshot
-    * verification INCREMENTAL at 100 TB: two snapshots are compared
-    * manifest-to-manifest (97 rows here, partition-count rows in general),
-    * and only partitions whose checksum moved need a re-read — the
-    * Merkle-tree discipline with the partition layer as the leaves. The
-    * checksum is an ORDER-INDEPENDENT exact decimal sum of a per-row
-    * 60-bit md5 prefix (`conv(hex, 16, 10)` ↔ DuckDB's `('0x'||hex)::BIGINT`
-    * — row order, partitioning, and merge strategy can't move it),
-    * emitted as its 48-bit residue in BIGINT (see [[ChecksumModulus]]), keyed
-    * on (id, text) so both id reassignment and content drift surface. One
-    * map-side-combined aggregate over one scan; nothing collects. */
   /** Per-(lang, source) manifest of a documents-shaped table — the shared
     * leaf computation of q138 (single-snapshot manifest) and q145
     * (cross-snapshot diff). */
@@ -259,6 +247,18 @@ object TextQueries {
        |    % $ChecksumModulus AS BIGINT) AS checksum
        |FROM $from GROUP BY 1, 2""".stripMargin
 
+  /** Partition-manifest checksums — q25's content-addressing at the
+    * (lang, source) partition grain, which is what makes snapshot
+    * verification INCREMENTAL at 100 TB: two snapshots are compared
+    * manifest-to-manifest (97 rows here, partition-count rows in general),
+    * and only partitions whose checksum moved need a re-read — the
+    * Merkle-tree discipline with the partition layer as the leaves. The
+    * checksum is an ORDER-INDEPENDENT exact decimal sum of a per-row
+    * 60-bit md5 prefix (`conv(hex, 16, 10)` ↔ DuckDB's `('0x'||hex)::BIGINT`
+    * — row order, partitioning, and merge strategy can't move it),
+    * emitted as its 48-bit residue in BIGINT (see [[ChecksumModulus]]), keyed
+    * on (id, text) so both id reassignment and content drift surface. One
+    * map-side-combined aggregate over one scan; nothing collects. */
   val q138ManifestChecksums: QuerySpec = QuerySpec.oracle(
     "q138_manifest_checksums",
     manifestSql("documents") + "\nORDER BY lang, source"

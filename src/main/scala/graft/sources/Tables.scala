@@ -82,6 +82,14 @@ object Tables {
   def documents(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "documents")
   def embeddings(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "embeddings")
 
+  /** The ten tables by name, each through its loader above: the
+    * relations a [[graft.QuerySpec.sql]] text reads. */
+  val loaders: Map[String, (SparkSession, String) => DataFrame] = Map(
+    "region" -> region _, "nation" -> nation _, "customer" -> customer _,
+    "supplier" -> supplier _, "part" -> part _, "orders" -> orders _,
+    "lineitem" -> lineitem _, "events" -> events _, "documents" -> documents _,
+    "embeddings" -> embeddings _)
+
   /** Exact row count of a parquet file/directory from FOOTER METADATA only —
     * no Spark job, no data scan. Each parquet footer records its file's row
     * count; summing them is pure driver-side metadata IO (the same footer

@@ -12,7 +12,7 @@ import org.scalacheck.Gen
 class PropertiesSpec extends SparkSpec {
 
   /** scalatestplus isn't in the offline cache; drive scalacheck directly. */
-  private def samples[T](g: Gen[T], n: Int = 60): Seq[T] =
+  private def samples[T](g: Gen[T], n: Int): Seq[T] =
     Iterator.continually(g.sample).flatten.take(n).toSeq
 
   import spark.implicits._

@@ -150,6 +150,17 @@ class ReachabilitySpec extends org.scalatest.funsuite.AnyFunSuite {
         unreferenced.mkString("\n"))
   }
 
+  test("no scaladoc in src/main sits directly above another one (scaladoc drops the first)") {
+    val Orphan = """/\*\*[^*]*\*+(?:[^/*][^*]*\*+)*/\s*/\*\*""".r
+    val sites = for {
+      f <- Files.walk(Paths.get("src/main/scala")).iterator().asScala.toSeq.sortBy(_.toString)
+      if f.toString.endsWith(".scala")
+      src = new String(Files.readAllBytes(f), "UTF-8")
+      m <- Orphan.findAllMatchIn(src)
+    } yield s"$f:${src.take(m.start).count(_ == '\n') + 1}"
+    assert(sites.isEmpty, s"orphaned scaladocs (move each onto its member):\n${sites.mkString("\n")}")
+  }
+
   test("every keep-list entry names a member that still exists") {
     val stale = keep.keySet -- declared.map(_.key)
     assert(stale.isEmpty, s"keep-list entries with no such member: ${stale.toSeq.sorted}")

@@ -93,21 +93,4 @@ class QualitySpec extends SparkSpec {
       .collect().map(r => r.getAs[String]("rule") -> r.getAs[Long]("n_violations")).toMap
     assert(out == Map("empty" -> 2L, "long" -> 1L))
   }
-
-  test("kAnonymityReport flags exactly the groups below k") {
-    import spark.implicits._
-    val df = (Seq.fill(5)(("a", 1)) ++ Seq.fill(4)(("a", 2)) ++ Seq.fill(1)(("b", 1)))
-      .toDF("seg", "code")
-    val out = Quality.kAnonymityReport(df,
-        Seq("seg" -> col("seg"), "code" -> col("code")), k = 5L)
-      .collect().map(r => (r.getString(0), r.getInt(1)) -> (r.getLong(2), r.getBoolean(3))).toMap
-    assert(out == Map(("a", 1) -> (5L, true), ("a", 2) -> (4L, false), ("b", 1) -> (1L, false)))
-  }
-
-  test("kAnonymityReport partitions the input: group sizes sum to the row count") {
-    val cust = Tables.customer(spark, sf)
-    val rep = Quality.kAnonymityReport(cust,
-      Seq("seg" -> col("c_mktsegment"), "nat" -> col("c_nationkey")), k = 5L)
-    assert(rep.agg(sum(col("n_rows"))).head.getLong(0) === cust.count())
-  }
 }

@@ -87,7 +87,7 @@ class SimilaritySpec extends SparkSpec {
       transform(sequence(lit(0), lit(15)),
         j => ((pmod(hash(col("id"), j), lit(2001)) - 1000) / 1000.0).cast("float")).as("embedding"))
     val hot = spark.range(cluster).select((col("id") + 100000).as("vec_id"),
-      transform(sequence(lit(0), lit(15)), j => lit(1.0f)).as("embedding"))
+      transform(sequence(lit(0), lit(15)), _ => lit(1.0f)).as("embedding"))
     val vecs = rand.unionByName(hot)
     def maxOccupancy(bits: Int): Long =
       Similarity.bandAssignments(vecs, dims = 16, numBands = 2, bitsPerBand = bits, seed = 42)

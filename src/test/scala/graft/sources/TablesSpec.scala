@@ -91,6 +91,47 @@ class TablesSpec extends SparkSpec {
     }
   }
 
+  test("QuerySpec.sql binds each build to its own dir: no session-global tables") {
+    val q = graft.QuerySpec.sql("t", """SELECT count(*) AS n, count(DISTINCT c_custkey) AS n_cust
+      |FROM orders JOIN customer ON o_custkey = c_custkey""".stripMargin)
+    val larger = Paths.get(sf).resolveSibling("sf0.01").toString
+    // both builds first, then both runs: a build that registered a view by
+    // table name would leave the first frame reading the second dir
+    val (a, b) = (q.build(spark, sf), q.build(spark, larger))
+    def expect(dir: String) = Tables.orders(spark, dir)
+      .join(Tables.customer(spark, dir), col("o_custkey") === col("c_custkey"))
+      .agg(count(lit(1)), countDistinct(col("c_custkey"))).head()
+    val (ra, rb) = (a.head(), b.head())
+    assert(ra == expect(sf) && rb == expect(larger), s"$ra / $rb")
+    assert(ra.getLong(0) < rb.getLong(0), "the two dirs must differ for the check to mean anything")
+    assert(spark.catalog.listTables().collect().isEmpty, "no view may be left in the session")
+  }
+
+  test("QuerySpec.sql binds tables in CTE bodies, EXISTS subqueries and repeated references") {
+    // q05 reads customer and orders twice each, every read inside a CTE
+    // body and the orders reads inside [NOT] EXISTS. Every test customer
+    // has orders, so five order-less customers are planted for the anti arm.
+    val dir = Files.createTempDirectory("graft_q05").toString
+    for (t <- Seq("region", "nation", "supplier", "part", "orders", "lineitem",
+                  "events", "documents", "embeddings"))
+      Files.createSymbolicLink(Paths.get(s"$dir/$t.parquet"), Paths.get(s"$sf/$t.parquet"))
+    val cust = Tables.customer(spark, sf)
+    cust.unionByName(cust.limit(5).withColumn("c_custkey", col("c_custkey") + 1000000L))
+      .write.parquet(s"$dir/customer.parquet")
+    val text = graft.operators.Relational.q05JoinSemiAnti.oracle.get
+    val got = graft.QuerySpec.sql("t", text).build(spark, dir).collect().toSeq
+    val c = Tables.customer(spark, dir)
+    val o = Tables.orders(spark, dir).select("o_custkey")
+    def seg(kind: String, how: String) = c.join(o, c("c_custkey") === o("o_custkey"), how)
+      .groupBy("c_nationkey").agg(count(lit(1)).as("n_customers"))
+      .withColumn("segment_kind", lit(kind))
+    val expect = seg("with_orders", "left_semi").unionByName(seg("no_orders", "left_anti"))
+      .orderBy("segment_kind", "c_nationkey").collect().toSeq
+    assert(got == expect)
+    assert(got.filter(_.getAs[String]("segment_kind") == "no_orders")
+      .map(_.getAs[Long]("n_customers")).sum == 5L, "the planted customers land in the anti arm")
+  }
+
   test("mergeSchema read unions evolved parquet schemas") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_evolve").toString
